@@ -113,6 +113,10 @@ def build_outputs(
     # surrogate_ids produces exactly row_number() OVER (ORDER BY key)
     # but through a distributed range-sort — no single-partition
     # window, so the same code path holds on a 100 TB entity table.
+    # Each call sorts and materializes its keys once, HERE (jobs run
+    # at build time); every consumer (both fk_lookup joins, the
+    # contratos/contatos fan-out, any later action on the outputs)
+    # reads that one copy, so all of them see the same ids.
     cliente_ids = surrogate_ids(
         clientes.select("cpf_cnpj"), ["cpf_cnpj"], "cliente_id"
     )

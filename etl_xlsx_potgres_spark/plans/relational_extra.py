@@ -174,9 +174,10 @@ def setops_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sort_null_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two distributed global ranks (range-partition + offsets, not an
-    # unpartitioned window); the null-ordering semantics live in the
-    # sort-key expressions, which the range partitioner honors. The two
-    # rank frames rejoin on the unique key.
+    # unpartitioned window), each materialized once when built; the
+    # null-ordering semantics live in the sort-key expressions, which
+    # the range partitioner honors. The two rank frames rejoin on the
+    # unique key.
     from ..operators.ids import global_row_number
 
     c = load_table(spark, sf_dir, "customer").select(

@@ -392,7 +392,8 @@ def win_ntile_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT F.ntile over an unpartitioned window (single-partition sort of
     # the whole table): global_ntile range-partitions on the sort key and
     # derives the tile from a distributed global rank + the exact NTILE
-    # front-loading formula.
+    # front-loading formula (row count from the rank's own partition
+    # counts; the range sort is materialized when this function runs).
     from ..operators.ids import global_ntile
 
     o = load_table(spark, sf_dir, "orders")

@@ -308,6 +308,44 @@ def test_global_ntile_matches_sql_ntile_on_ragged_count(spark):
     assert got == want
 
 
+def test_ids_match_naive_window_with_aqe_off(spark):
+    """AQE off disables exchange reuse at runtime: any plan that
+    evaluates the range exchange more than once samples new bounds
+    each time, and offsets counted on one partitioning then number
+    another. The ids must still be row_number()/ntile() exactly, dense
+    1..n, on the ETL's shape (~12 000 distinct keys plus payload on a
+    checkpointed input)."""
+    from pyspark.sql import Window
+
+    from etl_xlsx_potgres_spark.operators.ids import global_ntile, surrogate_ids
+
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        n = 12_000
+        df = spark.range(n).select(
+            F.sha2(F.col("id").cast("string"), 256).alias("k"), "id"
+        ).localCheckpoint(eager=True)
+        w = Window.orderBy("k")
+        got = {r.id: r.sk for r in surrogate_ids(df, ["k"], "sk").collect()}
+        want = {
+            r.id: r.sk
+            for r in df.withColumn("sk", F.row_number().over(w)).collect()
+        }
+        assert got == want
+        assert sorted(got.values()) == list(range(1, n + 1))
+        tiles = {r.id: r.t for r in global_ntile(df, ["k"], 7, "t").collect()}
+        assert tiles == {
+            r.id: r.t for r in df.withColumn("t", F.ntile(7).over(w)).collect()
+        }
+        empty = df.limit(0)
+        assert surrogate_ids(empty, ["k"], "sk").collect() == []
+        assert global_ntile(empty, ["k"], 7, "t").collect() == []
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_csv_jsonl_declared_schema_quarantine(spark, tmp_path):
     """Quarantine reader variants: declared schema, PERMISSIVE parse,
     split into clean + quarantine instead of dropping or failing."""

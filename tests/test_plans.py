@@ -509,10 +509,29 @@ def test_pagerank_vector_hint_gated_by_size(spark):
     assert _vector_width(2_000_000_000) == 2000
 
 
-def test_surrogate_ids_avoid_single_partition_sort(spark, sf_dir):
+def test_surrogate_ids_avoid_single_partition_sort(spark, sf_dir, monkeypatch):
     """Scalable id assignment: the data path must be a range
-    repartition, not an Exchange SinglePartition of the whole table
-    (the only single-partition window allowed is over the
-    #partitions-row offsets frame)."""
+    repartition, not an Exchange SinglePartition of the whole table.
+    The returned frame scans the operator's checkpoint, so the audit
+    is on the plan that materializes it, captured at the
+    ``localCheckpoint`` call."""
+    import contextlib
+    import io
+
+    materialized = []
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            self.explain("formatted")
+        materialized.append(buf.getvalue())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
     plan = _plan(spark, sf_dir, "ref_surrogate_ids_scalable")
-    assert "rangepartitioning" in plan or "REPARTITION_BY_RANGE" in plan
+    ranged = [m for m in materialized if "rangepartitioning" in m]
+    assert ranged, materialized
+    for text in [plan, *materialized]:
+        assert "SinglePartition" not in text, text
