@@ -557,15 +557,14 @@ def _ivfpq_curve(
 
 @register("ann_recall_curve", oracle=_oracle())
 def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r21: ``emb`` feeds ~8 consumers across the two curve halves
+    # ``emb`` feeds ~8 consumers across the two curve halves
     # (centroids, assignments, probes, subvectors, queries, the exact
-    # ground-truth pass) — under the intake respread each branch paid
-    # its own scan+respread. Persist the validated frame once
-    # (vector-table-sized, MEMORY_AND_DISK; the staging-table role at
-    # 100 TB). Interleaved A/B at sf0.1 (n=5 medians): 2.44 -> 2.12 s
-    # (cold 4.05 -> 2.23); persisting the UNWIDENED read measured
-    # 2.75 s — a 1-partition cache serializes every crossJoin map
-    # stage — so the respread stays on.
+    # ground-truth pass); persist the validated frame once instead of
+    # rescanning it per branch (vector-table-sized, MEMORY_AND_DISK;
+    # the staging-table role at 100 TB). 5 interleaved process pairs
+    # of tools/perf_probe.py --runs 2 at sf0.1, local[4] on a 4-vCPU
+    # VM: median of the 10 noop-sink runs 3.89 s persisted vs 4.08 s
+    # unpersisted.
     emb = scoped_persist(
         similarity.valid_vecs(load_table(spark, sf_dir, "embeddings"))
     )

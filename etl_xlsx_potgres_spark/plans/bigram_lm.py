@@ -85,13 +85,7 @@ _SPARK_TOKENS = (
     """,
 )
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False (r21, VERDICT r20 task 1): the r20 global docs widen
-    # regressed this query 0.87x at the driver — the single consumer
-    # (the persisted toks frame) is a posexplode whose map work is
-    # lighter than the respread exchange it buys. Interleaved env A/B
-    # at sf0.1 (n=5): unwidened median 0.95 s vs widened 1.02 s, cold
-    # 1.21 vs 2.57 s.
-    d = load_table(spark, sf_dir, "documents", widen=False)
+    d = load_table(spark, sf_dir, "documents")
     toks = scoped_persist(
         d.select(
             "doc_id",

@@ -81,8 +81,7 @@ GROUP BY 1, 2
 
 @register("quality_ccnet_gate", oracle=_ORACLE)
 def quality_ccnet_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = load_table(spark, sf_dir, "documents", widen=False)
+    d = load_table(spark, sf_dir, "documents")
     toks = tokens("text")
     scored = d.select(
         "lang",

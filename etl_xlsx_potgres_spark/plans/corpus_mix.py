@@ -87,8 +87,7 @@ _DUCK_COIN = _duck_hex6("md5(CAST(doc_id AS VARCHAR))")
     """,
 )
 def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = load_table(spark, sf_dir, "documents", widen=False)
+    d = load_table(spark, sf_dir, "documents")
     src = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("c_s"),
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))

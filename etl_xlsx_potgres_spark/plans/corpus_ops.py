@@ -710,8 +710,7 @@ def emb_covariance_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-only fold), then a 64-group per-dimension exact integer
     reduce — partial aggregation makes the shuffle 64 rows per map
     task regardless of corpus size."""
-    # widen=False: light map work, respread is net loss (A/B r20)
-    emb = load_table(spark, sf_dir, "embeddings", widen=False)
+    emb = load_table(spark, sf_dir, "embeddings")
     proj = emb.select("vec_id", "embedding", F.expr(_PROJ_SPARK).alias("s"))
     terms = proj.select(
         F.posexplode(

@@ -60,8 +60,7 @@ _DUCK_SHINGLES = (
     """,
 )
 def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = load_table(spark, sf_dir, "documents", widen=False)
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", fingerprint("text").alias("fp"))
         .groupBy("fp")
@@ -688,15 +687,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # zero-norm/NULL guard (r19): a NULL embedding crashes the Arrow
     # signature UDF's np.stack, and a zero-norm one NaNs its cosines
-    # widen=False (r21): the r20 round widened this read to spread the
-    # Arrow signature UDF, but the driver regressed 0.69x — the r20
-    # probe compared against a post-widen baseline, never the true r19
-    # shape. Interleaved env A/B at sf0.1 (n=5): fully unwidened
-    # median 1.40 s vs widened 1.51 s, and the widened COLD run was
-    # 5.7 s vs 1.6 s (the extra exchange + stages recompile every
-    # bench pass 1). The signature frame is persisted right below, so
-    # the UDF cost is paid once either way.
-    emb = valid_vecs(load_table(spark, sf_dir, "embeddings", widen=False))
+    emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
     # band rows are SLIM (vec_id, band, 4-bit key): the candidate
     # shuffle and distinct never carry vectors — the arrays join back
     # afterwards (broadcast here; id-keyed shuffle join at 100 TB)
@@ -731,10 +722,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # out, compiles into a method too big for the JIT (never compiled,
     # ~24 us/pair). The UDF keeps per-row results bit-identical to the
     # oracle (sequential fold, see dot_pairs_pandas).
-    # broadcast sides read UNWIDENED (r20): the intake respread under
-    # a broadcast build is a pure extra exchange — these frames never
-    # fan out as tasks
-    emb_b = valid_vecs(load_table(spark, sf_dir, "embeddings", widen=False))
+    emb_b = valid_vecs(load_table(spark, sf_dir, "embeddings"))
     e1 = emb_b.select(
         F.col("vec_id").alias("v1"),
         F.col("embedding").alias("ea"),

@@ -173,7 +173,7 @@ def _provision_store(spark: SparkSession, sf_dir: str) -> str:
         (
             # cluster by the bucket column first (r20): a bucketed
             # write emits one file per (upstream task x bucket), so a
-            # wide upstream (e.g. the intake respread) would leave
+            # wide upstream (e.g. a multi-row-group scan) would leave
             # multi-file buckets — which demotes the auto-bucketed
             # scan and costs every probe its Exchange-free plan. The
             # repartition maps each bucket to exactly one task (same

@@ -39,8 +39,7 @@ _SCALE = 7
     """,
 )
 def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    e = load_table(spark, sf_dir, "embeddings", widen=False)
+    e = load_table(spark, sf_dir, "embeddings")
     long = e.select(
         "label", F.posexplode("embedding").alias("dim", "val")
     ).withColumn("val", F.col("val").cast("double"))

@@ -206,9 +206,7 @@ def fn_conditional_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fn_json_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen_key: two JSON parses per row — heavy map work (A/B at
-    # sf0.1: 0.67 -> 0.17, r20)
-    e = load_table(spark, sf_dir, "events", widen_key="event_id")
+    e = load_table(spark, sf_dir, "events")
     parsed = F.from_json("props", "k BIGINT")
     return e.select(
         "event_id",

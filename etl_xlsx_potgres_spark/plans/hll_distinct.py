@@ -58,10 +58,7 @@ ACD_TOL = 0.10
     """,
 )
 def agg_hll_distinct_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen_key: sketch-building partials hash every row into HLL
-    # registers — heavy map work worth respreading a 1-row-group
-    # layout for (A/B at sf0.1: 1.34 -> 0.76, r20)
-    li = load_table(spark, sf_dir, "lineitem", widen_key="l_orderkey").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_orderkey"
     )
     # (1) partial sketches at the finer ingest grain, (2) register-max

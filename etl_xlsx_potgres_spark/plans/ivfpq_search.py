@@ -218,13 +218,9 @@ def _candidates(emb: DataFrame, cells: DataFrame) -> DataFrame:
 def ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import scoped_persist
 
-    # persisted (r21): emb feeds the subvector split, the cell seeds,
-    # the corpus assignment and the probe side — each branch rescanned
-    # (and re-respread) the table. Interleaved A/B at sf0.1 (n=5
-    # medians): 1.38 -> 1.24 s, cold 2.96 -> 1.94. The same persist
-    # measured a LOSS on ann_pq_adc_rerank (0.84 -> 0.98),
-    # ann_pq_trained (0.73 -> 0.77) and ann_incremental_ivfpq
-    # (1.85 -> 2.45) — those stay unpersisted.
+    # persisted: emb feeds the subvector split, the cell seeds, the
+    # corpus assignment and the probe side — unpersisted, each branch
+    # rescans and re-validates the table.
     emb = scoped_persist(valid_vecs(load_table(spark, sf_dir, "embeddings")))
     subs = _subvectors(emb)
     # two consumers (the pruned ADC scan + the n_candidates rollup)

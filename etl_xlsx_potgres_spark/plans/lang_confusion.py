@@ -210,11 +210,9 @@ def _trigram_pred(loc: DataFrame) -> DataFrame:
     """,
 )
 def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # persisted (r21): both union legs consume the cascade, so its
-    # localized-corpus scan + marker evaluation ran twice (and, under
-    # the intake respread, paid the respread twice — no
-    # ReusedExchange). Slim 3-column doc-grain frame. Interleaved A/B
-    # at sf0.1 (n=5 medians): 1.47 -> 1.30 s warm, 6.10 -> 1.76 cold.
+    # persisted: both union legs consume the cascade, so unpersisted
+    # its localized-corpus scan + marker evaluation runs twice. Slim
+    # 3-column doc-grain frame.
     casc = scoped_persist(
         text_lang_id(spark, sf_dir).select(
             "doc_id", "labeled_lang", "predicted_lang"

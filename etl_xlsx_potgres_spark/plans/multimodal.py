@@ -61,8 +61,7 @@ def mm_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_decode_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = attach_binary_payload(load_table(spark, sf_dir, "documents", widen=False))
+    d = attach_binary_payload(load_table(spark, sf_dir, "documents"))
     return decode_image_meta(d)
 
 
@@ -162,8 +161,7 @@ def mm_decode_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import frame_sample
 
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = attach_binary_payload(load_table(spark, sf_dir, "documents", widen=False))
+    d = attach_binary_payload(load_table(spark, sf_dir, "documents"))
     meta = decode_image_meta(d)
     return frame_sample(meta, every_n=10).select(
         "doc_id", "content_md5", "width", "height"

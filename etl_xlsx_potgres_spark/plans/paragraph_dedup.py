@@ -113,18 +113,13 @@ _DUCK_PARAS = (
 def dedup_paragraph_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import scoped_persist
 
-    # r21 (VERDICT r20 task 2): ``paged`` feeds TWO consumers (the
-    # meta-only first-occurrence pass and the text-side join), so the
-    # tokenize+paginate map ran twice — and under the r20 intake
-    # respread it paid the respread exchange twice too (no
-    # ReusedExchange: column pruning specializes each branch).
-    # Persist the paged frame once instead; the read drops the widen
-    # (4-mode interleaved A/B at sf0.1, n=5 medians: widen-nopersist
-    # 1.32 s / off-nopersist 1.14 / widen+persist 0.61 /
-    # off+persist 0.43 — and the widened cold first-run was 5.5 s vs
-    # 0.61 unwidened). At 100 TB the same role is a staging
-    # checkpoint, per the curation materialize policy.
-    d = load_table(spark, sf_dir, "documents", widen=False)
+    # ``paged`` feeds TWO consumers (the meta-only first-occurrence
+    # pass and the text-side join); unpersisted, the tokenize+paginate
+    # map runs twice (no ReusedExchange: column pruning specializes
+    # each branch). Persist the paged frame once instead. At 100 TB
+    # the same role is a staging checkpoint, per the curation
+    # materialize policy.
+    d = load_table(spark, sf_dir, "documents")
     paged = scoped_persist(
         d.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
         .withColumn("paras", F.expr(_SPARK_PARAS))

@@ -179,16 +179,10 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_coarse = math.isqrt(KMEANS_K - 1) + 1  # from module global: the
     # scale probes patch KMEANS_K, and C must track it (C ∝ sqrt(K))
-    # r21 (VERDICT r20 task 2): ``emb`` feeds THREE consumers (seeds,
-    # coarse, and the v2c crossJoin), so under the r20 intake respread
-    # each branch paid its own scan+respread (no ReusedExchange).
-    # Persist the validated frame once — the respread runs once, into
-    # the cache, and the broadcast-bound seeds/coarse branches read it
-    # back instead of rescanning. 4-mode interleaved A/B at sf0.1
-    # (n=5): widen-nopersist cold 2.77/warm ~1.1, off-nopersist cold
-    # 1.62, widen+persist cold 1.21/warm 1.15 (most stable — chosen),
-    # off+persist 1.19 but caches a 1-partition frame that would
-    # serialize the NxC distance stage. 16 bytes x dim per row —
+    # ``emb`` feeds THREE consumers (seeds, coarse, and the v2c
+    # crossJoin); persist the validated frame once so the
+    # broadcast-bound seeds/coarse branches read it back instead of
+    # rescanning and re-validating the table. 16 bytes x dim per row —
     # bounded; at 100 TB this is the assignment-staging checkpoint the
     # module docstring already mandates.
     emb = _sp(_valid_vecs(load_table(spark, sf_dir, "embeddings")))

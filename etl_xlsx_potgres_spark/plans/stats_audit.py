@@ -69,9 +69,8 @@ def stats_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # persisted: the cell frame is constant-cardinality (langs x
     # sources) and feeds FOUR consumers (marginals, total, final
-    # join) — unpersisted, each consumer re-ran the corpus scan +
-    # aggregate subtree (r20; the intake respread made the recompute
-    # visible at 4x its cost)
+    # join) — unpersisted, each consumer re-runs the corpus scan +
+    # aggregate subtree
     o = scoped_persist(
         d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("obs"))
     )

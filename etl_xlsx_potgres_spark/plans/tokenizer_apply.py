@@ -72,8 +72,7 @@ _DUCK_TOKENS = (
     """,
 )
 def text_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = load_table(spark, sf_dir, "documents", widen=False)
+    d = load_table(spark, sf_dir, "documents")
     toks = scoped_persist(
         d.select(
             "doc_id", F.posexplode(tokens("text")).alias("pos0", "term")

@@ -132,8 +132,7 @@ def sample_stratified_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sample_uniform_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = load_table(spark, sf_dir, "documents", widen=False)
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
         .select("doc_id", "lang", "n_chars")
@@ -250,8 +249,7 @@ def pii_mask_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mixture_weights_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = load_table(spark, sf_dir, "documents", widen=False)
+    d = load_table(spark, sf_dir, "documents")
     counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     counts = counts.withColumn(
         "fsqrt", F.floor(F.sqrt("n_docs") * 10000).cast("decimal(38,0)")

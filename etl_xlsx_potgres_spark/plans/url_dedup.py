@@ -149,8 +149,7 @@ lower(regexp_extract(url, '^([A-Za-z0-9+.-]+)://', 1)) || '://'
     """,
 )
 def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen=False: light map work, respread is net loss (A/B r20)
-    d = load_table(spark, sf_dir, "documents", widen=False).select("doc_id")
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
     canon = d.select(
         "doc_id",
         F.expr(_SPARK_URL).alias("url"),

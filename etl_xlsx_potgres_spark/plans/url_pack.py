@@ -58,10 +58,7 @@ _URL_SQL = (
     """,
 )
 def fn_url_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen_key: six parse_url + regex evaluations per row — heavy
-    # map work worth respreading a 1-row-group layout for (A/B at
-    # sf0.1: 1.17 -> 0.28, r20)
-    o = load_table(spark, sf_dir, "orders", widen_key="o_orderkey")
+    o = load_table(spark, sf_dir, "orders")
     base = o.selectExpr("o_orderkey", f"{_URL_SQL} AS url")
     host = F.parse_url("url", F.lit("HOST"))
     return base.select(

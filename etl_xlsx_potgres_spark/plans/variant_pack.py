@@ -47,9 +47,7 @@ from ..sources import load_table
     """,
 )
 def fn_variant_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen_key: JSON build/parse per row — heavy map work (A/B at
-    # sf0.1: 0.95 -> 0.23, r20)
-    e = load_table(spark, sf_dir, "events", widen_key="event_id")
+    e = load_table(spark, sf_dir, "events")
     doc = F.to_json(
         F.struct(
             F.col("event_type").alias("type"),

@@ -262,10 +262,7 @@ def agg_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # widen_key: exact-percentile partials buffer EVERY row into the
-    # aggregate's value map — heavy map work worth respreading a
-    # 1-row-group layout for (A/B at sf0.1: 2.13 -> 1.49, r20)
-    li = load_table(spark, sf_dir, "lineitem", widen_key="l_orderkey")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_quantity, 0.5)").alias("median_qty"),
         F.expr("percentile(l_extendedprice, 0.25)").alias("p25_price"),

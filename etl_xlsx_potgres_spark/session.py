@@ -12,7 +12,11 @@ for sessions and encodes the scale posture:
   200 default (on a real cluster this is overridden to ~2-3x total
   cores, and AQE coalesces down from there);
 - session timezone pinned to UTC so timestamp semantics match the
-  DuckDB oracle and are cluster-location-independent.
+  DuckDB oracle and are cluster-location-independent;
+- parquet TIMESTAMP(NANOS) columns read as int64 nanos
+  (``spark.sql.legacy.parquet.nanosAsLong``) so the events intake can
+  truncate them to micros (``sources/tables.py``); set here once, not
+  by the readers, so no query changes session conf.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "etl_xlsx_potgres_spark"
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def default_parallelism() -> int:
@@ -63,6 +68,7 @@ def get_spark(
         # and is a no-op at cluster scale where splits >> cores.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
+        .config(NANOS_AS_LONG, "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         # keep metastore/warehouse artifacts (derby, saveAsTable output
@@ -90,6 +96,7 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     policy (decimal sums, fixed-point, total orders), so this is a
     pure wall-clock change."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set(NANOS_AS_LONG, "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))

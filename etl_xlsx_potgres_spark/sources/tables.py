@@ -88,7 +88,8 @@ SCHEMAS: dict[str, T.StructType] = {
 
 # Some fixture generations write events.ts as parquet TIMESTAMP(NANOS),
 # which Spark's reader rejects ([PARQUET_TYPE_ILLEGAL]). When (and only
-# when) the footer actually says nanos, read it as raw int64 nanos and
+# when) the footer actually says nanos, read it as raw int64 nanos (the
+# session posture sets spark.sql.legacy.parquet.nanosAsLong) and
 # truncate to micros (integer division — matches DuckDB's ns->us
 # truncation), so downstream code and the oracle see identical
 # TimestampType values. Micros fixtures read via the declared schema
@@ -162,121 +163,21 @@ SCHEMAS["embeddings"] = _struct(
 
 TABLE_NAMES = tuple(SCHEMAS)
 
-# Intake widening (r20, guide §2.5 "input skew: one huge unsplittable
-# file ... repartition immediately after the read"): a parquet file is
-# only splittable at row-group boundaries, so a table written as ONE
-# row group runs every pre-shuffle map stage of every consumer on ONE
-# core no matter how many scan splits Spark creates. When the layout
-# provides fewer row groups than the session has cores, re-spread the
-# rows once, hashed on the table's canonical key:
-#
-# - HASH, not round-robin: repartition(n) pays a per-task local sort
-#   (spark.sql.execution.sortBeforeRepartition, needed for retry
-#   determinism) on the single scan task — measured slower than the
-#   map work it rescues on aggregate-light queries; hash on a data
-#   column is retry-deterministic for free, and downstream
-#   groupBy/joins keyed on the same column REUSE the exchange.
-# - LAYOUT-GATED: at production volumes a table carries orders of
-#   magnitude more row groups than the cluster has cores, so the
-#   remedy disarms itself; it exists for exactly the pathological
-#   layout the guide names.
-# - Only the HEAVY-MAP tables are listed (documents: tokenize/gram/
-#   hash/regex work per row; embeddings: 64-float vector math per
-#   row). A/B over the suite showed the relational tables
-#   (lineitem/orders/events) LOSE under intake widening: their map
-#   work is cheap projections, their queries are shuffle-bound right
-#   after the scan (the extra exchange double-moves the table), and
-#   multi-consumer plans pay the respread once per consumer because
-#   column pruning specializes each branch's exchange (no
-#   ReusedExchange). Dimension tables are broadcast-sized and an
-#   intake exchange would just lengthen their stage chains.
-#
-# SPARK_GRAFT_INTAKE_WIDEN=0 disables (the shuffle-budget census
-# audits each query's semantic plan shape without the layout remedy).
-_INTAKE_KEYS: dict[str, str] = {
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-}
-
-# path -> total row-group count across part files (footer metadata
-# reads, cached like the nanos probe).
-_ROW_GROUP_CACHE: dict[str, int] = {}
-
-
-def _row_groups(path: str) -> int:
-    cached = _ROW_GROUP_CACHE.get(path)
-    if cached is not None:
-        return cached
-    try:
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        parts = (
-            sorted(glob.glob(os.path.join(path, "*.parquet")))
-            if os.path.isdir(path)
-            else [path]
-        )
-        n = sum(pq.ParquetFile(p).metadata.num_row_groups for p in parts)
-    except Exception:
-        # unreadable footer (missing pyarrow, transient read error):
-        # report "plenty" so the remedy stays off for THIS call, but
-        # do NOT cache the sentinel — a transient failure must not
-        # permanently disarm the widening for the process lifetime
-        # (ADVICE r20). Cached entries are keyed by path only; table
-        # files are immutable within a session (the tests that rewrite
-        # layouts poison the cache deliberately).
-        return 1 << 30
-    _ROW_GROUP_CACHE[path] = n
-    return n
-
-
-def _widen_intake(
-    df: DataFrame, path: str, name: str, forced_key: str | None = None
-) -> DataFrame:
-    import os
-
-    from ..session import default_parallelism
-
-    key = forced_key or _INTAKE_KEYS.get(name)
-    if key is None or os.environ.get("SPARK_GRAFT_INTAKE_WIDEN", "1") == "0":
-        return df
-    width = default_parallelism()
-    if _row_groups(path) >= width:
-        return df
-    return df.repartition(width, key)
-
 
 def load_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    widen_key: str | None = None,
-    widen: bool = True,
+    spark: SparkSession, sf_dir: str, name: str, widen: bool = True
 ) -> DataFrame:
     """Read one test table with its declared schema.
 
-    ``widen_key`` opts a relational table into the intake respread for
-    a query whose PRE-SHUFFLE map work is heavy (e.g. exact-percentile
-    or sketch partial aggregation buffering every row) — A/B'd per
-    call site, because for cheap-projection consumers the extra
-    exchange is a net loss. Still layout-gated: a no-op whenever the
-    file layout already provides enough row groups. ``widen=False``
-    opts OUT for frames that are about to be BROADCAST — a respread
-    under a broadcast build is pure overhead.
+    ``widen`` is ignored; ``perfbench/run.py`` still passes it.
     """
     path = f"{sf_dir}/{name}.parquet"
     if name in _NANOS_TS_COLS and _has_nanos_ts(path, _NANOS_TS_COLS[name]):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.schema(_RAW_SCHEMAS[name]).parquet(path)
         for c in _NANOS_TS_COLS[name]:
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    else:
-        df = spark.read.schema(SCHEMAS[name]).parquet(path)
-    if not widen:
         return df
-    return _widen_intake(df, path, name, widen_key)
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

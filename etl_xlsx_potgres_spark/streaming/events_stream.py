@@ -41,7 +41,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file source wants a directory (the "landing dir" model of
     # importador.py's uploads/); glob-filter down to the events table.
     if _has_nanos_ts(f"{sf_dir}/events.parquet", ["ts"]):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = (
             spark.readStream.schema(_RAW_EVENTS)
             .format("parquet")

@@ -24,11 +24,7 @@ def _plan_str(df) -> str:
     return buf.getvalue()
 
 
-def test_history_side_probe_is_exchange_free(spark, sf_dir, monkeypatch):
-    # audit the SEMANTIC plan: the intake-layout respread would add a
-    # third exchange on the BATCH subtree (never the history side) on
-    # the fixtures' 1-row-group files — tested in test_sources_intake
-    monkeypatch.setenv("SPARK_GRAFT_INTAKE_WIDEN", "0")
+def test_history_side_probe_is_exchange_free(spark, sf_dir):
     store = dedup_incremental._provision_store(spark, sf_dir)
     hist = spark.table(store)
     newd = load_table(spark, sf_dir, "documents").filter(

@@ -168,18 +168,14 @@ def _simple_plan(df) -> str:
     return buf.getvalue()
 
 
-def test_sem_seeding_is_map_only(spark, sf_dir, monkeypatch):
+def test_sem_seeding_is_map_only(spark, sf_dir):
     """VERDICT r17 task 1: centroid seeding must never sort or window
     the history.  The r17 scheme ranked ALL history vectors through a
     global no-partition row_number — a single-task sort of the corpus.
     The md5-coin replacement is map-only up to two broadcast scalars
     (COUNT, MIN(coin)): the only shuffle allowed is their SinglePartition
     reduction, which moves one partial-aggregate row per PARTITION —
-    O(#partitions), never O(history).  Audited on the SEMANTIC plan:
-    the intake-layout respread (tested in test_sources_intake.py)
-    would add its own batch-side exchange on the fixtures' 1-row-group
-    files."""
-    monkeypatch.setenv("SPARK_GRAFT_INTAKE_WIDEN", "0")
+    O(#partitions), never O(history)."""
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )

@@ -22,12 +22,7 @@ def _plan(spark, sf_dir, name: str) -> str:
     return buf.getvalue()
 
 
-def test_q1_pushdown_and_pruning(spark, sf_dir, monkeypatch):
-    # audit the SEMANTIC plan: the intake-layout remedy adds its hash
-    # key (l_orderkey) to the ReadSchema and one respread Exchange on
-    # the fixtures' 1-row-group files (tested in
-    # test_sources_intake.py, incl. pushdown THROUGH the respread)
-    monkeypatch.setenv("SPARK_GRAFT_INTAKE_WIDEN", "0")
+def test_q1_pushdown_and_pruning(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q1_pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # 7-column projection reaches the scan: no unused columns read

@@ -375,15 +375,10 @@ def test_final_exchange_census_skips_initial_plan_blocks():
 
 
 @pytest.mark.parametrize("name", sorted(BUDGETS))
-def test_exchange_count_within_budget(name, spark, monkeypatch):
+def test_exchange_count_within_budget(name, spark):
     # earlier tests leave persisted frames in the CacheManager, which
     # substitutes InMemoryRelation into matching subtrees and changes
-    # the Exchange census — measure the cold plan. The census audits
-    # each query's SEMANTIC plan shape, so the intake-layout remedy
-    # (sources/tables._widen_intake — fires on the fixtures' 1-row-
-    # group files, self-disarms at production layouts) is switched
-    # off; it has its own focused test in test_sources.py.
-    monkeypatch.setenv("SPARK_GRAFT_INTAKE_WIDEN", "0")
+    # the Exchange census — measure the cold plan.
     spark.catalog.clearCache()
     df = registry.QUERIES[name](spark, _BUDGET_SF)
     buf = io.StringIO()

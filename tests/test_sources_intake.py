@@ -1,10 +1,6 @@
-"""Focused tests for the r20 intake-widening layout remedy
-(``sources/tables._widen_intake``): the fixtures' single-row-group
-parquet files make every pre-shuffle map stage single-task (a parquet
-file splits only at row-group boundaries), so ``load_table``
-re-spreads fact/corpus tables once, hashed on their canonical key —
-and must do so ONLY under that pathological layout.
-"""
+"""``load_table`` is the declared-schema read and nothing more: no
+table gains a repartition or an exchange at intake, and predicates
+still reach the parquet scan."""
 
 from __future__ import annotations
 
@@ -13,71 +9,24 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from etl_xlsx_potgres_spark.session import default_parallelism
-from etl_xlsx_potgres_spark.sources import load_table
-from etl_xlsx_potgres_spark.sources import tables as tables_mod
+from etl_xlsx_potgres_spark.sources import TABLE_NAMES, load_table
 
 # same override contract as conftest.SF_DIR (ADVICE r20: a hardcoded
 # path silently tested the wrong fixture under TEST_SF_DIR)
 SF = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def test_widen_spreads_single_row_group_scan(spark):
-    if default_parallelism() < 2:
-        pytest.skip("widen is a no-op at parallelism 1 (row_groups >= width)")
-    df = load_table(spark, SF, "documents")
-    parts = (
-        df.select(F.spark_partition_id().alias("p"))
-        .groupBy("p")
-        .count()
-        .collect()
-    )
-    assert len(parts) > 1, "intake widen should spread the 1-row-group scan"
-    # nothing lost or duplicated by the respread
-    assert sum(r["count"] for r in parts) == df.count()
-
-
-def test_widen_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_INTAKE_WIDEN", "0")
-    plan = load_table(spark, SF, "documents")._jdf.queryExecution().toString()
+@pytest.mark.parametrize("name", TABLE_NAMES)
+def test_load_table_adds_no_exchange(spark, name):
+    plan = load_table(spark, SF, name)._jdf.queryExecution().toString()
     assert "RepartitionByExpression" not in plan
-
-
-def test_widen_skips_dimension_tables(spark):
-    plan = load_table(spark, SF, "nation")._jdf.queryExecution().toString()
-    assert "RepartitionByExpression" not in plan
-
-
-def test_widen_disarms_on_many_row_groups(spark, monkeypatch):
-    # a production layout reports more row groups than cores — the
-    # remedy must turn itself off (the cache is keyed on path, so
-    # poisoning it simulates the layout without writing files)
-    path = f"{SF}/documents.parquet"
-    monkeypatch.setitem(tables_mod._ROW_GROUP_CACHE, path, 1 << 20)
-    plan = load_table(spark, SF, "documents")._jdf.queryExecution().toString()
-    assert "RepartitionByExpression" not in plan
-
-
-def test_widen_fires_iff_layout_is_starved(spark, monkeypatch):
-    if default_parallelism() < 2:
-        pytest.skip("widen is a no-op at parallelism 1 (row_groups >= width)")
-    path = f"{SF}/documents.parquet"
-    monkeypatch.setitem(tables_mod._ROW_GROUP_CACHE, path, 1)
-    plan = load_table(spark, SF, "documents")._jdf.queryExecution().toString()
-    assert "RepartitionByExpression" in plan
-    assert "doc_id" in plan  # hashed on the canonical key, no pre-sort
+    assert "Exchange" not in plan
 
 
 def test_pushed_filters_survive_the_widen(spark):
-    # predicate pushdown must reach the parquet scan THROUGH the
-    # repartition (guide §6: check PushedFilters in the scan node)
+    # predicate pushdown must reach the parquet scan (guide §6: check
+    # PushedFilters in the scan node)
     df = load_table(spark, SF, "lineitem").filter(F.col("l_orderkey") == 1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan
     assert "IsNotNull(l_orderkey)" in plan or "EqualTo(l_orderkey,1)" in plan
-
-
-@pytest.mark.parametrize("name", sorted(tables_mod._INTAKE_KEYS))
-def test_intake_keys_exist_in_schemas(name):
-    key = tables_mod._INTAKE_KEYS[name]
-    assert key in [f.name for f in tables_mod.SCHEMAS[name].fields]
