@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
+
 
 def _segment_spec(lengths: DataFrame, k: int) -> DataFrame:
     """(L, i, start, slen) for each distinct length L: the even
@@ -73,7 +75,7 @@ def levenshtein_pairs_blocked(
     lengths = s.select("L").distinct()
     spec = _segment_spec(lengths, k)
 
-    idx = s.join(F.broadcast(spec), "L").select(
+    idx = s.join(constant_size(spec), "L").select(
         "id", "s", "L", "i", F.expr("substring(s, start + 1, slen)").alias("seg")
     )
 
@@ -94,7 +96,7 @@ def levenshtein_pairs_blocked(
     )
     probe = (
         s.withColumnRenamed("L", "Lr")
-        .join(F.broadcast(pspec), "Lr")
+        .join(constant_size(pspec), "Lr")
         .select(
             "id",
             "s",

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
+
 
 def fk_lookup(
     fact: DataFrame,
@@ -34,7 +36,7 @@ def fk_lookup(
     channel instead.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    d = F.broadcast(dim) if broadcast else dim
+    d = constant_size(dim) if broadcast else dim
     joined = fact.join(d, keys, "left")
     # any non-key dim column being null marks a miss
     probe = next(c for c in dim.columns if c not in keys)

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..operators.clean import (
     digits_only,
     normalize_headers,
@@ -144,7 +145,7 @@ def build_outputs(
 
     if honest_flags:
         enriched = enriched.join(
-            F.broadcast(status), enriched["Status"] == status["status"], "left"
+            constant_size(status), enriched["Status"] == status["status"], "left"
         ).withColumn("isento_val", F.col("Isento") == "Sim")
         status_col = F.coalesce(F.col("status_id"), F.lit(1))
         isento_col = F.coalesce(F.col("isento_val"), F.lit(False))

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import msum, sql_msum
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -292,7 +293,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty docs produce no explode rows in the oracle — keep
         # parity (and avoid 0/0) by dropping them here too
         .filter(F.size("toks") > 0)
-        .crossJoin(F.broadcast(vocab_row))
+        .crossJoin(constant_size(vocab_row))
         .select(
             "doc_id",
             n_tok.cast("long").alias("n_tokens"),

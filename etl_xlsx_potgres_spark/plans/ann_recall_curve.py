@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..registry import ORACLES, register
 from ..sources import load_table
 from . import similarity  # noqa: F401  (registers ann_cosine_topk first)
@@ -352,7 +353,7 @@ def _ivf_curve(
     )
     aw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "cid")
     assign = (
-        emb.crossJoin(F.broadcast(cents))
+        emb.crossJoin(constant_size(cents))
         .withColumn("ccos", cos_vc)
         .withColumn("arn", F.row_number().over(aw))
         .filter(F.col("arn") == 1)
@@ -361,7 +362,7 @@ def _ivf_curve(
     probes = (
         emb.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .crossJoin(F.broadcast(cents))
+        .crossJoin(constant_size(cents))
         .withColumn(
             "ccos", _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))
         )
@@ -385,7 +386,7 @@ def _ivf_curve(
     )
     lw = Window.partitionBy("p", "qid").orderBy(F.desc("cosine"), "vec_id")
     topk = (
-        scored.join(F.broadcast(levels), scored["prn"] <= levels["p"])
+        scored.join(constant_size(levels), scored["prn"] <= levels["p"])
         .withColumn("rn", F.row_number().over(lw))
         .filter(F.col("rn") <= similarity.TOP_K)
         .select("p", "qid", "vec_id")
@@ -397,7 +398,7 @@ def _ivf_curve(
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     cand = (
-        scored.join(F.broadcast(levels), scored["prn"] <= levels["p"])
+        scored.join(constant_size(levels), scored["prn"] <= levels["p"])
         .groupBy("p")
         .agg(F.count(F.lit(1)).alias("n_candidates"))
     )
@@ -407,16 +408,14 @@ def _ivf_curve(
     )
 
 
-def _ivfpq_curve(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, levels: DataFrame
-) -> DataFrame:
+def _ivfpq_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
     subs = _subvectors(emb)
     codebook = _train(subs)
     d2 = F.expr(_coarse_d2_spark("embedding", "cv"))
     cells = _cells(emb)
     assign = (
         emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cells))
+        .crossJoin(constant_size(cells))
         .select("vec_id", "cid", d2.alias("d2"))
         .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "cid")).alias("mc"))
@@ -426,21 +425,21 @@ def _ivfpq_curve(
     probes = (
         emb.filter(F.col("vec_id") < NQ)
         .select(F.col("vec_id").alias("qid"), "embedding")
-        .crossJoin(F.broadcast(cells))
+        .crossJoin(constant_size(cells))
         .select("qid", "cid", d2.alias("d2"))
         .withColumn("prn", F.row_number().over(pw))
         .filter(F.col("prn") <= _MAX_PROBE)
         .select("qid", "cid", "prn")
     )
     cand = scoped_persist(
-        assign.join(F.broadcast(probes), "cid")
+        assign.join(constant_size(probes), "cid")
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id", "prn")
     )
     # encode + LUT (the pq_search shapes, level-independent)
     code_w = Window.partitionBy("vec_id", "m").orderBy("d2", "k")
     codes = (
-        subs.join(F.broadcast(codebook), "m")
+        subs.join(constant_size(codebook), "m")
         .select("vec_id", "m", "k", F.expr(_D2_SPARK).alias("d2"))
         .withColumn("rn", F.row_number().over(code_w))
         .filter(F.col("rn") == 1)
@@ -449,7 +448,7 @@ def _ivfpq_curve(
     lut = (
         subs.filter(F.col("vec_id") < NQ)
         .select(F.col("vec_id").alias("qid"), "m", "sub")
-        .join(F.broadcast(codebook), "m")
+        .join(constant_size(codebook), "m")
         .select(
             "qid",
             "m",
@@ -461,13 +460,13 @@ def _ivfpq_curve(
     )
     adc = scoped_persist(
         codes.join(cand, "vec_id")
-        .join(F.broadcast(lut), ["qid", "m", "k"])
+        .join(constant_size(lut), ["qid", "m", "k"])
         .groupBy("qid", "vec_id", "prn")
         .agg(F.sum("lut_micro").cast("long").alias("adc_micro"))
     )
     sl_w = Window.partitionBy("p", "qid").orderBy("adc_micro", "vec_id")
     short = (
-        adc.join(F.broadcast(levels), adc["prn"] <= levels["p"])
+        adc.join(constant_size(levels), adc["prn"] <= levels["p"])
         .withColumn("rn", F.row_number().over(sl_w))
         .filter(F.col("rn") <= SHORTLIST)
         .select("p", "qid", "vec_id")
@@ -475,14 +474,9 @@ def _ivfpq_curve(
     q = emb.filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    from .dedup_fuzzy import _size_aware_broadcast
-
     exact = scoped_persist(
         q.join(
-            _size_aware_broadcast(
-                spark, sf_dir,
-                emb.select("vec_id", F.col("embedding").alias("vv")),
-            ),
+            emb.select("vec_id", F.col("embedding").alias("vv")),
             F.col("vec_id") != F.col("qid"),
         ).select(
             "qid",
@@ -511,7 +505,7 @@ def _ivfpq_curve(
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     candn = (
-        cand.join(F.broadcast(levels), cand["prn"] <= levels["p"])
+        cand.join(constant_size(levels), cand["prn"] <= levels["p"])
         .groupBy("p")
         .agg(F.count(F.lit(1)).alias("n_candidates"))
     )
@@ -531,7 +525,7 @@ def _ivfpq_curve(
         ),
     )
     short_s = adc_rank.join(
-        F.broadcast(slevels), adc_rank["rn_adc"] <= slevels["s"]
+        constant_size(slevels), adc_rank["rn_adc"] <= slevels["s"]
     ).select("s", "qid", "vec_id")
     rr_s = Window.partitionBy("s", "qid").orderBy("d2_micro", "vec_id")
     rerank_s = (
@@ -570,5 +564,5 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     levels = _levels_frame(spark)
     return _ivf_curve(spark, sf_dir, emb, levels).unionByName(
-        _ivfpq_curve(spark, sf_dir, emb, levels)
+        _ivfpq_curve(emb, levels)
     )

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -109,7 +110,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = toks.agg(F.countDistinct("term").cast("long").alias("v"))
     lp = (
         cb.join(cu, "w1")
-        .crossJoin(F.broadcast(v))
+        .crossJoin(constant_size(v))
         .select(
             "w1",
             "w2",

@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -155,7 +156,7 @@ def dedup_bloom_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     hits = (
-        probes.join(F.broadcast(bloom), "word", "left")
+        probes.join(constant_size(bloom), "word", "left")
         .withColumn(
             "bit_hit",
             F.coalesce(
@@ -166,20 +167,11 @@ def dedup_bloom_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.expr("bool_and(bit_hit)").alias("bloom_hit"))
     )
-    # the distinct corpus-key frame SCALES with the corpus — route it
-    # through the size-aware broadcast (the Bloom filter itself is the
-    # constant-size structure; the exact check is the audit side)
-    from .dedup_fuzzy import _size_aware_broadcast
-
+    # the Bloom filter is the constant-size structure; the exact check
+    # is the audit side, and its distinct corpus-key frame scales with
+    # the corpus
     exact = batch.join(
-        _size_aware_broadcast(
-            spark, sf_dir,
-            corpus.distinct().withColumn("seen", F.lit(True)),
-            table="documents",  # the frame scales with documents, not
-            # the default embeddings — the gate must watch that table
-        ),
-        "k",
-        "left",
+        corpus.distinct().withColumn("seen", F.lit(True)), "k", "left"
     ).select("doc_id", F.coalesce("seen", F.lit(False)).alias("exact_hit"))
 
     return hits.join(exact, "doc_id").select(

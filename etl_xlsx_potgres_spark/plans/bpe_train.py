@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -161,7 +162,7 @@ def _merge_rounds(words: DataFrame) -> list[DataFrame]:
             )
         )
         rounds.append(top)
-        w = w.crossJoin(F.broadcast(top)).select(
+        w = w.crossJoin(constant_size(top)).select(
             "word",
             "cnt",
             F.trim(

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 from .bpe_train import (
@@ -158,7 +159,7 @@ def _merges_row(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit(" "), F.col("merged"), F.lit(" ")).alias(f"m{k}"),
         )
         # 1-row winner frames (the bpe_train broadcast contract)
-        mrow = cur if mrow is None else mrow.crossJoin(F.broadcast(cur))
+        mrow = cur if mrow is None else mrow.crossJoin(constant_size(cur))
     return mrow
 
 
@@ -189,7 +190,7 @@ def _costed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the corpus word-count shuffle runs twice — seen in the r17 plan
     # audit, 16 Exchanges vs 8)
     merges_row_df = scoped_persist(_merges_row(spark, sf_dir))
-    return base.crossJoin(F.broadcast(merges_row_df)).select(
+    return base.crossJoin(constant_size(merges_row_df)).select(
         "doc_id", "toks", F.expr(_cost_expr("spark")).alias("costs")
     )
 

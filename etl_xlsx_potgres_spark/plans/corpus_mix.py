@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 from .importance_sampling import _duck_hex6
@@ -106,8 +107,8 @@ def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(0)
     coined = (
         d.select("doc_id", "source")
-        .join(F.broadcast(src), "source")  # one row per source
-        .crossJoin(F.broadcast(tot))  # 1-row totals
+        .join(constant_size(src), "source")  # one row per source
+        .crossJoin(constant_size(tot))  # 1-row totals
         .select("source", "c_s", "en_s", "n", "en_total", kept.alias("kept"))
     )
     return (

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -250,9 +251,9 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = (
-        tf.join(F.broadcast(dfreq), "term")
+        tf.join(constant_size(dfreq), "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(constant_size(stats))
         .select(
             "doc_id",
             F.floor(tf_part * idf_grid * 1000000)
@@ -316,7 +317,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = scoped_persist(toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
     vocab = tf.groupBy("term").agg(F.sum("tf").cast("long").alias("c"))
     total = vocab.agg(F.sum("c").cast("long").alias("total"))
-    lp = vocab.crossJoin(F.broadcast(total)).select(
+    lp = vocab.crossJoin(constant_size(total)).select(
         "term",
         F.floor(
             F.log(F.col("c").cast("double") / F.col("total").cast("double"))
@@ -428,7 +429,7 @@ def emb_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"aggregate({_Q_TERM_SPARK}, cast(0 as bigint), (a, t) -> a + t)"
     )
     return (
-        emb.crossJoin(F.broadcast(arrs))
+        emb.crossJoin(constant_size(arrs))
         .select("vec_id", "label", terms.alias("sse_pico"))
         .select(
             "vec_id",
@@ -504,7 +505,7 @@ def emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = emb.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("seed_id"), F.col("embedding").alias("sv")
     )
-    pairs = emb.crossJoin(F.broadcast(seeds)).select(
+    pairs = emb.crossJoin(constant_size(seeds)).select(
         "vec_id", "seed_id", F.expr(_D2_SPARK).alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "seed_id")

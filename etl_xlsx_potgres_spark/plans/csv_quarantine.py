@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources.files import read_csv_quarantine, split_corrupt
 
@@ -75,4 +76,4 @@ def csv_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = bad.agg(F.count(F.lit(1)).cast("long").alias("n_quarantined"))
     return clean.select(
         F.col("k").cast("long").alias("k"), "name", "amount"
-    ).crossJoin(F.broadcast(total))
+    ).crossJoin(constant_size(total))

@@ -22,8 +22,6 @@ Scale shapes (the whole point of each design):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -611,46 +609,6 @@ _DUCK_COS_AB = (
 )
 
 
-def _broadcast_threshold_bytes(spark: SparkSession) -> int:
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
-    for suffix, mult in units.items():
-        for s in (suffix + "b", suffix):
-            if raw.endswith(s):
-                return int(raw[: -len(s)]) * mult
-    if raw.endswith("b"):
-        raw = raw[:-1]
-    return int(raw)
-
-
-def _size_aware_broadcast(
-    spark: SparkSession, sf_dir: str, frame: DataFrame, table: str = "embeddings"
-) -> DataFrame:
-    """Broadcast ``frame`` only while the backing table is actually
-    small: under autoBroadcastJoinThreshold (by on-disk parquet size)
-    -> broadcast hint; above -> plain frame, so the planner does an
-    id-keyed shuffle join. At 100 TB the embedding table is NOT
-    broadcastable and the hint must not be hard-coded."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        size = (
-            os.path.getsize(path)
-            if os.path.isfile(path)
-            else sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-            )
-        )
-    except OSError:
-        return frame
-    if size <= _broadcast_threshold_bytes(spark):
-        return F.broadcast(frame)
-    return frame
-
-
 def _emb_lsh_oracle() -> str:
     from .similarity import duck_valid, sql_sign_plane_signature
 
@@ -737,8 +695,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("na") * F.col("nb")
     )
     return (
-        cand.join(_size_aware_broadcast(spark, sf_dir, e1), "v1")
-        .join(_size_aware_broadcast(spark, sf_dir, e2), "v2")
+        cand.join(e1, "v1")
+        .join(e2, "v2")
         .select("v1", "v2", cosine.alias("cosine"))
         .filter(F.col("cosine") >= _EMB_LSH_THRESHOLD)
     )

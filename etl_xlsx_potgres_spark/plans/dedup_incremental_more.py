@@ -793,9 +793,7 @@ def _argmin_cos(
     )
 
 
-def _sem_assign(
-    spark: SparkSession, sf_dir: str, vecs: DataFrame, cents: DataFrame
-) -> DataFrame:
+def _sem_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, embedding, cid): TWO-LEVEL nearest-centroid by cosine
     (r17, closing the r16 probe residual): vectors first pick the
     nearest of C = ceil(sqrt(K)) coarse seeds, then the nearest fine
@@ -806,15 +804,12 @@ def _sem_assign(
     N x (C + K/C) ≈ 2N·sqrt(K), the ``plans/semantic_dedup``
     geometry. Membership near coarse boundaries can differ from the
     flat argmin; the oracle mirrors the SAME two-level rule, so the
-    differential stays bit-exact.  Centroid/group frames SCALE with
-    history, so broadcasts are size-gated, not hard-coded."""
-    from .dedup_fuzzy import _size_aware_broadcast
-
+    differential stays bit-exact."""
     coarse = _sem_coarse(cents)
-    c2g = _sem_c2g(spark, sf_dir, cents, coarse)
+    c2g = _sem_c2g(cents, coarse)
     # vector -> coarse group: N x C evals, one N-row shuffle
     v2g = _argmin_cos(
-        vecs.crossJoin(_size_aware_broadcast(spark, sf_dir, coarse)),
+        vecs.crossJoin(coarse),
         "embedding",
         "gv",
         "gid",
@@ -823,7 +818,7 @@ def _sem_assign(
     # vector -> fine cell within its group: ~N x K/C evals; the
     # groupBy reuses v2g's vec_id partitioning
     return _argmin_cos(
-        v2g.join(_size_aware_broadcast(spark, sf_dir, c2g), "gid"),
+        v2g.join(c2g, "gid"),
         "embedding",
         "cv",
         "cid",
@@ -831,24 +826,30 @@ def _sem_assign(
     )
 
 
-def _sem_c2g(
-    spark: SparkSession, sf_dir: str, cents: DataFrame, coarse: DataFrame
-) -> DataFrame:
+def _sem_c2g(cents: DataFrame, coarse: DataFrame) -> DataFrame:
     """Fine cell -> coarse group (K x C evals, both centroid-sized;
-    persisted — two consumers in the probe path)."""
+    persisted — two consumers in the probe path), hinted while its K
+    rows fit under the broadcast threshold."""
     from ..caching import scoped_persist
-    from .dedup_fuzzy import _size_aware_broadcast
+    from ..hints import broadcast_if_fits
 
-    return scoped_persist(
+    # K grows with history (~N/64 cells), and below the seeding cross
+    # join Catalyst cannot size cents, coarse or c2g: counting the cells
+    # materializes the shared cents cache (real sizes for the cross
+    # joins) and gives c2g a byte estimate, ~600 B per (cid, vector,
+    # gid) row
+    k = cents.count()
+    c2g = scoped_persist(
         _argmin_cos(
             cents.select(F.col("cid").alias("vec_id"), F.col("cv"))
-            .crossJoin(_size_aware_broadcast(spark, sf_dir, coarse)),
+            .crossJoin(coarse),
             "cv",
             "gv",
             "gid",
             "gid",
         ).select(F.col("vec_id").alias("cid"), "cv", "gid")
     )
+    return broadcast_if_fits(c2g, k * 600)
 
 
 def _topn_cos(
@@ -879,9 +880,7 @@ def _topn_cos(
     )
 
 
-def _sem_probe(
-    spark: SparkSession, sf_dir: str, vecs: DataFrame, cents: DataFrame
-) -> DataFrame:
+def _sem_probe(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, embedding, cid) x up to {SEM_N_PROBE} probed cells per
     NEW vector — IVF probe discipline (r18): the r17 single-cell
     assignment missed near-dup pairs whose two sides fall just either
@@ -894,13 +893,11 @@ def _sem_probe(
     vector, never the corpus).  History stays single-assigned (each
     history vector lives in exactly ONE store bucket), so probed cells
     are disjoint and per-vector candidate counts never double-count."""
-    from .dedup_fuzzy import _size_aware_broadcast
-
     coarse = _sem_coarse(cents)
-    c2g = _sem_c2g(spark, sf_dir, cents, coarse)
+    c2g = _sem_c2g(cents, coarse)
     # top-2 coarse groups: N x C evals, one N-row shuffle
     probeg = _topn_cos(
-        vecs.crossJoin(_size_aware_broadcast(spark, sf_dir, coarse)),
+        vecs.crossJoin(coarse),
         "embedding",
         "gv",
         "gid",
@@ -908,7 +905,7 @@ def _sem_probe(
         SEM_N_PROBE,
     )
     # candidate cells = the probed groups' cells: ~N*probe x K/C evals
-    cand = probeg.join(_size_aware_broadcast(spark, sf_dir, c2g), "gid")
+    cand = probeg.join(c2g, "gid")
     return _topn_cos(cand, "embedding", "cv", "cid", "cid", SEM_N_PROBE)
 
 
@@ -948,7 +945,7 @@ def _provision_semantic_store(
         F.col("vec_id") % 10 != 0
     ).select("vec_id", "embedding")
     cents = _sem_cents(hist)
-    assign = _sem_assign(spark, sf_dir, hist, cents)
+    assign = _sem_assign(hist, cents)
     return _provision(
         spark, sf_dir, "semantic_cell", _semantic_rank(assign), "cid",
         force=force,
@@ -1069,7 +1066,7 @@ def _sem_probe_verdict(
     # probing SEM_N_PROBE cells per new vector (probed cells are
     # disjoint — history is single-assigned — so counts never
     # double-count a history vector)
-    nassign = _sem_probe(spark, sf_dir, newv, _sem_cents(hist_src))
+    nassign = _sem_probe(newv, _sem_cents(hist_src))
     cos = _dot(F.col("embedding"), F.col("hemb")) / (
         _norm(F.col("embedding")) * _norm(F.col("hemb"))
     )
@@ -1168,7 +1165,7 @@ def ann_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     newv = emb.filter(F.col("vec_id") % 10 == 0).select(
         "vec_id", "embedding"
     )
-    nassign = _sem_probe(spark, sf_dir, newv, _sem_cents(hist_src))
+    nassign = _sem_probe(newv, _sem_cents(hist_src))
     cos = _dot(F.col("embedding"), F.col("hemb")) / (
         _norm(F.col("embedding")) * _norm(F.col("hemb"))
     )
@@ -1446,7 +1443,7 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probed cells per query — TWO consumers (ADC scan + the
     # full-precision verifier twin), so the probe computes once
     nassign = scoped_persist(
-        _sem_probe(spark, sf_dir, newv, _sem_cents(hist_src))
+        _sem_probe(newv, _sem_cents(hist_src))
     )
     # per-query subspace LUT: new-batch x M*K slim bigint rows — an
     # equi-join at scale, NOT a hard broadcast (the batch grows)

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -97,7 +98,7 @@ def filter_domain_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocklist_df = spark.createDataFrame(
         [(e,) for e in BLOCKLIST], ["entry"]
     )
-    blocklist_df = F.broadcast(blocklist_df)
+    blocklist_df = constant_size(blocklist_df)
     sufs = (
         hosts.withColumn("labels", F.split("host", "\\."))
         .select(

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import msum, sql_msum
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -115,7 +116,7 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("quarter") == QUARTER
     )
     return fact.join(
-        F.broadcast(dim), fact.ship_month == dim.month, "inner"
+        constant_size(dim), fact.ship_month == dim.month, "inner"
     )
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -149,7 +150,7 @@ def drift_weekly_value_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c.n_week").alias("n_curr"),
             F.col("p.n_week").alias("n_prev"),
         )
-        .crossJoin(F.broadcast(max_week))  # 1-row bound frame
+        .crossJoin(constant_size(max_week))  # 1-row bound frame
         .where(F.col("week").between(F.lit(1), F.col("mw")))
     )
     tv = paired.groupBy("event_type", "week").agg(

@@ -28,29 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import broadcast_if_fits
 from ..registry import register
 from ..sources import load_table
-from .dedup_fuzzy import _broadcast_threshold_bytes
 
 DAMPING = 0.85
 N_ITER = 8
-
-# conservative per-row estimate for the (vertex BIGINT, rank DOUBLE)
-# iteration vectors in BroadcastHashJoin's long-to-row hashed relation
-_RANK_ROW_BYTES = 48
-
-
-def _gated_vector_hint(frame: DataFrame, n_rows: int) -> DataFrame:
-    """Broadcast the |V|-row iteration state ONLY while its estimated
-    size fits under autoBroadcastJoinThreshold. The vertex set scales
-    with the data — at 100 TB a billion-row rank vector must NOT be
-    hinted into every executor (same class of bug as a corpus
-    broadcast); above the threshold the join falls back to a plain
-    src-keyed shuffle join, which AQE can still convert at runtime."""
-    spark = frame.sparkSession
-    if n_rows * _RANK_ROW_BYTES <= _broadcast_threshold_bytes(spark):
-        return F.broadcast(frame)
-    return frame
 
 
 def _vector_width(n_rows: int) -> int:
@@ -71,6 +54,10 @@ def pagerank(edges: DataFrame, n_iter: int = N_ITER, damping: float = DAMPING) -
     )
     n = vertices.count()
     w = _vector_width(n)
+    # conservative estimate of the |V|-row (vertex BIGINT, rank DOUBLE)
+    # vectors in BroadcastHashJoin's hashed relation; Catalyst has no
+    # size estimate for the checkpointed rank vector
+    vec_bytes = n * 48
     # size the cached edge partitioning to the data, not to the shuffle
     # width of whatever produced it (a union of two 200-partition
     # shuffles yields 400 near-empty partitions whose per-iteration
@@ -79,13 +66,12 @@ def pagerank(edges: DataFrame, n_iter: int = N_ITER, damping: float = DAMPING) -
     out_deg = scoped_persist(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).coalesce(w))
     ranks = vertices.withColumn("rank", F.lit(1.0 / n))
     for _ in range(n_iter):
-        # the rank/degree vectors are |V| rows — while they fit under
-        # the broadcast threshold, hint them into the edge scan so each
-        # iteration shuffles only the per-dst partial sums, never the
-        # edge list; past the threshold the gate drops the hint
+        # while the rank/degree vectors fit under the broadcast
+        # threshold, hint them into the edge scan so each iteration
+        # shuffles only the per-dst partial sums, never the edge list
         contribs = (
-            edges.join(_gated_vector_hint(ranks, n), edges.src == ranks.vertex)
-            .join(_gated_vector_hint(out_deg, n), "src")
+            edges.join(broadcast_if_fits(ranks, vec_bytes), edges.src == ranks.vertex)
+            .join(broadcast_if_fits(out_deg, vec_bytes), "src")
             .select(F.col("dst").alias("vertex"), (F.col("rank") / F.col("deg")).alias("c"))
             # pre-partition at the width the rank vector needs; the
             # groupBy reuses it instead of the session-wide shuffle width
@@ -127,14 +113,15 @@ def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
     )
     n = vertices.count()
     w = _vector_width(n)
+    vec_bytes = n * 48
     base = (SCALE * (DAMP_DEN - DAMP_NUM)) // (DAMP_DEN * n)
     edges = scoped_persist(edges.repartition(w))
     out_deg = scoped_persist(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).coalesce(w))
     ranks = vertices.withColumn("rank_fp", F.lit(SCALE // n).cast("long"))
     for _ in range(n_iter):
         contribs = (
-            edges.join(_gated_vector_hint(ranks, n), edges.src == ranks.vertex)
-            .join(_gated_vector_hint(out_deg, n), "src")
+            edges.join(broadcast_if_fits(ranks, vec_bytes), edges.src == ranks.vertex)
+            .join(broadcast_if_fits(out_deg, vec_bytes), "src")
             .select(
                 F.col("dst").alias("vertex"),
                 F.expr("rank_fp div deg").alias("c"),

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -75,7 +76,7 @@ def agg_hll_distinct_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("l_orderkey").alias("acd_est"),
     )
     # (4) 3-row join; bound verdicts are the portable surface
-    return exact.join(F.broadcast(merged), "l_returnflag").select(
+    return exact.join(constant_size(merged), "l_returnflag").select(
         "l_returnflag",
         "exact_orders",
         (

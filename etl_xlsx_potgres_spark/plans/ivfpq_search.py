@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 from .product_quantization import _D2_DUCK, PQ_K
@@ -191,7 +192,7 @@ def _candidates(emb: DataFrame, cells: DataFrame) -> DataFrame:
     # map-side partials, one shuffle on vec_id
     assign = (
         emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cells))
+        .crossJoin(constant_size(cells))
         .select("vec_id", "cid", d2.alias("d2"))
         .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "cid")).alias("mc"))
@@ -201,14 +202,14 @@ def _candidates(emb: DataFrame, cells: DataFrame) -> DataFrame:
     probes = (
         emb.filter(F.col("vec_id") < NQ)
         .select(F.col("vec_id").alias("qid"), "embedding")
-        .crossJoin(F.broadcast(cells))
+        .crossJoin(constant_size(cells))
         .select("qid", "cid", d2.alias("d2"))
         .withColumn("prn", F.row_number().over(pw))
         .filter(F.col("prn") <= N_PROBE)
         .select("qid", "cid")
     )
     return (
-        assign.join(F.broadcast(probes), "cid")
+        assign.join(constant_size(probes), "cid")
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id")
     )
@@ -229,10 +230,8 @@ def ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = cand.groupBy("qid").agg(
         F.count(F.lit(1)).cast("long").alias("n_candidates")
     )
-    searched = _adc_rerank(
-        spark, sf_dir, emb, subs, _train(subs), candidates=cand
-    )
-    return searched.join(F.broadcast(counts), "qid").select(
+    searched = _adc_rerank(emb, subs, _train(subs), candidates=cand)
+    return searched.join(constant_size(counts), "qid").select(
         "qid", "vec_id", "adc_micro", "d2_micro", "n_hits_exact",
         "n_candidates",
     )

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -72,7 +73,7 @@ def agg_kll_quantiles_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-rank verifier: one more pass over the scan with the 3-row
     # estimate frame broadcast; at production scale you run only the
     # sketch side — the exact side is what makes the check non-vacuous
-    joined = li.join(F.broadcast(est), "l_returnflag")
+    joined = li.join(constant_size(est), "l_returnflag")
     ranks = joined.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.min("l_extendedprice").alias("min_price"),

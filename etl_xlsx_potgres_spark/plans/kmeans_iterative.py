@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -107,7 +108,7 @@ def _duck_oracle() -> str:
 def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the K-row centroid
     frame, fold distances, argmin via per-vector window."""
-    pairs = emb.crossJoin(F.broadcast(cents)).select(
+    pairs = emb.crossJoin(constant_size(cents)).select(
         "vec_id", "embedding", "cid", F.expr(_D2_SPARK).alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "cid")

@@ -66,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..registry import ORACLES, register
 from ..sources import load_table
 from . import text_analysis  # noqa: F401  (registers text_lang_id first)
@@ -143,7 +144,7 @@ def _trigram_pred(loc: DataFrame) -> DataFrame:
     )
     cnt = tri.groupBy("lang", "t").agg(F.count(F.lit(1)).alias("c"))
     tot = cnt.groupBy("lang").agg(F.sum("c").alias("tc"))
-    rates = cnt.join(F.broadcast(tot), "lang").select(
+    rates = cnt.join(constant_size(tot), "lang").select(
         "lang", "t", F.expr("CAST(c * 1000000 DIV tc AS BIGINT)").alias("rate")
     )
     w_t = Window.partitionBy("t")
@@ -160,7 +161,7 @@ def _trigram_pred(loc: DataFrame) -> DataFrame:
     )
     scores = (
         tri.select("doc_id", "t")
-        .join(F.broadcast(tri_profile_model), "t")
+        .join(constant_size(tri_profile_model), "t")
         .groupBy("doc_id", "mlang")
         .agg(F.sum("w").alias("score"))
     )

@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..operators.text import shingles_long
 from ..registry import register
 from ..sources import load_table
@@ -203,7 +204,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_unb = sized.filter(~F.col("is_bounded")).agg(
         F.count(F.lit(1)).cast("long").alias("n_unbounded")
     )
-    tiered = sized.crossJoin(F.broadcast(n_unb)).select(
+    tiered = sized.crossJoin(constant_size(n_unb)).select(
         "d1",
         "d2",
         "na",

@@ -16,9 +16,9 @@ in BOTH directions at sf0.01).
 
 Plan shape: the train side explodes into (doc_id, md5(13-gram)) META
 rows — 32-byte fingerprints, never the text; the benchmark gram set
-is a distinct aggregate routed through ``_size_aware_broadcast``
-(it scales with the corpus here, 1/16 of documents — at a real 100 TB
-run the benchmark suite is a CONSTANT few MB and always broadcasts).
+is a distinct aggregate left to the planner (it scales with the
+corpus here, 1/16 of documents — at a real 100 TB run the benchmark
+suite is a CONSTANT few MB and always broadcasts).
 One left join against the set, one per-doc rollup, one join back to
 the zero-gram base docs.  The gram explode is the same
 distinct-shingle equi-join discipline as ``dedup_ngram_jaccard``:
@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from .dedup_fuzzy import _size_aware_broadcast
 from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 
 GRAM_N = 13
@@ -118,13 +117,7 @@ def contamination_ngram13(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("hit", F.lit(True))
     )
     roll = (
-        # the benchmark gram set derives from documents (every-16th-doc
-        # windows), so the broadcast gate must watch THAT table's size
-        tg.join(
-            _size_aware_broadcast(spark, sf_dir, ev, table="documents"),
-            "g",
-            "left",
-        )
+        tg.join(ev, "g", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),

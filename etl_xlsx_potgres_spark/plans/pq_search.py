@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 from .product_quantization import _D2_DUCK, _D2_SPARK, M, PQ_K, SUB_D
@@ -168,8 +169,6 @@ def _subvectors(emb: DataFrame) -> DataFrame:
 
 
 def _adc_rerank(
-    spark: SparkSession,
-    sf_dir: str,
     emb: DataFrame,
     subs: DataFrame,
     codebook: DataFrame,
@@ -188,7 +187,7 @@ def _adc_rerank(
     # subspace; the corpus's raw floats end here)
     code_w = Window.partitionBy("vec_id", "m").orderBy("d2", "k")
     codes = (
-        subs.join(F.broadcast(codebook), "m")
+        subs.join(constant_size(codebook), "m")
         .select("vec_id", "m", "k", F.expr(_D2_SPARK).alias("d2"))
         .withColumn("rn", F.row_number().over(code_w))
         .filter(F.col("rn") == 1)
@@ -198,7 +197,7 @@ def _adc_rerank(
     lut = (
         subs.filter(F.col("vec_id") < NQ)
         .select(F.col("vec_id").alias("qid"), "m", "sub")
-        .join(F.broadcast(codebook), "m")
+        .join(constant_size(codebook), "m")
         .select(
             "qid",
             "m",
@@ -215,13 +214,13 @@ def _adc_rerank(
     if candidates is not None:
         adc = (
             codes.join(candidates, "vec_id")
-            .join(F.broadcast(lut), ["qid", "m", "k"])
+            .join(constant_size(lut), ["qid", "m", "k"])
             .groupBy("qid", "vec_id")
             .agg(F.sum("lut_micro").cast("long").alias("adc_micro"))
         )
     else:
         adc = (
-            codes.join(F.broadcast(lut), ["m", "k"])
+            codes.join(constant_size(lut), ["m", "k"])
             .where(F.col("vec_id") != F.col("qid"))
             .groupBy("qid", "vec_id")
             .agg(F.sum("lut_micro").cast("long").alias("adc_micro"))
@@ -237,13 +236,9 @@ def _adc_rerank(
     q = emb.filter(F.col("vec_id") < NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    from .dedup_fuzzy import _size_aware_broadcast
-
     exact = (
         q.join(
-            _size_aware_broadcast(
-                spark, sf_dir, emb.select("vec_id", F.col("embedding").alias("vv"))
-            ),
+            emb.select("vec_id", F.col("embedding").alias("vv")),
             F.col("vec_id") != F.col("qid"),
         )
         .select(
@@ -285,7 +280,7 @@ def _adc_rerank(
             .alias("n_hits_exact")
         )
     )
-    return rerank.join(F.broadcast(hits), "qid").select(
+    return rerank.join(constant_size(hits), "qid").select(
         "qid", "vec_id", "adc_micro", "d2_micro", "n_hits_exact"
     )
 
@@ -297,4 +292,4 @@ def ann_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook = subs.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").alias("k"), F.col("sub").alias("csub")
     )
-    return _adc_rerank(spark, sf_dir, emb, subs, codebook)
+    return _adc_rerank(emb, subs, codebook)

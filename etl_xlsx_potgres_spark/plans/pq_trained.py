@@ -158,4 +158,4 @@ def _train(
 def ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
     subs = _subvectors(emb)
-    return _adc_rerank(spark, sf_dir, emb, subs, _train(subs))
+    return _adc_rerank(emb, subs, _train(subs))

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 from .similarity import duck_valid, valid_vecs
@@ -103,7 +104,7 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook = subs.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").alias("k"), F.col("sub").alias("csub")
     )
-    pairs = subs.join(F.broadcast(codebook), "m").select(
+    pairs = subs.join(constant_size(codebook), "m").select(
         "vec_id", "m", "k", F.expr(_D2_SPARK).alias("d2")
     )
     w = Window.partitionBy("vec_id", "m").orderBy("d2", "k")

@@ -250,7 +250,10 @@ def ref_fk_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").withColumnRenamed("c_custkey", "o_custkey")
     n = load_table(spark, sf_dir, "nation").withColumnRenamed("n_nationkey", "c_nationkey")
     r = load_table(spark, sf_dir, "region").withColumnRenamed("r_regionkey", "n_regionkey")
-    resolved, _ = fk_lookup(o, c.select("o_custkey", "c_name", "c_nationkey"), "o_custkey")
+    # customer scales with the data: no hint, the planner sizes it
+    resolved, _ = fk_lookup(
+        o, c.select("o_custkey", "c_name", "c_nationkey"), "o_custkey", broadcast=False
+    )
     resolved, _ = fk_lookup(resolved, n.select("c_nationkey", "n_name", "n_regionkey"), "c_nationkey")
     resolved, _ = fk_lookup(resolved, r.select("n_regionkey", "r_name"), "n_regionkey")
     return resolved.select("o_orderkey", "c_name", "n_name", "r_name")
@@ -274,7 +277,7 @@ def ref_fk_missing_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal") > 0)
         .select(F.col("c_custkey").alias("o_custkey"), "c_name")
     )
-    _, missing = fk_lookup(o, dim, "o_custkey")
+    _, missing = fk_lookup(o, dim, "o_custkey", broadcast=False)
     return missing.select("o_orderkey", F.lit("Cliente não encontrado").alias("erro"))
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import mavg, msum, sql_mavg, sql_msum
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -134,8 +135,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             s,
             (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
         )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r.filter(F.col("r_name") == "ASIA")), n.n_regionkey == r.r_regionkey)
+        .join(constant_size(n), s.s_nationkey == n.n_nationkey)
+        .join(constant_size(r.filter(F.col("r_name") == "ASIA")), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
         .orderBy(F.desc("revenue"), "n_name")

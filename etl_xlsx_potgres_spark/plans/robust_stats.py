@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -95,7 +96,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rn") == F.ceil(F.col("n") / 2.0).cast("long")
     ).select("event_type", F.col("value").alias("median"), "n")
 
-    dev = ev.join(F.broadcast(med), "event_type").select(
+    dev = ev.join(constant_size(med), "event_type").select(
         "event_type",
         "event_id",
         F.abs(F.col("value") - F.col("median")).alias("dev"),
@@ -110,7 +111,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     is_out = F.when(F.col("dev") > F.col("mad") * _MAD_CUT, 1).otherwise(0)
     return (
-        dev.join(F.broadcast(mad), "event_type")
+        dev.join(constant_size(mad), "event_type")
         .groupBy("event_type")
         .agg(
             F.max("n").cast("long").alias("n"),

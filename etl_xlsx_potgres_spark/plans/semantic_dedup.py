@@ -65,6 +65,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 from .corpus_ops import EMB_DIM, KMEANS_K
@@ -208,7 +209,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fine centroid -> coarse cell (K x C rows, constant-size)
     s2c = argmin(
-        seeds.crossJoin(F.broadcast(coarse)),
+        seeds.crossJoin(constant_size(coarse)),
         ["seed_id", "sv"],
         _d2_spark("sv", "cv"),
         "c_id",
@@ -216,7 +217,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # vector -> coarse cell: N x C distance evals, ONE N-row shuffle
     v2c = argmin(
-        emb.crossJoin(F.broadcast(coarse)),
+        emb.crossJoin(constant_size(coarse)),
         ["vec_id", "embedding"],
         _d2_spark("embedding", "cv"),
         "c_id",
@@ -226,7 +227,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy reuses v2c's (vec_id, embedding) partitioning — no new
     # Exchange (pinned in tests/test_shuffle_budget.py)
     assign = argmin(
-        v2c.join(F.broadcast(s2c), "c_id"),
+        v2c.join(constant_size(s2c), "c_id"),
         ["vec_id", "embedding"],
         _d2_spark("embedding", "sv"),
         "seed_id",

@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..operators.text import token_count
 from ..registry import register
 from ..sources import load_table
@@ -106,7 +107,7 @@ def packed_layout_from(docs: DataFrame) -> DataFrame:
     )
     offsets = (
         universe.join(
-            F.broadcast(prior),
+            constant_size(prior),
             prior["bucket"] < universe["bucket"],
             "left",
         )
@@ -114,7 +115,7 @@ def packed_layout_from(docs: DataFrame) -> DataFrame:
         .agg(F.coalesce(F.sum("btok_lt"), F.lit(0)).alias("boff"))
     )
     # (4) global start position (0-based exclusive prefix sum)
-    return local.join(F.broadcast(offsets), "bucket").select(
+    return local.join(constant_size(offsets), "bucket").select(
         "doc_id",
         "tok",
         (F.col("boff") + F.col("run") - F.col("tok")).alias("start_pos"),

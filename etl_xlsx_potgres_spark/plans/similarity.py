@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -196,17 +197,9 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v = emb.select("vec_id", F.col("embedding").alias("vv"))
     cosine = _dot("qv", "vv") / (_norm("qv") * _norm("vv"))
-    # exact baseline is inherently O(queries x corpus); broadcast the
-    # corpus side only while it is actually small (local test SFs) —
-    # a hard-coded corpus broadcast OOMs every executor at scale
-    from .dedup_fuzzy import _size_aware_broadcast
-
-    scored = (
-        q.join(
-            _size_aware_broadcast(spark, sf_dir, v),
-            F.col("qid") != F.col("vec_id"),
-        )
-        .select("qid", "vec_id", cosine.alias("cosine"))
+    # exact baseline is inherently O(queries x corpus)
+    scored = q.join(v, F.col("qid") != F.col("vec_id")).select(
+        "qid", "vec_id", cosine.alias("cosine")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
     return (
@@ -371,7 +364,7 @@ def ann_ml_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the LEFT side of a left outer join — Spark can't build-left
     # there and logs an ignored-hint warning on every run
     exact = (
-        F.broadcast(q).join(v, F.col("qid") != F.col("vec_id"))
+        constant_size(q).join(v, F.col("qid") != F.col("vec_id"))
         .withColumn("dist", dist)
         .filter(F.col("dist") <= BRP_RADIUS)
         .withColumn("rn", F.row_number().over(w))
@@ -460,7 +453,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos_vc = _dot("embedding", "cv") / (_norm("embedding") * _norm("cv"))
     aw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "cid")
     assign = (
-        emb.crossJoin(F.broadcast(cents))
+        emb.crossJoin(constant_size(cents))
         .withColumn("ccos", cos_vc)
         .withColumn("arn", F.row_number().over(aw))
         .filter(F.col("arn") == 1)
@@ -469,7 +462,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (
         emb.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .crossJoin(F.broadcast(cents))
+        .crossJoin(constant_size(cents))
         .withColumn("ccos", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
         .withColumn("prn", F.row_number().over(
             Window.partitionBy("qid").orderBy(F.desc("ccos"), "cid")))

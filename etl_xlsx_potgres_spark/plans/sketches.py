@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..operators.text import tokens
 from ..registry import register
 from ..sources import load_table
@@ -100,7 +101,7 @@ def agg_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # exact side AND sketch input: one tokenize pass
     rows = spark.range(D).select(F.col("id").cast("int").alias("row_id"))
     cells = (
-        tc.crossJoin(F.broadcast(rows))
+        tc.crossJoin(constant_size(rows))
         .selectExpr(
             "row_id",
             _spark_bucket("row_id", "term") + " AS bucket",
@@ -111,14 +112,14 @@ def agg_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     topk = tc.orderBy(F.desc("exact_cnt"), F.asc("term")).limit(TOP_K)
     return (
-        topk.crossJoin(F.broadcast(rows))
+        topk.crossJoin(constant_size(rows))
         .selectExpr(
             "term",
             "exact_cnt",
             "row_id",
             _spark_bucket("row_id", "term") + " AS bucket",
         )
-        .join(F.broadcast(cells), ["row_id", "bucket"])
+        .join(constant_size(cells), ["row_id", "bucket"])
         .groupBy("term", "exact_cnt")
         .agg(F.min("cell_sum").alias("cm_estimate"))
         .select(

@@ -29,6 +29,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -88,7 +89,7 @@ def stats_chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         o.join(r, "lang")
         .join(c, "source")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(constant_size(n))
         .select(
             "lang",
             "source",
@@ -153,7 +154,7 @@ def quality_benford_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("digit").cast("int"),
     )
     freq = F.col("n").cast("double") / F.col("t").cast("double")
-    return counts.crossJoin(F.broadcast(total)).select(
+    return counts.crossJoin(constant_size(total)).select(
         "digit",
         "n",
         freq.alias("freq"),

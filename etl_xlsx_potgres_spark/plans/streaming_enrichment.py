@@ -12,11 +12,11 @@ Semantics + scale notes:
   current dimension snapshot. That is exactly the behavior a
   dimension enrichment wants (and why this is not an interval join —
   that variant, with state, is ``streaming_interval_join``).
-- The dimension side is re-planned per microbatch; while the
-  dimension is genuinely small the right physical shape is a
-  broadcast — applied through the same SIZE GATE as the ANN corpus
-  side (customer scales with the data; a hard-coded hint OOMs at
-  100x). The STREAM side never shuffles before the join either way.
+- The dimension side is re-planned per microbatch and carries no
+  hint: customer scales with the data, so the planner broadcasts it
+  while its scan is under the broadcast threshold and shuffles on the
+  key above it. The STREAM side never shuffles before the join either
+  way.
 - The post-join aggregation is watermarked; its state is bounded by
   (watermark horizon x |segments|), independent of stream length.
 
@@ -48,20 +48,9 @@ from ..streaming.events_stream import read_events_stream, run_streaming_query
     """,
 )
 def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup_fuzzy import _size_aware_broadcast
-
     events = read_events_stream(spark, sf_dir)
-    # customer SCALES with the data — the broadcast hint must be size
-    # gated (hard-coding it OOMs executors at 100x), same policy as the
-    # ANN corpus side; above threshold the per-microbatch join shuffles
-    # on the key instead
-    dim = _size_aware_broadcast(
-        spark,
-        sf_dir,
-        load_table(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("user_id"), "c_mktsegment"
-        ),
-        table="customer",
+    dim = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     enriched = events.join(dim, "user_id")
     agg = (

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -117,7 +118,7 @@ def agg_theta_setops_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.lit(TOL) * F.greatest(F.col(exact_col), F.lit(1))
         )
 
-    return exact.crossJoin(F.broadcast(est)).select(
+    return exact.crossJoin(constant_size(est)).select(
         "n_hi_exact",
         "n_lo_exact",
         "n_both_exact",

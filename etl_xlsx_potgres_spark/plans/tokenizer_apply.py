@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..hints import constant_size
 from ..operators.text import tokens
 from ..registry import register
 from ..sources import load_table
@@ -92,7 +93,7 @@ def text_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = global_row_number(
         vtop, [F.desc("cnt"), F.asc("term")], "token_id"
     ).select("term", F.col("token_id").cast("long").alias("token_id"))
-    enc = toks.join(F.broadcast(vocab), "term", "left").select(
+    enc = toks.join(constant_size(vocab), "term", "left").select(
         "doc_id", "pos", F.coalesce("token_id", F.lit(0)).alias("token_id")
     )
     return enc.groupBy("doc_id").agg(

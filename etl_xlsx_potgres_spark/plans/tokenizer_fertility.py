@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 from .bpe_train import _DUCK_TOKENS, _SPARK_TOKENS, _TRAIN_CTES
@@ -73,7 +74,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.expr(_SPARK_TOKENS).alias("toks")
     ).filter(F.size("toks") > 0)
     costed = base.crossJoin(
-        F.broadcast(_merges_row(spark, sf_dir))
+        constant_size(_merges_row(spark, sf_dir))
     ).select(
         "lang",
         F.size("toks").cast("long").alias("n_words"),
@@ -189,9 +190,9 @@ def text_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(0)
     per_doc = (
         d.select("doc_id", "source", F.expr(_SPARK_TOKENS).alias("toks"))
-        .crossJoin(F.broadcast(_merges_row(spark, sf_dir)))
-        .join(F.broadcast(src), "source")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(constant_size(_merges_row(spark, sf_dir)))
+        .join(constant_size(src), "source")
+        .crossJoin(constant_size(tot))
         .select(
             "source",
             F.size("toks").cast("long").alias("n_words"),
@@ -220,8 +221,8 @@ def text_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("kept_bpe_tokens").cast("double") / F.col("kept_words"),
     )
     return (
-        rolled.join(F.broadcast(src), "source")
-        .crossJoin(F.broadcast(tot))
+        rolled.join(constant_size(src), "source")
+        .crossJoin(constant_size(tot))
         .select(
             "source",
             "n_docs",

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import fixed, msum, sql_fixed, sql_msum
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -72,7 +73,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(constant_size(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"))
         .orderBy(F.desc("revenue"), "c_custkey")

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import fixed, msum, sql_msum
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -70,8 +71,8 @@ def q2_min_acctbal_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     europe = (
         ps.join(s, ps.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(constant_size(n), s.s_nationkey == n.n_nationkey)
+        .join(constant_size(r), n.n_regionkey == r.r_regionkey)
     )
     # Correlated MIN becomes a per-part window minimum — one shuffle on
     # l_partkey instead of a rescan per row.
@@ -130,8 +131,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
+        .join(constant_size(n1), F.col("s_nationkey") == F.col("s_nkey"))
+        .join(constant_size(n2), F.col("c_nationkey") == F.col("c_nkey"))
         .filter(pair)
         .withColumn("l_year", F.year("l_shipdate"))
         .groupBy("supp_nation", "cust_nation", "l_year")
@@ -187,9 +188,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
-        .join(F.broadcast(r), F.col("c_rkey") == r.r_regionkey)
+        .join(constant_size(n1), F.col("s_nationkey") == F.col("s_nkey"))
+        .join(constant_size(n2), F.col("c_nationkey") == F.col("c_nkey"))
+        .join(constant_size(r), F.col("c_rkey") == r.r_regionkey)
         .withColumn("o_year", F.year("o_orderdate"))
         .groupBy("o_year")
         .agg(
@@ -230,7 +231,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
+        .join(constant_size(n), F.col("s_nationkey") == n.n_nationkey)
         .withColumn("o_year", F.year("o_orderdate"))
         .groupBy(F.col("n_name").alias("nation"), "o_year")
         .agg(msum(profit, "profit"))
@@ -275,7 +276,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
+        .join(constant_size(n), F.col("s_nationkey") == n.n_nationkey)
         .groupBy("l_partkey")
         .agg(F.sum(val).alias("fval"))
     )
@@ -288,7 +289,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        per_part.crossJoin(F.broadcast(total))
+        per_part.crossJoin(constant_size(total))
         .filter(F.col("fval").cast("double") > F.col("threshold"))
         .select(
             F.col("l_partkey").alias("p_key"),
@@ -360,7 +361,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = revenue.agg(F.max("total_revenue").alias("max_rev"))
     return (
-        revenue.crossJoin(F.broadcast(top))
+        revenue.crossJoin(constant_size(top))
         .filter(F.col("total_revenue") == F.col("max_rev"))
         .join(s, F.col("supplier_no") == s.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
@@ -492,7 +493,7 @@ def q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
     )
     return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        s.join(constant_size(n), s.s_nationkey == n.n_nationkey)
         .join(heavy, s.s_suppkey == heavy.l_suppkey, "left_semi")
         .select("s_name", "s_acctbal")
         .orderBy("s_name")
@@ -539,7 +540,7 @@ def q21_last_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         l1.join(s, F.col("l1.l_suppkey") == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
+        .join(constant_size(n), F.col("s_nationkey") == n.n_nationkey)
         .join(l2, others, "left_semi")
         .join(l3, later, "left_anti")
         .groupBy("s_name")
@@ -588,7 +589,7 @@ def q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_bal")
     )
     return (
-        c.crossJoin(F.broadcast(avg_bal))
+        c.crossJoin(constant_size(avg_bal))
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(o, c.c_custkey == o.o_custkey, "left_anti")
         .withColumn("cntrycode", (F.col("c_custkey") % 7).cast("string"))

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..hints import constant_size
 from ..operators.text import shingles_long
 from ..registry import register
 from ..sources import load_table
@@ -256,7 +257,7 @@ def mixture_weights_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = counts.agg(F.sum("fsqrt").cast("double").alias("tot"))
     return (
-        counts.crossJoin(F.broadcast(total))
+        counts.crossJoin(constant_size(total))
         .select(
             "source",
             "n_docs",

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import fixed, msum, sql_fixed, sql_msum
+from ..hints import constant_size
 from ..registry import register
 from ..sources import load_table
 
@@ -152,8 +153,8 @@ def agg_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    joined = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
+    joined = c.join(constant_size(n), c.c_nationkey == n.n_nationkey).join(
+        constant_size(r), n.n_regionkey == r.r_regionkey
     )
     return joined.rollup("r_name", "n_name").agg(
         F.count(F.lit(1)).alias("n_customers"),
@@ -337,7 +338,7 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # positions of the approx percentiles, in ONE agg over li joined
     # with the 1-row sketch frame
     m = (
-        li.crossJoin(F.broadcast(sk))
+        li.crossJoin(constant_size(sk))
         .agg(
             F.countDistinct("l_partkey").alias("exact_parts"),
             F.countDistinct("l_suppkey").alias("exact_supps"),

@@ -112,9 +112,9 @@ def test_semantic_history_probe_is_exchange_free(spark, sf_dir):
     newv = emb.filter(F.col("vec_id") % 10 == 0).select(
         "vec_id", "embedding"
     )
-    nassign = more._sem_probe(
-        spark, sf_dir, newv, more._sem_cents(hist_src)
-    ).select(F.col("vec_id").alias("new_id"), "cid")
+    nassign = more._sem_probe(newv, more._sem_cents(hist_src)).select(
+        F.col("vec_id").alias("new_id"), "cid"
+    )
     joined = hist.hint("merge").join(nassign, "cid")
     _assert_history_branch_exchange_free(_plan_str(joined), "semantic_cell")
 
@@ -208,9 +208,9 @@ def test_ann_ivf_probe_is_exchange_free(spark, sf_dir):
     newv = emb.filter(F.col("vec_id") % 10 == 0).select(
         "vec_id", "embedding"
     )
-    nassign = more._sem_probe(
-        spark, sf_dir, newv, more._sem_cents(hist_src)
-    ).select(F.col("vec_id").alias("new_id"), "cid")
+    nassign = more._sem_probe(newv, more._sem_cents(hist_src)).select(
+        F.col("vec_id").alias("new_id"), "cid"
+    )
     joined = hist.hint("merge").join(nassign, "cid")
     _assert_history_branch_exchange_free(_plan_str(joined), "semantic_cell")
 

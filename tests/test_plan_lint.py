@@ -6,9 +6,10 @@ any plan, not just the hand-audited headline ones:
   the hot path is only acceptable Arrow-batched
   (``ArrowEvalPython`` / ``MapInPandas`` / ``FlatMapGroupsInPandas``
   / ``FlatMapCoGroupsInPandas``), and only where declared below.
-- ``CartesianProduct``: never. Even the exact-ANN baseline routes
-  through a size-guarded broadcast (BroadcastNestedLoopJoin at test
-  SF); an unhinted all-pairs join is a plan regression.
+- ``CartesianProduct``: never. Even the exact-ANN baseline plans as
+  a BroadcastNestedLoopJoin at test SF, where Catalyst sizes its
+  corpus side under the broadcast threshold; an all-pairs join that
+  broadcasts neither side is a plan regression.
 """
 
 from __future__ import annotations

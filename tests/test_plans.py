@@ -142,167 +142,174 @@ def test_embedding_lsh_joins_on_band_keys(spark, sf_dir):
     assert "bk" in plan  # band key is a join/partition key in the plan
 
 
-def test_no_hardcoded_broadcast_of_scaling_frames():
-    """`F.broadcast` hints in plans/ are reserved for frames that stay
-    small at ANY scale factor: nation/region dims, scalar aggregates,
-    codebooks, bounded query sides. A hint on any data-scaling frame
-    (customer/supplier/part/documents/embeddings-derived, PageRank's
-    |V|-row iteration state) forces an executor OOM at 100x data —
-    those joins must be left to AQE (which still broadcasts them at
-    small SF) or routed through a size gate (`_size_aware_broadcast`,
-    `_gated_vector_hint`).
-
-    The name allowlist below is FROZEN as of r19 (VERDICT r18 task 4:
-    it grew by hand for three rounds).  New constant-size hints must
-    route through ``etl_xlsx_potgres_spark.hints.constant_size`` —
-    the structural marker this lint recognizes — instead of adding
-    names here."""
-    import pathlib
+def test_unhinted_data_scaling_joins_still_broadcast(spark, sf_dir, monkeypatch):
+    """The corpus and customer sides of these joins carry no hint; at
+    the test SF Catalyst's own size estimate still broadcasts them (and
+    stops at scale, where the threshold no longer holds)."""
+    import contextlib
+    import io
     import re
 
-    allowed = {
-        "n", "n1", "n2", "r",            # nation/region dims (fixed 5/25 rows)
-        "top", "total", "avg_bal",       # single-row scalar aggregates
-        "cents",                          # IVF codebook (16 rows)
-        "sk",                             # 1-row sketch-verdict aggregate
-        "vocab",                          # top-K vocabulary (K rows by construction)
-        "vocab_row",                      # same vocab packed into ONE array cell
-                                          # (limit(VOCAB_K) then 1-row collect_list
-                                          # aggregate — constant at any corpus size)
-        "q",                              # BRP-LSH exact-baseline query side
-                                          # (<= N_QUERIES rows by construction)
-        "frame",                          # the guarded hints' own parameter
-                                          # (_size_aware_broadcast in dedup_fuzzy,
-                                          # _gated_vector_hint in graph_iterative)
-        "dfreq",                          # BM25 per-term df (<= |BM25_TERMS| = 3
-                                          # rows by the isin filter)
-        "stats",                          # 1-row corpus stats aggregate (BM25)
-        "arrs",                           # 1-row per-dimension range arrays
-                                          # (emb_scalar_quantize, 2 x 64 doubles)
-        "seeds",                          # k-means seed set (K = 10 rows by the
-                                          # vec_id < K filter)
-        "med", "mad",                     # per-event-type medians/MADs —
-                                          # enum-bounded key (constant handful of
-                                          # event types at any corpus size)
-        "rows",                           # count-min hash-row index (D = 3 rows)
-        "codebook",                       # PQ codebook (M*K = 32 rows by the
-                                          # vec_id < K seed filter)
-        "v",                              # 1-row vocabulary-size aggregate
-                                          # (bigram LM smoothing denominator)
-        "cells",                          # count-min grid (<= D*W = 192 cells
-                                          # by construction, data-size-free)
-        # "lp" (DSIR bucket model) and "lo" (NB log-odds model)
-        # migrated to the constant_size marker in r20 — the r20
-        # row-local scoring rewrite folds them into 1-row model maps
-        # (the zero-churn shrink rule: touched files migrate)
-        "tot",                            # 1-row corpus totals (corpus_mix,
-                                          # lang_confusion, tokenizer_fertility)
-        "src",                            # per-SOURCE mix frame (one row
-                                          # per distinct source — grows
-                                          # with catalog breadth, a
-                                          # metadata-sized enum, not with
-                                          # data volume; corpus_mix)
-        "merged",                         # HLL per-group sketch estimates
-                                          # (one row per enum-bounded group —
-                                          # 3 return flags at any data size)
-        "est",                            # sketch estimate frames: KLL
-                                          # quantiles (one row per enum-
-                                          # bounded return flag) and Theta
-                                          # set-op estimates (1 row) — a
-                                          # sketch readout is constant-size
-                                          # by construction at any volume
-        "max_week",                       # 1-row MAX(week) bound frame
-                                          # (drift_monitor)
-        "lut",                            # PQ ADC lookup table:
-                                          # NQ*M*K = 320 rows by the
-                                          # query/codebook bounds,
-                                          # data-size-free (pq_search)
-        "hits",                           # per-query recall counts
-                                          # (<= NQ = 10 rows, pq_search)
-        "prior", "offsets",               # sequence-packing bucket frames
-                                          # (<= 256 rows: one per 2-hex-char
-                                          # md5 prefix, data-size-free);
-                                          # "prior" also the 1-row NB class
-                                          # prior (quality_classifier)
-        "coarse", "s2c",                  # SemDeDup centroid frames:
-                                          # <= ceil(sqrt(K)) and <= K rows
-                                          # — K is the operator's own
-                                          # broadcast-safe knob (K x dim
-                                          # floats by construction), data
-                                          # volume scales N, not K rows
-        "dim",                            # month dimension (dpp_pruning):
-                                          # one row per calendar month —
-                                          # grows with time span (~12/yr),
-                                          # not with data volume
-        # "cb" (trained PQ codebook, pq_trained) migrated to the
-        # constant_size marker in r20 — the zero-churn rule: the
-        # allowlist shrinks whenever a listed file is touched anyway
-        "probes",                         # IVF probe set (<= NQ * N_PROBE
-                                          # = 40 rows by the query filter
-                                          # and the prn <= N_PROBE window,
-                                          # data-size-free; ivfpq_search)
-        "counts",                         # per-query candidate counts
-                                          # (<= NQ = 10 rows,
-                                          # ivfpq_search)
-        "cur",                            # one BPE round's 1-row winner
-                                          # (pair, merged) pair — the
-                                          # bpe_train top-1 contract
-                                          # (chunk_token_budget)
-        "_merges_row",                    # the crossJoin of the N 1-row
-                                          # winners: exactly ONE row with
-                                          # 2*N_MERGE_ROUNDS string cols
-                                          # (chunk_token_budget)
-        "merges_row_df",                  # the same 1-row merges frame,
-                                          # persisted so both gate
-                                          # branches share the training
-                                          # subtree (chunk_token_budget)
-        "bloom",                          # the Bloom filter frame: exactly
-                                          # N_WORDS = 16 bigint rows at ANY
-                                          # corpus size — constant by the
-                                          # sketch's definition (bloom_dedup)
-        "blocklist_df",                   # the domain blocklist: a fixed
-                                          # curated list (4 fixture rows;
-                                          # UT1-scale lists are still MBs),
-                                          # data-size-free (domain_blocklist)
-        "levels",                         # the probe-level axis of the ANN
-                                          # operating curve: exactly
-                                          # len(PROBE_LEVELS)=4 constant
-                                          # rows at ANY corpus size
-                                          # (ann_recall_curve)
-        "tri_profile_model",              # the trained language profile:
-                                          # <= 5 langs x M_PROFILE=64 rows
-                                          # by the row_number cap — a
-                                          # constant-size model at ANY
-                                          # corpus size (lang_confusion)
-        "slevels",                        # the shortlist axis of the ANN
-                                          # operating curve: exactly
-                                          # len(SHORTLIST_LEVELS)=4
-                                          # constant rows at ANY corpus
-                                          # size (ann_recall_curve)
-        "n_unb",                          # the calibration's sampling
-                                          # scalar: a 1-row COUNT
-                                          # aggregate broadcast back
-                                          # (minhash_calibration)
-    }
-    pkg = pathlib.Path(__file__).parent.parent / "etl_xlsx_potgres_spark" / "plans"
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    lsh = _plan(spark, sf_dir, "dedup_embedding_lsh")
+    for key in ("v1", "v2"):
+        assert re.search(rf"BroadcastHashJoin.*\nLeft keys \[1\]: \[{key}#", lsh), key
+    exact = _plan(spark, sf_dir, "ann_cosine_topk")
+    assert "BroadcastNestedLoopJoin" in exact
+    assert "CartesianProduct" not in exact
+
+    batch_plans = []
+    real_stop = StreamingQuery.stop
+
+    def stop(self):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            self.explain()
+        batch_plans.append(buf.getvalue())
+        real_stop(self)
+
+    monkeypatch.setattr(StreamingQuery, "stop", stop)
+    registry.QUERIES["streaming_static_enrichment"](spark, sf_dir)
+    assert batch_plans and "BroadcastHashJoin" in batch_plans[-1]
+
+
+# Every broadcast hint in the package, keyed by (file under
+# etl_xlsx_potgres_spark/, hinted-frame chain), with the row bound
+# that keeps the frame constant-size at ANY data volume.
+_NATION = "nation/region dimension: fixed 25/5 rows"
+_ONE_ROW = "1-row scalar aggregate"
+_IVF = "IVF centroid cells: N_CELLS = 16 rows by the limit"
+_PQ = "PQ codebook: <= M*K = 32 rows by the vec_id < K seed filter"
+_LUT = "PQ ADC lookup table: NQ*M*K = 320 rows by the query/codebook bounds"
+_PROBES = "IVF probe set: <= NQ * N_PROBE = 40 rows by the query filter"
+_LEVELS = "ANN operating-curve axis: len(PROBE_LEVELS/SHORTLIST_LEVELS) = 4 rows"
+_ENUM = "one row per enum-bounded group (return flags / event types)"
+_SOURCE = "one row per corpus source: a metadata-sized enum, not data volume"
+_HIST = "PQ code-usage histogram: <= M*K rows at any corpus/batch size"
+_REVIEWED_HINTS = {
+    ("operators/joins.py", "dim"): "fk_lookup's dimension; data-scaling dims pass broadcast=False",
+    ("operators/edit_distance.py", "spec"): "(distinct string length, k+1 segments): <= max length x (k+1)",
+    ("operators/edit_distance.py", "pspec"): "spec rows x (2k+1) probe lengths x (2k+1) offsets",
+    ("pipelines/etl_xlsx_postgres.py", "status"): "status seed: 4 rows",
+    ("plans/relational.py", "n"): _NATION,
+    ("plans/relational.py", "r.filter"): _NATION,
+    ("plans/tpch_adapted.py", "n"): _NATION,
+    ("plans/tpch_more.py", "n"): _NATION,
+    ("plans/tpch_more.py", "n1"): _NATION,
+    ("plans/tpch_more.py", "n2"): _NATION,
+    ("plans/tpch_more.py", "r"): _NATION,
+    ("plans/windows_aggs.py", "n"): _NATION,
+    ("plans/windows_aggs.py", "r"): _NATION,
+    ("plans/stats_audit.py", "n"): _ONE_ROW,
+    ("plans/tpch_more.py", "top"): _ONE_ROW,
+    ("plans/tpch_more.py", "total"): _ONE_ROW,
+    ("plans/tpch_more.py", "avg_bal"): _ONE_ROW,
+    ("plans/corpus_ops.py", "total"): _ONE_ROW,
+    ("plans/corpus_ops.py", "stats"): "1-row corpus stats aggregate (BM25)",
+    ("plans/csv_quarantine.py", "total"): _ONE_ROW,
+    ("plans/stats_audit.py", "total"): _ONE_ROW,
+    ("plans/training_data.py", "total"): _ONE_ROW,
+    ("plans/windows_aggs.py", "sk"): "1-row sketch-verdict aggregate",
+    ("plans/bigram_lm.py", "v"): "1-row vocabulary-size aggregate",
+    ("plans/drift_monitor.py", "max_week"): "1-row MAX(week) bound",
+    ("plans/minhash_calibration.py", "n_unb"): "1-row COUNT aggregate",
+    ("plans/theta_setops.py", "est"): "1-row Theta set-op estimate",
+    ("plans/corpus_mix.py", "tot"): _ONE_ROW,
+    ("plans/importance_sampling.py", "tot"): _ONE_ROW,
+    ("plans/lang_confusion.py", "tot"): "one row per language: <= 5 rows",
+    ("plans/quality_classifier.py", "tot"): _ONE_ROW,
+    ("plans/tokenizer_fertility.py", "tot"): _ONE_ROW,
+    ("plans/quality_classifier.py", "prior"): "1-row NB class prior",
+    ("plans/dedup_incremental_more.py", "stats"): "1-row history count + min coin",
+    ("plans/corpus_mix.py", "src"): _SOURCE,
+    ("plans/tokenizer_fertility.py", "src"): _SOURCE,
+    ("plans/hll_distinct.py", "merged"): _ENUM,
+    ("plans/kll_quantiles.py", "est"): _ENUM,
+    ("plans/robust_stats.py", "med"): _ENUM,
+    ("plans/robust_stats.py", "mad"): _ENUM,
+    ("plans/dpp_pruning.py", "dim"): "one row per calendar month (~12/yr of time span)",
+    ("plans/similarity.py", "cents"): _IVF,
+    ("plans/ann_recall_curve.py", "cents"): _IVF,
+    ("plans/ann_recall_curve.py", "cells"): _IVF,
+    ("plans/ivfpq_search.py", "cells"): _IVF,
+    ("plans/kmeans_iterative.py", "cents"): "k-means centroids: K = 10 rows",
+    ("plans/corpus_ops.py", "seeds"): "k-means seed set: K = 10 rows by the vec_id < K filter",
+    ("plans/corpus_ops.py", "arrs"): "1-row per-dimension range arrays (2 x 64 doubles)",
+    ("plans/corpus_ops.py", "dfreq"): "BM25 per-term df: <= |BM25_TERMS| = 3 rows",
+    ("plans/semantic_dedup.py", "coarse"): "SemDeDup coarse seeds: <= ceil(sqrt(K)) rows",
+    ("plans/semantic_dedup.py", "s2c"): "SemDeDup cell -> coarse map: K rows",
+    ("plans/similarity.py", "q"): "BRP-LSH exact-baseline query side: <= N_QUERIES rows",
+    ("plans/pq_search.py", "codebook"): _PQ,
+    ("plans/ann_recall_curve.py", "codebook"): _PQ,
+    ("plans/product_quantization.py", "codebook"): _PQ,
+    ("plans/pq_trained.py", "cb"): _PQ + " (every Lloyd round)",
+    ("plans/dedup_incremental_more.py", "cb"): _PQ,
+    ("plans/dedup_incremental_more.py", "spark.table"): _PQ + " (persisted table)",
+    ("plans/dedup_incremental_more.py", "hh.withColumnRenamed"): _HIST,
+    ("plans/dedup_incremental_more.py", "hd.withColumnRenamed"): _HIST,
+    ("plans/dedup_incremental_more.py", "hp.withColumnRenamed"): _HIST,
+    ("plans/dedup_incremental_more.py", "tots"): "per-subspace rollup: <= M = 4 rows",
+    ("plans/dedup_incremental_more.py", "cbstats"): "per-subspace rollup: <= M = 4 rows",
+    ("plans/dedup_incremental_more.py", "tv"): "per-subspace rollup: <= M = 4 rows",
+    ("plans/pq_search.py", "lut"): _LUT,
+    ("plans/ann_recall_curve.py", "lut"): _LUT,
+    ("plans/pq_search.py", "hits"): "per-query recall counts: <= NQ = 10 rows",
+    ("plans/ivfpq_search.py", "counts"): "per-query candidate counts: <= NQ = 10 rows",
+    ("plans/ann_recall_curve.py", "probes"): _PROBES,
+    ("plans/ivfpq_search.py", "probes"): _PROBES,
+    ("plans/ann_recall_curve.py", "levels"): _LEVELS,
+    ("plans/ann_recall_curve.py", "slevels"): _LEVELS,
+    ("plans/sketches.py", "rows"): "count-min hash-row index: D = 3 rows",
+    ("plans/sketches.py", "cells"): "count-min grid: <= D*W = 192 cells",
+    ("plans/bloom_dedup.py", "bloom"): "Bloom filter: N_WORDS = 16 bigint rows",
+    ("plans/analytics.py", "vocab_row"): "top-K vocabulary packed into ONE array cell",
+    ("plans/tokenizer_apply.py", "vocab"): "top-K vocabulary: K rows by the limit",
+    ("plans/bpe_train.py", "top"): "one BPE round's 1-row winner",
+    ("plans/chunk_token_budget.py", "cur"): "one BPE round's 1-row winner",
+    ("plans/chunk_token_budget.py", "merges_row_df"): "1-row crossJoin of the N round winners",
+    ("plans/tokenizer_fertility.py", "_merges_row"): "1-row crossJoin of the N round winners",
+    ("plans/sequence_packing.py", "prior"): "<= 256 md5-prefix bucket rows",
+    ("plans/sequence_packing.py", "offsets"): "<= 256 md5-prefix bucket rows",
+    ("plans/importance_sampling.py", "_lpmap"): "1-row map of <= B = 256 bucket entries",
+    ("plans/quality_classifier.py", "_lomap"): "1-row map of <= B = 256 bucket entries",
+    ("plans/lang_confusion.py", "tri_profile_model"): "<= 5 langs x M_PROFILE = 64 rows",
+    ("plans/domain_blocklist.py", "blocklist_df"): "fixed curated blocklist (4 fixture rows)",
+}
+
+
+def test_no_hardcoded_broadcast_of_scaling_frames():
+    """The one broadcast lint.  ``hints.py`` is the only module that
+    may call ``F.broadcast``; everywhere else a hint goes through
+    ``hints.constant_size`` (or the size-gated
+    ``hints.broadcast_if_fits``), and every ``constant_size`` call
+    site must be on ``_REVIEWED_HINTS`` with its row bound.  A hint on
+    a data-scaling frame (customer/supplier/part/documents/embeddings-
+    derived) ships it to every executor at 100x data — those joins are
+    left to Catalyst and AQE, which still broadcast them at small SF."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent.parent / "etl_xlsx_potgres_spark"
     offenders = []
-    for path in sorted(pkg.glob("*.py")):
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        source = path.read_text()
+        if rel != "hints.py":
+            offenders += [
+                f"{rel}:{line}: raw broadcast({chain}…)"
+                for line, chain in _broadcast_hints(source)
+            ]
         offenders += [
-            f"{path.name}:{line}: F.broadcast({chain}…)"
-            for line, chain in _broadcast_hints(path.read_text())
-            if not (
-                chain in allowed
-                or chain.split(".", 1)[0] in allowed
-                # region filtered inline is still the 5-row dim
-                or chain.startswith("r.filter")
-            )
+            f"{rel}:{line}: constant_size({chain}…) not reviewed"
+            for line, chain in _constant_size_hints(source)
+            if (rel, chain) not in _REVIEWED_HINTS
         ]
     assert not offenders, "\n".join(offenders)
 
 
-def _broadcast_hints(source: str) -> list[tuple[int, str]]:
-    """(line, leading-identifier-chain) of every ``F.broadcast(...)`` /
-    bare ``broadcast(...)`` call in ``source`` — an AST walk, so hints
+def _hint_calls(source: str, is_hint) -> list[tuple[int, str]]:
+    """(line, leading-identifier-chain of the first argument) of every
+    call whose callee satisfies ``is_hint`` — an AST walk, so hints
     split across lines can't dodge the guard the way they did the old
     per-line regex."""
     import ast
@@ -321,110 +328,45 @@ def _broadcast_hints(source: str) -> list[tuple[int, str]]:
             else:
                 return f"<{type(node).__name__}>"
 
-    hits = []
-    for node in ast.walk(ast.parse(source)):
-        if not (isinstance(node, ast.Call) and node.args):
-            continue
-        fn = node.func
-        is_hint = (
+    return [
+        (node.lineno, chain(node.args[0]))
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call) and node.args and is_hint(node.func)
+    ]
+
+
+def _broadcast_hints(source: str) -> list[tuple[int, str]]:
+    """Every ``F.broadcast(...)`` / bare ``broadcast(...)`` call."""
+    import ast
+
+    return _hint_calls(
+        source,
+        lambda fn: (
             isinstance(fn, ast.Attribute)
             and fn.attr == "broadcast"
             and isinstance(fn.value, ast.Name)
             and fn.value.id == "F"
-        ) or (isinstance(fn, ast.Name) and fn.id == "broadcast")
-        if is_hint:
-            hits.append((node.lineno, chain(node.args[0])))
-    return hits
+        )
+        or (isinstance(fn, ast.Name) and fn.id == "broadcast"),
+    )
 
 
 def _constant_size_hints(source: str) -> list[tuple[int, str]]:
-    """(line, leading-identifier-chain) of every ``constant_size(...)``
-    call — same AST walk as :func:`_broadcast_hints`."""
+    """Every ``constant_size(...)`` / ``hints.constant_size(...)`` call."""
     import ast
 
-    def chain(node: ast.AST) -> str:
-        parts: list[str] = []
-        while True:
-            if isinstance(node, ast.Call):
-                node = node.func
-            elif isinstance(node, ast.Attribute):
-                parts.append(node.attr)
-                node = node.value
-            elif isinstance(node, ast.Name):
-                parts.append(node.id)
-                return ".".join(reversed(parts))
-            else:
-                return f"<{type(node).__name__}>"
-
-    hits = []
-    for node in ast.walk(ast.parse(source)):
-        if not (isinstance(node, ast.Call) and node.args):
-            continue
-        fn = node.func
-        is_marker = (isinstance(fn, ast.Name) and fn.id == "constant_size") or (
-            isinstance(fn, ast.Attribute) and fn.attr == "constant_size"
-        )
-        if is_marker:
-            hits.append((node.lineno, chain(node.args[0])))
-    return hits
-
-
-def test_constant_size_call_sites_are_reviewed():
-    """Companion lint to the frozen-allowlist guard (ADVICE r19): the
-    ``constant_size`` marker exempts a hint from the broadcast lint
-    purely by NAME — nothing structural verifies the wrapped frame is
-    actually constant-size, so a data-scaling frame wrapped in the
-    marker would silently dodge the OOM lint.  Every marker call site
-    therefore lives on THIS allowlist with its documented row bound;
-    a new use fails here until it is reviewed and listed."""
-    import pathlib
-
-    allowed = {
-        # (file, hinted-frame chain): documented row bound
-        ("dedup_incremental_more.py", "stats"),
-        #   1-row scalar aggregate (history count + min coin)
-        ("dedup_incremental_more.py", "cb"),
-        #   trained PQ codebook: <= M*K = 32 rows by the seed filter
-        ("dedup_incremental_more.py", "spark.table"),
-        #   the persisted codebook TABLE (same <= M*K bound)
-        ("dedup_incremental_more.py", "hh.withColumnRenamed"),
-        ("dedup_incremental_more.py", "hd.withColumnRenamed"),
-        ("dedup_incremental_more.py", "hp.withColumnRenamed"),
-        #   code-usage histograms: <= M*K rows at ANY corpus/batch size
-        ("dedup_incremental_more.py", "tots"),
-        ("dedup_incremental_more.py", "cbstats"),
-        ("dedup_incremental_more.py", "tv"),
-        #   per-subspace rollups of the above: <= M = 4 rows
-        ("pq_trained.py", "cb"),
-        #   the Lloyd-iteration codebook: <= M*K rows every round
-        ("importance_sampling.py", "tot"),
-        ("quality_classifier.py", "tot"),
-        #   1-row smoothing-total aggregates over the <= B-row model
-        ("importance_sampling.py", "_lpmap"),
-        ("quality_classifier.py", "_lomap"),
-        #   the fitted bucket models as ONE row carrying a
-        #   map<bucket, micro> of <= B = 256 entries — constant at any
-        #   corpus size (r20 row-local scoring rewrite)
-        ("quality_classifier.py", "prior"),
-        #   1-row NB class-prior aggregate
-    }
-    pkg = pathlib.Path(__file__).parent.parent / "etl_xlsx_potgres_spark" / "plans"
-    offenders = []
-    for path in sorted(pkg.glob("*.py")):
-        offenders += [
-            f"{path.name}:{line}: constant_size({chain}…) not reviewed"
-            for line, chain in _constant_size_hints(path.read_text())
-            if (path.name, chain) not in allowed
-        ]
-    assert not offenders, "\n".join(offenders)
+    return _hint_calls(
+        source,
+        lambda fn: (isinstance(fn, ast.Name) and fn.id == "constant_size")
+        or (isinstance(fn, ast.Attribute) and fn.attr == "constant_size"),
+    )
 
 
 def test_constant_size_marker_passes_and_raw_broadcast_is_flagged():
-    """The structural marker path (r19): a hint routed through
-    ``hints.constant_size`` is invisible to the broadcast lint (the
-    call site carries the contract), while the same frame hinted with
-    raw ``F.broadcast`` under a non-allowlisted name is still flagged
-    — the negative control that keeps the frozen allowlist honest."""
+    """A hint routed through ``hints.constant_size`` is not a raw
+    broadcast (its call site is checked against the reviewed list
+    instead), while the same frame hinted with raw ``F.broadcast`` is
+    flagged — the negative control that keeps the raw ban honest."""
     from etl_xlsx_potgres_spark.hints import constant_size  # noqa: F401
 
     wrapped = (
@@ -459,7 +401,7 @@ def test_broadcast_guard_catches_multiline_hints():
 
 
 def test_broadcast_threshold_parses_all_size_suffixes():
-    from etl_xlsx_potgres_spark.plans.dedup_fuzzy import _broadcast_threshold_bytes
+    from etl_xlsx_potgres_spark.hints import _threshold_bytes
 
     class FakeConf:
         def __init__(self, v):
@@ -484,7 +426,7 @@ def test_broadcast_threshold_parses_all_size_suffixes():
         "-1": -1,
     }
     for raw, want in cases.items():
-        assert _broadcast_threshold_bytes(FakeSpark(raw)) == want, raw
+        assert _threshold_bytes(FakeSpark(raw)) == want, raw
 
 
 def test_pagerank_vector_hint_gated_by_size(spark):
@@ -492,14 +434,12 @@ def test_pagerank_vector_hint_gated_by_size(spark):
     estimated vector size crosses autoBroadcastJoinThreshold — a
     billion-vertex rank vector hinted into every executor is the
     corpus-broadcast bug all over again."""
-    from etl_xlsx_potgres_spark.plans.graph_iterative import (
-        _gated_vector_hint,
-        _vector_width,
-    )
+    from etl_xlsx_potgres_spark.hints import broadcast_if_fits
+    from etl_xlsx_potgres_spark.plans.graph_iterative import _vector_width
 
     df = spark.range(4).withColumnRenamed("id", "vertex")
-    assert _gated_vector_hint(df, 4) is not df          # tiny -> hinted
-    assert _gated_vector_hint(df, 10**9) is df          # 48 GB est. -> plain
+    assert broadcast_if_fits(df, 4 * 48) is not df      # tiny -> hinted
+    assert broadcast_if_fits(df, 10**9 * 48) is df      # 48 GB est. -> plain
     assert _vector_width(1000) == 8
     assert _vector_width(2_000_000_000) == 2000
 

@@ -117,12 +117,8 @@ def test_semantic_store_append_compact_equals_one_shot(spark, sf_dir, duck):
         F.col("vec_id") % 10 != 0
     ).select("vec_id", "embedding")
     cents = more._sem_cents(hist)
-    first = more._sem_assign(
-        spark, sf_dir, hist.filter(F.col("vec_id") % 20 < 10), cents
-    )
-    second = more._sem_assign(
-        spark, sf_dir, hist.filter(F.col("vec_id") % 20 >= 10), cents
-    )
+    first = more._sem_assign(hist.filter(F.col("vec_id") % 20 < 10), cents)
+    second = more._sem_assign(hist.filter(F.col("vec_id") % 20 >= 10), cents)
     name = "semantic_cell_appended_test"
     _custom_semantic_store(spark, name, more._semantic_rank(first))
     more.append_to_semantic_store(spark, name, second)
