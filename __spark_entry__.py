@@ -83,7 +83,7 @@ def _core_hash() -> str:
 def _source_hash(name: str, _core: str | None = None) -> str:
     """Hash of the query's defining module, the shared-layer core, and
     any sibling plans module the defining module imports (e.g.
-    similarity -> dedup_fuzzy's size-aware broadcast): an edit to any
+    clip_pair_filter -> similarity's cosine helpers): an edit to any
     of them re-queues the query for verification."""
     import re
     import sys

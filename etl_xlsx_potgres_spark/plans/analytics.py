@@ -11,10 +11,9 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import msum, sql_msum
 from ..hints import constant_size
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-
-_DUCK_TOKENS = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
 
 
 # TPC-H Q6: the canonical filter-aggregate — everything pushes into
@@ -148,7 +147,7 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_tfidf_top_terms",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents
+      SELECT doc_id, unnest({sql_tokens()}) AS term FROM documents
     ),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
     df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM toks GROUP BY term),
@@ -170,9 +169,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.trim(F.lower("text")), r"\s+"), lambda x: x != "")
-        ).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
@@ -198,7 +195,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
            row_number() OVER (ORDER BY n_occurrences DESC, term) AS freq_rank
     FROM (
       SELECT term, COUNT(*) AS n_occurrences, COUNT(DISTINCT doc_id) AS n_docs
-      FROM (SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents)
+      FROM (SELECT doc_id, unnest({sql_tokens()}) AS term FROM documents)
       GROUP BY term
     )
     """,
@@ -207,9 +204,7 @@ def text_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.trim(F.lower("text")), r"\s+"), lambda x: x != "")
-        ).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     counts = toks.groupBy("term").agg(
         F.count(F.lit(1)).alias("n_occurrences"),
@@ -237,7 +232,7 @@ VOCAB_K = 500
     "text_oov_rate",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents
+      SELECT doc_id, unnest({sql_tokens()}) AS term FROM documents
     ),
     vocab AS (
       SELECT term FROM (
@@ -271,9 +266,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     to broadcast as an array, the (doc_id, term)-aggregate + equi-join
     shape in git history (r8) is the fallback."""
     d = load_table(spark, sf_dir, "documents")
-    toks_expr = F.filter(
-        F.split(F.trim(F.lower("text")), r"\s+"), lambda x: x != ""
-    )
+    toks_expr = tokens("text")
     counts = (
         d.select(F.explode(toks_expr).alias("term"))
         .groupBy("term")

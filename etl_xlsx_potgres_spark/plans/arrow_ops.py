@@ -9,10 +9,9 @@ mapInPandas, cogrouped/grouped pandas, UDTF (``chunk_udtf``), and now
 raw-Arrow batches.
 
 The demo computes per-document char/token counts entirely with
-pyarrow.compute kernels (``utf8_length``; token count =
-whitespace-run count + 1 on the trimmed string — exactly the
-filtered-split tokenizer's count, including the empty-string -> 0
-case). Map-only: no shuffle, the batch iterator streams, and column
+pyarrow.compute kernels (``utf8_length`` and
+``operators.text.arrow_token_count``, the Arrow rendering of the one
+tokenizer). Map-only: no shuffle, the batch iterator streams, and column
 pruning still reaches the scan (only doc_id/text are read —
 mapInArrow declares its input like any projection).
 
@@ -24,30 +23,10 @@ implementation must agree with the declarative tokenizer everywhere.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ..operators.text import arrow_token_count, sql_tokens
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _DUCK_TOKS
-
-
-# DuckDB's default trim() strips exactly the Unicode Zs (space
-# separator) category — probed char-by-char against duckdb 1.x: it
-# does NOT touch \t \n \x0b \f \r     \x85.  Arrow's
-# utf8_trim_whitespace strips MORE (all Unicode whitespace incl.
-# \t/\x0b/ ), which diverges from the oracle on text like
-# '\xa0 a' (oracle: 1 token after trimming the \xa0; old impl: 1 by
-# luck, but 'a\x0b b' style inputs split differently).  Mirror the
-# oracle instead: Zs-only trim, then count maximal runs of
-# non-RE2-\s chars ([\t\n\f\r ] — RE2's ASCII \s, which both Arrow
-# and DuckDB regexes use).  Run-count == token count directly: no
-# +1/empty-string special case.
-_ZS_CHARS = "".join(
-    map(
-        chr,
-        [0x20, 0xA0, 0x1680, *range(0x2000, 0x200B), 0x202F, 0x205F, 0x3000],
-    )
-)
 
 
 def _count_batches(batches):
@@ -56,13 +35,11 @@ def _count_batches(batches):
 
     for batch in batches:
         text = batch.column(1)
-        trimmed = pc.utf8_trim(text, _ZS_CHARS)
-        n_tokens = pc.count_substring_regex(trimmed, "[^\t\n\f\r ]+")
         yield pa.record_batch(
             [
                 batch.column(0),
                 pc.cast(pc.utf8_length(text), pa.int64()),
-                pc.cast(n_tokens, pa.int64()),
+                arrow_token_count(text),
             ],
             names=["doc_id", "n_chars", "n_tokens"],
         )
@@ -73,7 +50,7 @@ def _count_batches(batches):
     oracle=f"""
     SELECT doc_id,
            CAST(len(text) AS BIGINT) AS n_chars,
-           CAST(len({_DUCK_TOKS}) AS BIGINT) AS n_tokens
+           CAST(len({sql_tokens()}) AS BIGINT) AS n_tokens
     FROM documents
     """,
 )

@@ -35,15 +35,9 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-
-_DUCK_TOKENS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
-_SPARK_TOKENS = (
-    "filter(split(trim(lower(text)), '\\\\s+'), x -> x != '')"
-)
 
 
 @register(
@@ -51,7 +45,7 @@ _SPARK_TOKENS = (
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, toks[p] AS term, p AS pos
-      FROM (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+      FROM (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
            LATERAL unnest(generate_series(1, len(toks))) t(p)
     ),
     bi AS (
@@ -90,7 +84,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = scoped_persist(
         d.select(
             "doc_id",
-            F.posexplode(F.expr(_SPARK_TOKENS)).alias("pos", "term"),
+            F.posexplode(tokens("text")).alias("pos", "term"),
         )
     )  # one tokenize pass feeds cu, v, AND the bigram build
     w = Window.partitionBy("doc_id").orderBy("pos")

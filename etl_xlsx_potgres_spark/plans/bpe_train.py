@@ -40,17 +40,11 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
 
 N_MERGE_ROUNDS = 3
-
-_DUCK_TOKENS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
-_SPARK_TOKENS = (
-    "filter(split(trim(lower(text)), '\\\\s+'), x -> x != '')"
-)
 
 
 def _duck_round(k: int) -> str:
@@ -86,7 +80,7 @@ def _duck_round(k: int) -> str:
 # — shared with the token-budget chunkers (``plans/chunk_token_budget``)
 _TRAIN_CTES = f"""words AS (
       SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM (SELECT unnest({_DUCK_TOKENS}) AS word FROM documents)
+      FROM (SELECT unnest({sql_tokens()}) AS word FROM documents)
       GROUP BY word
     ),
     w0 AS (
@@ -104,7 +98,7 @@ def _word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     training round (and any downstream consumer) re-reads it."""
     d = load_table(spark, sf_dir, "documents")
     return scoped_persist(
-        d.select(F.explode(F.expr(_SPARK_TOKENS)).alias("word"))
+        d.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

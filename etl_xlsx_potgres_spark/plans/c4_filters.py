@@ -47,9 +47,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 
 LINE_TOKENS = 8     # tokens per synthesized line
 SHORT_TOKENS = 3    # every 5th line is truncated to this (< 5 words)
@@ -109,7 +109,7 @@ def _punct_count(s: str) -> str:
     "quality_c4_filters",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     paged AS (
       SELECT doc_id, {_DUCK_LINES} AS lines FROM base
@@ -141,7 +141,7 @@ def _punct_count(s: str) -> str:
 def quality_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     paged = d.select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("toks")
+        "doc_id", tokens("text").alias("toks")
     ).withColumn("lines", F.expr(_SPARK_LINES))
     filtered = paged.withColumn(
         "kept", F.expr(f"filter(lines, {_SPARK_KEEP_LINE})")

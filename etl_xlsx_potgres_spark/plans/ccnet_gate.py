@@ -33,13 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.text import tokens
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-
-_DUCK_TOKS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
 
 _ORACLE = f"""
 WITH scored AS (
@@ -47,7 +43,7 @@ WITH scored AS (
          CAST(len(toks) AS BIGINT) AS n_tokens,
          CAST(1000000 - (CAST(len(list_distinct(toks)) AS BIGINT) * 1000000)
                         // greatest(len(toks), 1) AS BIGINT) AS score
-  FROM (SELECT lang, {_DUCK_TOKS} AS toks FROM documents)
+  FROM (SELECT lang, {sql_tokens()} AS toks FROM documents)
 ),
 hist AS (
   SELECT lang, CAST(score // 10000 AS INT) AS score_bin,

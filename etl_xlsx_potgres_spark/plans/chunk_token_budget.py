@@ -42,23 +42,15 @@ training-data pipeline runs.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
 from ..hints import constant_size
+from ..operators.text import py_tokens, sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .bpe_train import (
-    N_MERGE_ROUNDS,
-    _DUCK_TOKENS,
-    _SPARK_TOKENS,
-    _TRAIN_CTES,
-    _merge_rounds,
-    _word_counts,
-)
+from .bpe_train import N_MERGE_ROUNDS, _TRAIN_CTES, _merge_rounds, _word_counts
 
 BUDGET = 64  # BPE tokens per chunk
 
@@ -102,8 +94,8 @@ _ORACLE = f"""
 WITH {_TRAIN_CTES},
 mg AS (SELECT {_MG_COLS}),
 base AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
-  WHERE len({_DUCK_TOKENS}) > 0
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents
+  WHERE len({sql_tokens()}) > 0
 ),
 costed AS (
   SELECT doc_id, toks, {_cost_expr('duck')} AS costs
@@ -181,7 +173,7 @@ def _costed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import scoped_persist
 
     d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", F.expr(_SPARK_TOKENS).alias("toks")).filter(
+    base = d.select("doc_id", tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
     # the 1-row merges frame is persisted because BOTH gate branches
@@ -303,15 +295,11 @@ def text_chunk_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 class ChunkBpeUdtf:
     """One document + the trained merges (alternating
     [pair1, merged1, ...]) -> token-budget chunks.  Must reproduce the
-    JVM chunker byte-for-byte: Java-\\s tokenization, training's
+    JVM chunker byte-for-byte: ``py_tokens`` tokenization, training's
     pad/replace/trim merge semantics, the floor-div budget rule."""
 
     def eval(self, text: str, merges: list):
-        toks = [
-            t
-            for t in re.split(r"[ \t\n\x0b\f\r]+", (text or "").lower())
-            if t
-        ]
+        toks = py_tokens(text)
         if not toks:
             return
         pairs = [

@@ -28,14 +28,13 @@ implementations to each other.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import udtf
 
+from ..operators.text import py_tokens, sql_tokens
 from ..registry import register
 from ..sources import load_table
-from .chunking import STRIDE, WINDOW, _DUCK_TOKENS
+from .chunking import STRIDE, WINDOW
 
 
 @udtf(
@@ -49,21 +48,11 @@ class ChunkTokensUdtf:
     them like the JVM chunker's ``size(toks) > 0`` filter."""
 
     def eval(self, text: str):
-        # Java's \s is ASCII-only ([ \t\n\x0B\f\r]); Python's is
-        # Unicode-aware, so a bare re.split(r"\s+") would split on
-        # \xa0 where the JVM chunker keeps it inside a token (and
-        # .strip() would eat leading unicode whitespace Java's trim
-        # leaves). Spell the Java class out and let the empty-string
-        # filter absorb leading/trailing separators — byte-for-byte
-        # the declarative twin's tokenization.
-        toks = [
-            t
-            for t in re.split(r"[ \t\n\x0b\f\r]+", (text or "").lower())
-            if t
-        ]
-        n = len(toks)
-        if n == 0:
+        # the JVM chunker's tokenizer, rendered in Python
+        toks = py_tokens(text)
+        if not toks:
             return
+        n = len(toks)
         # ceil(max(n-W, 0)/S) + 1 — the JVM chunker's count
         n_chunks = (max(n - WINDOW, 0) + STRIDE - 1) // STRIDE + 1
         for cid in range(n_chunks):
@@ -80,12 +69,12 @@ class ChunkTokensUdtf:
                                       chunk_id*{STRIDE} + {WINDOW}), ' ') AS chunk_text,
            least({WINDOW}, len(toks) - chunk_id*{STRIDE}) AS n_tokens
     FROM (
-      SELECT doc_id, {_DUCK_TOKENS} AS toks,
+      SELECT doc_id, {sql_tokens()} AS toks,
              unnest(generate_series(0,
-               CAST(ceil(greatest(len({_DUCK_TOKENS}) - {WINDOW}, 0) * 1.0 / {STRIDE}) AS BIGINT)))
+               CAST(ceil(greatest(len({sql_tokens()}) - {WINDOW}, 0) * 1.0 / {STRIDE}) AS BIGINT)))
                AS chunk_id
       FROM documents
-      WHERE len({_DUCK_TOKENS}) > 0
+      WHERE len({sql_tokens()}) > 0
     )
     """,
 )

@@ -15,14 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
 
 WINDOW = 40  # tokens per chunk
 STRIDE = 30  # tokens between chunk starts (WINDOW-STRIDE overlap)
 PACK_BUDGET = 512  # token budget per packed sequence
-
-_DUCK_TOKENS = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
 
 
 @register(
@@ -33,20 +32,18 @@ _DUCK_TOKENS = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> 
                                       chunk_id*{STRIDE} + {WINDOW}), ' ') AS chunk_text,
            least({WINDOW}, len(toks) - chunk_id*{STRIDE}) AS n_tokens
     FROM (
-      SELECT doc_id, {_DUCK_TOKENS} AS toks,
+      SELECT doc_id, {sql_tokens()} AS toks,
              unnest(generate_series(0,
-               CAST(ceil(greatest(len({_DUCK_TOKENS}) - {WINDOW}, 0) * 1.0 / {STRIDE}) AS BIGINT)))
+               CAST(ceil(greatest(len({sql_tokens()}) - {WINDOW}, 0) * 1.0 / {STRIDE}) AS BIGINT)))
                AS chunk_id
       FROM documents
-      WHERE len({_DUCK_TOKENS}) > 0
+      WHERE len({sql_tokens()}) > 0
     )
     """,
 )
 def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.trim(F.lower("text")), r"\s+"), lambda x: x != ""
-    )
+    toks = tokens("text")
     n = F.size(toks)
     # chunk starts: 0, S, 2S, ... covering the tail (last chunk may be short)
     n_chunks = F.ceil(F.greatest(n - WINDOW, F.lit(0)) / STRIDE) + 1
@@ -77,7 +74,7 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, source, n_tokens,
              SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      FROM (SELECT doc_id, source, len({_DUCK_TOKENS}) AS n_tokens FROM documents)
+      FROM (SELECT doc_id, source, len({sql_tokens()}) AS n_tokens FROM documents)
     )
     """,
 )
@@ -85,7 +82,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bin by the cumulative token count BEFORE each doc: docs stream
     # into budget-sized packs in deterministic doc_id order per shard
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.trim(F.lower("text")), r"\s+"), lambda x: x != "")
+    toks = tokens("text")
     base = d.select("doc_id", "source", F.size(toks).alias("n_tokens"))
     w = (
         Window.partitionBy("source")

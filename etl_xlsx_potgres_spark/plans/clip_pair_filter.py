@@ -22,10 +22,10 @@ numeric batch work with no relational structure.  The UDF hashes each
 token once (hashlib.md5 — bit-identical to the engines' md5),
 decodes the 64 nibbles with one numpy threshold per document, and
 returns float64 arrays over Arrow — ~2 s at sf0.1, and the caption
-never leaves the executor.  Tokenization mirrors the DuckDB oracle
-exactly (the ``arrow_ops`` discipline: Zs-only strip, RE2-``\\s`` run
-split) — NOT Python ``str.split``, whose Unicode whitespace set is
-wider and silently diverges.
+never leaves the executor.  Tokenization is
+``operators.text.py_tokens``, the Python rendering of the oracle's
+``sql_tokens`` — NOT Python ``str.split``, whose Unicode whitespace set
+is wider and silently diverges.
 
 Determinism: the synthesized caption embedding is integer sums turned
 double; the cosine is the similarity family's sequential fold (both
@@ -47,21 +47,18 @@ multimodal corpus stages the driver mandates.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType
 
+from ..operators.text import py_tokens, sql_tokens
 from ..registry import register
 from ..sources import load_table
-from .arrow_ops import _ZS_CHARS
 from .similarity import EMB_DIM, _dot, _duck_cos, _norm
 
 _DUCK_DIGS = (
-    "list_transform(list_filter(string_split_regex(trim(lower(text)),"
-    " '\\s+'), x -> x <> ''), w -> md5('0|' || w) || md5('1|' || w))"
+    f"list_transform({sql_tokens()}, w -> md5('0|' || w) || md5('1|' || w))"
 )
 _DUCK_TEXT_EMB = (
     f"list_transform(generate_series(1, {EMB_DIM}), d ->"
@@ -69,9 +66,6 @@ _DUCK_TEXT_EMB = (
     " CASE WHEN substring(h, d, 1) >= '8' THEN 1 ELSE -1 END)), 0)"
     " AS DOUBLE))"
 )
-
-# RE2's \s (what the DuckDB oracle splits on): ASCII only
-_RE2_WS = re.compile(r"[\t\n\x0b\f\r ]+")
 
 
 @pandas_udf(ArrayType(DoubleType()))
@@ -85,12 +79,7 @@ def _caption_emb(text):
     for t in text:
         # NULL text must behave like empty text (zero vector), not the
         # literal string 'None' — the oracle NULL-propagates to []
-        s = t if isinstance(t, str) else ""
-        toks = [
-            w
-            for w in _RE2_WS.split(s.strip(_ZS_CHARS).lower())
-            if w
-        ]
+        toks = py_tokens(t) if isinstance(t, str) else None
         if not toks:
             out.append([0.0] * EMB_DIM)
             continue

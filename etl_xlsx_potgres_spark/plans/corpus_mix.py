@@ -43,14 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
+from ..operators.text import HEX6, hex_int, sql_hex_int
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _duck_hex6
 
-_HEX_SPAN = 16 ** 6
-
-_SPARK_COIN = "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 6), 16, 10) AS BIGINT)"
-_DUCK_COIN = _duck_hex6("md5(CAST(doc_id AS VARCHAR))")
+_DUCK_COIN = sql_hex_int("md5(CAST(doc_id AS VARCHAR))")
 
 
 @register(
@@ -70,7 +67,7 @@ _DUCK_COIN = _duck_hex6("md5(CAST(doc_id AS VARCHAR))")
     coined AS (
       SELECT d.source,
              CASE WHEN {_DUCK_COIN} * tot.en_total * src.c_s
-                       < tot.n * src.en_s * {_HEX_SPAN}
+                       < tot.n * src.en_s * {HEX6}
                   THEN 1 ELSE 0 END AS kept
       FROM documents d
       JOIN src ON src.source = d.source
@@ -99,10 +96,10 @@ def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_s").cast("long").alias("n"),
         F.sum("en_s").cast("long").alias("en_total"),
     )
-    coin = F.expr(_SPARK_COIN)
+    coin = hex_int(F.md5(F.col("doc_id").cast("string")))
     kept = F.when(
         coin * F.col("en_total") * F.col("c_s")
-        < F.col("n") * F.col("en_s") * _HEX_SPAN,
+        < F.col("n") * F.col("en_s") * HEX6,
         1,
     ).otherwise(0)
     coined = (

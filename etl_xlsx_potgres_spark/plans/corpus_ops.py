@@ -40,11 +40,9 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-
-_DUCK_TOKENS = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-_SPARK_TOKENS = "filter(split(trim(lower(text)), '\\\\s+'), x -> x != '')"
 
 SEG_TOKENS = 8  # tokens per dedup segment ("pseudo-paragraph")
 EMB_DIM = 64
@@ -59,8 +57,8 @@ EMB_DIM = 64
     "dedup_corpus_segments",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
-      WHERE len({_DUCK_TOKENS}) > 0
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
+      WHERE len({sql_tokens()}) > 0
     ),
     segs AS (
       SELECT doc_id,
@@ -104,7 +102,7 @@ def dedup_corpus_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty — filtering tokenless docs on BOTH sides keeps the
     # engines aligned whatever the fixture contains
     segs = (
-        d.select("doc_id", F.expr(_SPARK_TOKENS).alias("toks"))
+        d.select("doc_id", tokens("text").alias("toks"))
         .filter(F.size("toks") > 0)
         .select(
             "doc_id",
@@ -162,9 +160,9 @@ _TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_TERMS)
     "text_bm25_search",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents
+      SELECT doc_id, unnest({sql_tokens()}) AS term FROM documents
     ),
-    dl AS (SELECT doc_id, COALESCE(len({_DUCK_TOKENS}), 0) AS dl FROM documents),
+    dl AS (SELECT doc_id, COALESCE(len({sql_tokens()}), 0) AS dl FROM documents),
     stats AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
@@ -209,13 +207,13 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc tf shuffles on doc_id; the final top-k is sort+limit."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.expr(_SPARK_TOKENS)).alias("term")
+        "doc_id", F.explode(tokens("text")).alias("term")
     ).filter(F.col("term").isin(*BM25_TERMS))
     # greatest(.., 0): Spark size(NULL) is -1 where DuckDB len(NULL)
     # is NULL — both normalize to 0 so avgdl agrees on any fixture
     dl = d.select(
         "doc_id",
-        F.greatest(F.expr(f"size({_SPARK_TOKENS})"), F.lit(0))
+        F.greatest(F.size(tokens("text")), F.lit(0))
         .cast("long")
         .alias("dl"),
     )
@@ -282,7 +280,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_unigram_logprob",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents
+      SELECT doc_id, unnest({sql_tokens()}) AS term FROM documents
     ),
     vocab AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS c FROM toks GROUP BY term),
     total AS (SELECT CAST(SUM(c) AS BIGINT) AS total FROM vocab),
@@ -310,7 +308,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-derived and corpus-sized, so it is equi-joined on the token
     (one shuffle), never broadcast; only the 1-row total is."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.expr(_SPARK_TOKENS)).alias("term"))
+    toks = d.select("doc_id", F.explode(tokens("text")).alias("term"))
     # One explode pass: the (doc, term) tf frame is the only
     # corpus-wide shuffle; the vocabulary (c = sum of tf) and the
     # corpus total both derive from it.
@@ -541,7 +539,7 @@ def emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bpe_pair_counts",
     oracle=f"""
     WITH words AS (
-      SELECT unnest({_DUCK_TOKENS}) AS w FROM documents
+      SELECT unnest({sql_tokens()}) AS w FROM documents
     ),
     pairs AS (
       SELECT unnest(list_transform(
@@ -565,7 +563,7 @@ def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     off that divergence)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = (
-        d.select(F.explode(F.expr(_SPARK_TOKENS)).alias("w"))
+        d.select(F.explode(tokens("text")).alias("w"))
         .filter(F.length("w") >= 2)
         .select(
             F.explode(
@@ -600,7 +598,7 @@ _SALTS = 64
     "text_inverted_index",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents
+      SELECT doc_id, unnest({sql_tokens()}) AS term FROM documents
     ),
     tf AS (
       SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -630,7 +628,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k so no single task ever sorts a hot term's full posting
     list."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.expr(_SPARK_TOKENS)).alias("term"))
+    toks = d.select("doc_id", F.explode(tokens("text")).alias("term"))
     # tf is per-doc-distinct, so df = row count per term — both the
     # frequency table and the posting ranking reuse the ONE persisted
     # tf shuffle (no second corpus tokenize).

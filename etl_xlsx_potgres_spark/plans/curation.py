@@ -40,10 +40,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
-from ..operators.text import fingerprint, shingles_long, token_count
+from ..operators.text import (
+    fingerprint,
+    shingles_long,
+    sql_normalize,
+    sql_shingles,
+    sql_tokens,
+    token_count,
+)
 from ..registry import register
 from ..sources import load_table
-from .dedup_fuzzy import _DUCK_SHINGLES, _DUCK_TOKENS, _NORM
 from .training_data import _SPLIT_SQL, _with_split
 
 _MIN_TOKENS = 20
@@ -137,17 +143,17 @@ def curation_stats(kept: DataFrame) -> DataFrame:
     "curation_pipeline_stats",
     oracle=f"""
     WITH q AS (
-      SELECT doc_id, lang, text, len({_DUCK_TOKENS}) AS n_toks
+      SELECT doc_id, lang, text, len({sql_tokens()}) AS n_toks
       FROM documents
-      WHERE len({_DUCK_TOKENS}) >= {_MIN_TOKENS}
+      WHERE len({sql_tokens()}) >= {_MIN_TOKENS}
     ),
     exact AS (
       SELECT doc_id, lang, text, n_toks
-      FROM (SELECT *, md5({_NORM}) AS fp FROM q)
+      FROM (SELECT *, md5({sql_normalize()}) AS fp FROM q)
       QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY fp)
     ),
     sh AS (
-      SELECT doc_id, unnest(list_distinct({_DUCK_SHINGLES})) AS s FROM exact
+      SELECT doc_id, unnest(list_distinct({sql_shingles()})) AS s FROM exact
     ),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     drops AS (

@@ -30,30 +30,21 @@ from ..operators.text import (
     fingerprint,
     shingles_long,
     sql_minhash_exprs,
+    sql_normalize,
+    sql_shingles,
     sql_simhash_expr,
+    sql_tokens,
     tokens,
 )
 from ..registry import register
 from ..sources import load_table
-
-_NORM = (
-    "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),"
-    " '\\s+', ' ', 'g'))"
-)
-_DUCK_TOKENS = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-_DUCK_SHINGLES = (
-    f"CASE WHEN len({_DUCK_TOKENS}) >= 3 THEN "
-    f"list_transform(generate_series(1, len({_DUCK_TOKENS}) - 2), "
-    f"i -> array_to_string(list_slice({_DUCK_TOKENS}, i, i + 2), ' ')) "
-    f"ELSE [] END"
-)
 
 
 @register(
     "dedup_exact_documents",
     oracle=f"""
     SELECT fp, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
-    FROM (SELECT doc_id, md5({_NORM}) AS fp FROM documents)
+    FROM (SELECT doc_id, md5({sql_normalize()}) AS fp FROM documents)
     GROUP BY fp
     """,
 )
@@ -70,7 +61,7 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_ngram_jaccard",
     oracle=f"""
     WITH sh AS (
-      SELECT doc_id, unnest(list_distinct({_DUCK_SHINGLES})) AS s
+      SELECT doc_id, unnest(list_distinct({sql_shingles()})) AS s
       FROM documents
     ),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -168,7 +159,7 @@ _BANDS_SQL = f"""
     sig AS (
       SELECT doc_id, {", ".join(sql_minhash_exprs("text"))}
       FROM documents
-      WHERE len({_DUCK_TOKENS}) >= 3
+      WHERE len({sql_tokens()}) >= 3
     ),
     bands AS (
       SELECT doc_id, 0 AS band_id, md5(mh0 || mh1) AS band_key FROM sig
@@ -398,9 +389,8 @@ def _simhash_df(d: DataFrame) -> DataFrame:
     exploded = (
         d.select(
             "doc_id",
-            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("t"),
+            F.explode(tokens("text")).alias("t"),
         )
-        .filter(F.col("t") != "")
         .select("doc_id", F.md5("t").alias("h"))
     )
     sums = [

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
-from ..operators.text import sql_minhash_exprs
+from ..operators.text import sql_minhash_exprs, sql_tokens
 from .dedup_fuzzy import _minhash_sig_df
 
 N_BUCKETS = 8
@@ -130,8 +130,7 @@ def _duck_bands(where: str) -> str:
     return (
         f"sig_{where_tag(where)} AS ("
         f"SELECT doc_id, {mh} FROM documents WHERE ({where})"
-        f" AND len(list_filter(string_split_regex(trim(lower(text)),"
-        f" '\\s+'), x -> x <> '')) >= 3), "
+        f" AND len({sql_tokens()}) >= 3), "
         f"bands_{where_tag(where)} AS ({bands})"
     )
 

@@ -68,10 +68,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.text import fingerprint, shingles_long
+from ..operators.text import (
+    HEX6,
+    fingerprint,
+    hex_int,
+    shingles_long,
+    sql_hex_int,
+    sql_normalize,
+    sql_shingles,
+    sql_tokens,
+    tokens,
+)
 from ..registry import register
 from ..sources import load_table
-from .dedup_fuzzy import _DUCK_SHINGLES, _NORM
 from .dedup_incremental import (
     N_BUCKETS,
     append_to_store,
@@ -79,7 +88,6 @@ from .dedup_incremental import (
     compact_store,
     _store_root,
 )
-from .importance_sampling import _duck_hex6
 from .similarity import _dot, _duck_cos, _norm, duck_valid, valid_vecs
 
 HAM_T = 8          # max Hamming distance (of 64) for a simhash near-dup
@@ -155,9 +163,8 @@ def _simhash64_df(d: DataFrame) -> DataFrame:
     exploded = (
         d.select(
             "doc_id",
-            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("t"),
+            F.explode(tokens("text")).alias("t"),
         )
-        .filter(F.col("t") != "")
         .select(
             "doc_id",
             F.md5("t").alias("h1"),
@@ -191,10 +198,7 @@ def _simhash64_df(d: DataFrame) -> DataFrame:
 
 def _sql_simhash64(text_expr: str) -> str:
     """DuckDB twin of :func:`_simhash64_df`."""
-    toks = (
-        f"list_filter(string_split_regex(trim(lower({text_expr})),"
-        f" '\\s+'), x -> x <> '')"
-    )
+    toks = sql_tokens(text_expr)
     parts = []
     for j in range(SIM_BITS):
         src = "md5(t)" if j < 32 else "md5('2:' || t)"
@@ -346,7 +350,7 @@ def _shingle_keys(d: DataFrame) -> DataFrame:
 
 _NGRAM_ORACLE = f"""
 WITH hs AS (
-  SELECT doc_id, unnest(list_distinct({_DUCK_SHINGLES})) AS s
+  SELECT doc_id, unnest(list_distinct({sql_shingles()})) AS s
   FROM documents WHERE doc_id % 10 <> 0
 ),
 hist AS (
@@ -355,7 +359,7 @@ hist AS (
   FROM hs
 ),
 ns AS (
-  SELECT doc_id, unnest(list_distinct({_DUCK_SHINGLES})) AS s
+  SELECT doc_id, unnest(list_distinct({sql_shingles()})) AS s
   FROM documents WHERE doc_id % 10 = 0
 ),
 newb AS (
@@ -453,7 +457,7 @@ def dedup_incremental_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EXACT_ORACLE = f"""
 WITH hist AS (
-  SELECT doc_id, md5({_NORM}) AS fp FROM documents WHERE doc_id % 10 <> 0
+  SELECT doc_id, md5({sql_normalize()}) AS fp FROM documents WHERE doc_id % 10 <> 0
 ),
 newbatch AS (
   SELECT d.doc_id, h.text
@@ -464,7 +468,7 @@ newbatch AS (
   JOIN documents h ON h.doc_id = d.src_id
 ),
 newd AS (
-  SELECT doc_id, md5({_NORM}) AS fp FROM newbatch
+  SELECT doc_id, md5({sql_normalize()}) AS fp FROM newbatch
 ),
 per AS (
   SELECT n.doc_id, CAST(COUNT(*) AS BIGINT) AS n_hist_copies
@@ -558,9 +562,7 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``coin * n`` of an unguarded scheme would wrap silently past
 # n ~ 2^39 (DuckDB raises), diverging exactly at scale.
 
-HEX6 = 16 ** 6  # the md5-coin space: first 6 hex digits as an integer
-
-_SEM_DUCK_COIN = _duck_hex6("md5(CAST(vec_id AS VARCHAR))")
+_SEM_DUCK_COIN = sql_hex_int("md5(CAST(vec_id AS VARCHAR))")
 
 
 def _coin_expr(col: str = "vec_id"):
@@ -571,9 +573,7 @@ def _coin_expr(col: str = "vec_id"):
     and its append-side continuation — the Spark twin of the oracle's
     ``_SEM_DUCK_COIN``; one definition, so the store rank and the
     oracle's replay can never silently diverge."""
-    return F.conv(
-        F.substring(F.md5(F.col(col).cast("string")), 1, 6), 16, 10
-    ).cast("long")
+    return hex_int(F.md5(F.col(col).cast("string")))
 
 # the shared seeding/assignment/probe CTE chain (composed by BOTH the
 # semantic-dedup oracle and the ann_incremental_ivf oracle below —

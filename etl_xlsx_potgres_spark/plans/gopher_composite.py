@@ -44,9 +44,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 from .gopher_quality import DUP_TOKEN_MAX, TOP_BIGRAM_MAX, _DUCK_BIGRAMS
 from .gopher_lines import (
     DUP_LINE_CHAR_MAX,
@@ -130,7 +130,7 @@ _N_FAILED_SQL = " + ".join(
 
 _ORACLE = f"""
 WITH base AS (
-  SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents
 ),
 stru AS (
   SELECT doc_id, toks, {_DUCK_BIGRAMS} AS bigrams, lines,
@@ -173,7 +173,7 @@ FROM flagged
 def quality_gopher_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     stru = (
-        d.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        d.select("doc_id", tokens("text").alias("toks"))
         .withColumn("bigrams", F.expr(_SPARK_BIGRAMS))
         .withColumn("lines", F.expr(_SPARK_LINES))
         .withColumn("paras", F.expr(_SPARK_PARAS))

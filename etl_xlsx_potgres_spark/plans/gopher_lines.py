@@ -48,9 +48,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 
 LINE_TOKENS = 8      # tokens per synthesized line
 PARA_LINES = 3       # lines per synthesized paragraph
@@ -125,7 +125,7 @@ def _duck_chars(a: str) -> str:
     "quality_gopher_lines",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     lined AS (
       SELECT doc_id, {_DUCK_LINES} AS lines FROM base
@@ -177,7 +177,7 @@ def _duck_chars(a: str) -> str:
 def quality_gopher_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     stru = (
-        d.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        d.select("doc_id", tokens("text").alias("toks"))
         .withColumn("lines", F.expr(_SPARK_LINES))
         .withColumn("paras", F.expr(_SPARK_PARAS))
     )

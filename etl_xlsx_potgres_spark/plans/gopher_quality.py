@@ -38,9 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 
 TOP_BIGRAM_MAX = 0.18  # Gopher: top 2-gram fraction above this -> drop
 DUP_TOKEN_MAX = 0.5
@@ -55,7 +55,7 @@ _DUCK_BIGRAMS = (
     "quality_gopher_repetition",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     tok AS (
       SELECT doc_id,
@@ -98,7 +98,7 @@ _DUCK_BIGRAMS = (
 )
 def quality_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+    base = d.select("doc_id", tokens("text").alias("toks"))
     # row-local token stats: grain == row, no shuffle
     tok = base.select(
         "doc_id",

@@ -51,9 +51,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 
 BLOCK_TOKENS = 10
 
@@ -183,7 +183,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     "html_extract_boilerplate",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     bl AS (
       SELECT doc_id, {_DUCK_BLOCKS} AS blocks FROM base
@@ -211,7 +211,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def html_extract_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     html = d.select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("toks")
+        "doc_id", tokens("text").alias("toks")
     ).select("doc_id", F.expr(_SPARK_HTML).alias("html"))
     return html.mapInPandas(
         _extract_batches,

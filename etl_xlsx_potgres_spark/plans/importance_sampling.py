@@ -52,17 +52,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
+from ..operators.text import hex_int, sql_hex_int, sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
 
 B = 256  # hashed n-gram buckets
 TARGET_LANG = "en"
 TOP_K = 50
-
-_SPARK_TOKS = "filter(split(trim(lower(text)), '\\\\s+'), x -> x != '')"
-_DUCK_TOKS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
 
 # unigrams ++ space-joined bigrams, as one array expression per row
 _SPARK_GRAMS = (
@@ -77,23 +73,11 @@ _DUCK_GRAMS = (
 )
 
 
-def _duck_hex6(h: str) -> str:
-    """First 6 hex chars of ``h`` as an integer (portable md5 family;
-    DuckDB has no ``conv``)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substring({h}, {i + 1}, 1)) - 1)"
-        f" * {16 ** (5 - i)}"
-        for i in range(6)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-_SPARK_BUCKET = f"CAST(conv(substr(md5(gram), 1, 6), 16, 10) AS BIGINT) % {B}"
-_DUCK_BUCKET = _duck_hex6("md5(gram)") + f" % {B}"
+_DUCK_BUCKET = sql_hex_int("md5(gram)") + f" % {B}"
 
 _ORACLE_WEIGHTS = f"""
     WITH toks AS (
-      SELECT doc_id, lang, {_DUCK_TOKS} AS toks FROM documents
+      SELECT doc_id, lang, {sql_tokens()} AS toks FROM documents
     ),
     grams AS (
       SELECT doc_id, lang, unnest({_DUCK_GRAMS}) AS gram FROM toks
@@ -133,16 +117,16 @@ _ORACLE_WEIGHTS = f"""
 
 
 def bucket_of(gram):
-    """``_SPARK_BUCKET`` as a composable Column (identical arithmetic)
-    — usable on a lambda variable inside row-local HOFs, which is what
+    """The hashed-gram bucket (``_DUCK_BUCKET``'s twin) as a Column —
+    usable on a lambda variable inside row-local HOFs, which is what
     lets scoring happen without the per-doc explode."""
-    return F.conv(F.substring(F.md5(gram), 1, 6), 16, 10).cast("long") % B
+    return hex_int(F.md5(gram)) % B
 
 
 def _grams_arr(d: DataFrame, *extra: str) -> DataFrame:
     """(extra..., grams) with the unigram++bigram array kept row-local
     (the explode stays confined to the model-fit pass)."""
-    return d.select(*extra, F.expr(_SPARK_TOKS).alias("toks")).select(
+    return d.select(*extra, tokens("text").alias("toks")).select(
         *extra, F.expr(_SPARK_GRAMS).alias("grams")
     )
 

@@ -37,15 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.text import sql_hex_int, sql_tokens
 from ..registry import register
 from ..sources import load_table
-from .shard_export import (
-    MAX_RECORDS_PER_FILE,
-    N_SHARDS,
-    _ROOT,
-    _shard_col,
-    _sql_hex6_to_int,
-)
+from .shard_export import MAX_RECORDS_PER_FILE, N_SHARDS, _ROOT, _shard_col
 
 _READ_SCHEMA = T.StructType(
     [
@@ -62,11 +57,10 @@ _READ_SCHEMA = T.StructType(
     "export_jsonl_shards",
     oracle=f"""
     SELECT
-      CAST({_sql_hex6_to_int("md5('shard:' || CAST(doc_id AS VARCHAR))")}
+      CAST({sql_hex_int("md5('shard:' || CAST(doc_id AS VARCHAR))")}
            % {N_SHARDS} AS INT) AS shard,
       count(*) AS n_docs,
-      CAST(sum(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                               x -> x <> ''))) AS BIGINT) AS total_tokens,
+      CAST(sum(len({sql_tokens()})) AS BIGINT) AS total_tokens,
       CAST(sum(len(text)) AS BIGINT) AS total_text_chars,
       CAST(min(doc_id) AS BIGINT) AS min_doc_id,
       CAST(max(doc_id) AS BIGINT) AS max_doc_id

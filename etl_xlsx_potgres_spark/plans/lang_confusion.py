@@ -62,11 +62,12 @@ machinery.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.text import sql_tokens, tokens
 from ..registry import ORACLES, register
 from ..sources import load_table
 from . import text_analysis  # noqa: F401  (registers text_lang_id first)
@@ -75,16 +76,25 @@ from .text_analysis import _DUCK_LOC_DOCS, _localized_text_col, text_lang_id
 M_PROFILE = 64   # profile trigrams kept per language (constant-size model)
 EXCL_NUM = 4     # exclusivity gate: rate > EXCL_NUM * sum(other langs)
 
+
 # word-padded character trigrams (Cavnar-Trenkle padding concentrates
 # word-boundary signal: the 1-char CJK markers become one canonical
 # ' x ' trigram instead of arbitrary sliding contexts)
-_TRI_SPARK = """flatten(transform(
-    filter(split(trim(lower(text)), '\\\\s+'), w -> w != ''),
-    w -> transform(sequence(1, char_length(w)),
-                   i -> substring(concat(' ', w, ' '), i, 3))))"""
+def _tri_spark() -> Column:
+    """Spark twin of ``_TRI_DUCK``."""
+    return F.flatten(
+        F.transform(
+            tokens("text"),
+            lambda w: F.transform(
+                F.sequence(F.lit(1), F.char_length(w)),
+                lambda i: F.substring(F.concat(F.lit(" "), w, F.lit(" ")), i, 3),
+            ),
+        )
+    )
 
-_TRI_DUCK = """flatten(list_transform(
-    list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w <> ''),
+
+_TRI_DUCK = f"""flatten(list_transform(
+    {sql_tokens()},
     w -> list_transform(generate_series(1, length(w)),
                         i -> substr(' ' || w || ' ', i, 3))))"""
 
@@ -140,7 +150,7 @@ def _trigram_pred(loc: DataFrame) -> DataFrame:
     # recompute vs 6.6s with the cache — columnar-caching ~5 string
     # rows per token loses to codegen)
     tri = loc.select(
-        "doc_id", "lang", F.explode(F.expr(_TRI_SPARK)).alias("t")
+        "doc_id", "lang", F.explode(_tri_spark()).alias("t")
     )
     cnt = tri.groupBy("lang", "t").agg(F.count(F.lit(1)).alias("c"))
     tot = cnt.groupBy("lang").agg(F.sum("c").alias("tc"))

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.text import token_count
+from ..operators.text import hex_int, sql_hex_int, sql_tokens, token_count
 from ..registry import register
 from ..sources import load_table
 
@@ -40,18 +40,12 @@ _BATCH = 16
 _WIDTH = 8
 _SHARDS = 4
 
-_DUCK_TOKS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
-_DUCK_SHARD = (
-    "(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 1, 1))"
-    f" - 1) % {_SHARDS}"
-)
+_DUCK_SHARD = sql_hex_int("md5(CAST(doc_id AS VARCHAR))", 1) + f" % {_SHARDS}"
 
 _ORACLE = f"""
 WITH sized AS (
   SELECT doc_id,
-         CAST(len({_DUCK_TOKS}) AS BIGINT) AS n_tokens,
+         CAST(len({sql_tokens()}) AS BIGINT) AS n_tokens,
          CAST({_DUCK_SHARD} AS INT) AS shard
   FROM documents
 ),
@@ -95,10 +89,9 @@ def _sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         token_count("text").cast("long").alias("n_tokens"),
-        F.expr(
-            "CAST(CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 1), 16, 10)"
-            f" AS INT) % {_SHARDS} AS INT)"
-        ).alias("shard"),
+        (hex_int(F.md5(F.col("doc_id").cast("string")), 1) % _SHARDS)
+        .cast("int")
+        .alias("shard"),
     )
 
 

@@ -64,14 +64,18 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from ..operators.text import shingles_long
+from ..operators.text import (
+    HEX6,
+    hex_int,
+    shingles_long,
+    sql_hex_int,
+    sql_shingles,
+)
 from ..registry import register
 from ..sources import load_table
-from .dedup_fuzzy import _DUCK_SHINGLES, _minhash_sig_df, lsh_candidate_pairs
+from .dedup_fuzzy import _minhash_sig_df, lsh_candidate_pairs
 from .graph_components import _PAIRS_SQL
-from .importance_sampling import _duck_hex6
 
-HEX6 = 16 ** 6      # the md5-coin space (first 6 hex digits)
 VERIFY_TARGET = 512  # expected exact-verified pairs at any corpus size
 
 _N_EQ_SQL = " + ".join(
@@ -87,12 +91,8 @@ _SCREEN = (
     "WHEN COALESCE(2 * inter >= uni, FALSE) THEN 'fn' ELSE 'tn' END"
 )
 
-_DUCK_COIN = _duck_hex6(
+_DUCK_COIN = sql_hex_int(
     "md5(CAST(d1 AS VARCHAR) || ':' || CAST(d2 AS VARCHAR))"
-)
-_SPARK_COIN = (
-    "CAST(conv(substr(md5(concat(CAST(d1 AS STRING), ':',"
-    " CAST(d2 AS STRING))), 1, 6), 16, 10) AS BIGINT)"
 )
 
 
@@ -101,7 +101,7 @@ _SPARK_COIN = (
     oracle=f"""
     WITH {_PAIRS_SQL},
     sh AS (
-      SELECT doc_id, unnest(list_distinct({_DUCK_SHINGLES})) AS s
+      SELECT doc_id, unnest(list_distinct({sql_shingles()})) AS s
       FROM documents
     ),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -197,7 +197,15 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 2 * F.least("na", "nb") < F.greatest("na", "nb")
             ).alias("is_bounded"),
-            F.expr(_SPARK_COIN).alias("coin"),
+            hex_int(
+                F.md5(
+                    F.concat(
+                        F.col("d1").cast("string"),
+                        F.lit(":"),
+                        F.col("d2").cast("string"),
+                    )
+                )
+            ).alias("coin"),
         )
     )
     sized = scoped_persist(sized)

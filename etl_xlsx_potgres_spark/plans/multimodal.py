@@ -1,8 +1,7 @@
 """Multimodal queries: binary-column stats and the mapInPandas decode
 pipeline — BOTH oracle-checked. The pseudo-decode's md5-derived
 dimensions (operators/multimodal._fake_meta) are pure hex arithmetic,
-so the DuckDB oracle recomputes them with strpos-based hex-digit
-parsing: the Arrow-batched Python path is differentially proven to
+so the DuckDB oracle recomputes them with ``sql_hex_int``: the Arrow-batched Python path is differentially proven to
 agree with a declarative restatement, which is exactly the guarantee
 you want before trusting a Python codec stage at 100 TB."""
 
@@ -12,13 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import attach_binary_payload, decode_image_meta
+from ..operators.text import sql_hex_int
 from ..registry import register
 from ..sources import load_table
-
-
-def _hexv(expr: str, i: int) -> str:
-    """DuckDB: value 0-15 of the i-th (1-based) hex digit of expr."""
-    return f"(strpos('0123456789abcdef', substr({expr}, {i}, 1)) - 1)"
 
 
 @register(
@@ -52,11 +47,11 @@ def mm_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            CAST(n_bytes AS BIGINT) AS n_bytes,
            dg AS content_md5,
-           CAST(16 * (1 + ({_hexv("dg", 1)} * 16 + {_hexv("dg", 2)}) % 64)
+           CAST(16 * (1 + {sql_hex_int("dg", 2)} % 64)
                 AS INTEGER) AS width,
-           CAST(16 * (1 + ({_hexv("dg", 3)} * 16 + {_hexv("dg", 4)}) % 64)
+           CAST(16 * (1 + {sql_hex_int("substr(dg, 3)", 2)} % 64)
                 AS INTEGER) AS height,
-           CAST(1 + {_hexv("dg", 5)} % 4 AS INTEGER) AS channels
+           CAST(1 + {sql_hex_int("substr(dg, 5)", 1)} % 4 AS INTEGER) AS channels
     FROM m
     """,
 )
@@ -151,9 +146,9 @@ def mm_decode_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, md5(text) AS dg FROM documents
     )
     SELECT doc_id, dg AS content_md5,
-           CAST(16 * (1 + ({_hexv("dg", 1)} * 16 + {_hexv("dg", 2)}) % 64)
+           CAST(16 * (1 + {sql_hex_int("dg", 2)} % 64)
                 AS INTEGER) AS width,
-           CAST(16 * (1 + ({_hexv("dg", 3)} * 16 + {_hexv("dg", 4)}) % 64)
+           CAST(16 * (1 + {sql_hex_int("substr(dg, 3)", 2)} % 64)
                 AS INTEGER) AS height
     FROM m WHERE substr(dg, 1, 4) < '1999'
     """,

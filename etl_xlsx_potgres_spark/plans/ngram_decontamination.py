@@ -38,9 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 
 GRAM_N = 13
 EVAL_START = 5   # benchmark window: tokens 5..25 of every 16th doc
@@ -69,7 +69,7 @@ def _duck_grams(arr: str) -> str:
     "contamination_ngram13",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     tg AS (
       SELECT doc_id, unnest({_duck_grams('toks')}) AS g FROM base
@@ -99,7 +99,7 @@ def _duck_grams(arr: str) -> str:
 )
 def contamination_ngram13(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("toks")
+        "doc_id", tokens("text").alias("toks")
     )
     tg = base.select(
         "doc_id", F.explode(F.expr(_spark_grams("toks"))).alias("g")

@@ -44,9 +44,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 
 PARA_TOKENS = 16
 _B1 = "subscribe to our newsletter for the latest updates"
@@ -76,7 +76,7 @@ _DUCK_PARAS = (
     "dedup_paragraph_ccnet",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     paged AS (
       SELECT doc_id, {_DUCK_PARAS} AS paras FROM base
@@ -121,7 +121,7 @@ def dedup_paragraph_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize policy.
     d = load_table(spark, sf_dir, "documents")
     paged = scoped_persist(
-        d.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        d.select("doc_id", tokens("text").alias("toks"))
         .withColumn("paras", F.expr(_SPARK_PARAS))
         .select("doc_id", "paras")
     )

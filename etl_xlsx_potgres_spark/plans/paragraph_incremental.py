@@ -40,16 +40,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
 from .dedup_incremental_more import _provision
-from .importance_sampling import _DUCK_TOKS, _SPARK_TOKS
 from .paragraph_dedup import _DUCK_PARAS, _SPARK_PARAS
 
 
 def _paged(d: DataFrame) -> DataFrame:
     return (
-        d.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        d.select("doc_id", tokens("text").alias("toks"))
         .withColumn("paras", F.expr(_SPARK_PARAS))
         .select("doc_id", "paras")
     )
@@ -70,7 +70,7 @@ def _provision_para_store(spark: SparkSession, sf_dir: str) -> str:
 
 _ORACLE = f"""
 WITH hbase AS (
-  SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents WHERE doc_id % 10 <> 0
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE doc_id % 10 <> 0
 ),
 hpaged AS (SELECT doc_id, {_DUCK_PARAS} AS paras FROM hbase),
 hp AS (
@@ -79,7 +79,7 @@ hp AS (
   GROUP BY 1
 ),
 nbase AS (
-  SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents WHERE doc_id % 10 = 0
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE doc_id % 10 = 0
 ),
 npaged AS (SELECT doc_id, {_DUCK_PARAS} AS paras FROM nbase),
 bp AS (

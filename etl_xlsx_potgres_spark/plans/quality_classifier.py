@@ -50,13 +50,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
+from ..operators.text import sql_tokens
 from ..registry import register
 from .importance_sampling import (
     B,
     TARGET_LANG,
     _DUCK_BUCKET,
     _DUCK_GRAMS,
-    _DUCK_TOKS,
     _arr_at,
     _dense_model_arr,
     _feat,
@@ -64,7 +64,7 @@ from .importance_sampling import (
 
 _ORACLE_SCORES = f"""
     WITH toks AS (
-      SELECT doc_id, lang, {_DUCK_TOKS} AS toks FROM documents
+      SELECT doc_id, lang, {sql_tokens()} AS toks FROM documents
     ),
     grams AS (
       SELECT doc_id, lang, unnest({_DUCK_GRAMS}) AS gram FROM toks

@@ -55,16 +55,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
-from ..operators.text import token_count
+from ..operators.text import sql_tokens, token_count
 from ..registry import register
 from ..sources import load_table
 
 SEQ_LEN = 256
-
-_DUCK_TOK = (
-    "len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),"
-    " x -> x <> ''))"
-)
 
 
 def packed_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,7 +126,7 @@ def packed_layout_from(docs: DataFrame) -> DataFrame:
                ORDER BY md5(CAST(doc_id AS STRING)), doc_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
              ) - tok AS BIGINT) AS start_pos
-      FROM (SELECT doc_id, {_DUCK_TOK} AS tok FROM documents)
+      FROM (SELECT doc_id, len({sql_tokens()}) AS tok FROM documents)
     )
     SELECT start_pos // {SEQ_LEN} AS seq_id,
            count(*) AS n_docs_start,

@@ -4,8 +4,8 @@ materialize the corpus as a shard-partitioned parquet layout with
 bounded file sizes, and attest the layout by reading it BACK through
 partition-column restore (what the downstream trainer actually sees).
 
-Shard assignment is the portable md5 family (Spark ``conv(hex)``,
-DuckDB strpos-digit expansion) mod N_SHARDS — reproducible across
+Shard assignment is the portable md5 bucket (``operators.text``'s
+``hex_int``/``sql_hex_int``) mod N_SHARDS — reproducible across
 engines and runs, independent of partitioning, and uniform, so every
 shard gets ~|corpus|/N docs regardless of ingest order (a trainer's
 data loader wants shards balanced to within sampling noise).
@@ -44,6 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import hex_int, sql_hex_int, sql_tokens
 from ..registry import register
 from ..sources import load_table
 
@@ -53,20 +54,9 @@ MAX_RECORDS_PER_FILE = 40
 _ROOT = "/tmp/spark_graft_shards"
 
 
-def _sql_hex6_to_int(h: str) -> str:
-    terms = [
-        f"(strpos('0123456789abcdef', substring({h}, {i + 1}, 1)) - 1)"
-        f" * {16 ** (5 - i)}"
-        for i in range(6)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def _shard_col() -> F.Column:
     h = F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
-    return (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % N_SHARDS).cast(
-        "int"
-    )
+    return (hex_int(h) % N_SHARDS).cast("int")
 
 
 def export_shards(spark: SparkSession, sf_dir: str) -> str:
@@ -90,11 +80,10 @@ def export_shards(spark: SparkSession, sf_dir: str) -> str:
     "export_training_shards",
     oracle=f"""
     SELECT
-      CAST({_sql_hex6_to_int("md5('shard:' || CAST(doc_id AS VARCHAR))")}
+      CAST({sql_hex_int("md5('shard:' || CAST(doc_id AS VARCHAR))")}
            % {N_SHARDS} AS INT) AS shard,
       count(*) AS n_docs,
-      CAST(sum(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                               x -> x <> ''))) AS BIGINT) AS total_tokens,
+      CAST(sum(len({sql_tokens()})) AS BIGINT) AS total_tokens,
       CAST(sum(n_chars) AS BIGINT) AS total_chars
     FROM documents
     GROUP BY shard

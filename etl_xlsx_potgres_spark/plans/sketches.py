@@ -8,7 +8,7 @@ over d cells — always >= the true count.
 
 Differential design: bucket hashes are the PORTABLE md5-hex family
 already used by the sign-plane LSH / negative-sampling queries
-(Spark ``conv(hex,16,10)``, DuckDB strpos-digit expansion), so DuckDB
+(``operators.text``'s ``hex_int``/``sql_hex_int``), so DuckDB
 rebuilds the IDENTICAL grid — the oracle replicates the sketch and
 the estimates exactly, not within a tolerance band. On top the query
 self-verifies the one deterministic CM invariant per heavy hitter
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from ..operators.text import tokens
+from ..operators.text import hex_int, sql_hex_int, sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
 
@@ -35,35 +35,17 @@ D = 3  # hash rows
 W = 64  # buckets per row
 TOP_K = 20
 
-_DUCK_TOKENS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
 
-
-def _duck_hex6(h: str) -> str:
-    """First 6 hex chars of ``h`` as an integer (portable md5 family)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substring({h}, {i + 1}, 1)) - 1)"
-        f" * {16 ** (5 - i)}"
-        for i in range(6)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _key(row: str, term: str) -> str:
-    return f"'cm' || CAST({row} AS STRING) || '|' || {term}"
-
-
-def _spark_bucket(row: str, term: str) -> str:
-    return (
-        f"CAST(conv(substr(md5({_key(row, term)}), 1, 6), 16, 10)"
-        f" AS BIGINT) % {W}"
+def _spark_bucket() -> F.Column:
+    key = F.concat(
+        F.lit("cm"), F.col("row_id").cast("string"), F.lit("|"), F.col("term")
     )
+    return (hex_int(F.md5(key)) % W).alias("bucket")
 
 
 def _duck_bucket(row: str, term: str) -> str:
-    h = f"md5({_key(row, term)})"
-    return f"{_duck_hex6(h)} % {W}"
+    h = f"md5('cm' || CAST({row} AS STRING) || '|' || {term})"
+    return f"{sql_hex_int(h)} % {W}"
 
 
 @register(
@@ -71,7 +53,7 @@ def _duck_bucket(row: str, term: str) -> str:
     oracle=f"""
     WITH tc AS (
       SELECT term, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-      FROM (SELECT unnest({_DUCK_TOKENS}) AS term FROM documents)
+      FROM (SELECT unnest({sql_tokens()}) AS term FROM documents)
       GROUP BY term
     ),
     cells AS (
@@ -102,23 +84,14 @@ def agg_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = spark.range(D).select(F.col("id").cast("int").alias("row_id"))
     cells = (
         tc.crossJoin(constant_size(rows))
-        .selectExpr(
-            "row_id",
-            _spark_bucket("row_id", "term") + " AS bucket",
-            "exact_cnt",
-        )
+        .select("row_id", _spark_bucket(), "exact_cnt")
         .groupBy("row_id", "bucket")
         .agg(F.sum("exact_cnt").alias("cell_sum"))
     )
     topk = tc.orderBy(F.desc("exact_cnt"), F.asc("term")).limit(TOP_K)
     return (
         topk.crossJoin(constant_size(rows))
-        .selectExpr(
-            "term",
-            "exact_cnt",
-            "row_id",
-            _spark_bucket("row_id", "term") + " AS bucket",
-        )
+        .select("term", "exact_cnt", "row_id", _spark_bucket())
         .join(constant_size(cells), ["row_id", "bucket"])
         .groupBy("term", "exact_cnt")
         .agg(F.min("cell_sum").alias("cm_estimate"))

@@ -16,15 +16,16 @@ from ..operators.text import (
     fingerprint,
     normalize_text,
     shingles_long,
+    split_ws,
+    sql_normalize,
+    sql_shingles,
+    sql_split_ws,
+    sql_tokens,
     token_count,
     tokens,
 )
 from ..registry import register
 from ..sources import load_table
-from .dedup_fuzzy import _DUCK_SHINGLES
-
-_DUCK_TOKENS = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-
 
 # GPT-2-style pretokenizer, portability-constrained: contraction
 # suffixes, space-prefixed letter/digit/punctuation runs, whitespace
@@ -70,9 +71,9 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_count",
     oracle=f"""
     SELECT doc_id,
-           len({_DUCK_TOKENS}) AS n_tokens,
+           len({sql_tokens()}) AS n_tokens,
            length(text) AS n_chars,
-           len(list_distinct({_DUCK_TOKENS})) AS n_unique_tokens
+           len(list_distinct({sql_tokens()})) AS n_unique_tokens
     FROM documents
     """,
 )
@@ -97,11 +98,11 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
            + 0.3 * least(stopword_ratio * 5.0, 1.0) AS quality
     FROM (
       SELECT doc_id,
-             len({_DUCK_TOKENS}) AS n_tokens,
+             len({sql_tokens()}) AS n_tokens,
              len(regexp_extract_all(text, '[^\\w\\s]')) * 1.0
                / greatest(length(text), 1) AS punct_ratio,
              len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in|is)\\b')) * 1.0
-               / greatest(len({_DUCK_TOKENS}), 1) AS stopword_ratio,
+               / greatest(len({sql_tokens()}), 1) AS stopword_ratio,
              len(regexp_extract_all(text, '[0-9]')) * 1.0
                / greatest(length(text), 1) AS digit_ratio
       FROM documents
@@ -203,7 +204,7 @@ def _localized_text_col() -> F.Column:
             .otherwise(t)
         )
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = split_ws("text")
     return F.concat_ws(" ", F.transform(toks, one_token))
 
 
@@ -237,7 +238,7 @@ _DUCK_LOC_SQL = f"""array_to_string(list_transform(
 # oracle, text_lang_confusion)
 _DUCK_LOC_DOCS = f"""
     tok AS (
-      SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks
+      SELECT doc_id, lang, {sql_split_ws()} AS toks
       FROM documents
     ),
     loc AS (
@@ -301,12 +302,10 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
-                                   '\\s+', ' ', 'g'))) AS fp,
-           length(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
-                                      '\\s+', ' ', 'g'))) AS normalized_len
+           md5({sql_normalize()}) AS fp,
+           length({sql_normalize()}) AS normalized_len
     FROM documents
     """,
 )
@@ -327,7 +326,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang,
            COUNT(*) AS n_docs,
            CAST(SUM(length(text)) AS BIGINT) AS total_chars,
-           CAST(SUM(len({_DUCK_TOKENS})) AS BIGINT) AS total_tokens,
+           CAST(SUM(len({sql_tokens()})) AS BIGINT) AS total_tokens,
            MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
     FROM documents
     GROUP BY lang ORDER BY lang
@@ -358,7 +357,7 @@ def text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_repetition_stats",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKENS}) AS tok FROM documents
+      SELECT doc_id, unnest({sql_tokens()}) AS tok FROM documents
     ),
     tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM toks GROUP BY doc_id, tok),
     per AS (
@@ -367,7 +366,7 @@ def text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM tc GROUP BY doc_id
     ),
     sh AS (
-      SELECT doc_id, unnest({_DUCK_SHINGLES}) AS s FROM documents
+      SELECT doc_id, unnest({sql_shingles()}) AS s FROM documents
     ),
     shc AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh,

@@ -38,15 +38,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.text import tokens
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
 
 _STOP = ("the", "and", "of", "to", "in", "is", "a", "that")
 
-_DUCK_TOKS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
 _STOP_SQL = ", ".join(f"'{s}'" for s in _STOP)
 
 
@@ -58,7 +55,7 @@ _STOP_SQL = ", ".join(f"'{s}'" for s in _STOP)
              CAST((CAST(len(list_filter(toks, t -> t IN ({_STOP_SQL})))
                         AS BIGINT) * 1000000)
                   // greatest(len(toks), 1) AS BIGINT) AS score
-      FROM (SELECT {_DUCK_TOKS} AS toks FROM documents)
+      FROM (SELECT {sql_tokens()} AS toks FROM documents)
     ),
     bins AS (
       SELECT CAST(score // 10000 AS INT) AS quality_bin,

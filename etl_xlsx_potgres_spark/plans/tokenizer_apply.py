@@ -31,15 +31,11 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from ..operators.text import tokens
+from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
 
 VOCAB_K = 500
-
-_DUCK_TOKENS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
 
 
 @register(
@@ -47,7 +43,7 @@ _DUCK_TOKENS = (
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, toks[p] AS term, p AS pos
-      FROM (SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents),
+      FROM (SELECT doc_id, {sql_tokens()} AS toks FROM documents),
            LATERAL unnest(generate_series(1, len(toks))) t(p)
     ),
     vocab AS (

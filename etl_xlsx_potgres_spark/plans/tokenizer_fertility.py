@@ -30,11 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
+from ..operators.text import HEX6, hex_int, sql_hex_int, sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .bpe_train import _DUCK_TOKENS, _SPARK_TOKENS, _TRAIN_CTES
+from .bpe_train import _TRAIN_CTES
 from .chunk_token_budget import _MG_COLS, _cost_expr, _merges_row
-from .corpus_mix import _DUCK_COIN, _HEX_SPAN
 
 
 @register(
@@ -43,8 +43,8 @@ from .corpus_mix import _DUCK_COIN, _HEX_SPAN
     WITH {_TRAIN_CTES},
     mg AS (SELECT {_MG_COLS}),
     base AS (
-      SELECT doc_id, lang, {_DUCK_TOKENS} AS toks FROM documents
-      WHERE len({_DUCK_TOKENS}) > 0
+      SELECT doc_id, lang, {sql_tokens()} AS toks FROM documents
+      WHERE len({sql_tokens()}) > 0
     ),
     costed AS (
       SELECT lang,
@@ -71,7 +71,7 @@ from .corpus_mix import _DUCK_COIN, _HEX_SPAN
 def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     base = d.select(
-        "doc_id", "lang", F.expr(_SPARK_TOKENS).alias("toks")
+        "doc_id", "lang", tokens("text").alias("toks")
     ).filter(F.size("toks") > 0)
     costed = base.crossJoin(
         constant_size(_merges_row(spark, sf_dir))
@@ -129,15 +129,16 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM src
     ),
     base AS (
-      SELECT doc_id, source, {_DUCK_TOKENS} AS toks FROM documents
+      SELECT doc_id, source, {sql_tokens()} AS toks FROM documents
     ),
     per_doc AS (
       SELECT b.source,
              CAST(len(toks) AS BIGINT) AS n_words,
              CAST(COALESCE(list_sum({_cost_expr('duck')}), 0)
                   AS BIGINT) AS n_bpe,
-             CASE WHEN {_DUCK_COIN} * tot.en_total * src.c_s
-                       < tot.n * src.en_s * {_HEX_SPAN}
+             CASE WHEN {sql_hex_int("md5(CAST(doc_id AS VARCHAR))")}
+                         * tot.en_total * src.c_s
+                       < tot.n * src.en_s * {HEX6}
                   THEN 1 ELSE 0 END AS kept
       FROM base b
       JOIN src ON src.source = b.source
@@ -169,9 +170,6 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .corpus_mix import _HEX_SPAN as _span
-    from .corpus_mix import _SPARK_COIN
-
     d = load_table(spark, sf_dir, "documents")
     src = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("c_s"),
@@ -183,13 +181,14 @@ def text_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_s").cast("long").alias("n"),
         F.sum("en_s").cast("long").alias("en_total"),
     )
+    coin = hex_int(F.md5(F.col("doc_id").cast("string")))
     kept = F.when(
-        F.expr(_SPARK_COIN) * F.col("en_total") * F.col("c_s")
-        < F.col("n") * F.col("en_s") * _span,
+        coin * F.col("en_total") * F.col("c_s")
+        < F.col("n") * F.col("en_s") * HEX6,
         1,
     ).otherwise(0)
     per_doc = (
-        d.select("doc_id", "source", F.expr(_SPARK_TOKENS).alias("toks"))
+        d.select("doc_id", "source", tokens("text").alias("toks"))
         .crossJoin(constant_size(_merges_row(spark, sf_dir)))
         .join(constant_size(src), "source")
         .crossJoin(constant_size(tot))

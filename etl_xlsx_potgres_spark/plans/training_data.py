@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
-from ..operators.text import shingles_long
+from ..operators.text import hex_int, shingles_long, sql_hex_int, sql_shingles
 from ..registry import register
 from ..sources import load_table
 
@@ -146,15 +146,6 @@ def sample_uniform_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join is the same distinct-shingle equi-join shape as
 # dedup_ngram_jaccard (shuffle on the gram, partial-agg'd), so it
 # scales the same way; 5-grams keep the false-positive rate near zero.
-_DUCK_TOKS = (
-    "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
-)
-_DUCK_5GRAMS = (
-    f"CASE WHEN len({_DUCK_TOKS}) >= 5 THEN "
-    f"list_transform(generate_series(1, len({_DUCK_TOKS}) - 4), "
-    f"i -> array_to_string(list_slice({_DUCK_TOKS}, i, i + 4), ' ')) "
-    f"ELSE [] END"
-)
 
 
 @register(
@@ -162,7 +153,7 @@ _DUCK_5GRAMS = (
     oracle=f"""
     WITH tagged AS (SELECT doc_id, text, {_SPLIT_SQL} AS split FROM documents),
     grams AS (
-      SELECT doc_id, split, unnest(list_distinct({_DUCK_5GRAMS})) AS s
+      SELECT doc_id, split, unnest(list_distinct({sql_shingles("text", 5)})) AS s
       FROM tagged WHERE split IN ('train', 'test')
     )
     SELECT te.doc_id AS test_doc,
@@ -281,15 +272,6 @@ def mixture_weights_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NEG_K = 4
 
 
-def _sql_hex6_to_int(h: str) -> str:
-    terms = [
-        f"(strpos('0123456789abcdef', substring({h}, {i + 1}, 1)) - 1)"
-        f" * {16 ** (5 - i)}"
-        for i in range(6)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 @register(
     "training_negative_samples",
     oracle=f"""
@@ -299,10 +281,10 @@ def _sql_hex6_to_int(h: str) -> str:
       FROM documents
     )
     SELECT doc_id, j,
-           {_sql_hex6_to_int("md5(CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")}
+           {sql_hex_int("md5(CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")}
              % (SELECT n_docs FROM n) AS neg_id
     FROM anchors
-    WHERE {_sql_hex6_to_int("md5(CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")}
+    WHERE {sql_hex_int("md5(CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR))")}
              % (SELECT n_docs FROM n) <> doc_id
     """,
 )
@@ -316,5 +298,5 @@ def training_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.md5(
         F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("j").cast("string"))
     )
-    neg = (F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % n).alias("neg_id")
+    neg = (hex_int(h) % n).alias("neg_id")
     return anchors.select("doc_id", "j", neg).filter(F.col("neg_id") != F.col("doc_id"))

@@ -1,10 +1,10 @@
 """The Arrow token counter (``text_tokcount_arrow``) claims bit-exact
-parity with its DuckDB oracle
-``len(list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> ''))``.
-The fixture's single-line ASCII text can't falsify that claim on the
-characters where the engines actually disagree: DuckDB's trim() strips
-exactly the Unicode Zs category (\\xa0, \\u3000, ...) but NOT
-\\t/\\x0b/\\f/\\u2028; Arrow's utf8_trim_whitespace strips all of them.
+parity with its DuckDB oracle ``len(sql_tokens())``.  The fixture's
+single-line ASCII text can't falsify that claim on the characters where
+the engines' own whitespace notions disagree: DuckDB's bare trim()
+strips the Unicode Zs category (\\xa0, \\u3000, ...), Arrow's
+utf8_trim_whitespace strips all Unicode whitespace, and RE2's \\s lacks
+\\x0b — the one tokenizer trims nothing and splits on Java's \\s.
 This test feeds ``_count_batches`` the adversarial strings directly and
 compares against the oracle expression running in DuckDB."""
 
@@ -13,12 +13,13 @@ from __future__ import annotations
 import duckdb
 import pyarrow as pa
 
+from etl_xlsx_potgres_spark.operators.text import sql_tokens
 from etl_xlsx_potgres_spark.plans.arrow_ops import _count_batches
 
 _ADVERSARIAL = [
-    "\xa0 a",               # Zs lead: oracle trims the \xa0 -> 1 token
-    "a\t",                  # trailing tab: NOT trimmed by either engine
-    "a\x0b b",              # \x0b is NOT in RE2's \s -> glued to 'a'
+    "\xa0 a",               # Zs lead: \xa0 is a token, not trimmed
+    "a\t",                  # trailing tab: a separator
+    "a\x0b b",              # \x0b is a separator (Java's \s)
     "a\x0bb",
     " a ",
     "\x0ba",
@@ -26,9 +27,9 @@ _ADVERSARIAL = [
     "a\rb",
     "a\nb",
     "",
-    "\xa0",                 # Zs-only doc -> trims to empty -> 0 tokens
+    "\xa0",                 # Zs-only doc -> one token
     "\u3000ideographic\u3000",
-    "\u2028line sep",  # U+2028 is neither Zs-trimmed nor RE2 \\s
+    "\u2028line sep",  # U+2028 is not a separator
     "a\x1cb",
     "  double  spaced  ",
     "\t\n mixed \r\n ws \t",
@@ -52,10 +53,10 @@ def test_arrow_counter_matches_duckdb_oracle_on_adversarial_text():
     con = duckdb.connect()
     for i, text in enumerate(_ADVERSARIAL):
         n_chars, n_tokens = con.execute(
-            "SELECT CAST(len(?) AS BIGINT),"
-            " CAST(len(list_filter(string_split_regex(trim(lower(?)),"
-            " '\\s+'), x -> x <> '')) AS BIGINT)",
-            [text, text],
+            "SELECT CAST(len(text) AS BIGINT),"
+            f" CAST(len({sql_tokens()}) AS BIGINT)"
+            " FROM (SELECT ?::VARCHAR AS text)",
+            [text],
         ).fetchone()
         assert got[i] == (n_chars, n_tokens), (
             f"doc {i} {text!r}: arrow={got[i]}"

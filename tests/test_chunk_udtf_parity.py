@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_xlsx_potgres_spark.operators.text import tokens
 from etl_xlsx_potgres_spark.plans.chunk_udtf import ChunkTokensUdtf
 from etl_xlsx_potgres_spark.plans.chunking import STRIDE, WINDOW
 
@@ -32,10 +33,7 @@ def test_udtf_matches_jvm_chunker_on_adversarial_text(spark):
         [(i, t) for i, t in enumerate(_ADVERSARIAL)], "doc_id long, text string"
     )
     # JVM declarative twin (the text_chunk_documents body inlined)
-    toks = F.filter(
-        F.split(F.trim(F.lower("text")), r"\s+"), lambda x: x != ""
-    )
-    with_toks = df.select("doc_id", toks.alias("toks")).filter(
+    with_toks = df.select("doc_id", tokens("text").alias("toks")).filter(
         F.size("toks") > 0
     )
     chunks = with_toks.select(

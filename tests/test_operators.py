@@ -377,3 +377,144 @@ def test_csv_jsonl_declared_schema_quarantine(spark, tmp_path):
     clean_j, bad_j = split_corrupt(read_jsonl_quarantine(spark, jl_dir, schema))
     assert clean_j.count() == 1
     assert bad_j.count() == 2  # type mismatch + malformed line
+
+
+# The one tokenizer's adversarial inputs, each with the token list every
+# rendering must produce — written out by hand, so the reference is
+# independent of all four renderings.
+_TOKENIZER_CASES = [
+    ("", []),
+    (None, None),
+    ("a\x0bb", ["a", "b"]),  # \x0b: in Java's \s, not in RE2's
+    ("\xa0 a", ["\xa0", "a"]),  # no Unicode trim: \xa0 is a token
+    ("\u3000x\u3000", ["\u3000x\u3000"]),
+    ("\u2028line sep", ["\u2028line", "sep"]),
+    ("a\x1cb", ["a\x1cb"]),
+    ("  double  spaced  ", ["double", "spaced"]),
+    ("\t\n mixed \r\n ws \t", ["mixed", "ws"]),
+    ("UPPER Case", ["upper", "case"]),
+]
+# DuckDB's lower() maps code point by code point — the one known gap:
+# (text, Java/Python tokens, DuckDB tokens).
+_LOWER_GAP = [
+    ("İ", ["i\u0307"], ["i"]),  # dotted capital I
+    ("ΟΔΟΣ ΣΑΣ", ["οδος", "σας"], ["οδοσ", "σασ"]),  # word-final sigma
+]
+
+
+def _spark_eval(spark, texts, expr):
+    """``expr`` over a one-column (text) frame, in input order."""
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    return [r[1] for r in df.select("i", expr).orderBy("i").collect()]
+
+
+def _duck_eval(template, values):
+    """A DuckDB expression over the one-column (text) row per value."""
+    import duckdb
+
+    con = duckdb.connect()
+    return [
+        con.execute(f"SELECT {template} FROM (SELECT ?::VARCHAR AS text)", [v])
+        .fetchone()[0]
+        for v in values
+    ]
+
+
+def test_tokenizer_renderings_match_literal_tokens(spark):
+    """tokens / sql_tokens / py_tokens / arrow_token_count give the
+    hand-written token lists on text where the engines' own notions of
+    whitespace and trimming disagree; the DuckDB lowercase gap is
+    asserted, not skipped."""
+    import pyarrow as pa
+
+    from etl_xlsx_potgres_spark.operators.text import (
+        arrow_token_count,
+        py_tokens,
+        sql_tokens,
+        tokens,
+    )
+
+    texts = [t for t, _ in _TOKENIZER_CASES] + [t for t, _, _ in _LOWER_GAP]
+    jvm_py = [e for _, e in _TOKENIZER_CASES] + [e for _, e, _ in _LOWER_GAP]
+    duck = [e for _, e in _TOKENIZER_CASES] + [e for _, _, e in _LOWER_GAP]
+
+    assert _spark_eval(spark, texts, tokens("text")) == jvm_py
+    assert [py_tokens(t) for t in texts] == jvm_py
+    assert _duck_eval(sql_tokens(), texts) == duck
+    counts = arrow_token_count(pa.array(texts, type=pa.string())).to_pylist()
+    assert counts == [None if e is None else len(e) for e in jvm_py]
+
+
+def test_shingles_renderings_match_literal_shingles(spark):
+    from etl_xlsx_potgres_spark.operators.text import shingles, sql_shingles
+
+    cases = [  # (text, k, shingles)
+        ("a\x0bb c", 2, ["a b", "b c"]),
+        ("\xa0 a b", 3, ["\xa0 a b"]),
+        ("  UPPER  Case\tx ", 3, ["upper case x"]),
+        ("one two", 3, []),
+        ("", 3, []),
+        (None, 3, []),
+    ]
+    for text, k, want in cases:
+        assert _spark_eval(spark, [text], shingles("text", k)) == [want], text
+        assert _duck_eval(sql_shingles("text", k), [text]) == [want], text
+
+
+def test_normalize_renderings_match_literal_form(spark):
+    from etl_xlsx_potgres_spark.operators.text import (
+        normalize_text,
+        sql_normalize,
+    )
+
+    cases = [
+        ("a\x0bb", "a b"),
+        ("\xa0 Hello,  World! ", "hello world"),
+        ("\u3000x\u3000", "x"),
+        ("Tab\tand\nNL\r\f", "tab and nl"),
+        ("İstanbul ΣΑΣ", "istanbul"),
+        ("", ""),
+        (None, None),
+    ]
+    texts = [t for t, _ in cases]
+    want = [w for _, w in cases]
+    assert _spark_eval(spark, texts, normalize_text("text")) == want
+    assert _duck_eval(sql_normalize(), texts) == want
+
+
+def test_hex_int_renderings_match_literal_values(spark):
+    from etl_xlsx_potgres_spark.operators.text import HEX6, hex_int, sql_hex_int
+
+    cases = [  # (hex digest, n digits, value)
+        ("0123456789abcdef", 6, 74565),
+        ("ffffff00", 6, 16777215),
+        ("00000f", 6, 15),
+        ("abcdef", 2, 171),
+        ("a", 1, 10),
+        ("9e107d9d372bb6826bd81d3542a419d6", 6, 10358909),
+    ]
+    assert HEX6 == 16777216
+    for h, n, want in cases:
+        assert _spark_eval(spark, [h], hex_int("text", n)) == [want], h
+        assert _duck_eval(sql_hex_int("text", n), [h]) == [want], h
+
+
+def test_clip_caption_tower_matches_oracle_on_adversarial_text():
+    """``mm_clip_pair_filter``'s caption tower (an Arrow pandas UDF) and
+    its DuckDB oracle must embed the same tokens.  The fixture text is
+    ASCII with no \\x0b, so only these inputs can tell them apart."""
+    import pandas as pd
+
+    from etl_xlsx_potgres_spark.plans.clip_pair_filter import (
+        _DUCK_DIGS,
+        _DUCK_TEXT_EMB,
+        _caption_emb,
+    )
+
+    texts = [t for t, _ in _TOKENIZER_CASES]
+    got = _caption_emb.func(pd.Series(texts, dtype=object)).tolist()
+    want = _duck_eval(
+        f"(SELECT {_DUCK_TEXT_EMB} FROM (SELECT {_DUCK_DIGS} AS digs))", texts
+    )
+    for text, g, w in zip(texts, got, want):
+        assert list(g) == list(w), repr(text)

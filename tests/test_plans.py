@@ -319,6 +319,62 @@ def test_constant_size_call_sites_are_reviewed():
     assert not offenders, "\n".join(offenders)
 
 
+
+# Spellings of the shared text/hash kernels (the tokenizer, its Column
+# split form, the md5-hex bucket, a Python whitespace regex) that may
+# appear only in their one home, operators/text.py: hand copies
+# elsewhere are how three tokenizer semantics drifted apart.
+_KERNEL_COPY = (
+    r"string_split_regex\(|split\(trim\(lower\("
+    r"|F\.split\(F\.trim\(F\.lower\("
+    r"|strpos\('0123456789abcdef'|conv\(substr\(md5|F\.conv\("
+    r"|re\.(?:split|compile)\(\s*r?[\"'][^\"']*(?:\\s|\\t|\\x0b)"
+)
+
+
+def _kernel_copies(source: str) -> list[tuple[int, str]]:
+    """(line, matched text) of every kernel spelling in ``source``."""
+    import re
+
+    return [
+        (source.count("\n", 0, m.start()) + 1, m.group(0))
+        for m in re.finditer(_KERNEL_COPY, source)
+    ]
+
+
+def test_text_kernels_live_only_in_operators_text():
+    """Every tokenizer / md5-hex rendering is defined once, in
+    ``operators/text.py``, beside its twins and under one parity test;
+    plan modules call ``tokens``/``sql_tokens``/``py_tokens``/
+    ``arrow_token_count``, ``sql_shingles``, ``sql_normalize`` and
+    ``hex_int``/``sql_hex_int`` instead of spelling their own."""
+    offenders = [
+        f"{rel}:{line}: {text}"
+        for rel, source in _package_sources()
+        if rel != "operators/text.py"
+        for line, text in _kernel_copies(source)
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_kernel_copy_lint_catches_each_spelling():
+    """The lint's patterns match the copies it exists to stop."""
+    copies = [
+        "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')",
+        "filter(split(trim(lower(text)), '\\\\s+'), x -> x != '')",
+        'F.split(F.trim(F.lower("text")), r"\\s+")',
+        "(strpos('0123456789abcdef', substring(h, 1, 1)) - 1)",
+        "CAST(conv(substr(md5(gram), 1, 6), 16, 10) AS BIGINT)",
+        "F.conv(F.substring(h, 1, 6), 16, 10)",
+        're.split(r"[ \\t\\n\\x0b\\f\\r]+", text)',
+        're.compile(\n    r"[\\t\\n\\x0b\\f\\r ]+"\n)',
+        're.split(r"\\s+", text)',
+    ]
+    for copy in copies:
+        assert _kernel_copies(copy), copy
+    assert not _kernel_copies('tokens("text"), sql_tokens(), hex_int(h)')
+
+
 def _hint_calls(source: str, is_hint) -> list[tuple[int, str]]:
     """(line, leading-identifier-chain of the first argument) of every
     call whose callee satisfies ``is_hint`` — an AST walk, so hints

@@ -221,8 +221,8 @@ def test_sem_seed_overflow_gate_is_exact():
     Spark product would have wrapped (and DuckDB raised)."""
     import math
 
+    from etl_xlsx_potgres_spark.operators.text import HEX6
     from etl_xlsx_potgres_spark.plans.dedup_incremental_more import (
-        HEX6,
         SEM_CELL_SIZE,
         SEM_MIN_CELLS,
     )
