@@ -80,12 +80,51 @@ def _core_hash() -> str:
     return h.hexdigest()
 
 
+def _plan_imports(path: str) -> set[str]:
+    """Sibling plans modules that the module at ``path`` imports —
+    ``from .x import ...`` and ``from . import x``, at module level or
+    inside a function (read through the AST, so a docstring that
+    mentions an import is not one)."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 1:
+            if node.module:
+                out.add(node.module.split(".")[0])
+            else:
+                out.update(a.name for a in node.names)
+    return out
+
+
+def _plan_closure(mod_file: str) -> list[str]:
+    """Paths of every sibling plans module ``mod_file`` reaches through
+    the transitive closure of its intra-package imports."""
+    plans_dir = os.path.dirname(mod_file)
+    seen: set[str] = set()
+    todo = [mod_file]
+    while todo:
+        try:
+            names = _plan_imports(todo.pop())
+        except OSError:
+            continue
+        for name in names:
+            path = os.path.join(plans_dir, f"{name}.py")
+            if path != mod_file and path not in seen:
+                seen.add(path)
+                todo.append(path)
+    return sorted(seen)
+
+
 def _source_hash(name: str, _core: str | None = None) -> str:
     """Hash of the query's defining module, the shared-layer core, and
-    any sibling plans module the defining module imports (e.g.
-    clip_pair_filter -> similarity's cosine helpers): an edit to any
-    of them re-queues the query for verification."""
-    import re
+    every sibling plans module the defining module reaches through
+    intra-package imports, directly or transitively (e.g.
+    paragraph_incremental -> dedup_incremental_more ->
+    dedup_incremental): an edit to any of them re-queues the query for
+    verification."""
     import sys
 
     fn = registry.QUERIES[name]
@@ -97,14 +136,8 @@ def _source_hash(name: str, _core: str | None = None) -> str:
         h.update(b"nomod")
         return h.hexdigest()
     h.update(_file_sha(mod_file).encode())
-    try:
-        with open(mod_file) as f:
-            src = f.read()
-        plans_dir = os.path.dirname(mod_file)
-        for sibling in sorted(set(re.findall(r"from \.(\w+) import", src))):
-            h.update(_file_sha(os.path.join(plans_dir, f"{sibling}.py")).encode())
-    except OSError:
-        h.update(b"nosrc")
+    for sibling in _plan_closure(mod_file):
+        h.update(_file_sha(sibling).encode())
     return h.hexdigest()
 
 

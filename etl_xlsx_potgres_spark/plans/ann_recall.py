@@ -37,9 +37,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ann import TOP_K
 from ..registry import ORACLES, register
-from . import similarity  # noqa: F401  (registers the ANN oracles first)
-from .similarity import TOP_K, ann_cosine_topk, ann_ivf_topk
+from .similarity import ann_cosine_topk, ann_ivf_topk
 
 
 @register(

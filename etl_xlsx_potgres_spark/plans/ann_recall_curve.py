@@ -46,27 +46,30 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from ..registry import ORACLES, register
-from ..sources import load_table
-from . import similarity  # noqa: F401  (registers ann_cosine_topk first)
-from .ivfpq_search import (
-    N_CELLS,
-    _cells,
-    _coarse_d2_duck,
-    _coarse_d2_spark,
-)
-from .pq_search import (
-    NQ,
+from ..operators.ann import (
+    N_QUERIES,
     SHORTLIST,
     TOP_K,
-    _EXACT_DUCK,
-    _EXACT_SPARK,
-    _VECS_SUBS,
-    _subvectors,
+    adc_scan,
+    coarse_candidates,
+    coarse_cells,
+    exact_d2_micro,
+    pq_encode,
+    pq_lut,
+    sql_adc,
+    sql_coarse_candidates,
+    sql_coarse_cells,
+    sql_exact_ctes,
+    sql_pq_ctes,
+    sql_trained_codebook_ctes,
+    sql_vecs_subs,
+    subvectors,
+    train_codebook,
 )
-from .pq_trained import _train, _trained_codebook_ctes
-from .product_quantization import _D2_DUCK, _D2_SPARK
-from .similarity import N_QUERIES, _duck_cos
+from ..operators.vectors import cosine, sql_cosine, valid_vecs
+from ..registry import ORACLES, register
+from ..sources import load_table
+from .similarity import ann_cosine_topk
 
 PROBE_LEVELS = [1, 2, 4, 8]
 _LEVELS_DUCK = "[" + ", ".join(str(p) for p in PROBE_LEVELS) + "]"
@@ -81,15 +84,12 @@ _SLEVELS_DUCK = "[" + ", ".join(str(s) for s in SHORTLIST_LEVELS) + "]"
 def _oracle() -> str:
     ivf = f"""
     levels AS (SELECT unnest({_LEVELS_DUCK}) AS p),
-    icents AS (
-      SELECT vec_id AS cid, embedding AS cv FROM vecs
-      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {N_CELLS}
-    ),
+    icents AS ({sql_coarse_cells()}),
     iassign AS (
       SELECT vec_id, embedding, cid FROM (
         SELECT v.vec_id, v.embedding, c.cid,
                row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 {_duck_cos("v.embedding", "c.cv")} DESC, c.cid) AS arn
+                 {sql_cosine("v.embedding", "c.cv")} DESC, c.cid) AS arn
         FROM vecs v CROSS JOIN icents c
       ) WHERE arn = 1
     ),
@@ -97,14 +97,14 @@ def _oracle() -> str:
       SELECT qid, cid, prn FROM (
         SELECT q.vec_id AS qid, c.cid,
                row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {_duck_cos("q.embedding", "c.cv")} DESC, c.cid) AS prn
+                 {sql_cosine("q.embedding", "c.cv")} DESC, c.cid) AS prn
         FROM vecs q CROSS JOIN icents c
         WHERE q.vec_id < {N_QUERIES}
       ) WHERE prn <= {_MAX_PROBE}
     ),
     iscored AS (
       SELECT p.qid, a.vec_id, p.prn,
-             {_duck_cos("q.embedding", "a.embedding")} AS cosine
+             {sql_cosine("q.embedding", "a.embedding")} AS cosine
       FROM iprobes p
       JOIN iassign a ON a.cid = p.cid AND a.vec_id <> p.qid
       JOIN vecs q ON q.vec_id = p.qid
@@ -115,7 +115,7 @@ def _oracle() -> str:
                row_number() OVER (PARTITION BY l.p, s.qid ORDER BY
                  s.cosine DESC, s.vec_id) AS rn
         FROM iscored s CROSS JOIN levels l WHERE s.prn <= l.p
-      ) WHERE rn <= {similarity.TOP_K}
+      ) WHERE rn <= {TOP_K}
     ),
     iexact AS ({ORACLES["ann_cosine_topk"]}),
     ihits AS (
@@ -131,59 +131,19 @@ def _oracle() -> str:
       SELECT 'ivf' AS method, CAST(l.p AS BIGINT) AS n_probe,
              CAST(NULL AS BIGINT) AS shortlist,
              COALESCE(h.n_hits, 0) AS n_hits,
-             CAST({N_QUERIES * similarity.TOP_K} AS BIGINT) AS n_possible,
+             CAST({N_QUERIES * TOP_K} AS BIGINT) AS n_possible,
              CAST(COALESCE(h.n_hits, 0) * 1000000
-                  // {N_QUERIES * similarity.TOP_K} AS BIGINT) AS recall_micro,
+                  // {N_QUERIES * TOP_K} AS BIGINT) AS recall_micro,
              COALESCE(c.n_candidates, 0) AS n_candidates
       FROM levels l
       LEFT JOIN ihits h ON h.p = l.p
       LEFT JOIN icand c ON c.p = l.p
     )"""
     pq = f"""
-    pcells AS (
-      SELECT vec_id AS cid, embedding AS cv FROM vecs
-      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {N_CELLS}
-    ),
-    passign AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 {_coarse_d2_duck("v.embedding", "c.cv")}, c.cid) AS arn
-        FROM vecs v CROSS JOIN pcells c) WHERE arn = 1
-    ),
-    pprobes AS (
-      SELECT qid, cid, prn FROM (
-        SELECT q.vec_id AS qid, c.cid,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {_coarse_d2_duck("q.embedding", "c.cv")}, c.cid) AS prn
-        FROM vecs q CROSS JOIN pcells c WHERE q.vec_id < {NQ}
-      ) WHERE prn <= {_MAX_PROBE}
-    ),
-    pcand AS (
-      SELECT p.qid, a.vec_id, p.prn
-      FROM pprobes p JOIN passign a ON a.cid = p.cid
-      WHERE a.vec_id <> p.qid
-    ),
-    pcodes AS (
-      SELECT vec_id, m, k FROM (
-        SELECT s.vec_id, s.m, c.k,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                                  ORDER BY {_D2_DUCK}, c.k) AS rn
-        FROM subs s JOIN codebook c ON c.m = s.m) WHERE rn = 1
-    ),
-    plut AS (
-      SELECT s.vec_id AS qid, s.m, c.k,
-             CAST(floor({_D2_DUCK} * 1000000) AS BIGINT) AS lut_micro
-      FROM subs s JOIN codebook c ON c.m = s.m
-      WHERE s.vec_id < {NQ}
-    ),
+    {sql_coarse_candidates(_MAX_PROBE)},
+    {sql_pq_ctes()},
     padc AS (
-      SELECT cd.qid, cd.vec_id, cd.prn,
-             CAST(SUM(l.lut_micro) AS BIGINT) AS adc_micro
-      FROM (SELECT c2.qid, d.vec_id, c2.prn, d.m, d.k
-            FROM pcodes d JOIN pcand c2 ON c2.vec_id = d.vec_id) cd
-      JOIN plut l ON l.qid = cd.qid AND l.m = cd.m AND l.k = cd.k
-      GROUP BY 1, 2, 3
+      {sql_adc("cand", carry=("prn",))}
     ),
     pshort AS (
       SELECT p, qid, vec_id FROM (
@@ -193,45 +153,33 @@ def _oracle() -> str:
         FROM padc a CROSS JOIN levels l WHERE a.prn <= l.p
       ) WHERE rn <= {SHORTLIST}
     ),
-    pexact AS (
-      SELECT q.vec_id AS qid, v.vec_id,
-             CAST(floor({_EXACT_DUCK} * 1000000) AS BIGINT) AS d2_micro
-      FROM vecs q JOIN vecs v ON v.vec_id <> q.vec_id
-      WHERE q.vec_id < {NQ}
-    ),
+    {sql_exact_ctes()},
     prerank AS (
       SELECT p, qid, vec_id FROM (
         SELECT s.p, s.qid, s.vec_id,
                row_number() OVER (PARTITION BY s.p, s.qid
                                   ORDER BY e.d2_micro, s.vec_id) AS rn
         FROM pshort s
-        JOIN pexact e ON e.qid = s.qid AND e.vec_id = s.vec_id)
+        JOIN exact e ON e.qid = s.qid AND e.vec_id = s.vec_id)
       WHERE rn <= {TOP_K}
-    ),
-    pexact_top AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY d2_micro, vec_id) AS rn
-        FROM pexact) WHERE rn <= {TOP_K}
     ),
     phits AS (
       SELECT r.p, CAST(COUNT(*) AS BIGINT) AS n_hits
       FROM prerank r
-      JOIN pexact_top e ON e.qid = r.qid AND e.vec_id = r.vec_id
+      JOIN exact_top e ON e.qid = r.qid AND e.vec_id = r.vec_id
       GROUP BY 1
     ),
     pcandn AS (
       SELECT l.p, CAST(COUNT(*) AS BIGINT) AS n_candidates
-      FROM pcand c CROSS JOIN levels l WHERE c.prn <= l.p GROUP BY 1
+      FROM cand c CROSS JOIN levels l WHERE c.prn <= l.p GROUP BY 1
     ),
     pq_rows AS (
       SELECT 'ivfpq' AS method, CAST(l.p AS BIGINT) AS n_probe,
              CAST({SHORTLIST} AS BIGINT) AS shortlist,
              COALESCE(h.n_hits, 0) AS n_hits,
-             CAST({NQ * TOP_K} AS BIGINT) AS n_possible,
+             CAST({N_QUERIES * TOP_K} AS BIGINT) AS n_possible,
              CAST(COALESCE(h.n_hits, 0) * 1000000
-                  // {NQ * TOP_K} AS BIGINT) AS recall_micro,
+                  // {N_QUERIES * TOP_K} AS BIGINT) AS recall_micro,
              COALESCE(c.n_candidates, 0) AS n_candidates
       FROM levels l
       LEFT JOIN phits h ON h.p = l.p
@@ -258,13 +206,13 @@ def _oracle() -> str:
                row_number() OVER (PARTITION BY sh.s, sh.qid
                                   ORDER BY e.d2_micro, sh.vec_id) AS rn
         FROM pshort_s sh
-        JOIN pexact e ON e.qid = sh.qid AND e.vec_id = sh.vec_id)
+        JOIN exact e ON e.qid = sh.qid AND e.vec_id = sh.vec_id)
       WHERE rn <= {TOP_K}
     ),
     phits_s AS (
       SELECT r.s, CAST(COUNT(*) AS BIGINT) AS n_hits
       FROM prerank_s r
-      JOIN pexact_top e ON e.qid = r.qid AND e.vec_id = r.vec_id
+      JOIN exact_top e ON e.qid = r.qid AND e.vec_id = r.vec_id
       GROUP BY 1
     ),
     pcand_s AS (
@@ -276,16 +224,16 @@ def _oracle() -> str:
       SELECT 'ivfpq' AS method, CAST({_MAX_PROBE} AS BIGINT) AS n_probe,
              CAST(l.s AS BIGINT) AS shortlist,
              COALESCE(h.n_hits, 0) AS n_hits,
-             CAST({NQ * TOP_K} AS BIGINT) AS n_possible,
+             CAST({N_QUERIES * TOP_K} AS BIGINT) AS n_possible,
              CAST(COALESCE(h.n_hits, 0) * 1000000
-                  // {NQ * TOP_K} AS BIGINT) AS recall_micro,
+                  // {N_QUERIES * TOP_K} AS BIGINT) AS recall_micro,
              COALESCE(c.n_candidates, 0) AS n_candidates
       FROM slevels l
       LEFT JOIN phits_s h ON h.s = l.s
       LEFT JOIN pcand_s c ON c.s = l.s
     )"""
     return (
-        f"WITH {_VECS_SUBS}, {_trained_codebook_ctes()}, {ivf}, {pq}, {sl}\n"
+        f"WITH {sql_vecs_subs()}, {sql_trained_codebook_ctes()}, {ivf}, {pq}, {sl}\n"
         "SELECT * FROM ivf_rows UNION ALL SELECT * FROM pq_rows"
         " UNION ALL SELECT * FROM sl_rows"
     )
@@ -341,20 +289,11 @@ def _curve_rows(
 def _ivf_curve(
     spark: SparkSession, sf_dir: str, emb: DataFrame, levels: DataFrame
 ) -> DataFrame:
-    from .similarity import _dot, _norm, ann_cosine_topk
-
-    cents = (
-        emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(N_CELLS)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-    )
-    cos_vc = _dot(F.col("embedding"), F.col("cv")) / (
-        _norm(F.col("embedding")) * _norm(F.col("cv"))
-    )
+    cents = coarse_cells(emb)
     aw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "cid")
     assign = (
         emb.crossJoin(constant_size(cents))
-        .withColumn("ccos", cos_vc)
+        .withColumn("ccos", cosine("embedding", "cv"))
         .withColumn("arn", F.row_number().over(aw))
         .filter(F.col("arn") == 1)
         .select("vec_id", "embedding", "cid")
@@ -363,9 +302,7 @@ def _ivf_curve(
         emb.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
         .crossJoin(constant_size(cents))
-        .withColumn(
-            "ccos", _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))
-        )
+        .withColumn("ccos", cosine("qv", "cv"))
         .withColumn(
             "prn",
             F.row_number().over(
@@ -375,20 +312,18 @@ def _ivf_curve(
         .filter(F.col("prn") <= _MAX_PROBE)
         .select("qid", "qv", "cid", "prn")
     )
-    cosine = _dot(F.col("qv"), F.col("embedding")) / (
-        _norm(F.col("qv")) * _norm(F.col("embedding"))
-    )
+    cosine_qv = cosine("qv", "embedding")
     # scored once at the deepest level; every level filters prn <= p
     scored = scoped_persist(
         probes.join(assign, "cid")
         .filter(F.col("qid") != F.col("vec_id"))
-        .select("qid", "vec_id", "prn", cosine.alias("cosine"))
+        .select("qid", "vec_id", "prn", cosine_qv.alias("cosine"))
     )
     lw = Window.partitionBy("p", "qid").orderBy(F.desc("cosine"), "vec_id")
     topk = (
         scored.join(constant_size(levels), scored["prn"] <= levels["p"])
         .withColumn("rn", F.row_number().over(lw))
-        .filter(F.col("rn") <= similarity.TOP_K)
+        .filter(F.col("rn") <= TOP_K)
         .select("p", "qid", "vec_id")
     )
     exact_k = ann_cosine_topk(spark, sf_dir).select("qid", "vec_id")
@@ -403,67 +338,19 @@ def _ivf_curve(
         .agg(F.count(F.lit(1)).alias("n_candidates"))
     )
     return _curve_rows(
-        hits, cand, levels, "ivf", N_QUERIES * similarity.TOP_K,
+        hits, cand, levels, "ivf", N_QUERIES * TOP_K,
         axis="p", shortlist=None,
     )
 
 
 def _ivfpq_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
-    subs = _subvectors(emb)
-    codebook = _train(subs)
-    d2 = F.expr(_coarse_d2_spark("embedding", "cv"))
-    cells = _cells(emb)
-    assign = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(constant_size(cells))
-        .select("vec_id", "cid", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("mc"))
-        .select("vec_id", F.col("mc.cid").alias("cid"))
-    )
-    pw = Window.partitionBy("qid").orderBy("d2", "cid")
-    probes = (
-        emb.filter(F.col("vec_id") < NQ)
-        .select(F.col("vec_id").alias("qid"), "embedding")
-        .crossJoin(constant_size(cells))
-        .select("qid", "cid", d2.alias("d2"))
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= _MAX_PROBE)
-        .select("qid", "cid", "prn")
-    )
-    cand = scoped_persist(
-        assign.join(constant_size(probes), "cid")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", "prn")
-    )
-    # encode + LUT (the pq_search shapes, level-independent)
-    code_w = Window.partitionBy("vec_id", "m").orderBy("d2", "k")
-    codes = (
-        subs.join(constant_size(codebook), "m")
-        .select("vec_id", "m", "k", F.expr(_D2_SPARK).alias("d2"))
-        .withColumn("rn", F.row_number().over(code_w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "m", "k")
-    )
-    lut = (
-        subs.filter(F.col("vec_id") < NQ)
-        .select(F.col("vec_id").alias("qid"), "m", "sub")
-        .join(constant_size(codebook), "m")
-        .select(
-            "qid",
-            "m",
-            "k",
-            F.expr(f"CAST(floor({_D2_SPARK} * 1000000) AS BIGINT)").alias(
-                "lut_micro"
-            ),
-        )
-    )
-    adc = scoped_persist(
-        codes.join(cand, "vec_id")
-        .join(constant_size(lut), ["qid", "m", "k"])
-        .groupBy("qid", "vec_id", "prn")
-        .agg(F.sum("lut_micro").cast("long").alias("adc_micro"))
-    )
+    subs = subvectors(emb)
+    codebook = train_codebook(subs)
+    cand = scoped_persist(coarse_candidates(emb, coarse_cells(emb), _MAX_PROBE))
+    # encode + LUT (level-independent)
+    codes = pq_encode(subs, codebook).select("vec_id", "m", "k")
+    lut = pq_lut(subs.filter(F.col("vec_id") < N_QUERIES), codebook)
+    adc = scoped_persist(adc_scan(codes, lut, cand))
     sl_w = Window.partitionBy("p", "qid").orderBy("adc_micro", "vec_id")
     short = (
         adc.join(constant_size(levels), adc["prn"] <= levels["p"])
@@ -471,21 +358,7 @@ def _ivfpq_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= SHORTLIST)
         .select("p", "qid", "vec_id")
     )
-    q = emb.filter(F.col("vec_id") < NQ).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    exact = scoped_persist(
-        q.join(
-            emb.select("vec_id", F.col("embedding").alias("vv")),
-            F.col("vec_id") != F.col("qid"),
-        ).select(
-            "qid",
-            "vec_id",
-            F.expr(
-                f"CAST(floor({_EXACT_SPARK} * 1000000) AS BIGINT)"
-            ).alias("d2_micro"),
-        )
-    )
+    exact = scoped_persist(exact_d2_micro(emb))
     rr_w = Window.partitionBy("p", "qid").orderBy("d2_micro", "vec_id")
     rerank = (
         short.join(exact, ["qid", "vec_id"])
@@ -510,7 +383,7 @@ def _ivfpq_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_candidates"))
     )
     probe_rows = _curve_rows(
-        hits, candn, levels, "ivfpq", NQ * TOP_K,
+        hits, candn, levels, "ivfpq", N_QUERIES * TOP_K,
         axis="p", shortlist=SHORTLIST,
     )
 
@@ -543,7 +416,7 @@ def _ivfpq_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_candidates")
     )
     shortlist_rows = _curve_rows(
-        hits_s, cand_s, slevels, "ivfpq", NQ * TOP_K,
+        hits_s, cand_s, slevels, "ivfpq", N_QUERIES * TOP_K,
         axis="s", n_probe=_MAX_PROBE,
     )
     return probe_rows.unionByName(shortlist_rows)
@@ -560,7 +433,7 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # VM: median of the 10 noop-sink runs 3.89 s persisted vs 4.08 s
     # unpersisted.
     emb = scoped_persist(
-        similarity.valid_vecs(load_table(spark, sf_dir, "embeddings"))
+        valid_vecs(load_table(spark, sf_dir, "embeddings"))
     )
     levels = _levels_frame(spark)
     return _ivf_curve(spark, sf_dir, emb, levels).unionByName(

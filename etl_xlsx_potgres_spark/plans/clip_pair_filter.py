@@ -28,9 +28,8 @@ never leaves the executor.  Tokenization is
 is wider and silently diverges.
 
 Determinism: the synthesized caption embedding is integer sums turned
-double; the cosine is the similarity family's sequential fold (both
-engines fold row-locally in index order — the proven ``_duck_cos``
-pairing); the keep verdict compares against 0.0, where random pairs
+double; the cosine is ``operators.vectors.cosine``/``sql_cosine``
+(both engines fold row-locally in index order); the keep verdict compares against 0.0, where random pairs
 split ~half/half so both verdict paths are non-vacuous at every SF.
 NULL scores (a zero-norm tower output) map to keep=false on both
 engines via an explicit coalesce.
@@ -53,9 +52,15 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType
 
 from ..operators.text import py_tokens, sql_tokens
+from ..operators.vectors import (
+    EMB_DIM,
+    cosine,
+    sq_norm,
+    sql_cosine,
+    sql_sq_norm,
+)
 from ..registry import register
 from ..sources import load_table
-from .similarity import EMB_DIM, _dot, _duck_cos, _norm
 
 _DUCK_DIGS = (
     f"list_transform({sql_tokens()}, w -> md5('0|' || w) || md5('1|' || w))"
@@ -107,11 +112,9 @@ def _caption_emb(text):
     ),
     scored AS (
       SELECT t.doc_id,
-             CASE WHEN list_sum(list_transform(t.temb,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0
-                   AND list_sum(list_transform(e.embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0
-                  THEN {_duck_cos("t.temb", "e.embedding")}
+             CASE WHEN {sql_sq_norm("t.temb")} > 0
+                   AND {sql_sq_norm("e.embedding")} > 0
+                  THEN {sql_cosine("t.temb", "e.embedding")}
              END AS clip_score
       FROM te t JOIN embeddings e ON e.vec_id = t.doc_id
     )
@@ -129,8 +132,8 @@ def mm_clip_pair_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which is NULL in Spark but NaN (IEEE) in DuckDB — the explicit
     # NULL makes the score engine-stable on degenerate captions
     score = F.when(
-        (_norm(F.col("temb")) > 0) & (_norm(F.col("embedding")) > 0),
-        _dot("temb", "embedding") / (_norm("temb") * _norm("embedding")),
+        (sq_norm("temb") > 0) & (sq_norm("embedding") > 0),
+        cosine("temb", "embedding"),
     )
     return pairs.select(
         "doc_id",

@@ -28,9 +28,8 @@ Scale shapes (100 TB):
 Numeric determinism (exact driver hash, both engines): transcendental
 outputs go through the repo's floor-grid (``floor(ln(x)*1e6)/1e6``);
 cross-row float sums are converted to integer micro/pico units first
-(bigint sums are order-independent); per-vector folds are sequential
-left-to-right (``F.aggregate`` == DuckDB ``list_sum``, the proven
-cosine idiom in ``plans/similarity.py``).
+(bigint sums are order-independent); per-vector distance folds are
+the shared ``operators/vectors.py`` kernels.
 """
 
 from __future__ import annotations
@@ -41,11 +40,11 @@ from pyspark.sql import functions as F
 from ..caching import scoped_persist
 from ..hints import constant_size
 from ..operators.text import sql_tokens, tokens
+from ..operators.vectors import EMB_DIM, sq_dist, sql_sq_dist
 from ..registry import register
 from ..sources import load_table
 
 SEG_TOKENS = 8  # tokens per dedup segment ("pseudo-paragraph")
-EMB_DIM = 64
 
 
 # ---------------------------------------------------------------------------
@@ -450,19 +449,6 @@ def emb_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact bigint micro-unit sum.
 KMEANS_K = 10
 
-_D2_SPARK = f"""
-aggregate(
-  transform(sequence(1, {EMB_DIM}), i ->
-    power(cast(element_at(embedding, i) as double)
-          - cast(element_at(sv, i) as double), 2D)),
-  0D, (a, t) -> a + t)
-"""
-
-_D2_DUCK = f"""
-list_sum(list_transform(generate_series(1, {EMB_DIM}), i ->
-  pow(CAST(e.embedding[i] AS DOUBLE) - CAST(s.sv[i] AS DOUBLE), 2)))
-"""
-
 
 @register(
     "emb_kmeans_step",
@@ -475,9 +461,10 @@ list_sum(list_transform(generate_series(1, {EMB_DIM}), i ->
       WHERE vec_id < {KMEANS_K}
     ),
     assign AS (
-      SELECT e.vec_id, s.seed_id, {_D2_DUCK} AS d2,
-             row_number() OVER (
-               PARTITION BY e.vec_id ORDER BY {_D2_DUCK}, s.seed_id) AS rn
+      SELECT e.vec_id, s.seed_id,
+             {sql_sq_dist("e.embedding", "s.sv")} AS d2,
+             row_number() OVER (PARTITION BY e.vec_id ORDER BY
+               {sql_sq_dist("e.embedding", "s.sv")}, s.seed_id) AS rn
       FROM vecs e CROSS JOIN seeds s
     )
     SELECT seed_id AS cluster_id,
@@ -504,7 +491,7 @@ def emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("seed_id"), F.col("embedding").alias("sv")
     )
     pairs = emb.crossJoin(constant_size(seeds)).select(
-        "vec_id", "seed_id", F.expr(_D2_SPARK).alias("d2")
+        "vec_id", "seed_id", sq_dist("embedding", "sv").alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "seed_id")
     best = pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)

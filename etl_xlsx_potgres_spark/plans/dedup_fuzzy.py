@@ -36,6 +36,16 @@ from ..operators.text import (
     sql_tokens,
     tokens,
 )
+from ..operators.vectors import (
+    dot,
+    dot_pairs_pandas,
+    duck_valid,
+    norm_flat,
+    sign_plane_signature_pandas,
+    sql_cosine,
+    sql_sign_plane_signature,
+    valid_vecs,
+)
 from ..registry import register
 from ..sources import load_table
 
@@ -442,35 +452,18 @@ def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the threshold boundary is engine-stable.
 @register(
     "dedup_embedding_neardup",
-    oracle="""
+    oracle=f"""
     WITH vecs AS (
-      SELECT vec_id, embedding, label FROM embeddings
-      WHERE embedding IS NOT NULL
-        AND len(list_filter(embedding, x -> x IS NULL)) = 0
-        AND list_sum(list_transform(embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0
-        AND list_sum(list_transform(embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-            < 'infinity'::DOUBLE
+      SELECT vec_id, embedding, label FROM embeddings WHERE {duck_valid()}
     )
     SELECT a.vec_id AS v1, b.vec_id AS v2,
-           list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
-             AS cosine
+           {sql_cosine("a.embedding", "b.embedding")} AS cosine
     FROM vecs a JOIN vecs b
       ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))
-          >= 0.4
+    WHERE {sql_cosine("a.embedding", "b.embedding")} >= 0.4
     """,
 )
 def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import norm_flat, valid_vecs
-
     # zero-norm/NULL guard (r19): a zero-norm side would make the pair
     # cosine NaN — and NaN >= 0.4 is TRUE on both engines, silently
     # promoting a degenerate vector to a near-dup of its whole block
@@ -478,11 +471,11 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Verify-stage shape, r9 re-adjudicated (isolated n=6 at sf0.1):
     # norms are per-VECTOR, computed once pre-join where the 64-term
     # norm_flat compiles fine on its own; the per-PAIR dot is the
-    # sequential zip_with/aggregate HOF fold. The previous inlined
-    # dot_flat + two norm_flats (192 element_at products inside the
-    # broadcast-join consume method) failed janino's 64 KB limit, so
-    # the whole stage silently ran INTERPRETED after a wasted compile
-    # per run ("Code grows beyond 64 KB" in every r9 bench pass).
+    # sequential zip_with/aggregate HOF fold (``dot``). The previous
+    # inlined flat dot chain + two norm_flats (192 element_at products
+    # inside the broadcast-join consume method) failed janino's 64 KB
+    # limit, so the whole stage silently ran INTERPRETED after a wasted
+    # compile per run ("Code grows beyond 64 KB" in every r9 bench pass).
     # Measured: HOF 1.61 s < flat-interpreted 1.85 s < Arrow pandas
     # dot 2.30 s — the Arrow path loses HERE because label blocks
     # yield ~5M candidate pairs whose array shipping dominates
@@ -502,12 +495,7 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm_flat("embedding").alias("nb"),
         "label",
     )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    cosine = dot / (F.col("na") * F.col("nb"))
+    cosine = dot("ea", "eb") / (F.col("na") * F.col("nb"))
     return (
         a.join(b, "label")
         .filter(F.col("v1") < F.col("v2"))
@@ -580,7 +568,7 @@ def dedup_levenshtein_pigeonhole(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Embedding near-dup, LSH-bucketed — the real scale path that the
 # label-blocked variant above stands in for. Band keys come from the
-# portable sign-plane signature (similarity.sign_plane_signature):
+# portable sign-plane signature (operators.vectors.sign_plane_signature):
 # 16 bits in 4 bands of 4; any pair sharing a band is a candidate
 # (shuffle carries only (band_id, 4-bit key)), then candidates are
 # verified with the exact cosine. Both the planes and the cosine are
@@ -591,17 +579,7 @@ def dedup_levenshtein_pigeonhole(spark: SparkSession, sf_dir: str) -> DataFrame:
 # small non-empty result at every test SF.
 _EMB_LSH_THRESHOLD = 0.35
 
-_DUCK_COS_AB = (
-    "list_sum(list_transform(list_zip(ea, eb),"
-    " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    " / (sqrt(list_sum(list_transform(ea, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))"
-    " * sqrt(list_sum(list_transform(eb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-)
-
-
 def _emb_lsh_oracle() -> str:
-    from .similarity import duck_valid, sql_sign_plane_signature
-
     return f"""
     WITH sig AS (
       SELECT vec_id, embedding,
@@ -619,20 +597,13 @@ def _emb_lsh_oracle() -> str:
         ON a.b = b.b AND a.bk = b.bk AND a.vec_id < b.vec_id
     )
     SELECT v1, v2, cosine FROM (
-      SELECT v1, v2, {_DUCK_COS_AB} AS cosine FROM cand
+      SELECT v1, v2, {sql_cosine("ea", "eb")} AS cosine FROM cand
     ) WHERE cosine >= {_EMB_LSH_THRESHOLD}
     """
 
 
 @register("dedup_embedding_lsh", oracle=_emb_lsh_oracle())
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import (
-        dot_pairs_pandas,
-        norm_flat,
-        sign_plane_signature_pandas,
-        valid_vecs,
-    )
-
     # zero-norm/NULL guard (r19): a NULL embedding crashes the Arrow
     # signature UDF's np.stack, and a zero-norm one NaNs its cosines
     emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
@@ -664,7 +635,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Verify-stage shape (this was the r3 bench regression): norms are
     # computed ONCE per vector on the small join build side, and the
     # per-pair dot runs as an Arrow-batched pandas UDF — inlining the
-    # 64-term dot_flat chain into the join stage either fails janino's
+    # 64-term flat dot chain into the join stage either fails janino's
     # 64 KB method limit (~10 s wasted on the first compile attempt,
     # then interpreted fallback; cold 14.8 s) or, with norms hoisted
     # out, compiles into a method too big for the JIT (never compiled,

@@ -79,6 +79,18 @@ from ..operators.text import (
     sql_tokens,
     tokens,
 )
+from ..operators.ann import TOP_K as ANN_TOP_K
+from ..operators.ann import (
+    pq_encode,
+    pq_lut,
+    sql_pq_codes,
+    sql_pq_lut,
+    sql_subvectors,
+    sql_trained_codebook_ctes,
+    subvectors,
+    train_codebook,
+)
+from ..operators.vectors import cosine, duck_valid, sql_cosine, valid_vecs
 from ..registry import register
 from ..sources import load_table
 from .dedup_incremental import (
@@ -88,7 +100,6 @@ from .dedup_incremental import (
     compact_store,
     _store_root,
 )
-from .similarity import _dot, _duck_cos, _norm, duck_valid, valid_vecs
 
 HAM_T = 8          # max Hamming distance (of 64) for a simhash near-dup
 JACCARD_T = 0.05   # the dedup_ngram_jaccard threshold
@@ -616,35 +627,35 @@ c2g AS (
   SELECT cid, cv, gid FROM (
     SELECT c.cid, c.cv, g.gid,
            row_number() OVER (PARTITION BY c.cid ORDER BY
-             {_duck_cos("c.cv", "g.gv")} DESC, g.gid) AS grn
+             {sql_cosine("c.cv", "g.gv")} DESC, g.gid) AS grn
     FROM cents c CROSS JOIN coarse g) WHERE grn = 1
 ),
 hv2g AS (
   SELECT vec_id, embedding, gid FROM (
     SELECT v.vec_id, v.embedding, g.gid,
            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-             {_duck_cos("v.embedding", "g.gv")} DESC, g.gid) AS grn
+             {sql_cosine("v.embedding", "g.gv")} DESC, g.gid) AS grn
     FROM hvecs v CROSS JOIN coarse g) WHERE grn = 1
 ),
 hassign AS (
   SELECT vec_id, embedding, cid FROM (
     SELECT v.vec_id, v.embedding, s.cid,
            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-             {_duck_cos("v.embedding", "s.cv")} DESC, s.cid) AS arn
+             {sql_cosine("v.embedding", "s.cv")} DESC, s.cid) AS arn
     FROM hv2g v JOIN c2g s ON s.gid = v.gid) WHERE arn = 1
 ),
 nv2g AS (
   SELECT vec_id, embedding, gid FROM (
     SELECT v.vec_id, v.embedding, g.gid,
            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-             {_duck_cos("v.embedding", "g.gv")} DESC, g.gid) AS grn
+             {sql_cosine("v.embedding", "g.gv")} DESC, g.gid) AS grn
     FROM nvecs v CROSS JOIN coarse g) WHERE grn <= {SEM_N_PROBE}
 ),
 nassign AS (
   SELECT vec_id, embedding, cid FROM (
     SELECT v.vec_id, v.embedding, s.cid,
            row_number() OVER (PARTITION BY v.vec_id ORDER BY
-             {_duck_cos("v.embedding", "s.cv")} DESC, s.cid) AS arn
+             {sql_cosine("v.embedding", "s.cv")} DESC, s.cid) AS arn
     FROM nv2g v JOIN c2g s ON s.gid = v.gid) WHERE arn <= {SEM_N_PROBE}
 )"""
 
@@ -660,7 +671,7 @@ hranked AS (
 percell AS (
   SELECT n.vec_id, n.cid,
          CAST(COUNT(*) AS BIGINT) AS cnt,
-         CAST(SUM(CASE WHEN {_duck_cos("n.embedding", "h.embedding")}
+         CAST(SUM(CASE WHEN {sql_cosine("n.embedding", "h.embedding")}
                        >= {COS_T} THEN 1 ELSE 0 END) AS BIGINT) AS dups,
          MAX(h.cell_n) AS n_cell
   FROM nassign n
@@ -778,9 +789,7 @@ def _argmin_cos(
     """Per (vec_id) nearest candidate by cosine with (cos DESC, id)
     tie-break as a min(struct) — map-side partials, no window shuffle
     (negated cosine flips DESC to the struct min)."""
-    cos = _dot(F.col(vec_col), F.col(cand_vec)) / (
-        _norm(F.col(vec_col)) * _norm(F.col(cand_vec))
-    )
+    cos = cosine(vec_col, cand_vec)
     return (
         df.select(
             "vec_id",
@@ -864,9 +873,7 @@ def _topn_cos(
     struct (NaN-first leading key, see :func:`_rank_struct`) ranks
     exactly like ``row_number() OVER (ORDER BY cos DESC, id) <= n``,
     which is what the oracle replays — including on NaN cosines."""
-    cos = _dot(F.col(vec_col), F.col(cand_vec)) / (
-        _norm(F.col(vec_col)) * _norm(F.col(cand_vec))
-    )
+    cos = cosine(vec_col, cand_vec)
     sc = _rank_struct(cos, cand_id)
     return (
         df.select("vec_id", vec_col, sc.alias("sc"))
@@ -1067,9 +1074,7 @@ def _sem_probe_verdict(
     # disjoint — history is single-assigned — so counts never
     # double-count a history vector)
     nassign = _sem_probe(newv, _sem_cents(hist_src))
-    cos = _dot(F.col("embedding"), F.col("hemb")) / (
-        _norm(F.col("embedding")) * _norm(F.col("hemb"))
-    )
+    cos = cosine("embedding", "hemb")
     # two-stage rollup: the per-(vec, cell) stage rides the cid join's
     # partitioning (hash(cid) satisfies the (vec_id, cid) clustering —
     # no new Exchange); MAX(cell_n) dedups the denormalized occupancy
@@ -1128,13 +1133,12 @@ def _sem_probe_verdict(
 # Cosines use the left-assoc HOF fold that is bit-identical to
 # DuckDB's list_sum, so ranks and values hash-match exactly.
 
-ANN_TOP_K = 5   # neighbors returned per new vector (ann_* convention)
 
 _ANN_IVF_ORACLE = f"""
 WITH {_SEM_CTES},
 scored AS (
   SELECT n.vec_id, h.vec_id AS neighbor_id,
-         {_duck_cos("n.embedding", "h.embedding")} AS cosine
+         {sql_cosine("n.embedding", "h.embedding")} AS cosine
   FROM nassign n JOIN hassign h ON h.cid = n.cid
 )
 SELECT vec_id, rn, neighbor_id, cosine FROM (
@@ -1166,9 +1170,7 @@ def ann_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     nassign = _sem_probe(newv, _sem_cents(hist_src))
-    cos = _dot(F.col("embedding"), F.col("hemb")) / (
-        _norm(F.col("embedding")) * _norm(F.col("hemb"))
-    )
+    cos = cosine("embedding", "hemb")
     from pyspark.sql import Window
 
     w = Window.partitionBy("vec_id").orderBy(
@@ -1213,49 +1215,28 @@ def ann_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVFPQ_SHORTLIST = 32  # ADC candidates exactly re-ranked per query
 
-from .product_quantization import _D2_DUCK as _PQ_D2_DUCK  # noqa: E402
-from .product_quantization import _D2_SPARK as _PQ_D2_SPARK  # noqa: E402
-from .product_quantization import M as _PQ_M  # noqa: E402
-from .product_quantization import PQ_K as _PQ_PQ_K  # noqa: E402
-from .product_quantization import SUB_D as _PQ_SUB_D  # noqa: E402
 
-_GEN_M = (
-    f"(SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m) m"
-)
+# the history-only PQ index: the trained codebook over the history
+# store's subvectors, and every history vector's codes with its cell
+_HIST_PQ_CTES = f"""subs AS (
+  {sql_subvectors("hassign")}
+),
+{sql_trained_codebook_ctes()},
+hcodes AS (
+  SELECT c.vec_id, a.cid, c.m, c.k
+  FROM ({sql_pq_codes("subs")}) c JOIN hassign a ON a.vec_id = c.vec_id
+)"""
 
 
 def _ivfpq_oracle() -> str:
-    from .pq_trained import _trained_codebook_ctes
-
     return f"""
 WITH {_SEM_CTES},
-subs AS (
-  SELECT a.vec_id, m.m,
-         a.embedding[m.m*{_PQ_SUB_D}+1 : m.m*{_PQ_SUB_D}+{_PQ_SUB_D}]
-           AS sub
-  FROM hassign a, {_GEN_M}
-),
-{_trained_codebook_ctes()},
-hcodes AS (
-  SELECT vec_id, cid, m, k FROM (
-    SELECT s.vec_id, a2.cid, s.m, c.k,
-           row_number() OVER (PARTITION BY s.vec_id, s.m
-                              ORDER BY {_PQ_D2_DUCK}, c.k) AS rn
-    FROM subs s
-    JOIN codebook c ON c.m = s.m
-    JOIN hassign a2 ON a2.vec_id = s.vec_id) WHERE rn = 1
-),
+{_HIST_PQ_CTES},
 qsubs AS (
-  SELECT v.vec_id AS qid, m.m,
-         v.embedding[m.m*{_PQ_SUB_D}+1 : m.m*{_PQ_SUB_D}+{_PQ_SUB_D}]
-           AS sub
-  FROM nvecs v, {_GEN_M}
+  {sql_subvectors("nvecs")}
 ),
 lut AS (
-  SELECT s.qid, s.m, c.k,
-         CAST(floor({_PQ_D2_DUCK} * 1000000)
-              AS BIGINT) AS lut_micro
-  FROM qsubs s JOIN codebook c ON c.m = s.m
+  {sql_pq_lut("qsubs")}
 ),
 adc AS (
   SELECT n.vec_id AS qid, h.vec_id AS nbr, h.cid,
@@ -1275,9 +1256,9 @@ shortlist AS (
 rerank AS (
   SELECT qid, nbr, adc_micro, cosine, rn FROM (
     SELECT s.qid, s.nbr, s.adc_micro,
-           {_duck_cos("q.embedding", "h.embedding")} AS cosine,
+           {sql_cosine("q.embedding", "h.embedding")} AS cosine,
            row_number() OVER (PARTITION BY s.qid ORDER BY
-             {_duck_cos("q.embedding", "h.embedding")} DESC, s.nbr) AS rn
+             {sql_cosine("q.embedding", "h.embedding")} DESC, s.nbr) AS rn
     FROM shortlist s
     JOIN hassign h ON h.cid = s.cid AND h.vec_id = s.nbr
     JOIN nvecs q ON q.vec_id = s.qid) WHERE rn <= {ANN_TOP_K}
@@ -1286,7 +1267,7 @@ fullp AS (
   SELECT qid, nbr FROM (
     SELECT n.vec_id AS qid, h.vec_id AS nbr,
            row_number() OVER (PARTITION BY n.vec_id ORDER BY
-             {_duck_cos("n.embedding", "h.embedding")} DESC, h.vec_id)
+             {sql_cosine("n.embedding", "h.embedding")} DESC, h.vec_id)
              AS rn
     FROM nassign n JOIN hassign h ON h.cid = n.cid)
   WHERE rn <= {ANN_TOP_K}
@@ -1305,49 +1286,12 @@ FROM rerank r JOIN hits h ON h.qid = r.qid
 """
 
 
-def _subvectors_with_cid(frame: DataFrame) -> DataFrame:
-    """(vec_id, cid, m, sub): the store's vectors exploded into their
-    M subspace slices, keeping the cell id for bucketed code layout."""
-    sub_structs = F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("m"),
-                F.expr(
-                    f"slice(embedding, {m * _PQ_SUB_D + 1}, {_PQ_SUB_D})"
-                ).alias("sub"),
-            )
-            for m in range(_PQ_M)
-        ]
-    )
-    return frame.select(
-        "vec_id", "cid", F.explode(sub_structs).alias("s")
-    ).select(
-        "vec_id", "cid", F.col("s.m").alias("m"), F.col("s.sub").alias("sub")
-    )
-
-
-def _pq_encode(
-    subs: DataFrame, cb: DataFrame, keys: tuple = ("vec_id", "cid", "m")
-) -> DataFrame:
-    """(…keys…, sub) x codebook -> (…keys…, k): the encode argmin as a
-    map-side min(struct(d2, k)) — identical ranking to the oracle's
-    ORDER BY d2, k window.  Shared by the one-shot build, the append
-    path (so appended vectors are encoded by exactly the build-time
-    rule, against the EXISTING codebook — the IVF-PQ append
-    discipline; retraining is the drift trigger's job) and the
-    provision query's batch-histogram encode (keys without cid)."""
-    from ..hints import constant_size
-
-    return (
-        subs.join(constant_size(cb), "m")
-        .select(
-            *keys,
-            F.struct(F.expr(_PQ_D2_SPARK).alias("d"), F.col("k").alias("k"))
-            .alias("dk"),
-        )
-        .groupBy(*keys)
-        .agg(F.min("dk").alias("mk"))
-        .select(*keys, F.col("mk.k").alias("k"))
+def _encode_cells(frame: DataFrame, cb: DataFrame) -> DataFrame:
+    """(vec_id, cid, m, k): the store's vectors encoded against the
+    codebook, keeping the cell id for the bucketed code layout."""
+    keys = ("vec_id", "cid", "m")
+    return pq_encode(subvectors(frame, ("vec_id", "cid")), cb, keys).select(
+        *keys, "k"
     )
 
 
@@ -1364,17 +1308,16 @@ def _provision_semantic_pq(
     store (one assignment pass, not two).  r20: both artifacts go
     through the provision cache — serving reads them; ``force=True``
     (the ``ann_ivfpq_provision`` build query) retrains and re-encodes
-    unconditionally."""
-    from .pq_trained import _train
-
+    unconditionally.  Codes are ``operators.ann.pq_encode`` against
+    the stored codebook, so the append path encodes exactly by the
+    build-time rule."""
     store = raw_store or _provision_semantic_store(spark, sf_dir)
     sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     cb_name = f"semantic_pqcb_{sf.replace('.', '_').replace('-', '_')}"
 
     def build_cb() -> None:
         base = spark.table(store).select("vec_id", "cid", "embedding")
-        hsubs = _subvectors_with_cid(base)
-        cb = _train(hsubs.select("vec_id", "m", "sub"))
+        cb = train_codebook(subvectors(base))
         cb_path = os.path.join(_store_root(spark), cb_name)
         spark.sql(f"DROP TABLE IF EXISTS {cb_name}")
         (
@@ -1386,7 +1329,7 @@ def _provision_semantic_pq(
         spark, cb_name, os.path.abspath(sf_dir), build_cb, force=force
     )
     base = spark.table(store).select("vec_id", "cid", "embedding")
-    codes = _pq_encode(_subvectors_with_cid(base), spark.table(cb_name))
+    codes = _encode_cells(base, spark.table(cb_name))
     code_store = _provision(
         spark, sf_dir, "semantic_pqcode", codes, "cid", force=force
     )
@@ -1406,7 +1349,7 @@ def append_to_semantic_pq(
     one-shot encode of the union (pinned in
     ``tests/test_r20_properties.py``); compaction is only the file
     merge that restores single sorted runs."""
-    codes = _pq_encode(_subvectors_with_cid(batch), spark.table(cb_name))
+    codes = _encode_cells(batch, spark.table(cb_name))
     append_to_store(code_store, codes)
 
 
@@ -1429,7 +1372,6 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..caching import scoped_persist
-    from ..hints import constant_size
 
     raw_store = _provision_semantic_store(spark, sf_dir)
     code_store, cb_name = _provision_semantic_pq(spark, sf_dir, raw_store)
@@ -1447,18 +1389,7 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-query subspace LUT: new-batch x M*K slim bigint rows — an
     # equi-join at scale, NOT a hard broadcast (the batch grows)
-    from .pq_search import _subvectors
-
-    qsubs = _subvectors(newv)
-    cb = constant_size(spark.table(cb_name))
-    lut = qsubs.join(cb, "m").select(
-        F.col("vec_id").alias("qid"),
-        "m",
-        "k",
-        F.expr(f"CAST(floor({_PQ_D2_SPARK} * 1000000) AS BIGINT)").alias(
-            "lut_micro"
-        ),
-    )
+    lut = pq_lut(subvectors(newv), spark.table(cb_name))
     # ADC over probed buckets only: history side Exchange-free
     codes = spark.table(code_store)
     cand_codes = nassign.select(
@@ -1484,9 +1415,7 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
     )
     qv = newv.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    cos = _dot(F.col("qv"), F.col("hemb")) / (
-        _norm(F.col("qv")) * _norm(F.col("hemb"))
-    )
+    cos = cosine("qv", "hemb")
     rw = Window.partitionBy("qid").orderBy(F.desc("cosine"), "nbr")
     # persisted: rerank feeds BOTH the hit-count rollup and the final
     # projection — without the barrier the whole ADC+shortlist subtree
@@ -1507,9 +1436,7 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("hemb"),
         "cid",
     )
-    fcos = _dot(F.col("embedding"), F.col("hemb")) / (
-        _norm(F.col("embedding")) * _norm(F.col("hemb"))
-    )
+    fcos = cosine("embedding", "hemb")
     fw = Window.partitionBy("qid").orderBy(F.desc("fc"), "nbr")
     fullp = (
         nassign.join(hist_raw, "cid")
@@ -1598,41 +1525,17 @@ def _batch_codes_duck(tag: str, src: str) -> str:
     """CTEs encoding batch ``src`` (vec_id, embedding) against the
     trained codebook: {tag}subs -> {tag}codes (argmin d2, k)."""
     return f"""{tag}subs AS (
-  SELECT v.vec_id, m.m,
-         v.embedding[m.m*{_PQ_SUB_D}+1 : m.m*{_PQ_SUB_D}+{_PQ_SUB_D}]
-           AS sub
-  FROM {src} v, {_GEN_M}
+  {sql_subvectors(src)}
 ),
 {tag}codes AS (
-  SELECT vec_id, m, k FROM (
-    SELECT s.vec_id, s.m, c.k,
-           row_number() OVER (PARTITION BY s.vec_id, s.m
-                              ORDER BY {_PQ_D2_DUCK}, c.k) AS rn
-    FROM {tag}subs s JOIN codebook c ON c.m = s.m) WHERE rn = 1
+  {sql_pq_codes(f"{tag}subs")}
 )"""
 
 
 def _ivfpq_provision_oracle() -> str:
-    from .pq_trained import _trained_codebook_ctes
-
     return f"""
 WITH {_SEM_CTES},
-subs AS (
-  SELECT a.vec_id, m.m,
-         a.embedding[m.m*{_PQ_SUB_D}+1 : m.m*{_PQ_SUB_D}+{_PQ_SUB_D}]
-           AS sub
-  FROM hassign a, {_GEN_M}
-),
-{_trained_codebook_ctes()},
-hcodes AS (
-  SELECT vec_id, cid, m, k FROM (
-    SELECT s.vec_id, a2.cid, s.m, c.k,
-           row_number() OVER (PARTITION BY s.vec_id, s.m
-                              ORDER BY {_PQ_D2_DUCK}, c.k) AS rn
-    FROM subs s
-    JOIN codebook c ON c.m = s.m
-    JOIN hassign a2 ON a2.vec_id = s.vec_id) WHERE rn = 1
-),
+{_HIST_PQ_CTES},
 drifted AS (
   SELECT vec_id, {_DRIFT_SHIFT_DUCK} AS embedding FROM nvecs
 ),
@@ -1689,9 +1592,7 @@ JOIN tv v ON v.m = cs.m
 def _batch_code_hist(newv: DataFrame, cb: DataFrame) -> DataFrame:
     """(m, k, c): code-usage histogram of a batch encoded against the
     EXISTING codebook — M*K rows however large the batch."""
-    from .pq_search import _subvectors
-
-    codes = _pq_encode(_subvectors(newv), cb, keys=("vec_id", "m"))
+    codes = pq_encode(subvectors(newv), cb)
     return codes.groupBy("m", "k").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.vectors import sq_norm, sql_sq_norm
 from ..registry import register
 from ..sources import load_table
 
@@ -243,13 +244,12 @@ def fn_map_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # elements, fixed-grid norms) keep the cross-engine compare exact.
 @register(
     "fn_array_pack",
-    oracle="""
+    oracle=f"""
     SELECT vec_id,
            len(embedding) AS dim,
            CAST(embedding[1] AS DOUBLE) AS first_coord,
            CAST(embedding[len(embedding)] AS DOUBLE) AS last_coord,
-           floor(list_sum(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) * 1000000)/1000000 AS norm_sq,
+           floor({sql_sq_norm("embedding")} * 1000000)/1000000 AS norm_sq,
            len(list_filter(embedding, x -> x > 0)) AS n_positive
     FROM embeddings
     """,
@@ -257,16 +257,11 @@ def fn_map_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     x = F.col("embedding")
-    dot_self = F.aggregate(
-        x,
-        F.lit(0.0),
-        lambda acc, v: acc + v.cast("double") * v.cast("double"),
-    )
     return emb.select(
         "vec_id",
         F.size(x).alias("dim"),
         F.element_at(x, 1).cast("double").alias("first_coord"),
         F.element_at(x, F.size(x)).cast("double").alias("last_coord"),
-        _grid(dot_self).alias("norm_sq"),
+        _grid(sq_norm(x)).alias("norm_sq"),
         F.size(F.filter(x, lambda v: v > 0)).alias("n_positive"),
     )

@@ -9,8 +9,8 @@ Determinism across engines AND across partitionings:
   per-cluster mean, so the cross-row reduce is an exact bigint sum
   (order-independent) and the new centroid coordinate
   ``sum_micro / n / 1e6`` is one exact double expression;
-- distances to centroids are sequential left-to-right folds
-  (``F.aggregate`` == DuckDB ``list_sum``);
+- distances to centroids are the shared ``operators.vectors.sq_dist``
+  fold (contract stated there);
 - assignment ties break on the lower cluster id.
 
 Scale shape per iteration: one broadcast of the constant K x dim
@@ -28,28 +28,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
+from ..operators.vectors import EMB_DIM, micro, sq_dist, sql_sq_dist
 from ..registry import register
 from ..sources import load_table
 
 K = 10
-DIM = 64
 ITERS = 3
-
-# d2 between the row's embedding and a centroid array column `cv`
-# (both folded left-to-right as exact doubles)
-_D2_SPARK = f"""
-aggregate(
-  transform(sequence(1, {DIM}), i ->
-    power(cast(element_at(embedding, i) as double) - element_at(cv, i), 2D)),
-  0D, (a, t) -> a + t)
-"""
-
-
-def _duck_d2(emb: str, cv: str) -> str:
-    return (
-        f"list_sum(list_transform(generate_series(1, {DIM}), i -> "
-        f"pow(CAST({emb}[i] AS DOUBLE) - {cv}[i], 2)))"
-    )
 
 
 def _duck_oracle() -> str:
@@ -73,7 +57,7 @@ def _duck_oracle() -> str:
             WHERE embedding IS NOT NULL) e CROSS JOIN {prev} s
       QUALIFY row_number() OVER (
         PARTITION BY e.vec_id
-        ORDER BY {_duck_d2("e.embedding", "s.cv")}, s.cid) = 1
+        ORDER BY {sql_sq_dist("e.embedding", "s.cv")}, s.cid) = 1
     )""")
         if it < ITERS:
             parts.append(f"""
@@ -84,7 +68,7 @@ def _duck_oracle() -> str:
              COUNT(*) AS n
       FROM (
         SELECT cid, unnest(embedding) AS x,
-               unnest(generate_series(1, {DIM})) AS i
+               unnest(generate_series(1, {EMB_DIM})) AS i
         FROM a{it}
       ) GROUP BY cid, i
     ),
@@ -98,7 +82,7 @@ def _duck_oracle() -> str:
     WITH {body}
     SELECT a.cid AS cluster_id,
            COUNT(*) AS n_members,
-           CAST(SUM(CAST(floor({_duck_d2("a.embedding", "s.cv")} * 1000000)
+           CAST(SUM(CAST(floor({sql_sq_dist("a.embedding", "s.cv")} * 1000000)
                          AS BIGINT)) AS BIGINT) AS inertia_micro
     FROM {last} a JOIN c{ITERS - 1} s ON a.cid = s.cid
     GROUP BY a.cid
@@ -109,7 +93,7 @@ def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the K-row centroid
     frame, fold distances, argmin via per-vector window."""
     pairs = emb.crossJoin(constant_size(cents)).select(
-        "vec_id", "embedding", "cid", F.expr(_D2_SPARK).alias("d2")
+        "vec_id", "embedding", "cid", sq_dist("embedding", "cv").alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "cid")
     return (
@@ -181,8 +165,6 @@ def emb_kmeans_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned.groupBy(F.col("cid").alias("cluster_id"))
         .agg(
             F.count(F.lit(1)).alias("n_members"),
-            F.sum(F.floor(F.col("d2") * 1000000).cast("long"))
-            .cast("long")
-            .alias("inertia_micro"),
+            F.sum(micro(F.col("d2"))).cast("long").alias("inertia_micro"),
         )
     )

@@ -7,27 +7,14 @@ adversarial uniform-random fixture; training moves the codewords to
 the data's actual density and is the knob a deployment turns before
 raising K.
 
-Training plan shape (per Lloyd iteration, all M subspaces advance in
-ONE keyed frame — no per-subspace jobs):
-- assignment: broadcast the (M x K)-row codebook against the
-  ``(vec_id, m, sub)`` subvector frame, exact double-fold distances,
-  ``row_number`` argmin with (d2, k) tie-break;
-- update: floor each member coordinate into integer micro-units
-  BEFORE the mean so the per-(m, k, dim) reduce is an exact bigint
-  sum (order-independent), then one exact double division — the
-  ``kmeans_iterative`` determinism contract;
-- the new codebook is ``coalesce(1).localCheckpoint(eager=True)``'d:
-  lineage truncates at the constant-size frame each iteration (the
-  PageRank idiom), so the final search plan does not nest the
-  training cross joins.
-
-Search: identical machinery to ``ann_pq_adc_rerank``
-(``pq_search._adc_rerank``) — LUT broadcast, ADC table-lookup scan
-over codes, exact re-rank of the shortlist — just against the
-trained codebook.  The oracle replays the same unrolled iterations
-in DuckDB (``pq_search.search_oracle`` tail), bit-identical because
-every cross-row reduction is integer and every float op is a
-deterministic left fold.
+Training (``operators.ann.train_codebook``): per Lloyd iteration all M
+subspaces advance in ONE keyed frame — no per-subspace jobs — and the
+new codebook is ``localCheckpoint``ed, so the search plan does not
+nest the training joins.  Search: the same ``operators.ann.adc_rerank``
+as ``ann_pq_adc_rerank``, against the trained codebook; the oracle
+replays the same unrolled iterations in DuckDB
+(``sql_trained_codebook_ctes``).  Fold and micro-unit contract:
+``operators/ann.py``.
 
 Recall measurement (learned vs seed, clusterable fixture) lives in
 ``tools/pq_recall_probe.py`` with results in PLANS.md — the oracle
@@ -40,122 +27,22 @@ production PQ trains its codebooks.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..hints import constant_size
+from ..operators.ann import (
+    adc_rerank,
+    sql_adc_search,
+    sql_trained_codebook_ctes,
+    subvectors,
+    train_codebook,
+)
+from ..operators.vectors import valid_vecs
 from ..registry import register
 from ..sources import load_table
-from .product_quantization import _D2_DUCK, _D2_SPARK, M, PQ_K, SUB_D
-from .pq_search import _adc_rerank, _subvectors, search_oracle
-from .similarity import valid_vecs
-
-TRAIN_ITERS = 2
 
 
-def _trained_codebook_ctes() -> str:
-    """cb0 (seed, cast to double) -> [assign a{t} -> update u{t} ->
-    cb{t}] x TRAIN_ITERS -> ``codebook``.  Empty codewords simply
-    vanish from the GROUP BY (both engines agree)."""
-    parts = [
-        f"""cb0 AS (
-  SELECT m, vec_id AS k,
-         list_transform(sub, x -> CAST(x AS DOUBLE)) AS csub
-  FROM subs WHERE vec_id < {PQ_K}
-)"""
-    ]
-    for t in range(1, TRAIN_ITERS + 1):
-        prev = f"cb{t - 1}"
-        parts.append(f"""a{t} AS (
-  SELECT s.vec_id, s.m, c.k, s.sub
-  FROM subs s JOIN {prev} c ON c.m = s.m
-  QUALIFY row_number() OVER (
-    PARTITION BY s.vec_id, s.m ORDER BY {_D2_DUCK}, c.k) = 1
-)""")
-        parts.append(f"""u{t} AS (
-  SELECT m, k, i,
-         CAST(SUM(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-              AS BIGINT) AS s,
-         COUNT(*) AS n
-  FROM (SELECT m, k, unnest(sub) AS x,
-               unnest(generate_series(1, {SUB_D})) AS i
-        FROM a{t})
-  GROUP BY m, k, i
-)""")
-        parts.append(f"""cb{t} AS (
-  SELECT m, k, list(CAST(s AS DOUBLE) / n / 1000000.0 ORDER BY i) AS csub
-  FROM u{t} GROUP BY m, k
-)""")
-    parts.append(
-        f"codebook AS (SELECT m, k, csub FROM cb{TRAIN_ITERS})"
-    )
-    return ",\n".join(parts)
-
-
-def _train(
-    subs: DataFrame, k: int = PQ_K, iters: int = TRAIN_ITERS
-) -> DataFrame:
-    """``iters`` Lloyd iterations over the (vec_id, m, sub) frame;
-    returns the (m, k, csub) trained codebook (double arrays).  The
-    oracle pair runs the (PQ_K, TRAIN_ITERS) defaults; the recall
-    probe raises ``k`` to measure the production knob."""
-    cb = subs.filter(F.col("vec_id") < k).select(
-        "m",
-        F.col("vec_id").alias("k"),
-        F.expr("transform(sub, x -> cast(x as double))").alias("csub"),
-    )
-    w = Window.partitionBy("vec_id", "m").orderBy("d2", "k")
-    for _ in range(iters):
-        assigned = (
-            subs.join(constant_size(cb), "m")
-            .select("vec_id", "m", "k", "sub", F.expr(_D2_SPARK).alias("d2"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("m", "k", "sub")
-        )
-        dims = assigned.select(
-            "m",
-            "k",
-            F.posexplode(
-                F.expr(
-                    "transform(sub,"
-                    " x -> cast(floor(cast(x as double) * 1000000) as bigint))"
-                )
-            ).alias("i", "xm"),
-        )
-        sums = dims.groupBy("m", "k", "i").agg(
-            F.sum("xm").cast("long").alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        cb = (
-            sums.groupBy("m", "k")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "i",
-                                (
-                                    F.col("s").cast("double")
-                                    / F.col("n")
-                                    / F.lit(1000000.0)
-                                ).alias("v"),
-                            )
-                        )
-                    ),
-                    lambda st: st.v,
-                ).alias("csub")
-            )
-            # constant (<= M*K)-row frame: truncate lineage so the
-            # search plan doesn't nest the training joins
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-    return cb
-
-
-@register("ann_pq_trained", oracle=search_oracle(_trained_codebook_ctes()))
+@register("ann_pq_trained", oracle=sql_adc_search(sql_trained_codebook_ctes()))
 def ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
-    subs = _subvectors(emb)
-    return _adc_rerank(emb, subs, _train(subs))
+    subs = subvectors(emb)
+    return adc_rerank(emb, subs, train_codebook(subs))

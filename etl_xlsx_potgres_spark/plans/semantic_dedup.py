@@ -28,9 +28,9 @@ Spark shape (one plan, no iteration):
    two-level rule, so the check stays bit-exact.
 2. within-cluster pairs — self-equi-join on ``cluster_id`` (shuffle
    keyed on cluster_id; balanced by the K choice, never all-pairs),
-   cosine via the left-assoc zip_with/aggregate HOF fold that is
-   bit-identical to DuckDB's ``list_sum`` (see
-   ``dedup_fuzzy.dedup_embedding_neardup`` for the codegen history);
+   cosine over the shared ``operators.vectors`` folds (fold contract
+   there; ``dedup_fuzzy.dedup_embedding_neardup`` has the codegen
+   history);
 3. keep-rule — deterministic keep-lowest-vec_id: a vector is removed
    iff a smaller-id vector in its cluster is within the similarity
    threshold (the paper keeps a random/centroid-nearest member per
@@ -65,58 +65,30 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.vectors import (
+    dot,
+    duck_valid,
+    norm_flat,
+    sq_dist,
+    sql_cosine,
+    sql_sq_dist,
+    valid_vecs,
+)
 from ..registry import register
 from ..sources import load_table
-from .corpus_ops import EMB_DIM, KMEANS_K
+from .corpus_ops import KMEANS_K
 
 TAU = 0.3
 _C = math.isqrt(KMEANS_K - 1) + 1  # ceil(sqrt(K)); fixture: 4
-
-# the family's shared zero-norm/NULL guard (plans/similarity.py r19):
-# a zero-norm member would make every within-cluster cosine NaN and
-# the keep-rule engine-divergent
-from .similarity import duck_valid as _duck_valid_fn
-from .similarity import valid_vecs as _valid_vecs
-
-_DUCK_VALID = _duck_valid_fn()
-
-
-def _d2_spark(vec: str, seed: str) -> str:
-    """Squared L2, the ``corpus_ops._D2_SPARK`` arithmetic with
-    parameterized operands (two-level assignment needs it against
-    three different column pairs)."""
-    return f"""
-    aggregate(
-      transform(sequence(1, {EMB_DIM}), i ->
-        power(cast(element_at({vec}, i) as double)
-              - cast(element_at({seed}, i) as double), 2D)),
-      0D, (a, t) -> a + t)
-    """
-
-
-def _d2_duck(vec: str, seed: str) -> str:
-    return f"""
-    list_sum(list_transform(generate_series(1, {EMB_DIM}), i ->
-      pow(CAST({vec}[i] AS DOUBLE) - CAST({seed}[i] AS DOUBLE), 2)))
-    """
-
-
-_COS_DUCK = """
-list_sum(list_transform(list_zip(a.embedding, b.embedding),
-         p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-/ (sqrt(list_sum(list_transform(a.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
- * sqrt(list_sum(list_transform(b.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-"""
 
 
 @register(
     "dedup_semantic_clusters",
     oracle=f"""
     WITH vecs AS (
-      SELECT vec_id, embedding FROM embeddings WHERE {_DUCK_VALID}
+      SELECT vec_id, embedding FROM embeddings WHERE {duck_valid()}
     ),
     seeds AS (
       SELECT vec_id AS seed_id, embedding AS sv FROM vecs
@@ -130,7 +102,7 @@ list_sum(list_transform(list_zip(a.embedding, b.embedding),
       SELECT seed_id, sv, c_id FROM (
         SELECT s.seed_id, s.sv, c.c_id,
                row_number() OVER (PARTITION BY s.seed_id
-                 ORDER BY {_d2_duck("s.sv", "c.cv")}, c.c_id) AS rn
+                 ORDER BY {sql_sq_dist("s.sv", "c.cv")}, c.c_id) AS rn
         FROM seeds s CROSS JOIN coarse c
       ) WHERE rn = 1
     ),
@@ -138,7 +110,7 @@ list_sum(list_transform(list_zip(a.embedding, b.embedding),
       SELECT vec_id, embedding, c_id FROM (
         SELECT e.vec_id, e.embedding, c.c_id,
                row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_d2_duck("e.embedding", "c.cv")}, c.c_id) AS rn
+                 ORDER BY {sql_sq_dist("e.embedding", "c.cv")}, c.c_id) AS rn
         FROM vecs e CROSS JOIN coarse c
       ) WHERE rn = 1
     ),
@@ -146,7 +118,7 @@ list_sum(list_transform(list_zip(a.embedding, b.embedding),
       SELECT vec_id, embedding, seed_id AS cluster_id FROM (
         SELECT v.vec_id, v.embedding, s.seed_id,
                row_number() OVER (PARTITION BY v.vec_id
-                 ORDER BY {_d2_duck("v.embedding", "s.sv")}, s.seed_id) AS rn
+                 ORDER BY {sql_sq_dist("v.embedding", "s.sv")}, s.seed_id) AS rn
         FROM v2c v JOIN s2c s ON s.c_id = v.c_id
       ) WHERE rn = 1
     ),
@@ -154,7 +126,7 @@ list_sum(list_transform(list_zip(a.embedding, b.embedding),
       SELECT a.cluster_id, b.vec_id AS v2
       FROM best a JOIN best b
         ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
-      WHERE {_COS_DUCK} >= {TAU}
+      WHERE {sql_cosine("a.embedding", "b.embedding")} >= {TAU}
     ),
     rem AS (
       SELECT cluster_id,
@@ -174,10 +146,6 @@ list_sum(list_transform(list_zip(a.embedding, b.embedding),
     """,
 )
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import norm_flat
-
-    from ..caching import scoped_persist as _sp
-
     n_coarse = math.isqrt(KMEANS_K - 1) + 1  # from module global: the
     # scale probes patch KMEANS_K, and C must track it (C ∝ sqrt(K))
     # ``emb`` feeds THREE consumers (seeds, coarse, and the v2c
@@ -186,7 +154,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rescanning and re-validating the table. 16 bytes x dim per row —
     # bounded; at 100 TB this is the assignment-staging checkpoint the
     # module docstring already mandates.
-    emb = _sp(_valid_vecs(load_table(spark, sf_dir, "embeddings")))
+    emb = scoped_persist(valid_vecs(load_table(spark, sf_dir, "embeddings")))
     seeds = emb.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("seed_id"), F.col("embedding").alias("sv")
     )
@@ -194,14 +162,14 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")
     )
 
-    def argmin(df: DataFrame, keys: list[str], d2: str, id_col: str,
+    def argmin(df: DataFrame, keys: list[str], d2, id_col: str,
                out: str) -> DataFrame:
         """Deterministic nearest-centroid via map-side-partial
         min(struct(d2, id)) — lexicographic struct min is exactly
         ORDER BY d2, id (the window formulation would shuffle the
         whole candidate crossJoin; this shuffles one row per key)."""
         m = F.min(
-            F.struct(F.expr(d2).alias("d"), F.col(id_col).alias("i"))
+            F.struct(d2.alias("d"), F.col(id_col).alias("i"))
         ).alias("m")
         return df.groupBy(*keys).agg(m).select(
             *keys, F.col("m.i").alias(out)
@@ -211,7 +179,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2c = argmin(
         seeds.crossJoin(constant_size(coarse)),
         ["seed_id", "sv"],
-        _d2_spark("sv", "cv"),
+        sq_dist("sv", "cv"),
         "c_id",
         "c_id",
     )
@@ -219,7 +187,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2c = argmin(
         emb.crossJoin(constant_size(coarse)),
         ["vec_id", "embedding"],
-        _d2_spark("embedding", "cv"),
+        sq_dist("embedding", "cv"),
         "c_id",
         "c_id",
     )
@@ -229,7 +197,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = argmin(
         v2c.join(constant_size(s2c), "c_id"),
         ["vec_id", "embedding"],
-        _d2_spark("embedding", "sv"),
+        sq_dist("embedding", "sv"),
         "seed_id",
         "cluster_id",
     )
@@ -239,8 +207,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the assignment recomputes three times (both join
     # sides + the sizes aggregate — measured on the cold plan);
     # released by the harness via caching.release_persisted()
-    from ..caching import scoped_persist
-
     best = scoped_persist(
         assign.select(
             "vec_id",
@@ -261,15 +227,10 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nb"),
         "cluster_id",
     )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
     dup_pairs = (
         a.join(b, "cluster_id")
         .filter(F.col("v1") < F.col("v2"))
-        .filter((dot / (F.col("na") * F.col("nb"))) >= TAU)
+        .filter((dot("ea", "eb") / (F.col("na") * F.col("nb"))) >= TAU)
         .select("cluster_id", "v2")
     )
     rem = dup_pairs.groupBy("cluster_id").agg(

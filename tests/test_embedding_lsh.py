@@ -9,7 +9,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from etl_xlsx_potgres_spark.plans.similarity import sign_plane_signature
+from etl_xlsx_potgres_spark.operators.vectors import sign_plane_signature
 
 DIM = 32
 THRESHOLD = 0.9
@@ -81,23 +81,90 @@ def test_lsh_banded_neardup_recall(spark):
     assert recall >= 0.9, f"recall {recall:.3f} on {len(true_pairs)} true pairs"
 
 
-def test_dot_implementations_bit_identical(spark):
-    """The three dot-product implementations — the unrolled flat chain
-    (kept as the reference formulation after the r9 64 KB codegen
-    postmortem), the zip_with/aggregate HOF fold the shipped queries
-    use, and the Arrow-batched pandas fold — must agree BIT-FOR-BIT on
-    adversarial doubles, because the oracle differential and the
-    cosine-threshold boundary both depend on the exact left-assoc
-    float order. A pairwise/tree summation in any of them would break
-    this on these inputs."""
-    import math
-    import random
+def _same(x, y) -> bool:
+    """Bit-level float equality that also holds for NaN == NaN."""
+    if x is None or y is None:
+        return x is y
+    return (math.isnan(x) and math.isnan(y)) or x == y
 
-    from etl_xlsx_potgres_spark.plans.similarity import (
+
+def test_dot_implementations_bit_identical(spark):
+    """Every rendering of the vector folds in ``operators/vectors.py`` —
+    the Spark HOF folds (``dot``, ``sq_norm``, ``cosine``, ``sq_dist``),
+    the unrolled ``norm_flat`` chain, the Arrow-batched
+    ``dot_pairs_pandas`` and the DuckDB twins — must agree BIT-FOR-BIT
+    on adversarial doubles, because the oracle differential and the
+    cosine-threshold boundary both depend on the exact left-assoc float
+    order.  A pairwise/tree summation, a dropped double cast or a
+    reversed fold in any of them breaks this on these inputs."""
+    import duckdb
+
+    from etl_xlsx_potgres_spark.operators.vectors import (
         EMB_DIM,
-        dot_flat,
+        cosine,
+        dot,
         dot_pairs_pandas,
+        norm_flat,
+        sq_dist,
+        sq_norm,
+        sql_cosine,
+        sql_dot,
+        sql_sq_dist,
+        sql_sq_norm,
     )
+
+    def renderings(df, dim):
+        ea, eb = F.col("ea"), F.col("eb")
+        return df.select(
+            "i",
+            "ea",
+            "eb",
+            dot("ea", "eb").alias("dot"),
+            dot_pairs_pandas(ea, eb).alias("arrow"),
+            sq_norm("ea").alias("sq"),
+            F.sqrt(sq_norm("ea")).alias("norm"),
+            norm_flat("ea", dim).alias("norm_flat"),
+            sq_dist("ea", "eb", dim).alias("d2"),
+        )
+
+    def cosines(df, dim):
+        flat = norm_flat("ea", dim) * norm_flat("eb", dim)
+        return {
+            r.i: r
+            for r in df.select(
+                "i",
+                cosine("ea", "eb").alias("hof"),
+                (dot_pairs_pandas(F.col("ea"), F.col("eb")) / flat).alias("arrow"),
+                (dot("ea", "eb") / flat).alias("flat"),
+            ).collect()
+        }
+
+    def duck(rows, dim):
+        # literal casts: a bound Python NaN parameter arrives as NULL
+        def arr(v):
+            return "[" + ", ".join(
+                f"CAST(CAST('{x!r}' AS DOUBLE) AS FLOAT)" for x in v
+            ) + "]"
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE t (i INTEGER, ea FLOAT[], eb FLOAT[])")
+        for r in rows:
+            con.execute(f"INSERT INTO t VALUES ({r.i}, {arr(r.ea)}, {arr(r.eb)})")
+        return {
+            r[0]: r[1:]
+            for r in con.sql(
+                f"SELECT i, {sql_dot('ea', 'eb')}, {sql_sq_norm('ea')},"
+                f" {sql_sq_dist('ea', 'eb', dim)}, {sql_cosine('ea', 'eb')}"
+                " FROM t"
+            ).fetchall()
+        }
+
+    def frame(rows):
+        return spark.createDataFrame(rows, ["i", "ea", "eb"]).select(
+            "i",
+            F.col("ea").cast("array<float>").alias("ea"),
+            F.col("eb").cast("array<float>").alias("eb"),
+        )
 
     rng = random.Random(9)
     # magnitudes spread over 12 orders so summation order matters
@@ -109,24 +176,53 @@ def test_dot_implementations_bit_identical(spark):
         )
         for i in range(50)
     ]
-    df = spark.createDataFrame(rows, ["i", "ea", "eb"]).select(
-        "i",
-        F.col("ea").cast("array<float>").alias("ea"),
-        F.col("eb").cast("array<float>").alias("eb"),
-    )
-    hof = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    out = df.select(
-        "i",
-        dot_flat("ea", "eb").alias("flat"),
-        hof.alias("hof"),
-        dot_pairs_pandas(F.col("ea"), F.col("eb")).alias("arrow"),
-    ).collect()
+    df = frame(rows)
+    out = renderings(df, EMB_DIM).collect()
+    cos = cosines(df, EMB_DIM)
+    ddb = duck(out, EMB_DIM)
     assert len(out) == 50
     for r in out:
-        assert math.isfinite(r.flat)
+        assert math.isfinite(r.dot) and math.isfinite(r.d2)
+        d_dot, d_sq, d_d2, d_cos = ddb[r.i]
         # bit-identity, not approx: == on python floats is exact
-        assert r.flat == r.hof == r.arrow, r.i
+        assert r.dot == r.arrow == d_dot, r.i
+        assert r.sq == d_sq, r.i
+        assert r.norm == r.norm_flat, r.i
+        assert r.d2 == d_d2, r.i
+        c = cos[r.i]
+        assert c.hof == c.arrow == c.flat == d_cos, r.i
+
+    # exact literals on the degenerate inputs, each paired with itself
+    nan, inf = float("nan"), float("inf")
+    lit = [(0, [0.0, 0.0]), (1, [1.0, nan]), (2, [1.0, inf])]
+    want = {  # (dot, sq_norm, sq_dist, cosine)
+        0: (0.0, 0.0, 0.0, None),
+        1: (nan, nan, nan, nan),
+        2: (inf, inf, nan, nan),
+    }
+    # the one asserted gap: the Arrow UDF's result crosses pandas ->
+    # Arrow, which maps a NaN double to NULL (valid_vecs drops NaN rows)
+    want_arrow = {0: 0.0, 1: None, 2: inf}
+    df = frame([(i, v, v) for i, v in lit])
+    out = renderings(df, 2).collect()
+    # a zero norm divides 0/0: Spark's ANSI mode raises DIVIDE_BY_ZERO
+    # and DuckDB returns NULL — the valid_vecs guard drops these rows
+    cos = cosines(df.filter("i > 0"), 2)
+    ddb = duck(out, 2)
+    for r in out:
+        w_dot, w_sq, w_d2, w_cos = want[r.i]
+        d_dot, d_sq, d_d2, d_cos = ddb[r.i]
+        for got in (r.dot, d_dot):
+            assert _same(got, w_dot), (r.i, got)
+        assert _same(r.arrow, want_arrow[r.i]), (r.i, r.arrow)
+        for got in (r.sq, d_sq):
+            assert _same(got, w_sq), (r.i, got)
+        assert _same(r.norm, r.norm_flat), r.i
+        for got in (r.d2, d_d2):
+            assert _same(got, w_d2), (r.i, got)
+        assert _same(d_cos, w_cos), r.i
+        if r.i > 0:
+            c = cos[r.i]
+            for got in (c.hof, c.flat):
+                assert _same(got, w_cos), (r.i, got)
+            assert _same(c.arrow, None if r.i == 1 else w_cos), (r.i, c.arrow)

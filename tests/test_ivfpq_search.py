@@ -76,8 +76,8 @@ def test_list_filter_sits_below_lut_join(spark):
 
 
 def test_pruning_is_real_and_results_complete(spark):
-    from etl_xlsx_potgres_spark.plans.ivfpq_search import N_CELLS, N_PROBE
-    from etl_xlsx_potgres_spark.plans.pq_search import NQ, TOP_K
+    from etl_xlsx_potgres_spark.operators.ann import N_CELLS, N_PROBE, TOP_K
+    from etl_xlsx_potgres_spark.operators.ann import N_QUERIES as NQ
     from etl_xlsx_potgres_spark.sources import load_table
 
     rows = registry.QUERIES["ann_ivfpq_search"](spark, _SF).collect()

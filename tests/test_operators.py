@@ -211,7 +211,7 @@ def test_ml_brp_lsh_recall_verdicts(spark, sf_dir):
     """The self-verifying BRP-LSH query emits one verdict row per query
     vector, and the LSH candidate set reaches the recall bound against
     the exact euclidean top-k on every one."""
-    from etl_xlsx_potgres_spark.plans.similarity import N_QUERIES
+    from etl_xlsx_potgres_spark.operators.ann import N_QUERIES
     from etl_xlsx_potgres_spark.registry import QUERIES, load_all
 
     load_all()

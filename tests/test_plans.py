@@ -230,9 +230,12 @@ _REVIEWED_HINTS = {
     ("plans/robust_stats.py", "mad"): _ENUM,
     ("plans/dpp_pruning.py", "dim"): "one row per calendar month (~12/yr of time span)",
     ("plans/similarity.py", "cents"): _IVF,
+    ("operators/ann.py", "cells"): _IVF,
+    ("operators/ann.py", "probes"): _PROBES,
+    ("operators/ann.py", "codebook"): _PQ + " (every Lloyd round, and the stored one)",
+    ("operators/ann.py", "lut"): _LUT,
+    ("operators/ann.py", "hits"): "per-query recall counts: <= NQ = 10 rows",
     ("plans/ann_recall_curve.py", "cents"): _IVF,
-    ("plans/ann_recall_curve.py", "cells"): _IVF,
-    ("plans/ivfpq_search.py", "cells"): _IVF,
     ("plans/kmeans_iterative.py", "cents"): "k-means centroids: K = 10 rows",
     ("plans/corpus_ops.py", "seeds"): "k-means seed set: K = 10 rows by the vec_id < K filter",
     ("plans/corpus_ops.py", "arrs"): "1-row per-dimension range arrays (2 x 64 doubles)",
@@ -240,24 +243,13 @@ _REVIEWED_HINTS = {
     ("plans/semantic_dedup.py", "coarse"): "SemDeDup coarse seeds: <= ceil(sqrt(K)) rows",
     ("plans/semantic_dedup.py", "s2c"): "SemDeDup cell -> coarse map: K rows",
     ("plans/similarity.py", "q"): "BRP-LSH exact-baseline query side: <= N_QUERIES rows",
-    ("plans/pq_search.py", "codebook"): _PQ,
-    ("plans/ann_recall_curve.py", "codebook"): _PQ,
-    ("plans/product_quantization.py", "codebook"): _PQ,
-    ("plans/pq_trained.py", "cb"): _PQ + " (every Lloyd round)",
-    ("plans/dedup_incremental_more.py", "cb"): _PQ,
-    ("plans/dedup_incremental_more.py", "spark.table"): _PQ + " (persisted table)",
     ("plans/dedup_incremental_more.py", "hh.withColumnRenamed"): _HIST,
     ("plans/dedup_incremental_more.py", "hd.withColumnRenamed"): _HIST,
     ("plans/dedup_incremental_more.py", "hp.withColumnRenamed"): _HIST,
     ("plans/dedup_incremental_more.py", "tots"): "per-subspace rollup: <= M = 4 rows",
     ("plans/dedup_incremental_more.py", "cbstats"): "per-subspace rollup: <= M = 4 rows",
     ("plans/dedup_incremental_more.py", "tv"): "per-subspace rollup: <= M = 4 rows",
-    ("plans/pq_search.py", "lut"): _LUT,
-    ("plans/ann_recall_curve.py", "lut"): _LUT,
-    ("plans/pq_search.py", "hits"): "per-query recall counts: <= NQ = 10 rows",
     ("plans/ivfpq_search.py", "counts"): "per-query candidate counts: <= NQ = 10 rows",
-    ("plans/ann_recall_curve.py", "probes"): _PROBES,
-    ("plans/ivfpq_search.py", "probes"): _PROBES,
     ("plans/ann_recall_curve.py", "levels"): _LEVELS,
     ("plans/ann_recall_curve.py", "slevels"): _LEVELS,
     ("plans/sketches.py", "rows"): "count-min hash-row index: D = 3 rows",
@@ -373,6 +365,67 @@ def test_kernel_copy_lint_catches_each_spelling():
     for copy in copies:
         assert _kernel_copies(copy), copy
     assert not _kernel_copies('tokens("text"), sql_tokens(), hex_int(h)')
+
+
+# Spellings of the element-wise vector folds (squared L2, dot, cosine)
+# that may appear only in operators/vectors.py and operators/ann.py:
+# the Spark and DuckDB per-component folds and the zip_with product.
+# Scalar pow() over a plain column is not a fold and does not match.
+_VECTOR_FOLD_COPY = (
+    r"power\(cast\(element_at\("
+    r"|pow\(CAST\([^()\s]*\[i\]"
+    r"|list_zip\("
+    r'|F\.zip_with\(.{0,200}?cast\("double"\)\)?\s*\*'
+)
+_VECTOR_HOMES = ("operators/vectors.py", "operators/ann.py")
+
+
+def _vector_fold_copies(source: str) -> list[tuple[int, str]]:
+    """(line, matched text) of every vector-fold spelling in ``source``."""
+    import re
+
+    return [
+        (source.count("\n", 0, m.start()) + 1, m.group(0))
+        for m in re.finditer(_VECTOR_FOLD_COPY, source, re.S)
+    ]
+
+
+def test_vector_folds_live_only_in_operators():
+    """Every squared-L2 / dot / cosine rendering is defined once, in
+    ``operators/vectors.py`` (or composed in ``operators/ann.py``),
+    beside its twins and under the parity test
+    ``tests/test_embedding_lsh.py::test_dot_implementations_bit_identical``."""
+    offenders = [
+        f"{rel}:{line}: {text[:60]}"
+        for rel, source in _package_sources()
+        if rel not in _VECTOR_HOMES
+        for line, text in _vector_fold_copies(source)
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_vector_fold_lint_catches_each_spelling():
+    """The lint's patterns match the copies it exists to stop, and not
+    the scalar ``pow`` of the statistics queries."""
+    copies = [
+        "power(cast(element_at(sub, i) as double)",
+        "pow(CAST(s.sub[i] AS DOUBLE) - CAST(c.csub[i] AS DOUBLE), 2)",
+        "pow(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE), 2)",
+        "list_sum(list_transform(list_zip(a.embedding, b.embedding),",
+        'F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double"))',
+        'F.zip_with(\n    "qv", "vv",\n    lambda x, y: (x.cast("double") - y.cast("double"))\n'
+        '    * (x.cast("double") - y.cast("double")),\n)',
+    ]
+    for copy in copies:
+        assert _vector_fold_copies(copy), copy
+    for scalar in (
+        "pow(CAST(c_nationkey AS DOUBLE), 2) AS nk_sq",
+        "- pow(CAST(SUM(x) AS DOUBLE)/10000, 2)/COUNT(*))",
+        "pow(CAST(o.obs AS DOUBLE)",
+        'F.pow(F.col("obs").cast("double") - e, F.lit(2))',
+        "F.zip_with(slice(toks, 1, n), slice(toks, 2, n), lambda a, b: concat(a, b))",
+    ):
+        assert not _vector_fold_copies(scalar), scalar
 
 
 def _hint_calls(source: str, is_hint) -> list[tuple[int, str]]:

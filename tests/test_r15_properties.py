@@ -82,12 +82,13 @@ def _py_train(vecs, m_sub, sub_d, k, iters):
 def test_pq_train_matches_python_reference_with_empty_codeword(
     spark, tmp_path
 ):
-    from etl_xlsx_potgres_spark.plans.pq_trained import TRAIN_ITERS, _train
-    from etl_xlsx_potgres_spark.plans.pq_search import _subvectors
-    from etl_xlsx_potgres_spark.plans.product_quantization import (
+    from etl_xlsx_potgres_spark.operators.ann import (
         M,
         PQ_K,
         SUB_D,
+        TRAIN_ITERS,
+        subvectors,
+        train_codebook,
     )
     import pyspark.sql.functions as F
 
@@ -114,7 +115,7 @@ def test_pq_train_matches_python_reference_with_empty_codeword(
     )
     got = {
         (r["m"], r["k"]): [round(x, 9) for x in r["csub"]]
-        for r in _train(_subvectors(emb)).collect()
+        for r in train_codebook(subvectors(emb)).collect()
     }
     want = {
         mk: [round(x, 9) for x in cs]
@@ -278,12 +279,12 @@ def test_pq_training_reduces_quantization_error(spark, tmp_path):
     import numpy as np
     import pyspark.sql.functions as F
 
-    from etl_xlsx_potgres_spark.plans.pq_search import _subvectors
-    from etl_xlsx_potgres_spark.plans.pq_trained import _train
-    from etl_xlsx_potgres_spark.plans.product_quantization import (
+    from etl_xlsx_potgres_spark.operators.ann import (
         M,
         PQ_K,
         SUB_D,
+        subvectors,
+        train_codebook,
     )
     from etl_xlsx_potgres_spark.sources import load_table
 
@@ -305,7 +306,7 @@ def test_pq_training_reduces_quantization_error(spark, tmp_path):
     emb = load_table(spark, sf, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    subs = _subvectors(emb)
+    subs = subvectors(emb)
 
     def total_err(cb_rows):
         cb = {}
@@ -326,7 +327,7 @@ def test_pq_training_reduces_quantization_error(spark, tmp_path):
         .select("m", F.col("vec_id").alias("k"), F.col("sub").alias("csub"))
         .collect()
     )
-    trained_rows = _train(subs).collect()
+    trained_rows = train_codebook(subs).collect()
     e_seed, e_trained = total_err(seed_rows), total_err(trained_rows)
     assert e_trained < e_seed * 0.9, (
         f"training failed to reduce error: seed={e_seed:.2f}"

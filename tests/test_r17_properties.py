@@ -336,7 +336,7 @@ def test_ann_curve_shortlist_recall_monotone(spark, sf_dir):
         _MAX_PROBE,
         SHORTLIST_LEVELS,
     )
-    from etl_xlsx_potgres_spark.plans.pq_search import SHORTLIST
+    from etl_xlsx_potgres_spark.operators.ann import SHORTLIST
 
     rows = registry.QUERIES["ann_recall_curve"](spark, sf_dir).collect()
     # the shortlist-axis rows: swept s at fixed deepest probe,
@@ -361,7 +361,7 @@ def test_ann_curve_shortlist_recall_monotone(spark, sf_dir):
         # cost axis: the rerank volume is bounded by NQ * s (import
         # the real constant — a hardcoded 10 silently loosens or
         # spuriously trips if the query-set size changes)
-        from etl_xlsx_potgres_spark.plans.pq_search import NQ
+        from etl_xlsx_potgres_spark.operators.ann import N_QUERIES as NQ
 
         assert min(r.n_candidates for r in cell) <= NQ * s
     assert hits_by_s == sorted(hits_by_s), (

@@ -135,7 +135,7 @@ def test_topn_cos_matches_window_ranking(spark):
     from etl_xlsx_potgres_spark.plans.dedup_incremental_more import (
         _topn_cos,
     )
-    from etl_xlsx_potgres_spark.plans.similarity import _dot, _norm
+    from etl_xlsx_potgres_spark.operators.vectors import cosine
 
     # candidate 20 duplicates candidate 10's vector -> exact cosine tie
     cands = [(10, [1.0, 0.0]), (20, [1.0, 0.0]), (30, [0.0, 1.0]),
@@ -149,9 +149,7 @@ def test_topn_cos_matches_window_ranking(spark):
         (r.vec_id, r.cid)
         for r in _topn_cos(df, "embedding", "cv", "cid", "cid", 2).collect()
     }
-    cos = _dot(F.col("embedding"), F.col("cv")) / (
-        _norm(F.col("embedding")) * _norm(F.col("cv"))
-    )
+    cos = cosine("embedding", "cv")
     w = Window.partitionBy("vec_id").orderBy(F.desc("c"), "cid")
     want = {
         (r.vec_id, r.cid)

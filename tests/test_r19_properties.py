@@ -19,12 +19,13 @@ import duckdb
 import pytest
 
 from etl_xlsx_potgres_spark import registry
+from etl_xlsx_potgres_spark.operators.vectors import EMB_DIM
 
 from .oracle_utils import assert_frames_match
 
 registry.load_all()
 
-DIM = 64  # the family's EMB_DIM (norm_flat/PQ unroll exactly 64 dims)
+DIM = EMB_DIM  # norm_flat/PQ unroll exactly EMB_DIM dims
 ZERO_NEW, ZERO_HIST = 20, 31    # all-zero embeddings (new / history)
 NULL_NEW, NULLC_HIST = 40, 51   # NULL embedding / NULL component
 NAN_HIST = 41                   # NaN component (sq norm = NaN)
@@ -131,7 +132,7 @@ def test_valid_vecs_predicate_matches_duck(spark):
     from pyspark.sql import Row
     from pyspark.sql import types as T
 
-    from etl_xlsx_potgres_spark.plans.similarity import duck_valid, valid_vecs
+    from etl_xlsx_potgres_spark.operators.vectors import duck_valid, valid_vecs
 
     schema = T.StructType(
         [
@@ -177,7 +178,7 @@ def test_topn_and_argmin_rank_nan_like_the_window(spark):
         _argmin_cos,
         _topn_cos,
     )
-    from etl_xlsx_potgres_spark.plans.similarity import _dot, _norm
+    from etl_xlsx_potgres_spark.operators.vectors import cosine
 
     cands = [(10, [1.0, 0.0]), (20, [float("nan"), 1.0]), (30, [0.0, 1.0]),
              (40, [0.6, 0.8])]
@@ -186,9 +187,7 @@ def test_topn_and_argmin_rank_nan_like_the_window(spark):
         for v in (1, 2) for c, cv in cands
     ]
     df = spark.createDataFrame(rows)
-    cos = _dot(F.col("embedding"), F.col("cv")) / (
-        _norm(F.col("embedding")) * _norm(F.col("cv"))
-    )
+    cos = cosine("embedding", "cv")
     w = Window.partitionBy("vec_id").orderBy(F.desc("c"), "cid")
     ranked = df.select("vec_id", "cid", cos.alias("c")).withColumn(
         "rn", F.row_number().over(w)

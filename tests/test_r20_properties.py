@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_xlsx_potgres_spark import registry
+from etl_xlsx_potgres_spark.operators.ann import M, PQ_K, pq_encode, subvectors
 from etl_xlsx_potgres_spark.plans import dedup_incremental as di
 from etl_xlsx_potgres_spark.plans import dedup_incremental_more as more
 from etl_xlsx_potgres_spark.sources import load_table
@@ -230,9 +231,10 @@ def test_pq_code_store_append_bit_identical_without_compaction(
     name = "semantic_pqcode_appended_test"
     path = os.path.join(di._store_root(spark), name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    codes_first = more._pq_encode(
-        more._subvectors_with_cid(first), spark.table(cb_name)
-    )
+    keys = ("vec_id", "cid", "m")
+    codes_first = pq_encode(
+        subvectors(first, ("vec_id", "cid")), spark.table(cb_name), keys
+    ).select(*keys, "k")
     (
         codes_first.write.mode("overwrite")
         .bucketBy(di.N_BUCKETS, "cid").sortBy("cid")
@@ -340,8 +342,8 @@ def test_ivfpq_provision_drift_non_vacuous(spark, sf_dir):
     below it (sampling noise) — and the artifact stats attest the
     history-only training split."""
     pdf = registry.QUERIES["ann_ivfpq_provision"](spark, sf_dir).toPandas()
-    assert len(pdf) == more._PQ_M
-    assert (pdf.n_centroids <= more._PQ_PQ_K).all()
+    assert len(pdf) == M
+    assert (pdf.n_centroids <= PQ_K).all()
     assert (pdf.n_codes == pdf.n_train).all()
     assert (pdf.tv_drift_bp > 2000).all(), pdf
     assert (pdf.tv_plain_bp < pdf.tv_drift_bp / 2).all(), pdf

@@ -171,7 +171,7 @@ def test_pq_seeds_encode_to_themselves(spark, sf_dir):
     """Each seed vector's subvectors are their own codewords: zero
     reconstruction error and code_m == own id (min-k tie-break can
     only fire between byte-identical seed subvectors)."""
-    from etl_xlsx_potgres_spark.plans.product_quantization import PQ_K
+    from etl_xlsx_potgres_spark.operators.ann import PQ_K
 
     out = (
         registry.QUERIES["emb_pq_encode"](spark, sf_dir)

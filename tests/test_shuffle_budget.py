@@ -93,7 +93,7 @@ BUDGETS = {
                                       # co-bucketed layout with no Exchange
                                       # (asserted broadcast-free in
                                       # tests/test_bucketing.py)
-    "emb_pq_encode": 2,               # (vec,m) argmin window + code pivot agg
+    "emb_pq_encode": 2,               # (vec,m) encode argmin + code pivot agg
     "csv_quarantine_ingest": 1,       # 1-row quarantine-count broadcast back
     "mm_audio_features": 0,           # synthesize + mapInPandas, map-only
     "mm_image_resize": 0,             # synthesize + mapInPandas, map-only
@@ -196,7 +196,7 @@ BUDGETS = {
                                       # join/rollup plumbing over the
                                       # (types x weeks x 10-bin) frame
     "ann_pq_adc_rerank": 16,          # corpus-scale: code argmin
-                                      # window + ADC partial agg +
+                                      # agg + ADC partial agg +
                                       # shortlist window + the exact
                                       # VERIFIER side (fixture-only);
                                       # the rest is broadcast-LUT and

@@ -64,12 +64,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from etl_xlsx_potgres_spark import caching
-    from etl_xlsx_potgres_spark.plans.pq_search import (
+    from etl_xlsx_potgres_spark.operators.ann import (
         TOP_K,
-        _adc_rerank,
-        _subvectors,
+        adc_rerank,
+        subvectors,
+        train_codebook,
     )
-    from etl_xlsx_potgres_spark.plans.pq_trained import _train
     from etl_xlsx_potgres_spark.sources import load_table
 
     if args.sf_dir:
@@ -91,15 +91,15 @@ def main() -> None:
         )
         results = {}
         for k in (8, 64):
-            subs = _subvectors(emb)
+            subs = subvectors(emb)
             seed_cb = subs.filter(F.col("vec_id") < k).select(
                 "m", F.col("vec_id").alias("k"), F.col("sub").alias("csub")
             )
             for name, cb in (
                 (f"seed_k{k}", seed_cb),
-                (f"trained_k{k}", _train(subs, k=k)),
+                (f"trained_k{k}", train_codebook(subs, k=k)),
             ):
-                rows = _adc_rerank(spark, work, emb, subs, cb).collect()
+                rows = adc_rerank(emb, subs, cb).collect()
                 hits = {r["qid"]: r["n_hits_exact"] for r in rows}
                 recall = sum(hits.values()) / (len(hits) * TOP_K)
                 results[name] = (recall, dict(sorted(hits.items())))
