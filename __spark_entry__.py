@@ -11,6 +11,7 @@ thin adapter over its query registry.
 
 from __future__ import annotations
 
+import functools
 import glob
 import hashlib
 import json
@@ -80,23 +81,39 @@ def _core_hash() -> str:
     return h.hexdigest()
 
 
-def _plan_imports(path: str) -> set[str]:
+def _plan_imports(path: str) -> frozenset[str]:
     """Sibling plans modules that the module at ``path`` imports —
     ``from .x import ...`` and ``from . import x``, at module level or
     inside a function (read through the AST, so a docstring that
-    mentions an import is not one)."""
+    mentions an import is not one).  Memoized on the file's size and
+    mtime: hashing all queries parses each module once, and an edit
+    re-parses it."""
+    st = os.stat(path)
+    return _parsed_plan_imports(path, st.st_mtime_ns, st.st_size)
+
+
+@functools.lru_cache(maxsize=None)
+def _parsed_plan_imports(
+    path: str, mtime_ns: int, size: int
+) -> frozenset[str]:
     import ast
 
     with open(path) as f:
         tree = ast.parse(f.read())
     out: set[str] = set()
-    for node in ast.walk(tree):
+    # an import is a statement: descend statement blocks only, not the
+    # expression trees ast.walk would also visit
+    todo = list(tree.body)
+    while todo:
+        node = todo.pop()
         if isinstance(node, ast.ImportFrom) and node.level == 1:
             if node.module:
                 out.add(node.module.split(".")[0])
             else:
                 out.update(a.name for a in node.names)
-    return out
+        for block in ("body", "orelse", "finalbody", "handlers", "cases"):
+            todo.extend(getattr(node, block, ()))
+    return frozenset(out)
 
 
 def _plan_closure(mod_file: str) -> list[str]:

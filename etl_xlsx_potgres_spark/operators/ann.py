@@ -102,21 +102,27 @@ def exact_d2_micro(emb: DataFrame) -> DataFrame:
     ).select("qid", "vec_id", micro(sq_dist("qv", "vv")).alias("d2_micro"))
 
 
+def seed_codebook(subs: DataFrame, k: int = PQ_K) -> DataFrame:
+    """(m, k, csub): the first ``k`` corpus vectors' subvectors as the
+    deterministic codewords.  DuckDB twin: :data:`SQL_SEED_CODEBOOK`."""
+    return subs.filter(F.col("vec_id") < k).select(
+        "m", F.col("vec_id").alias("k"), F.col("sub").alias("csub")
+    )
+
+
 def train_codebook(
     subs: DataFrame, k: int = PQ_K, iters: int = TRAIN_ITERS
 ) -> DataFrame:
     """``iters`` Lloyd iterations over the (vec_id, m, sub) frame from
-    the first-``k`` seeds; returns the (m, k, csub) codebook (double
+    :func:`seed_codebook`; returns the (m, k, csub) codebook (double
     arrays).  Member coordinates are floored to micro units BEFORE the
     mean, so each per-(m, k, dim) reduce is an exact bigint sum and the
     new coordinate ``sum / n / 1e6`` one exact double expression.  Each
     round's codebook is ``localCheckpoint``ed, so the search plan does
     not nest the training joins.  DuckDB twin:
     :func:`sql_trained_codebook_ctes`."""
-    cb = subs.filter(F.col("vec_id") < k).select(
-        "m",
-        F.col("vec_id").alias("k"),
-        F.expr("transform(sub, x -> cast(x as double))").alias("csub"),
+    cb = seed_codebook(subs, k).select(
+        "m", "k", F.expr("transform(csub, x -> cast(x as double))").alias("csub")
     )
     for _ in range(iters):
         assigned = pq_encode(subs, cb, keys=("vec_id", "m", "sub")).select(
@@ -252,7 +258,7 @@ def coarse_cells(emb: DataFrame) -> DataFrame:
 
 
 def coarse_candidates(
-    emb: DataFrame, cells: DataFrame, n_probe: int = N_PROBE
+    emb: DataFrame, cells: DataFrame, n_probe: int
 ) -> DataFrame:
     """(qid, vec_id, prn): every corpus vector in one of the query's
     ``n_probe`` nearest cells, with the cell's probe rank ``prn``.
@@ -306,6 +312,7 @@ subs AS (
 )"""
 
 
+# DuckDB twin of :func:`seed_codebook`
 SQL_SEED_CODEBOOK = f"""codebook AS (
   SELECT m, vec_id AS k, sub AS csub FROM subs WHERE vec_id < {PQ_K}
 )"""
@@ -330,19 +337,19 @@ def sql_pq_lut(qsubs: str) -> str:
   FROM {qsubs} s JOIN codebook c ON c.m = s.m"""
 
 
-def sql_trained_codebook_ctes(k: int = PQ_K, iters: int = TRAIN_ITERS) -> str:
+def sql_trained_codebook_ctes() -> str:
     """:func:`train_codebook` unrolled over ``subs``: cb0 (seeds cast
-    to double) -> [assign a{t} -> update u{t} -> cb{t}] x iters ->
+    to double) -> [assign a{t} -> update u{t} -> cb{t}] x TRAIN_ITERS ->
     ``codebook``.  Empty codewords vanish from the GROUP BY on both
     engines."""
     parts = [
         f"""cb0 AS (
   SELECT m, vec_id AS k,
          list_transform(sub, x -> CAST(x AS DOUBLE)) AS csub
-  FROM subs WHERE vec_id < {k}
+  FROM subs WHERE vec_id < {PQ_K}
 )"""
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, TRAIN_ITERS + 1):
         prev = f"cb{t - 1}"
         parts.append(f"""a{t} AS (
   SELECT s.vec_id, s.m, c.k, s.sub
@@ -365,7 +372,7 @@ def sql_trained_codebook_ctes(k: int = PQ_K, iters: int = TRAIN_ITERS) -> str:
   SELECT m, k, list(CAST(s AS DOUBLE) / n / 1000000.0 ORDER BY i) AS csub
   FROM u{t} GROUP BY m, k
 )""")
-    parts.append(f"codebook AS (SELECT m, k, csub FROM cb{iters})")
+    parts.append(f"codebook AS (SELECT m, k, csub FROM cb{TRAIN_ITERS})")
     return ",\n".join(parts)
 
 
@@ -461,13 +468,13 @@ SELECT r.qid, r.vec_id, r.adc_micro, r.d2_micro, h.n_hits_exact
 FROM rerank r JOIN hits h ON h.qid = r.qid"""
 
 
-def sql_coarse_cells(src: str = "vecs") -> str:
-    """SELECT body of :func:`coarse_cells` over ``src``."""
-    return f"""SELECT vec_id AS cid, embedding AS cv FROM {src}
+def sql_coarse_cells() -> str:
+    """SELECT body of :func:`coarse_cells` over ``vecs``."""
+    return f"""SELECT vec_id AS cid, embedding AS cv FROM vecs
   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {N_CELLS}"""
 
 
-def sql_coarse_candidates(n_probe: int = N_PROBE) -> str:
+def sql_coarse_candidates(n_probe: int) -> str:
     """:func:`coarse_candidates` over ``vecs`` as the CTEs ``cells``,
     ``assign``, ``probes`` and ``cand`` (qid, vec_id, prn)."""
     return f"""cells AS (

@@ -79,8 +79,8 @@ from ..operators.text import (
     sql_tokens,
     tokens,
 )
-from ..operators.ann import TOP_K as ANN_TOP_K
 from ..operators.ann import (
+    TOP_K,
     pq_encode,
     pq_lut,
     sql_pq_codes,
@@ -1145,13 +1145,13 @@ SELECT vec_id, rn, neighbor_id, cosine FROM (
   SELECT vec_id, neighbor_id, cosine,
          row_number() OVER (PARTITION BY vec_id
                             ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM scored) WHERE rn <= {ANN_TOP_K}
+  FROM scored) WHERE rn <= {TOP_K}
 """
 
 
 @register("ann_incremental_ivf", oracle=_ANN_IVF_ORACLE)
 def ann_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{ANN_TOP_K} cosine neighbors from the bucketed history
+    """Top-{TOP_K} cosine neighbors from the bucketed history
     store for each new-batch vector, probing SEM_N_PROBE cells —
     probed cells are disjoint (history is single-assigned), so no
     neighbor appears twice and the per-vector rank window runs over
@@ -1180,7 +1180,7 @@ def ann_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         nassign.join(hist, "cid")
         .select("vec_id", "neighbor_id", cos.alias("cosine"))
         .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= ANN_TOP_K)
+        .filter(F.col("rn") <= TOP_K)
         .select("vec_id", F.col("rn").cast("long").alias("rn"),
                 "neighbor_id", "cosine")
     )
@@ -1261,7 +1261,7 @@ rerank AS (
              {sql_cosine("q.embedding", "h.embedding")} DESC, s.nbr) AS rn
     FROM shortlist s
     JOIN hassign h ON h.cid = s.cid AND h.vec_id = s.nbr
-    JOIN nvecs q ON q.vec_id = s.qid) WHERE rn <= {ANN_TOP_K}
+    JOIN nvecs q ON q.vec_id = s.qid) WHERE rn <= {TOP_K}
 ),
 fullp AS (
   SELECT qid, nbr FROM (
@@ -1270,7 +1270,7 @@ fullp AS (
              {sql_cosine("n.embedding", "h.embedding")} DESC, h.vec_id)
              AS rn
     FROM nassign n JOIN hassign h ON h.cid = n.cid)
-  WHERE rn <= {ANN_TOP_K}
+  WHERE rn <= {TOP_K}
 ),
 hits AS (
   SELECT r.qid,
@@ -1355,7 +1355,7 @@ def append_to_semantic_pq(
 
 @register("ann_incremental_ivfpq", oracle=_ivfpq_oracle())
 def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{ANN_TOP_K} neighbors per new-batch vector off the
+    """Top-{TOP_K} neighbors per new-batch vector off the
     COMPRESSED cell store: probe -> ADC over probed buckets' codes ->
     exact re-rank of the {IVFPQ_SHORTLIST}-deep shortlist -> overlap
     with the full-precision probed top-k as ``n_hits_fullprec``.
@@ -1426,7 +1426,7 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(qv, "qid")
         .select("qid", "nbr", "adc_micro", cos.alias("cosine"))
         .withColumn("rn", F.row_number().over(rw))
-        .filter(F.col("rn") <= ANN_TOP_K)
+        .filter(F.col("rn") <= TOP_K)
     )
     # full-precision twin within the SAME probed cells — the verifier
     # (at production scale only the ADC path runs; the twin is the
@@ -1444,7 +1444,7 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("qid"), "nbr", fcos.alias("fc")
         )
         .withColumn("frn", F.row_number().over(fw))
-        .filter(F.col("frn") <= ANN_TOP_K)
+        .filter(F.col("frn") <= TOP_K)
         .select("qid", F.col("nbr").alias("fnbr"))
     )
     hits = (

@@ -36,12 +36,11 @@ stack's production path: encode (``emb_pq_encode``) -> SEARCH.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.ann import (
-    PQ_K,
     SQL_SEED_CODEBOOK,
     adc_rerank,
+    seed_codebook,
     sql_adc_search,
     subvectors,
 )
@@ -54,7 +53,5 @@ from ..sources import load_table
 def ann_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
     subs = subvectors(emb)
-    codebook = subs.filter(F.col("vec_id") < PQ_K).select(
-        "m", F.col("vec_id").alias("k"), F.col("sub").alias("csub")
-    )
+    codebook = seed_codebook(subs)
     return adc_rerank(emb, subs, codebook)

@@ -30,9 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ann import (
-    PQ_K,
     SQL_SEED_CODEBOOK,
     pq_encode,
+    seed_codebook,
     sql_pq_codes,
     sql_vecs_subs,
     subvectors,
@@ -62,9 +62,7 @@ from ..sources import load_table
 def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
     subs = subvectors(emb)
-    codebook = subs.filter(F.col("vec_id") < PQ_K).select(
-        "m", F.col("vec_id").alias("k"), F.col("sub").alias("csub")
-    )
+    codebook = seed_codebook(subs)
     best = pq_encode(subs, codebook)
     return best.groupBy("vec_id").agg(
         F.max(F.when(F.col("m") == 0, F.col("k"))).alias("code_0"),

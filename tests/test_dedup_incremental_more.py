@@ -13,6 +13,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from etl_xlsx_potgres_spark.operators.ann import TOP_K
 from etl_xlsx_potgres_spark.plans import dedup_incremental_more as more
 from etl_xlsx_potgres_spark.plans.dedup_fuzzy import _simhash_df
 from etl_xlsx_potgres_spark.sources import load_table
@@ -216,7 +217,7 @@ def test_ann_ivf_probe_is_exchange_free(spark, sf_dir):
 
 
 def test_ann_ivf_topk_shape(spark, sf_dir):
-    """Per new vector: <= ANN_TOP_K rows, contiguous ranks from 1,
+    """Per new vector: <= TOP_K rows, contiguous ranks from 1,
     cosine non-increasing, no duplicate neighbors (probed cells are
     disjoint)."""
     from etl_xlsx_potgres_spark import registry
@@ -229,9 +230,9 @@ def test_ann_ivf_topk_shape(spark, sf_dir):
         by_vec.setdefault(r.vec_id, []).append(r)
     for vec, rs in by_vec.items():
         rs.sort(key=lambda r: r.rn)
-        assert len(rs) <= more.ANN_TOP_K
+        assert len(rs) <= TOP_K
         assert [r.rn for r in rs] == list(range(1, len(rs) + 1)), vec
         cosines = [r.cosine for r in rs]
         assert cosines == sorted(cosines, reverse=True), vec
         assert len({r.neighbor_id for r in rs}) == len(rs), vec
-    assert any(len(rs) == more.ANN_TOP_K for rs in by_vec.values())
+    assert any(len(rs) == TOP_K for rs in by_vec.values())

@@ -362,14 +362,12 @@ def test_ivfpq_code_and_rerank_probes_are_exchange_free(spark, sf_dir):
 
 
 def test_ivfpq_serving_shape_and_recall_data(spark, sf_dir):
-    """Per query: at most ANN_TOP_K contiguous ranks, ADC scores
+    """Per query: at most TOP_K contiguous ranks, ADC scores
     non-NULL (codes path actually ran), and the full-precision-overlap
     verifier carries signal (some query recalls some true neighbor —
     on the adversarial uniform fixture the count is DATA, not a
     pass/fail bar, the pq_search honesty policy)."""
-    from etl_xlsx_potgres_spark.plans.dedup_incremental_more import (
-        ANN_TOP_K,
-    )
+    from etl_xlsx_potgres_spark.operators.ann import TOP_K
 
     pdf = registry.QUERIES["ann_incremental_ivfpq"](
         spark, sf_dir
@@ -377,9 +375,9 @@ def test_ivfpq_serving_shape_and_recall_data(spark, sf_dir):
     assert len(pdf) > 0
     for qid, grp in pdf.groupby("vec_id"):
         assert sorted(grp.rn.tolist()) == list(range(1, len(grp) + 1))
-        assert len(grp) <= ANN_TOP_K
+        assert len(grp) <= TOP_K
         assert grp.adc_micro.notna().all()
-        assert grp.n_hits_fullprec.between(0, ANN_TOP_K).all()
+        assert grp.n_hits_fullprec.between(0, TOP_K).all()
         assert grp.n_hits_fullprec.nunique() == 1
     assert pdf.groupby("vec_id").n_hits_fullprec.first().sum() > 0
 

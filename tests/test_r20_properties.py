@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_xlsx_potgres_spark import registry
-from etl_xlsx_potgres_spark.operators.ann import M, PQ_K, pq_encode, subvectors
+from etl_xlsx_potgres_spark.operators.ann import M, PQ_K
 from etl_xlsx_potgres_spark.plans import dedup_incremental as di
 from etl_xlsx_potgres_spark.plans import dedup_incremental_more as more
 from etl_xlsx_potgres_spark.sources import load_table
@@ -231,10 +231,7 @@ def test_pq_code_store_append_bit_identical_without_compaction(
     name = "semantic_pqcode_appended_test"
     path = os.path.join(di._store_root(spark), name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    keys = ("vec_id", "cid", "m")
-    codes_first = pq_encode(
-        subvectors(first, ("vec_id", "cid")), spark.table(cb_name), keys
-    ).select(*keys, "k")
+    codes_first = more._encode_cells(first, spark.table(cb_name))
     (
         codes_first.write.mode("overwrite")
         .bucketBy(di.N_BUCKETS, "cid").sortBy("cid")

@@ -67,6 +67,7 @@ def main() -> None:
     from etl_xlsx_potgres_spark.operators.ann import (
         TOP_K,
         adc_rerank,
+        seed_codebook,
         subvectors,
         train_codebook,
     )
@@ -92,11 +93,8 @@ def main() -> None:
         results = {}
         for k in (8, 64):
             subs = subvectors(emb)
-            seed_cb = subs.filter(F.col("vec_id") < k).select(
-                "m", F.col("vec_id").alias("k"), F.col("sub").alias("csub")
-            )
             for name, cb in (
-                (f"seed_k{k}", seed_cb),
+                (f"seed_k{k}", seed_codebook(subs, k=k)),
                 (f"trained_k{k}", train_codebook(subs, k=k)),
             ):
                 rows = adc_rerank(emb, subs, cb).collect()
