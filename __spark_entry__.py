@@ -11,7 +11,6 @@ thin adapter over its query registry.
 
 from __future__ import annotations
 
-import functools
 import glob
 import hashlib
 import json
@@ -30,7 +29,9 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 
 # Committed ledger of WHEN each green verdict was earned: for every
 # locally-verified query it records a source hash (the query's module +
-# the shared data-layer core) and a fingerprint of the oracle-SF
+# the shared data-layer core — module + core is all a query runs, since
+# no plans module imports another; the sibling-import lint in
+# tests/test_plans.py enforces that) and a fingerprint of the oracle-SF
 # fixtures at verification time. A driver CORRECTNESS green row is only
 # trusted while both still match — any code or fixture change re-queues
 # the query into the verify-first block. (Round 5 shipped 8 silently
@@ -81,67 +82,13 @@ def _core_hash() -> str:
     return h.hexdigest()
 
 
-def _plan_imports(path: str) -> frozenset[str]:
-    """Sibling plans modules that the module at ``path`` imports —
-    ``from .x import ...`` and ``from . import x``, at module level or
-    inside a function (read through the AST, so a docstring that
-    mentions an import is not one).  Memoized on the file's size and
-    mtime: hashing all queries parses each module once, and an edit
-    re-parses it."""
-    st = os.stat(path)
-    return _parsed_plan_imports(path, st.st_mtime_ns, st.st_size)
-
-
-@functools.lru_cache(maxsize=None)
-def _parsed_plan_imports(
-    path: str, mtime_ns: int, size: int
-) -> frozenset[str]:
-    import ast
-
-    with open(path) as f:
-        tree = ast.parse(f.read())
-    out: set[str] = set()
-    # an import is a statement: descend statement blocks only, not the
-    # expression trees ast.walk would also visit
-    todo = list(tree.body)
-    while todo:
-        node = todo.pop()
-        if isinstance(node, ast.ImportFrom) and node.level == 1:
-            if node.module:
-                out.add(node.module.split(".")[0])
-            else:
-                out.update(a.name for a in node.names)
-        for block in ("body", "orelse", "finalbody", "handlers", "cases"):
-            todo.extend(getattr(node, block, ()))
-    return frozenset(out)
-
-
-def _plan_closure(mod_file: str) -> list[str]:
-    """Paths of every sibling plans module ``mod_file`` reaches through
-    the transitive closure of its intra-package imports."""
-    plans_dir = os.path.dirname(mod_file)
-    seen: set[str] = set()
-    todo = [mod_file]
-    while todo:
-        try:
-            names = _plan_imports(todo.pop())
-        except OSError:
-            continue
-        for name in names:
-            path = os.path.join(plans_dir, f"{name}.py")
-            if path != mod_file and path not in seen:
-                seen.add(path)
-                todo.append(path)
-    return sorted(seen)
-
-
 def _source_hash(name: str, _core: str | None = None) -> str:
-    """Hash of the query's defining module, the shared-layer core, and
-    every sibling plans module the defining module reaches through
-    intra-package imports, directly or transitively (e.g.
-    paragraph_incremental -> dedup_incremental_more ->
-    dedup_incremental): an edit to any of them re-queues the query for
-    verification."""
+    """Hash of the query's defining module and the shared-layer core:
+    an edit to either re-queues the query for verification.  That is
+    the whole code a query runs, because no plans module imports
+    another one (every shared kernel lives in a ``_CORE_PACKAGES``
+    directory), which
+    ``tests/test_plans.py::test_plans_import_no_sibling_plan`` enforces."""
     import sys
 
     fn = registry.QUERIES[name]
@@ -149,12 +96,7 @@ def _source_hash(name: str, _core: str | None = None) -> str:
     mod_file = getattr(mod, "__file__", None)
     h = hashlib.sha256()
     h.update((_core if _core is not None else _core_hash()).encode())
-    if not mod_file:
-        h.update(b"nomod")
-        return h.hexdigest()
-    h.update(_file_sha(mod_file).encode())
-    for sibling in _plan_closure(mod_file):
-        h.update(_file_sha(sibling).encode())
+    h.update(_file_sha(mod_file).encode() if mod_file else b"nomod")
     return h.hexdigest()
 
 

@@ -1,7 +1,8 @@
 """Product-quantization and inverted-file index kernels (Jegou et al.
 2011): the subvector split, the PQ encode argmin, per-query lookup
-tables, Lloyd-trained codebooks, the ADC scan with its exact re-rank,
-and the md5-seeded coarse cells of the IVF lists.
+tables, Lloyd-trained codebooks and their exact micro-unit centroid
+update, the ADC scan with its exact re-rank, the md5-seeded coarse
+cells of the IVF lists, and the exact and IVF cosine top-k searches.
 
 Every kernel has its Spark form (over DataFrames) and its DuckDB form
 (``sql_*``, CTE bodies that read fixed CTE names: ``vecs``, ``subs``,
@@ -23,7 +24,15 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from .vectors import duck_valid, micro, sq_dist, sql_micro, sql_sq_dist
+from .vectors import (
+    cosine,
+    duck_valid,
+    micro,
+    sq_dist,
+    sql_cosine,
+    sql_micro,
+    sql_sq_dist,
+)
 
 M = 4            # subspaces
 SUB_D = 16       # dims per subspace (M * SUB_D = EMB_DIM)
@@ -35,6 +44,7 @@ TOP_K = 5        # neighbours returned per query
 SHORTLIST = 50   # ADC candidates re-ranked exactly, per query
 N_CELLS = 16     # md5-seeded coarse cells of the IVF lists
 N_PROBE = 4      # cells probed per query
+KMEANS_K = 10    # k-means clusters of emb_kmeans_step and SemDeDup
 
 
 def subvectors(frame: DataFrame, keys: tuple[str, ...] = ("vec_id",)) -> DataFrame:
@@ -115,11 +125,10 @@ def train_codebook(
 ) -> DataFrame:
     """``iters`` Lloyd iterations over the (vec_id, m, sub) frame from
     :func:`seed_codebook`; returns the (m, k, csub) codebook (double
-    arrays).  Member coordinates are floored to micro units BEFORE the
-    mean, so each per-(m, k, dim) reduce is an exact bigint sum and the
-    new coordinate ``sum / n / 1e6`` one exact double expression.  Each
-    round's codebook is ``localCheckpoint``ed, so the search plan does
-    not nest the training joins.  DuckDB twin:
+    arrays).  Each round's update is the exact :func:`micro_mean` of
+    the assigned subvectors, and each round's codebook is
+    ``localCheckpoint``ed, so the search plan does not nest the
+    training joins.  DuckDB twin:
     :func:`sql_trained_codebook_ctes`."""
     cb = seed_codebook(subs, k).select(
         "m", "k", F.expr("transform(csub, x -> cast(x as double))").alias("csub")
@@ -128,44 +137,55 @@ def train_codebook(
         assigned = pq_encode(subs, cb, keys=("vec_id", "m", "sub")).select(
             "m", "k", "sub"
         )
-        dims = assigned.select(
-            "m",
-            "k",
-            F.posexplode(
-                F.expr(
-                    "transform(sub,"
-                    " x -> cast(floor(cast(x as double) * 1000000) as bigint))"
-                )
-            ).alias("i", "xm"),
-        )
-        sums = dims.groupBy("m", "k", "i").agg(
-            F.sum("xm").cast("long").alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
         cb = (
-            sums.groupBy("m", "k")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "i",
-                                (
-                                    F.col("s").cast("double")
-                                    / F.col("n")
-                                    / F.lit(1000000.0)
-                                ).alias("v"),
-                            )
-                        )
-                    ),
-                    lambda st: st.v,
-                ).alias("csub")
-            )
+            micro_mean(assigned, ("m", "k"), "sub", "csub")
             # constant (<= M*K)-row frame: one block, lineage cut here
             .coalesce(1)
             .localCheckpoint(eager=True)
         )
     return cb
+
+
+def micro_mean(
+    assigned: DataFrame, keys: tuple[str, ...], vec: str, out: str
+) -> DataFrame:
+    """(*keys, out): the mean of the ``vec`` arrays of each ``keys``
+    group — the centroid update of :func:`train_codebook` (per (m, k))
+    and of the k-means iterations (per cid).  Member coordinates are
+    floored to micro units BEFORE the mean, so each per-(group, dim)
+    reduce is an exact bigint sum and the coordinate ``sum / n / 1e6``
+    one exact double expression.  DuckDB twin:
+    :func:`sql_micro_mean_ctes`."""
+    dims = assigned.select(
+        *keys,
+        F.posexplode(
+            F.expr(
+                f"transform({vec},"
+                " x -> cast(floor(cast(x as double) * 1000000) as bigint))"
+            )
+        ).alias("i", "xm"),
+    )
+    sums = dims.groupBy(*keys, "i").agg(
+        F.sum("xm").cast("long").alias("s"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    return sums.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        "i",
+                        (
+                            F.col("s").cast("double")
+                            / F.col("n")
+                            / F.lit(1000000.0)
+                        ).alias("v"),
+                    )
+                )
+            ),
+            lambda st: st.v,
+        ).alias(out)
+    )
 
 
 def adc_scan(
@@ -291,6 +311,73 @@ def coarse_candidates(
     )
 
 
+def _cosine_topk(scored: DataFrame) -> DataFrame:
+    """(qid, vec_id, cosine, rn): each query's TOP_K of the scored
+    (qid, vec_id, cosine) pairs by (cosine DESC, vec_id)."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= TOP_K)
+        .select("qid", "vec_id", "cosine", "rn")
+    )
+
+
+def cosine_topk(emb: DataFrame) -> DataFrame:
+    """(qid, vec_id, cosine, rn): the exact brute-force cosine top-k of
+    every query vector — the baseline and the recall ground truth,
+    inherently O(queries x corpus).  DuckDB twin:
+    :func:`sql_cosine_topk`."""
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    v = emb.select("vec_id", F.col("embedding").alias("vv"))
+    return _cosine_topk(
+        q.join(v, F.col("qid") != F.col("vec_id")).select(
+            "qid", "vec_id", cosine("qv", "vv").alias("cosine")
+        )
+    )
+
+
+def ivf_cosine_candidates(emb: DataFrame, n_probe: int) -> DataFrame:
+    """(qid, vec_id, prn, cosine): the cosine IVF search over the
+    :func:`coarse_cells` before its top-k — every corpus vector
+    assigned to its argmax-cosine cell, each query's ``n_probe``
+    nearest cells by cosine (probe rank ``prn``), both with (cosine
+    DESC, cid) tie-break, and the exact query cosine of every member of
+    a probed cell.  DuckDB twin: :func:`sql_ivf_cosine_ctes`."""
+    cells = coarse_cells(emb)
+    aw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "cid")
+    assign = (
+        emb.crossJoin(constant_size(cells))
+        .withColumn("ccos", cosine("embedding", "cv"))
+        .withColumn("arn", F.row_number().over(aw))
+        .filter(F.col("arn") == 1)
+        .select("vec_id", "embedding", "cid")
+    )
+    pw = Window.partitionBy("qid").orderBy(F.desc("ccos"), "cid")
+    probes = (
+        emb.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+        .crossJoin(constant_size(cells))
+        .withColumn("ccos", cosine("qv", "cv"))
+        .withColumn("prn", F.row_number().over(pw))
+        .filter(F.col("prn") <= n_probe)
+        .select("qid", "qv", "cid", "prn")
+    )
+    return (
+        probes.join(assign, "cid")
+        .filter(F.col("qid") != F.col("vec_id"))
+        .select("qid", "vec_id", "prn", cosine("qv", "embedding").alias("cosine"))
+    )
+
+
+def ivf_topk(emb: DataFrame) -> DataFrame:
+    """(qid, vec_id, cosine, rn): the cosine IVF top-k at N_PROBE
+    probes over the md5-seeded :func:`coarse_cells`.  DuckDB twin:
+    :func:`sql_ivf_topk`."""
+    return _cosine_topk(ivf_cosine_candidates(emb, N_PROBE))
+
+
 # --- DuckDB renderings ----------------------------------------------
 
 
@@ -302,11 +389,16 @@ def sql_subvectors(src: str) -> str:
   FROM {src} v, (SELECT unnest(generate_series(0, {M - 1})) AS m) m"""
 
 
-def sql_vecs_subs() -> str:
-    """The guarded ``vecs`` CTE and its ``subs`` split."""
+def sql_vecs() -> str:
+    """The ``vecs`` CTE: the embeddings the zero-norm guard keeps."""
     return f"""vecs AS (
   SELECT vec_id, embedding FROM embeddings WHERE {duck_valid()}
-),
+)"""
+
+
+def sql_vecs_subs() -> str:
+    """The guarded ``vecs`` CTE and its ``subs`` split."""
+    return f"""{sql_vecs()},
 subs AS (
   {sql_subvectors("vecs")}
 )"""
@@ -358,22 +450,32 @@ def sql_trained_codebook_ctes() -> str:
     PARTITION BY s.vec_id, s.m
     ORDER BY {sql_sq_dist("s.sub", "c.csub", SUB_D)}, c.k) = 1
 )""")
-        parts.append(f"""u{t} AS (
-  SELECT m, k, i,
+        parts.append(sql_micro_mean_ctes(t, ("m", "k"), "sub", SUB_D, "csub"))
+    parts.append(f"codebook AS (SELECT m, k, csub FROM cb{TRAIN_ITERS})")
+    return ",\n".join(parts)
+
+
+def sql_micro_mean_ctes(
+    t: int, keys: tuple[str, ...], vec: str, dim: int, out: str
+) -> str:
+    """:func:`micro_mean` over the CTE ``a{t}``: the per-(keys, dim)
+    sums ``u{t}`` and the means ``cb{t}`` (*keys, out) of its
+    ``dim``-long ``vec`` arrays."""
+    k = ", ".join(keys)
+    return f"""u{t} AS (
+  SELECT {k}, i,
          CAST(SUM(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
               AS BIGINT) AS s,
          COUNT(*) AS n
-  FROM (SELECT m, k, unnest(sub) AS x,
-               unnest(generate_series(1, {SUB_D})) AS i
+  FROM (SELECT {k}, unnest({vec}) AS x,
+               unnest(generate_series(1, {dim})) AS i
         FROM a{t})
-  GROUP BY m, k, i
-)""")
-        parts.append(f"""cb{t} AS (
-  SELECT m, k, list(CAST(s AS DOUBLE) / n / 1000000.0 ORDER BY i) AS csub
-  FROM u{t} GROUP BY m, k
-)""")
-    parts.append(f"codebook AS (SELECT m, k, csub FROM cb{TRAIN_ITERS})")
-    return ",\n".join(parts)
+  GROUP BY {k}, i
+),
+cb{t} AS (
+  SELECT {k}, list(CAST(s AS DOUBLE) / n / 1000000.0 ORDER BY i) AS {out}
+  FROM u{t} GROUP BY {k}
+)"""
 
 
 def sql_pq_ctes() -> str:
@@ -499,3 +601,59 @@ cand AS (
   SELECT p.qid, a.vec_id, p.prn FROM probes p JOIN assign a ON a.cid = p.cid
   WHERE a.vec_id <> p.qid
 )"""
+
+
+def sql_cosine_topk() -> str:
+    """Oracle of :func:`cosine_topk`."""
+    return f"""WITH {sql_vecs()}
+    SELECT qid, vec_id, cosine, rn FROM (
+      SELECT q.vec_id AS qid, v.vec_id AS vec_id,
+             {sql_cosine("q.embedding", "v.embedding")} AS cosine,
+             row_number() OVER (PARTITION BY q.vec_id ORDER BY
+               {sql_cosine("q.embedding", "v.embedding")} DESC, v.vec_id) AS rn
+      FROM vecs q JOIN vecs v ON q.vec_id <> v.vec_id
+      WHERE q.vec_id < {N_QUERIES}
+    ) WHERE rn <= {TOP_K}"""
+
+
+def sql_ivf_cosine_ctes(n_probe: int) -> str:
+    """:func:`ivf_cosine_candidates` over ``vecs`` and its
+    :func:`coarse_cells` as the CTEs ``icents``, ``iassign``,
+    ``iprobes`` and ``iscored`` (qid, vec_id, prn, cosine)."""
+    return f"""icents AS ({sql_coarse_cells()}),
+    iassign AS (
+      SELECT vec_id, embedding, cid FROM (
+        SELECT v.vec_id, v.embedding, c.cid,
+               row_number() OVER (PARTITION BY v.vec_id ORDER BY
+                 {sql_cosine("v.embedding", "c.cv")} DESC, c.cid) AS arn
+        FROM vecs v CROSS JOIN icents c
+      ) WHERE arn = 1
+    ),
+    iprobes AS (
+      SELECT qid, cid, prn FROM (
+        SELECT q.vec_id AS qid, c.cid,
+               row_number() OVER (PARTITION BY q.vec_id ORDER BY
+                 {sql_cosine("q.embedding", "c.cv")} DESC, c.cid) AS prn
+        FROM vecs q CROSS JOIN icents c
+        WHERE q.vec_id < {N_QUERIES}
+      ) WHERE prn <= {n_probe}
+    ),
+    iscored AS (
+      SELECT p.qid, a.vec_id, p.prn,
+             {sql_cosine("q.embedding", "a.embedding")} AS cosine
+      FROM iprobes p
+      JOIN iassign a ON a.cid = p.cid AND a.vec_id <> p.qid
+      JOIN vecs q ON q.vec_id = p.qid
+    )"""
+
+
+def sql_ivf_topk() -> str:
+    """Oracle of :func:`ivf_topk`."""
+    return f"""WITH {sql_vecs()},
+    {sql_ivf_cosine_ctes(N_PROBE)}
+    SELECT qid, vec_id, cosine, rn FROM (
+      SELECT qid, vec_id, cosine,
+             row_number() OVER (PARTITION BY qid
+                                ORDER BY cosine DESC, vec_id) AS rn
+      FROM iscored
+    ) WHERE rn <= {TOP_K}"""

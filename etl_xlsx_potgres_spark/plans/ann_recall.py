@@ -3,17 +3,17 @@ approximate-nearest-neighbor deployment is judged by (recall@k against
 exact brute-force ground truth; the standard ann-benchmarks protocol).
 ``tools/pq_recall_probe.py`` measured this offline for the PQ family;
 this promotes the metric to a first-class, oracle-checked query over
-the IVF searcher: both the exact top-k (``ann_cosine_topk``'s plan)
-and the IVF probe-then-rerank top-k (``ann_ivf_topk``'s plan) run in
-one job, and each query's recall is the exact overlap of the two
+the IVF searcher: both the exact top-k (``ann_cosine_topk``'s kernel)
+and the IVF probe-then-rerank top-k (``ann_ivf_topk``'s kernel, both
+in ``operators/ann.py``) run in one job, and each query's recall is the exact overlap of the two
 k-sets.
 
 Why in-engine: at production scale the ground-truth pass is the
 expensive part (O(Q x N) scored pairs) — running it as a distributed
 query over a HELD-OUT query sample (here: the ``N_QUERIES`` fixture
 convention) is exactly how a 100 TB vector store validates its index
-nightly.  The candidate generation reuses the registered plans
-verbatim — same cells, same probes, same tiebreaks — so a regression
+nightly.  The candidate generation reuses the registered queries'
+kernels verbatim — same cells, same probes, same tiebreaks — so a regression
 in the IVF path shows up as a recall drop here, not just as a silent
 result change.
 
@@ -37,16 +37,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.ann import TOP_K
-from ..registry import ORACLES, register
-from .similarity import ann_cosine_topk, ann_ivf_topk
+from ..operators.ann import TOP_K, cosine_topk, ivf_topk, sql_cosine_topk, sql_ivf_topk
+from ..operators.vectors import valid_vecs
+from ..registry import register
+from ..sources import load_table
 
 
 @register(
     "ann_recall_eval",
     oracle=f"""
-    WITH exact_k AS ({ORACLES["ann_cosine_topk"]}),
-    ivf_k AS ({ORACLES["ann_ivf_topk"]}),
+    WITH exact_k AS ({sql_cosine_topk()}),
+    ivf_k AS ({sql_ivf_topk()}),
     qids AS (SELECT DISTINCT qid FROM exact_k),
     hits AS (
       SELECT e.qid, CAST(COUNT(*) AS BIGINT) AS n_hits
@@ -60,8 +61,9 @@ from .similarity import ann_cosine_topk, ann_ivf_topk
     """,
 )
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact_k = ann_cosine_topk(spark, sf_dir).select("qid", "vec_id")
-    ivf_k = ann_ivf_topk(spark, sf_dir).select("qid", "vec_id")
+    emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
+    exact_k = cosine_topk(emb).select("qid", "vec_id")
+    ivf_k = ivf_topk(emb).select("qid", "vec_id")
     hits = (
         exact_k.join(ivf_k, ["qid", "vec_id"])
         .groupBy("qid")

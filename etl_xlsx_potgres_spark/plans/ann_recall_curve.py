@@ -53,23 +53,25 @@ from ..operators.ann import (
     adc_scan,
     coarse_candidates,
     coarse_cells,
+    cosine_topk,
     exact_d2_micro,
+    ivf_cosine_candidates,
     pq_encode,
     pq_lut,
     sql_adc,
     sql_coarse_candidates,
-    sql_coarse_cells,
+    sql_cosine_topk,
     sql_exact_ctes,
+    sql_ivf_cosine_ctes,
     sql_pq_ctes,
     sql_trained_codebook_ctes,
     sql_vecs_subs,
     subvectors,
     train_codebook,
 )
-from ..operators.vectors import cosine, sql_cosine, valid_vecs
-from ..registry import ORACLES, register
+from ..operators.vectors import valid_vecs
+from ..registry import register
 from ..sources import load_table
-from .similarity import ann_cosine_topk
 
 PROBE_LEVELS = [1, 2, 4, 8]
 _LEVELS_DUCK = "[" + ", ".join(str(p) for p in PROBE_LEVELS) + "]"
@@ -84,31 +86,7 @@ _SLEVELS_DUCK = "[" + ", ".join(str(s) for s in SHORTLIST_LEVELS) + "]"
 def _oracle() -> str:
     ivf = f"""
     levels AS (SELECT unnest({_LEVELS_DUCK}) AS p),
-    icents AS ({sql_coarse_cells()}),
-    iassign AS (
-      SELECT vec_id, embedding, cid FROM (
-        SELECT v.vec_id, v.embedding, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 {sql_cosine("v.embedding", "c.cv")} DESC, c.cid) AS arn
-        FROM vecs v CROSS JOIN icents c
-      ) WHERE arn = 1
-    ),
-    iprobes AS (
-      SELECT qid, cid, prn FROM (
-        SELECT q.vec_id AS qid, c.cid,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {sql_cosine("q.embedding", "c.cv")} DESC, c.cid) AS prn
-        FROM vecs q CROSS JOIN icents c
-        WHERE q.vec_id < {N_QUERIES}
-      ) WHERE prn <= {_MAX_PROBE}
-    ),
-    iscored AS (
-      SELECT p.qid, a.vec_id, p.prn,
-             {sql_cosine("q.embedding", "a.embedding")} AS cosine
-      FROM iprobes p
-      JOIN iassign a ON a.cid = p.cid AND a.vec_id <> p.qid
-      JOIN vecs q ON q.vec_id = p.qid
-    ),
+    {sql_ivf_cosine_ctes(_MAX_PROBE)},
     itopk AS (
       SELECT p, qid, vec_id FROM (
         SELECT l.p, s.qid, s.vec_id,
@@ -117,7 +95,7 @@ def _oracle() -> str:
         FROM iscored s CROSS JOIN levels l WHERE s.prn <= l.p
       ) WHERE rn <= {TOP_K}
     ),
-    iexact AS ({ORACLES["ann_cosine_topk"]}),
+    iexact AS ({sql_cosine_topk()}),
     ihits AS (
       SELECT t.p, CAST(COUNT(*) AS BIGINT) AS n_hits
       FROM itopk t JOIN iexact e ON e.qid = t.qid AND e.vec_id = t.vec_id
@@ -286,38 +264,10 @@ def _curve_rows(
     )
 
 
-def _ivf_curve(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, levels: DataFrame
-) -> DataFrame:
-    cents = coarse_cells(emb)
-    aw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "cid")
-    assign = (
-        emb.crossJoin(constant_size(cents))
-        .withColumn("ccos", cosine("embedding", "cv"))
-        .withColumn("arn", F.row_number().over(aw))
-        .filter(F.col("arn") == 1)
-        .select("vec_id", "embedding", "cid")
-    )
-    probes = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .crossJoin(constant_size(cents))
-        .withColumn("ccos", cosine("qv", "cv"))
-        .withColumn(
-            "prn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("ccos"), "cid")
-            ),
-        )
-        .filter(F.col("prn") <= _MAX_PROBE)
-        .select("qid", "qv", "cid", "prn")
-    )
-    cosine_qv = cosine("qv", "embedding")
+def _ivf_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
     # scored once at the deepest level; every level filters prn <= p
     scored = scoped_persist(
-        probes.join(assign, "cid")
-        .filter(F.col("qid") != F.col("vec_id"))
-        .select("qid", "vec_id", "prn", cosine_qv.alias("cosine"))
+        ivf_cosine_candidates(emb, _MAX_PROBE)
     )
     lw = Window.partitionBy("p", "qid").orderBy(F.desc("cosine"), "vec_id")
     topk = (
@@ -326,7 +276,7 @@ def _ivf_curve(
         .filter(F.col("rn") <= TOP_K)
         .select("p", "qid", "vec_id")
     )
-    exact_k = ann_cosine_topk(spark, sf_dir).select("qid", "vec_id")
+    exact_k = cosine_topk(emb).select("qid", "vec_id")
     hits = (
         topk.join(exact_k, ["qid", "vec_id"])
         .groupBy("p")
@@ -436,6 +386,6 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         valid_vecs(load_table(spark, sf_dir, "embeddings"))
     )
     levels = _levels_frame(spark)
-    return _ivf_curve(spark, sf_dir, emb, levels).unionByName(
+    return _ivf_curve(emb, levels).unionByName(
         _ivfpq_curve(emb, levels)
     )

@@ -5,7 +5,7 @@ side, the right shape when the Python work is itself Arrow-native
 (pyarrow.compute kernels, Arrow-IPC-speaking libraries, zero-copy
 hand-off to tokenizers). Completes the Python-boundary matrix the
 engine exercises: row Python UDF (banned by plan lint), pandas UDF,
-mapInPandas, cogrouped/grouped pandas, UDTF (``chunk_udtf``), and now
+mapInPandas, cogrouped/grouped pandas, UDTF (``text_chunk_udtf``), and now
 raw-Arrow batches.
 
 The demo computes per-document char/token counts entirely with

@@ -51,7 +51,7 @@ def _provision(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         (
             # cluster by the bucket key first: one task per bucket ->
             # ONE file per bucket at any upstream width (see
-            # dedup_incremental._provision_store, r20)
+            # operators.stores.provision_store, r20)
             load_table(spark, sf_dir, table)
             .repartition(N_BUCKETS, key)
             .write.mode("overwrite")

@@ -6,7 +6,7 @@ because a 512-token context budget overflows on morphology-heavy text
 if chunks are sized in words.
 
 Token cost: each word's symbol count AFTER applying the
-``text_bpe_merge_rounds`` learned merges (``plans/bpe_train``'s exact
+``text_bpe_merge_rounds`` learned merges (``operators/bpe.py``'s exact
 replace semantics, applied per occurrence with the 3 trained
 (pair, merged) winners as 1-row broadcasts — no vocabulary join, so
 the costing is row-local and the vocab frame never moves).
@@ -26,7 +26,7 @@ Dual implementation, mutually pinned through ONE oracle:
   docs take the explode+window running-sum path (linear per doc, the
   shuffle confined to long docs' tokens);
 - ``text_chunk_token_budget_udtf`` — the Arrow UDTF escape hatch
-  (``chunk_udtf``'s lateral-join shape) receiving the trained merges
+  (``text_chunk_udtf``'s lateral-join shape) receiving the trained merges
   as an argument; the Python loop must reproduce the JVM chunker
   byte-for-byte or the shared oracle hash breaks.
 
@@ -47,58 +47,29 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
 from ..hints import constant_size
+from ..operators.bpe import (
+    N_MERGE_ROUNDS,
+    SQL_MERGES_COLS,
+    SQL_TRAIN_CTES,
+    cost_expr,
+    merges_row,
+)
 from ..operators.text import py_tokens, sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .bpe_train import N_MERGE_ROUNDS, _TRAIN_CTES, _merge_rounds, _word_counts
 
 BUDGET = 64  # BPE tokens per chunk
 
 
-def _cost_expr(engine: str) -> str:
-    """Per-word BPE token cost: char-split repr -> the N learned
-    merges applied exactly as training does (pad, replace, trim) ->
-    symbol count.  ``p{k}``/``m{k}`` are the space-padded pair/merged
-    columns provided by the 1-row merges frame."""
-    if engine == "spark":
-        split_chars = (
-            "array_join(transform(sequence(1, length(w)),"
-            " i -> substring(w, i, 1)), ' ')"
-        )
-        r = split_chars
-        for k in range(1, N_MERGE_ROUNDS + 1):
-            r = f"trim(replace(concat(' ', {r}, ' '), p{k}, m{k}))"
-        return (
-            f"transform(toks, w -> CAST(size(split({r}, ' ')) AS BIGINT))"
-        )
-    split_chars = (
-        "array_to_string(list_transform(generate_series(1, length(w)),"
-        " i -> substring(w, i, 1)), ' ')"
-    )
-    r = split_chars
-    for k in range(1, N_MERGE_ROUNDS + 1):
-        r = f"trim(replace(' ' || {r} || ' ', p{k}, m{k}))"
-    return (
-        f"list_transform(toks, w ->"
-        f" CAST(len(string_split({r}, ' ')) AS BIGINT))"
-    )
-
-
-_MG_COLS = ", ".join(
-    f"(SELECT ' ' || pair || ' ' FROM t{k}) AS p{k},"
-    f" (SELECT ' ' || merged || ' ' FROM t{k}) AS m{k}"
-    for k in range(1, N_MERGE_ROUNDS + 1)
-)
-
 _ORACLE = f"""
-WITH {_TRAIN_CTES},
-mg AS (SELECT {_MG_COLS}),
+WITH {SQL_TRAIN_CTES},
+mg AS (SELECT {SQL_MERGES_COLS}),
 base AS (
   SELECT doc_id, {sql_tokens()} AS toks FROM documents
   WHERE len({sql_tokens()}) > 0
 ),
 costed AS (
-  SELECT doc_id, toks, {_cost_expr('duck')} AS costs
+  SELECT doc_id, toks, {cost_expr('duck')} AS costs
   FROM base CROSS JOIN mg
 ),
 prefixed AS (
@@ -140,21 +111,6 @@ transform(array_sort(array_distinct(cids)), c -> named_struct(
 """
 
 
-def _merges_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-row frame (p1, m1, ..., pN, mN): the trained winners, space-
-    padded exactly as the training replace expects."""
-    tops = _merge_rounds(_word_counts(spark, sf_dir))
-    mrow = None
-    for k, top in enumerate(tops, start=1):
-        cur = top.select(
-            F.concat(F.lit(" "), F.col("pair"), F.lit(" ")).alias(f"p{k}"),
-            F.concat(F.lit(" "), F.col("merged"), F.lit(" ")).alias(f"m{k}"),
-        )
-        # 1-row winner frames (the bpe_train broadcast contract)
-        mrow = cur if mrow is None else mrow.crossJoin(constant_size(cur))
-    return mrow
-
-
 # Word-count gate between the two physical strategies: the row-local
 # HOF path computes each word's prefix sum with an O(n) slice fold —
 # O(n^2) per document, shuffle-free and fastest for the short docs
@@ -181,9 +137,9 @@ def _costed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree carries its own copy of the entire BPE-training pipeline
     # (the corpus word-count shuffle runs twice — seen in the r17 plan
     # audit, 16 Exchanges vs 8)
-    merges_row_df = scoped_persist(_merges_row(spark, sf_dir))
+    merges_row_df = scoped_persist(merges_row(load_table(spark, sf_dir, "documents")))
     return base.crossJoin(constant_size(merges_row_df)).select(
-        "doc_id", "toks", F.expr(_cost_expr("spark")).alias("costs")
+        "doc_id", "toks", F.expr(cost_expr("spark")).alias("costs")
     )
 
 
@@ -345,7 +301,7 @@ def text_chunk_token_budget_udtf(
     d.select("doc_id", "text").createOrReplaceTempView("docs_for_bpe_chunk")
     # un-pad the stored ' pair ' / ' merged ' columns back to the raw
     # strings — the UDTF re-pads exactly as the JVM replace does
-    merges = _merges_row(spark, sf_dir).select(
+    merges = merges_row(load_table(spark, sf_dir, "documents")).select(
         F.array(
             *[
                 F.expr(f"substring({c}{k}, 2, length({c}{k}) - 2)")

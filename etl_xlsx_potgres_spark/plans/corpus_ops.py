@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.ann import KMEANS_K
 from ..operators.text import sql_tokens, tokens
 from ..operators.vectors import EMB_DIM, sq_dist, sql_sq_dist
 from ..registry import register
@@ -446,8 +447,8 @@ def emb_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # clustering primitive behind semantic dedup and corpus bucketing.
 # Seeds are the first K vectors by id (deterministic, no RNG); the
 # assignment distance is a sequential fold; per-cluster inertia is an
-# exact bigint micro-unit sum.
-KMEANS_K = 10
+# exact bigint micro-unit sum. K is KMEANS_K (operators/ann.py),
+# shared with semantic dedup.
 
 
 @register(

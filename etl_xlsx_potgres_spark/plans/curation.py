@@ -48,9 +48,9 @@ from ..operators.text import (
     sql_tokens,
     token_count,
 )
+from ..operators.splits import SQL_SPLIT, with_split
 from ..registry import register
 from ..sources import load_table
-from .training_data import _SPLIT_SQL, _with_split
 
 _MIN_TOKENS = 20
 _JACCARD_HI = 0.8
@@ -128,7 +128,7 @@ def curate_corpus(
 def curation_stats(kept: DataFrame) -> DataFrame:
     """Stage 4 — deterministic split + per-(split, lang) audit rollup."""
     return (
-        _with_split(kept)
+        with_split(kept)
         .groupBy("split", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -166,7 +166,7 @@ def curation_stats(kept: DataFrame) -> DataFrame:
       WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= {_JACCARD_HI}
     ),
     kept AS (
-      SELECT doc_id, lang, n_toks, {_SPLIT_SQL} AS split
+      SELECT doc_id, lang, n_toks, {SQL_SPLIT} AS split
       FROM exact WHERE doc_id NOT IN (SELECT d2 FROM drops)
     )
     SELECT split, lang, COUNT(*) AS n_docs,

@@ -12,8 +12,9 @@ Scale shapes (the whole point of each design):
 - MinHash+LSH: fixed-size signature per doc (map-only), band keys,
   shuffle on band key only. Candidate pairs = docs sharing ≥1 band,
   with hot buckets occupancy-capped (BAND_CAP) so no bucket can go
-  quadratic. Hashes are md5-based and portable (operators/text.py) so
-  the DuckDB oracle reproduces them bit-for-bit.
+  quadratic. The band kernels and their DuckDB twins live in
+  operators/lsh.py; hashes are md5-based and portable, so the DuckDB
+  oracle reproduces them bit-for-bit.
 - SimHash: fixed 32-bit signature, map-only; banding on signature
   quarters for candidates.
 - embedding cosine: label-blocked pairs (in production: LSH/IVF
@@ -26,6 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..operators.lsh import (
+    BAND_CAP,
+    SQL_BANDS,
+    SQL_CANDIDATES,
+    band_rows,
+    lsh_candidate_pairs,
+    minhash_signatures,
+)
 from ..operators.text import (
     fingerprint,
     shingles_long,
@@ -33,7 +42,6 @@ from ..operators.text import (
     sql_normalize,
     sql_shingles,
     sql_simhash_expr,
-    sql_tokens,
     tokens,
 )
 from ..operators.vectors import (
@@ -113,22 +121,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("d1", "d2", "inter", "uni", "jaccard")
 
 
-def _minhash_sig_df(d: DataFrame) -> DataFrame:
-    """doc_id + mh0..mh7 via long-form shingles + groupBy-min: one md5
-    per (shingle, seed), partial min map-side, the shuffle carries
-    only (doc_id, 8 hashes) — the shape that survives 100 TB corpora
-    (vs evaluating 8 interpreted array-fold expressions per row).
-    Docs with no shingles are restored with NULL signatures (matching
-    the array formulation and the oracle)."""
-    sh = shingles_long(d, "text", 3)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))).alias(f"mh{i}")
-        for i in range(8)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    return d.select("doc_id").join(sig, "doc_id", "left")
-
-
 @register(
     "dedup_minhash_signatures",
     oracle=f"""
@@ -137,168 +129,7 @@ def _minhash_sig_df(d: DataFrame) -> DataFrame:
     """,
 )
 def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_sig_df(load_table(spark, sf_dir, "documents"))
-
-
-# Per-(band_id, band_key) occupancy cap for the LSH candidate
-# generator.  Web corpora have hot bands BY CONSTRUCTION (boilerplate
-# pages share whole signatures): a band bucket with B documents emits
-# B(B-1)/2 candidate pairs, so without a cap the candidate join is
-# quadratic in band occupancy — the one geometry that can melt a
-# 100 TB dedup run even though every shuffle key is correct.  The cap
-# keeps the top-K documents per bucket by doc_id (deterministic,
-# engine-portable: row_number over an ORDER BY on the unique key),
-# bounding the SELF-JOIN at K(K-1)/2 pairs per bucket.  Clipping
-# alone, though, severs whole clusters (ADVICE r17): when documents
-# share an entire signature — exactly the boilerplate pathology the
-# cap targets — all their band buckets are the SAME hot bucket, the
-# same smallest doc_ids win every one, and members beyond the cap
-# lose every candidate edge.  So every bucket additionally emits STAR
-# edges — (bucket minimum doc_id, member) for each member — which is
-# B-1 rows per bucket (linear, a groupBy-min plus an equi-join on the
-# band key the bucket is already shuffled on, never quadratic) and
-# keeps every clipped member connected to its bucket's cluster for
-# the components/calibration consumers.  `dedup_minhash_band_stats`
-# reports both the clipping and the star volume as hash-checked data.
-BAND_CAP = 8
-
-# Shared oracle-side band geometry (single source of truth — the
-# Spark twin is band_rows/capped_band_rows/lsh_candidate_pairs below;
-# graph_components._PAIRS_SQL composes these same fragments).
-_BANDS_SQL = f"""
-    sig AS (
-      SELECT doc_id, {", ".join(sql_minhash_exprs("text"))}
-      FROM documents
-      WHERE len({sql_tokens()}) >= 3
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band_id, md5(mh0 || mh1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(mh2 || mh3) FROM sig
-      UNION ALL SELECT doc_id, 2, md5(mh4 || mh5) FROM sig
-      UNION ALL SELECT doc_id, 3, md5(mh6 || mh7) FROM sig
-    ),
-    capped_bands AS (
-      SELECT doc_id, band_id, band_key FROM (
-        SELECT doc_id, band_id, band_key,
-               row_number() OVER (PARTITION BY band_id, band_key
-                                  ORDER BY doc_id) AS band_rank
-        FROM bands
-      ) WHERE band_rank <= {BAND_CAP}
-    )"""
-
-_CAND_SQL = """
-    band_mins AS (
-      SELECT band_id, band_key, MIN(doc_id) AS leader
-      FROM bands GROUP BY band_id, band_key
-    ),
-    cand AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2, a.band_id
-      FROM capped_bands a JOIN capped_bands b
-        ON a.band_key = b.band_key AND a.band_id = b.band_id
-       AND a.doc_id < b.doc_id
-      UNION ALL
-      SELECT m.leader AS d1, b.doc_id AS d2, b.band_id
-      FROM bands b JOIN band_mins m
-        ON m.band_id = b.band_id AND m.band_key = b.band_key
-      WHERE b.doc_id > m.leader
-    )"""
-
-
-def band_rows(sig: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_key): one pass — explode the 4 band keys
-    from the signature row instead of unioning 4 recomputations of the
-    signature subplan."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band_id"),
-                F.md5(F.concat(F.col(f"mh{2 * i}"), F.col(f"mh{2 * i + 1}"))).alias(
-                    "band_key"
-                ),
-            )
-            for i in range(4)
-        ]
-    )
-    return sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id",
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_key").alias("band_key"),
-    )
-
-
-def ranked_band_rows(bands: DataFrame, cap: int = BAND_CAP) -> DataFrame:
-    """Band rows with at most ``cap`` documents per (band_id, band_key)
-    bucket (smallest doc_ids win — deterministic), band_rank kept so
-    rank 1 doubles as the bucket leader for the star-edge leg.  The
-    row_number window shuffles on exactly the key the candidate
-    self-join needs, so the cap costs no extra Exchange on that side;
-    within a hot bucket the window pass is linear in occupancy (the
-    B² blowup it prevents was in the join, not here)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band_id", "band_key").orderBy("doc_id")
-    return bands.withColumn("band_rank", F.row_number().over(w)).filter(
-        F.col("band_rank") <= cap
-    )
-
-
-def capped_band_rows(sig: DataFrame, cap: int = BAND_CAP) -> DataFrame:
-    return ranked_band_rows(band_rows(sig), cap).drop("band_rank")
-
-
-def star_edges(bands: DataFrame, ranked: DataFrame) -> DataFrame:
-    """(d1, d2, band_id): one edge from each band bucket's minimum
-    doc_id — the rank-1 survivor the cap already computed — to every
-    other member: B-1 rows per bucket, LINEAR in occupancy, so clipped
-    members of a hot bucket stay connected to its cluster (ADVICE r17:
-    clipping alone severed exact-duplicate clusters whose every band
-    is the same hot bucket).  Reusing the window's rank 1 instead of a
-    fresh groupBy-min keeps the leader frame on the (band_id,
-    band_key) partitioning the window produced, and the member side's
-    join Exchange is byte-identical to the window's input Exchange —
-    Spark reuses it, so the star leg adds no new shuffle pass over the
-    band frame."""
-    leaders = ranked.filter(F.col("band_rank") == 1).select(
-        "band_id", "band_key", F.col("doc_id").alias("d1")
-    )
-    return (
-        bands.join(leaders, ["band_id", "band_key"])
-        .filter(F.col("doc_id") > F.col("d1"))
-        .select("d1", F.col("doc_id").alias("d2"), "band_id")
-    )
-
-
-def pairs_from_bands(bands: DataFrame) -> DataFrame:
-    """Banded self-join over prepared (doc_id, band_id, band_key) rows
-    — callers that reuse the band frame on both sides should persist
-    it so the signature+cap subtree runs once."""
-    a = bands.select(F.col("doc_id").alias("d1"), "band_id", "band_key")
-    b = bands.select(F.col("doc_id").alias("d2"), "band_id", "band_key")
-    return (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", "band_id")
-    )
-
-
-def lsh_candidate_pairs(sig: DataFrame, cap: int = BAND_CAP) -> DataFrame:
-    """(d1, d2, band_id) candidate pairs: the capped banded self-join
-    (≤ cap(cap-1)/2 pairs per band bucket) UNION the linear star
-    edges (leader→member per bucket, so clipped docs keep their
-    cluster edge), shuffle keyed on (band_id, band_key) only.  Both
-    legs read ONE persisted band frame (the signature subplan and the
-    band explode run once); the capped frame is persisted too so the
-    occupancy-cap window runs once, not per join side.  Shared by
-    ``dedup_minhash_lsh_pairs``, ``dedup_minhash_calibration`` and
-    ``dedup_connected_components`` (advice r16: one geometry, one
-    place).  Emits duplicates across legs (a leader↔survivor pair
-    appears in both) and across bands — consumers dedup by (d1, d2)
-    or count distinct band_id, as before."""
-    bands = scoped_persist(band_rows(sig))
-    ranked = scoped_persist(ranked_band_rows(bands, cap))
-    return pairs_from_bands(ranked.drop("band_rank")).unionByName(
-        star_edges(bands, ranked)
-    )
+    return minhash_signatures(load_table(spark, sf_dir, "documents"))
 
 
 # LSH banding over the MinHash signature: 4 bands x 2 rows. Documents
@@ -308,8 +139,8 @@ def lsh_candidate_pairs(sig: DataFrame, cap: int = BAND_CAP) -> DataFrame:
 @register(
     "dedup_minhash_lsh_pairs",
     oracle=f"""
-    WITH {_BANDS_SQL},
-    {_CAND_SQL}
+    WITH {SQL_BANDS},
+    {SQL_CANDIDATES}
     SELECT d1, d2, COUNT(DISTINCT band_id) AS n_shared_bands
     FROM cand
     GROUP BY d1, d2
@@ -317,7 +148,7 @@ def lsh_candidate_pairs(sig: DataFrame, cap: int = BAND_CAP) -> DataFrame:
 )
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sig = _minhash_sig_df(d).filter(F.col("mh0").isNotNull())
+    sig = minhash_signatures(d).filter(F.col("mh0").isNotNull())
     # persistence lives inside lsh_candidate_pairs: both join sides
     # and the star leg read one cached band frame, and the
     # occupancy-cap window runs once (r17 plan audit), not per side
@@ -341,7 +172,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_band_stats",
     oracle=f"""
-    WITH {_BANDS_SQL},
+    WITH {SQL_BANDS},
     occ AS (
       SELECT band_id, band_key, COUNT(*) AS n
       FROM bands GROUP BY band_id, band_key
@@ -363,7 +194,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sig = _minhash_sig_df(d).filter(F.col("mh0").isNotNull())
+    sig = minhash_signatures(d).filter(F.col("mh0").isNotNull())
     occ = band_rows(sig).groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -393,9 +224,7 @@ def _simhash_df(d: DataFrame) -> DataFrame:
     """(doc_id, simhash): 32-bit SimHash as a bit string.  Explode
     tokens -> one md5 per token -> 32 map-side-partial ±1 sums ->
     groupBy doc -> bit string. Same scale shape as MinHash: the
-    shuffle carries (doc_id, 32 small ints).  Shared by the batch
-    signature query below and the incremental store variant
-    (``plans/dedup_incremental_more``)."""
+    shuffle carries (doc_id, 32 small ints)."""
     exploded = (
         d.select(
             "doc_id",

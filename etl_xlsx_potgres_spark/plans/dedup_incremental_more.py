@@ -6,11 +6,11 @@ history side is a bucketed signature store read with NO Exchange —
 the 100-TB history shuffle is paid once at write time, each new
 ingest batch shuffles only itself into the store's bucketing.
 
-Five stores, same lifecycle as the MinHash band store (shared
-``_store_root``: per-session dir, atexit cleanup, stale-sibling
-sweep) — the four dedup-family signature stores below plus the r19
-PQ-code companion of the semantic cell store (see the incremental
-IVF-PQ section):
+Five stores, same lifecycle as the MinHash band store
+(``operators/stores.py``: per-session dir, atexit cleanup,
+stale-sibling sweep, provision cache) — the four dedup-family
+signature stores below plus the r19 PQ-code companion of the semantic
+cell store (see the incremental IVF-PQ section):
 
 - Exact: history rows ``(doc_id, fp)`` — the ``dedup_exact_documents``
   md5-of-normalized-text fingerprint, bucketed on ``fp``: the
@@ -90,16 +90,16 @@ from ..operators.ann import (
     subvectors,
     train_codebook,
 )
-from ..operators.vectors import cosine, duck_valid, sql_cosine, valid_vecs
-from ..registry import register
-from ..sources import load_table
-from .dedup_incremental import (
-    N_BUCKETS,
+from ..operators.stores import (
     append_to_store,
     cached_table,
     compact_store,
-    _store_root,
+    provision_store,
+    store_root,
 )
+from ..operators.vectors import cosine, duck_valid, sql_cosine, valid_vecs
+from ..registry import register
+from ..sources import load_table
 
 HAM_T = 8          # max Hamming distance (of 64) for a simhash near-dup
 JACCARD_T = 0.05   # the dedup_ngram_jaccard threshold
@@ -120,39 +120,6 @@ COS_T = 0.4        # the dedup_embedding_neardup fixture threshold
 # super-sqrt term in the r18 100x probe).  The clip is visible as
 # data: n_cand_unbounded carries the probed cells' true occupancy.
 SEM_VERIFY_CAP = 4 * SEM_CELL_SIZE
-
-
-def _provision(
-    spark: SparkSession, sf_dir: str, kind: str, frame: DataFrame,
-    bucket_col: str, force: bool = False,
-) -> str:
-    """History frame as a bucketed+sorted external table (idempotent
-    per SF; catalog entry re-registered per session).  r20 (VERDICT
-    r19 task 3): built ONCE per session via the provision cache —
-    serving queries pay the probe, never the rebuild; ``force=True``
-    is for the provision-side queries whose job IS the build."""
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    name = f"{kind}_store_{sf.replace('.', '_').replace('-', '_')}"
-
-    def build() -> None:
-        path = os.path.join(_store_root(spark), name)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            # cluster by the bucket column first: one task per bucket
-            # -> ONE file per bucket at any upstream width (see
-            # dedup_incremental._provision_store, r20)
-            frame.repartition(N_BUCKETS, bucket_col)
-            .write.mode("overwrite")
-            .bucketBy(N_BUCKETS, bucket_col)
-            .sortBy(bucket_col)
-            .option("path", path)
-            .format("parquet")
-            .saveAsTable(name)
-        )
-
-    return cached_table(
-        spark, name, os.path.abspath(sf_dir), build, force=force
-    )
 
 
 # --- SimHash ---------------------------------------------------------
@@ -299,7 +266,7 @@ def _provision_simhash_store(spark: SparkSession, sf_dir: str) -> str:
     hist = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 != 0
     )
-    return _provision(
+    return provision_store(
         spark, sf_dir, "simhash_band", _sim_bands(_simhash64_df(hist)), "band"
     )
 
@@ -406,7 +373,7 @@ def _provision_ngram_store(spark: SparkSession, sf_dir: str) -> str:
     hist = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 != 0
     )
-    return _provision(
+    return provision_store(
         spark, sf_dir, "ngram_shingle", _shingle_keys(hist), "key"
     )
 
@@ -499,7 +466,7 @@ def _provision_exact_store(spark: SparkSession, sf_dir: str) -> str:
         F.col("doc_id") % 10 != 0
     )
     frame = hist.select("doc_id", fingerprint("text").alias("fp"))
-    return _provision(spark, sf_dir, "exact_fp", frame, "fp")
+    return provision_store(spark, sf_dir, "exact_fp", frame, "fp")
 
 
 def _recrawl_batch(d: DataFrame) -> DataFrame:
@@ -588,7 +555,7 @@ def _coin_expr(col: str = "vec_id"):
 
 # the shared seeding/assignment/probe CTE chain (composed by BOTH the
 # semantic-dedup oracle and the ann_incremental_ivf oracle below —
-# one geometry, one place, the dedup_fuzzy._BANDS_SQL discipline)
+# one geometry, one place, the operators.lsh.SQL_BANDS discipline)
 _SEM_CTES = f"""hvecs AS (
   SELECT vec_id, embedding FROM embeddings
   WHERE {duck_valid()} AND vec_id % 10 <> 0
@@ -953,7 +920,7 @@ def _provision_semantic_store(
     ).select("vec_id", "embedding")
     cents = _sem_cents(hist)
     assign = _sem_assign(hist, cents)
-    return _provision(
+    return provision_store(
         spark, sf_dir, "semantic_cell", _semantic_rank(assign), "cid",
         force=force,
     )
@@ -1318,7 +1285,7 @@ def _provision_semantic_pq(
     def build_cb() -> None:
         base = spark.table(store).select("vec_id", "cid", "embedding")
         cb = train_codebook(subvectors(base))
-        cb_path = os.path.join(_store_root(spark), cb_name)
+        cb_path = os.path.join(store_root(spark), cb_name)
         spark.sql(f"DROP TABLE IF EXISTS {cb_name}")
         (
             cb.write.mode("overwrite").option("path", cb_path)
@@ -1330,7 +1297,7 @@ def _provision_semantic_pq(
     )
     base = spark.table(store).select("vec_id", "cid", "embedding")
     codes = _encode_cells(base, spark.table(cb_name))
-    code_store = _provision(
+    code_store = provision_store(
         spark, sf_dir, "semantic_pqcode", codes, "cid", force=force
     )
     return code_store, cb_name

@@ -4,7 +4,7 @@ systematically starves whole registered domains whose score
 distribution sits low (CCNet applies its quantile cuts PER GROUP for
 exactly this reason; RefinedWeb tracks per-domain gate rates as the
 curation health metric).  This query joins the NB quality scores
-(``plans/quality_classifier._scores`` — the same fitted model, same
+(``operators/classifier.nb_scores`` — the same fitted model, same
 micro-nat arithmetic) with the registered-domain key extracted by the
 ``fn_url_pack`` machinery, cuts each DOMAIN's score distribution at
 its own top-30% quantile, and reports the per-(domain, band) rollup a
@@ -43,8 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.classifier import SQL_NB_SCORES, nb_scores
 from ..registry import register
-from .quality_classifier import _ORACLE_SCORES, _scores
+from ..sources import load_table
 
 BIN_MICRO = 10000  # score-bin width in micro-nats
 KEEP_NUM, KEEP_DEN = 3, 10  # keep the top 30% per domain
@@ -71,7 +72,7 @@ _DUCK_DOMAIN = (
 _BIN_EXPR = f"CAST(floor(CAST(score_micro AS DOUBLE) / {BIN_MICRO}) AS INT)"
 
 _ORACLE = f"""
-WITH s AS ({_ORACLE_SCORES}),
+WITH s AS ({SQL_NB_SCORES}),
 scored AS (
   SELECT {_DUCK_DOMAIN} AS registered_domain,
          {_BIN_EXPR} AS score_bin
@@ -109,7 +110,7 @@ GROUP BY 1, 2
 
 @register("quality_domain_calibrated", oracle=_ORACLE)
 def quality_domain_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scored = _scores(spark, sf_dir).select(
+    scored = nb_scores(load_table(spark, sf_dir, "documents")).select(
         F.expr(_SPARK_DOMAIN).alias("registered_domain"),
         F.expr(_BIN_EXPR).alias("score_bin"),
     )

@@ -24,8 +24,9 @@ Rules (paper thresholds; per-document fail flags):
   bounds the quadratic term;
 - duplicate line / line-char-mass / paragraph / paragraph-char-mass
   fractions over the SAME deterministic multi-line synthesis as
-  ``quality_gopher_lines`` (identical ``_DUCK_LINES``/``_SPARK_LINES``
-  expressions imported, so the two queries cannot drift).
+  ``quality_gopher_lines`` (identical ``SQL_LINES``/``SPARK_LINES``
+  expressions from ``operators/gopher.py``, so the two queries cannot
+  drift).
 
 Plan shape: every rule is a higher-order array function over the
 row's own tokens — the aggregation grain equals the row grain, so
@@ -44,22 +45,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.text import sql_tokens, tokens
-from ..registry import register
-from ..sources import load_table
-from .gopher_quality import DUP_TOKEN_MAX, TOP_BIGRAM_MAX, _DUCK_BIGRAMS
-from .gopher_lines import (
+from ..operators.gopher import (
     DUP_LINE_CHAR_MAX,
     DUP_LINE_MAX,
     DUP_PARA_CHAR_MAX,
     DUP_PARA_MAX,
-    _DUCK_LINES,
-    _DUCK_PARAS,
-    _SPARK_LINES,
-    _SPARK_PARAS,
-    _duck_chars,
-    _spark_chars,
+    DUP_TOKEN_MAX,
+    SPARK_LINES,
+    SPARK_PARAS,
+    SQL_BIGRAMS,
+    SQL_LINE_METRICS,
+    SQL_LINES,
+    SQL_PARAS,
+    TOP_BIGRAM_MAX,
+    line_metrics,
 )
+from ..operators.text import sql_tokens, tokens
+from ..registry import register
+from ..sources import load_table
 
 WC_MIN, WC_MAX = 50, 100000
 MWL_MIN, MWL_MAX = 3.0, 10.0
@@ -133,9 +136,9 @@ WITH base AS (
   SELECT doc_id, {sql_tokens()} AS toks FROM documents
 ),
 stru AS (
-  SELECT doc_id, toks, {_DUCK_BIGRAMS} AS bigrams, lines,
-         {_DUCK_PARAS} AS paras
-  FROM (SELECT doc_id, toks, {_DUCK_LINES} AS lines FROM base)
+  SELECT doc_id, toks, {SQL_BIGRAMS} AS bigrams, lines,
+         {SQL_PARAS} AS paras
+  FROM (SELECT doc_id, toks, {SQL_LINES} AS lines FROM base)
 ),
 m AS (
   SELECT doc_id,
@@ -148,14 +151,7 @@ m AS (
               s -> list_contains(toks, s))) AS BIGINT) AS n_stopwords,
          CAST(len(bigrams) AS BIGINT) AS n_bigrams,
          CAST(COALESCE({_DUCK_TOP_BIGRAM}, 0) AS BIGINT) AS top_bigram_n,
-         CAST(len(lines) AS BIGINT) AS n_lines,
-         CAST(len(list_distinct(lines)) AS BIGINT) AS nd_lines,
-         {_duck_chars('lines')} AS c_lines,
-         {_duck_chars('list_distinct(lines)')} AS cd_lines,
-         CAST(len(paras) AS BIGINT) AS n_paras,
-         CAST(len(list_distinct(paras)) AS BIGINT) AS nd_paras,
-         {_duck_chars('paras')} AS c_paras,
-         {_duck_chars('list_distinct(paras)')} AS cd_paras
+         {SQL_LINE_METRICS}
   FROM stru
 ),
 flagged AS (
@@ -175,8 +171,8 @@ def quality_gopher_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     stru = (
         d.select("doc_id", tokens("text").alias("toks"))
         .withColumn("bigrams", F.expr(_SPARK_BIGRAMS))
-        .withColumn("lines", F.expr(_SPARK_LINES))
-        .withColumn("paras", F.expr(_SPARK_PARAS))
+        .withColumn("lines", F.expr(SPARK_LINES))
+        .withColumn("paras", F.expr(SPARK_PARAS))
     )
     stop_arr = "array(" + _STOP_SQL_LIST + ")"
     m = stru.select(
@@ -197,14 +193,7 @@ def quality_gopher_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST(COALESCE({_SPARK_TOP_BIGRAM}, 0) AS BIGINT)").alias(
             "top_bigram_n"
         ),
-        F.size("lines").cast("long").alias("n_lines"),
-        F.size(F.array_distinct("lines")).cast("long").alias("nd_lines"),
-        F.expr(_spark_chars("lines")).alias("c_lines"),
-        F.expr(_spark_chars("array_distinct(lines)")).alias("cd_lines"),
-        F.size("paras").cast("long").alias("n_paras"),
-        F.size(F.array_distinct("paras")).cast("long").alias("nd_paras"),
-        F.expr(_spark_chars("paras")).alias("c_paras"),
-        F.expr(_spark_chars("array_distinct(paras)")).alias("cd_paras"),
+        *line_metrics(),
     )
     flagged = m.selectExpr(
         "doc_id", "n_tokens", "n_stopwords", *_FLAG_EXPRS

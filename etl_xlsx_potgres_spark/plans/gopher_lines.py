@@ -48,77 +48,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.gopher import (
+    DUP_LINE_CHAR_MAX,
+    DUP_LINE_MAX,
+    DUP_PARA_CHAR_MAX,
+    DUP_PARA_MAX,
+    SPARK_LINES,
+    SPARK_PARAS,
+    SQL_LINE_METRICS,
+    SQL_LINES,
+    SQL_PARAS,
+    line_metrics,
+)
 from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-
-LINE_TOKENS = 8      # tokens per synthesized line
-PARA_LINES = 3       # lines per synthesized paragraph
-DUP_LINE_MAX = 0.30        # Gopher: duplicate line fraction
-DUP_LINE_CHAR_MAX = 0.20   # Gopher: duplicate line character fraction
-DUP_PARA_MAX = 0.30
-DUP_PARA_CHAR_MAX = 0.20
-
-# ---- synthesized structure (per engine, identical semantics) ----
-
-_SPARK_LINES = f"""
-CASE WHEN size(toks) >= 1 THEN
-  transform(sequence(1, (size(toks) + {LINE_TOKENS - 1}) DIV {LINE_TOKENS}),
-    i -> CASE WHEN doc_id % 5 = 0 AND i % 2 = 0
-              THEN array_join(slice(toks, 1, {LINE_TOKENS}), ' ')
-              ELSE array_join(
-                slice(toks, (i - 1) * {LINE_TOKENS} + 1, {LINE_TOKENS}), ' ')
-         END)
-ELSE CAST(array() AS ARRAY<STRING>) END
-"""
-
-_DUCK_LINES = f"""
-list_transform(generate_series(1, (len(toks) + {LINE_TOKENS - 1}) // {LINE_TOKENS}),
-  i -> CASE WHEN doc_id % 5 = 0 AND i % 2 = 0
-            THEN array_to_string(list_slice(toks, 1, {LINE_TOKENS}), ' ')
-            ELSE array_to_string(
-              list_slice(toks, (i - 1) * {LINE_TOKENS} + 1,
-                         i * {LINE_TOKENS}), ' ')
-       END)
-"""
-
-_SPARK_PARAS = f"""
-CASE WHEN size(lines) >= 1 THEN
-  transform(sequence(1, (size(lines) + {PARA_LINES - 1}) DIV {PARA_LINES}),
-    p -> CASE WHEN doc_id % 7 = 0 AND p % 2 = 0
-              THEN array_join(slice(lines, 1, {PARA_LINES}), chr(10))
-              ELSE array_join(
-                slice(lines, (p - 1) * {PARA_LINES} + 1, {PARA_LINES}),
-                chr(10))
-         END)
-ELSE CAST(array() AS ARRAY<STRING>) END
-"""
-
-_DUCK_PARAS = f"""
-list_transform(generate_series(1, (len(lines) + {PARA_LINES - 1}) // {PARA_LINES}),
-  p -> CASE WHEN doc_id % 7 = 0 AND p % 2 = 0
-            THEN array_to_string(list_slice(lines, 1, {PARA_LINES}), chr(10))
-            ELSE array_to_string(
-              list_slice(lines, (p - 1) * {PARA_LINES} + 1,
-                         p * {PARA_LINES}), chr(10))
-       END)
-"""
-
-# ---- per-array metrics (a = array column name) ----
-
-
-def _spark_chars(a: str) -> str:
-    return (
-        f"aggregate(transform({a}, x -> length(x)), 0L,"
-        f" (acc, x) -> acc + CAST(x AS BIGINT))"
-    )
-
-
-def _duck_chars(a: str) -> str:
-    return (
-        f"COALESCE(CAST(list_sum(list_transform({a}, x -> len(x)))"
-        f" AS BIGINT), 0)"
-    )
 
 
 @register(
@@ -128,21 +72,13 @@ def _duck_chars(a: str) -> str:
       SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     lined AS (
-      SELECT doc_id, {_DUCK_LINES} AS lines FROM base
+      SELECT doc_id, {SQL_LINES} AS lines FROM base
     ),
     stru AS (
-      SELECT doc_id, lines, {_DUCK_PARAS} AS paras FROM lined
+      SELECT doc_id, lines, {SQL_PARAS} AS paras FROM lined
     ),
     m AS (
-      SELECT doc_id,
-             CAST(len(lines) AS BIGINT) AS n_lines,
-             CAST(len(list_distinct(lines)) AS BIGINT) AS nd_lines,
-             {_duck_chars('lines')} AS c_lines,
-             {_duck_chars('list_distinct(lines)')} AS cd_lines,
-             CAST(len(paras) AS BIGINT) AS n_paras,
-             CAST(len(list_distinct(paras)) AS BIGINT) AS nd_paras,
-             {_duck_chars('paras')} AS c_paras,
-             {_duck_chars('list_distinct(paras)')} AS cd_paras
+      SELECT doc_id, {SQL_LINE_METRICS}
       FROM stru
     )
     SELECT doc_id, n_lines, n_paras,
@@ -178,20 +114,10 @@ def quality_gopher_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     stru = (
         d.select("doc_id", tokens("text").alias("toks"))
-        .withColumn("lines", F.expr(_SPARK_LINES))
-        .withColumn("paras", F.expr(_SPARK_PARAS))
+        .withColumn("lines", F.expr(SPARK_LINES))
+        .withColumn("paras", F.expr(SPARK_PARAS))
     )
-    m = stru.select(
-        "doc_id",
-        F.size("lines").cast("long").alias("n_lines"),
-        F.size(F.array_distinct("lines")).cast("long").alias("nd_lines"),
-        F.expr(_spark_chars("lines")).alias("c_lines"),
-        F.expr(_spark_chars("array_distinct(lines)")).alias("cd_lines"),
-        F.size("paras").cast("long").alias("n_paras"),
-        F.size(F.array_distinct("paras")).cast("long").alias("nd_paras"),
-        F.expr(_spark_chars("paras")).alias("c_paras"),
-        F.expr(_spark_chars("array_distinct(paras)")).alias("cd_paras"),
-    )
+    m = stru.select("doc_id", *line_metrics())
 
     def frac(tot: str, dup_from: str):
         return F.when(

@@ -38,18 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.gopher import DUP_TOKEN_MAX, SQL_BIGRAMS, TOP_BIGRAM_MAX
 from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-
-TOP_BIGRAM_MAX = 0.18  # Gopher: top 2-gram fraction above this -> drop
-DUP_TOKEN_MAX = 0.5
-
-_DUCK_BIGRAMS = (
-    f"list_transform(generate_series(1, len(toks) - 1),"
-    f" i -> toks[i] || ' ' || toks[i + 1])"
-)
-
 
 @register(
     "quality_gopher_repetition",
@@ -64,7 +56,7 @@ _DUCK_BIGRAMS = (
       FROM base
     ),
     bg AS (
-      SELECT doc_id, unnest({_DUCK_BIGRAMS}) AS bigram FROM base
+      SELECT doc_id, unnest({SQL_BIGRAMS}) AS bigram FROM base
     ),
     bgc AS (
       SELECT doc_id, bigram, CAST(COUNT(*) AS BIGINT) AS c

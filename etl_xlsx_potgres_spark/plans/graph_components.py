@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..operators.lsh import SQL_PAIRS, lsh_candidate_pairs, minhash_signatures
 from ..registry import register
 from ..sources import load_table
-from .dedup_fuzzy import _BANDS_SQL, _CAND_SQL, _minhash_sig_df, lsh_candidate_pairs
 
 MAX_ITER = 20
 
@@ -97,30 +97,20 @@ def connected_components(edges: DataFrame, vertex_col: str = "v") -> DataFrame:
     return labels.withColumnRenamed("v", vertex_col)
 
 
-# Composed from dedup_fuzzy's shared fragments (one geometry, one
-# place — the Spark twin is dedup_fuzzy.lsh_candidate_pairs), so the
-# occupancy cap and band construction can never desynchronize between
-# the pair generator, the calibration audit, and this closure.
-_PAIRS_SQL = f"""
-    {_BANDS_SQL},
-    {_CAND_SQL},
-    pairs AS (
-      SELECT DISTINCT d1, d2 FROM cand
-    )
-"""
-
-
 # The full dedup decision, differentially checked: LSH candidate pairs
 # -> transitive closure -> per-cluster canonical pick (longest text,
-# doc_id tiebreak). The oracle computes the closure with a recursive
-# CTE (min reachable id via label walk) — an entirely independent
-# formulation of the same fixpoint.
+# doc_id tiebreak). The candidate pairs are the shared band geometry
+# (operators/lsh.py, the Spark twin is lsh_candidate_pairs). The oracle
+# computes the closure with a recursive CTE (min reachable id via label
+# walk) — an entirely independent formulation of the same fixpoint;
+# ``edges`` is MATERIALIZED so the walk does not re-run the band
+# subtree on every step.
 @register(
     "dedup_connected_components",
     oracle=f"""
     WITH RECURSIVE
-    {_PAIRS_SQL},
-    edges AS (
+    {SQL_PAIRS},
+    edges AS MATERIALIZED (
       SELECT d1 AS src, d2 AS dst FROM pairs
       UNION SELECT d2, d1 FROM pairs
     ),
@@ -147,7 +137,7 @@ _PAIRS_SQL = f"""
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sig = scoped_persist(_minhash_sig_df(d).filter(F.col("mh0").isNotNull()))
+    sig = scoped_persist(minhash_signatures(d).filter(F.col("mh0").isNotNull()))
     pairs = (
         lsh_candidate_pairs(sig)
         .select(F.col("d1").alias("src"), F.col("d2").alias("dst"))

@@ -52,38 +52,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
-from ..operators.text import hex_int, sql_hex_int, sql_tokens, tokens
+from ..operators.classifier import (
+    B,
+    SQL_BUCKET,
+    SQL_GRAMS,
+    TARGET_LANG,
+    arr_at,
+    dense_model_arr,
+    hashed_features,
+)
+from ..operators.text import sql_tokens
 from ..registry import register
 from ..sources import load_table
 
-B = 256  # hashed n-gram buckets
-TARGET_LANG = "en"
 TOP_K = 50
-
-# unigrams ++ space-joined bigrams, as one array expression per row
-_SPARK_GRAMS = (
-    f"concat(toks, zip_with("
-    f"slice(toks, 1, greatest(size(toks) - 1, 0)), "
-    f"slice(toks, 2, greatest(size(toks) - 1, 0)), "
-    f"(a, b) -> concat(a, ' ', b)))"
-)
-_DUCK_GRAMS = (
-    "list_concat(toks, list_transform("
-    "generate_series(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i + 1]))"
-)
-
-
-_DUCK_BUCKET = sql_hex_int("md5(gram)") + f" % {B}"
 
 _ORACLE_WEIGHTS = f"""
     WITH toks AS (
       SELECT doc_id, lang, {sql_tokens()} AS toks FROM documents
     ),
     grams AS (
-      SELECT doc_id, lang, unnest({_DUCK_GRAMS}) AS gram FROM toks
+      SELECT doc_id, lang, unnest({SQL_GRAMS}) AS gram FROM toks
     ),
     db AS (
-      SELECT doc_id, lang, {_DUCK_BUCKET} AS bucket,
+      SELECT doc_id, lang, {SQL_BUCKET} AS bucket,
              CAST(COUNT(*) AS BIGINT) AS c
       FROM grams GROUP BY 1, 2, 3
     ),
@@ -114,39 +106,6 @@ _ORACLE_WEIGHTS = f"""
     FROM db JOIN lp ON db.bucket = lp.bucket
     GROUP BY db.doc_id
 """
-
-
-def bucket_of(gram):
-    """The hashed-gram bucket (``_DUCK_BUCKET``'s twin) as a Column —
-    usable on a lambda variable inside row-local HOFs, which is what
-    lets scoring happen without the per-doc explode."""
-    return hex_int(F.md5(gram)) % B
-
-
-def _grams_arr(d: DataFrame, *extra: str) -> DataFrame:
-    """(extra..., grams) with the unigram++bigram array kept row-local
-    (the explode stays confined to the model-fit pass)."""
-    return d.select(*extra, tokens("text").alias("toks")).select(
-        *extra, F.expr(_SPARK_GRAMS).alias("grams")
-    )
-
-
-def _feat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, bkts): every document with its grams hashed ONCE
-    into a row-local bucket-id array (``bkts`` is NULL where the token
-    array is NULL, empty where it is empty — the doc grain is
-    preserved). Persisted because the model fit and the scoring fold
-    both consume it; the md5 per gram — the dominant per-row cost — is
-    paid exactly once, and the cached rows are bigint arrays, not
-    text."""
-    from ..caching import scoped_persist
-
-    d = load_table(spark, sf_dir, "documents")
-    return scoped_persist(
-        _grams_arr(d, "doc_id", "lang").select(
-            "doc_id", "lang", F.transform("grams", bucket_of).alias("bkts")
-        )
-    )
 
 
 def _lpmap(feat: DataFrame) -> DataFrame:
@@ -189,30 +148,7 @@ def _lpmap(feat: DataFrame) -> DataFrame:
         .cast("long")
         .alias("lp_micro"),
     )
-    return _dense_model_arr(lp, "lp_micro", "lparr")
-
-
-def _dense_model_arr(model: DataFrame, val: str, out: str) -> DataFrame:
-    """Pack a (bucket, value) model into ONE row carrying a dense
-    B-slot array (index = bucket). Lookups against a map literal cost
-    a LINEAR scan of its entries per call (UnsafeMapData has no hash
-    index), so a per-gram fold over a 256-entry map pays 256
-    comparisons per gram; the dense array is one O(1) index. Buckets
-    the corpus never produced stay NULL — and are never looked up,
-    because scoring only probes buckets of grams the fit also saw."""
-    return model.agg(
-        F.map_from_entries(F.collect_list(F.struct("bucket", val))).alias("m")
-    ).select(
-        F.transform(
-            F.sequence(F.lit(0).cast("long"), F.lit(B - 1).cast("long")),
-            lambda b: F.try_element_at(F.col("m"), b),
-        ).alias(out)
-    )
-
-
-def _arr_at(arr, bucket):
-    """O(1) dense-array model lookup (1-based element_at)."""
-    return F.element_at(arr, (bucket + 1).cast("int"))
+    return dense_model_arr(lp, "lp_micro", "lparr")
 
 
 def _weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,7 +162,7 @@ def _weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc, bucket) count frame, its model join, and the doc_id
     # rollup shuffle with a fold over the shared featurize frame;
     # only the <= B-row model fit shuffles.
-    feat = _feat(spark, sf_dir)
+    feat = hashed_features(load_table(spark, sf_dir, "documents"))
     docs = feat.filter(F.size("bkts") > 0)
     return docs.crossJoin(constant_size(_lpmap(feat))).select(
         "doc_id",
@@ -234,7 +170,7 @@ def _weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.aggregate(
             "bkts",
             F.lit(0).cast("long"),
-            lambda acc, b: acc + _arr_at(F.col("lparr"), b),
+            lambda acc, b: acc + arr_at(F.col("lparr"), b),
         ).alias("logw_micro"),
     )
 

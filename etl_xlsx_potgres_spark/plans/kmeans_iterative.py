@@ -5,10 +5,12 @@ iterative algorithm alongside PageRank (``plans/graph_iterative``).
 
 Determinism across engines AND across partitionings:
 - seeds are the first K vectors by id (no RNG);
-- member coordinates are floored into integer micro-units BEFORE the
-  per-cluster mean, so the cross-row reduce is an exact bigint sum
-  (order-independent) and the new centroid coordinate
-  ``sum_micro / n / 1e6`` is one exact double expression;
+- the centroid rebuild is ``operators.ann.micro_mean`` (the PQ
+  codebook update, keyed on ``cid``): member coordinates are floored
+  into integer micro-units BEFORE the per-cluster mean, so the
+  cross-row reduce is an exact bigint sum (order-independent) and the
+  new centroid coordinate ``sum_micro / n / 1e6`` is one exact double
+  expression;
 - distances to centroids are the shared ``operators.vectors.sq_dist``
   fold (contract stated there);
 - assignment ties break on the lower cluster id.
@@ -28,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
+from ..operators.ann import micro_mean, sql_micro_mean_ctes
 from ..operators.vectors import EMB_DIM, micro, sq_dist, sql_sq_dist
 from ..registry import register
 from ..sources import load_table
@@ -39,17 +42,17 @@ ITERS = 3
 def _duck_oracle() -> str:
     """Unrolled {ITERS}-iteration oracle: each block assigns against
     the previous centroids and rebuilds exact-mean centroids."""
-    # c0: seed centroids as double arrays
+    # cb0: seed centroids as double arrays
     parts = [
         f"""
-    c0 AS (
+    cb0 AS (
       SELECT vec_id AS cid,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
       FROM embeddings WHERE vec_id < {K} AND embedding IS NOT NULL
     )"""
     ]
     for it in range(1, ITERS + 1):
-        prev, cur = f"c{it - 1}", f"c{it}"
+        prev = f"cb{it - 1}"
         parts.append(f"""
     a{it} AS (
       SELECT e.vec_id, s.cid, e.embedding
@@ -60,22 +63,10 @@ def _duck_oracle() -> str:
         ORDER BY {sql_sq_dist("e.embedding", "s.cv")}, s.cid) = 1
     )""")
         if it < ITERS:
-            parts.append(f"""
-    m{it} AS (
-      SELECT cid, i,
-             CAST(SUM(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-                  AS BIGINT) AS s,
-             COUNT(*) AS n
-      FROM (
-        SELECT cid, unnest(embedding) AS x,
-               unnest(generate_series(1, {EMB_DIM})) AS i
-        FROM a{it}
-      ) GROUP BY cid, i
-    ),
-    {cur} AS (
-      SELECT cid, list(CAST(s AS DOUBLE) / n / 1000000.0 ORDER BY i) AS cv
-      FROM m{it} GROUP BY cid
-    )""")
+            parts.append(
+                "\n    "
+                + sql_micro_mean_ctes(it, ("cid",), "embedding", EMB_DIM, "cv")
+            )
     body = ",".join(parts)
     last = f"a{ITERS}"
     return f"""
@@ -84,7 +75,7 @@ def _duck_oracle() -> str:
            COUNT(*) AS n_members,
            CAST(SUM(CAST(floor({sql_sq_dist("a.embedding", "s.cv")} * 1000000)
                          AS BIGINT)) AS BIGINT) AS inertia_micro
-    FROM {last} a JOIN c{ITERS - 1} s ON a.cid = s.cid
+    FROM {last} a JOIN cb{ITERS - 1} s ON a.cid = s.cid
     GROUP BY a.cid
     """
 
@@ -100,40 +91,6 @@ def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid", "embedding", "d2")
-    )
-
-
-def _recenter(assigned: DataFrame) -> DataFrame:
-    """Exact-mean centroid rebuild: micro-unit bigint sums per
-    (cluster, dim), then one sorted-collect back into arrays."""
-    dims = assigned.select(
-        "cid",
-        F.posexplode(
-            F.expr(
-                "transform(embedding,"
-                " x -> cast(floor(cast(x as double) * 1000000) as bigint))"
-            )
-        ).alias("i", "xm"),
-    )
-    sums = dims.groupBy("cid", "i").agg(
-        F.sum("xm").cast("long").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    return sums.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        "i",
-                        (
-                            F.col("s").cast("double")
-                            / F.col("n")
-                            / F.lit(1000000.0)
-                        ).alias("v"),
-                    )
-                )
-            ),
-            lambda st: st.v,
-        ).alias("cv")
     )
 
 
@@ -160,7 +117,11 @@ def emb_kmeans_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
             # plan nests every previous iteration's crossJoin+window
             # and re-executes it per reuse. coalesce(1): K rows
             # checkpoint as one block, not shuffle-width tasks.
-            cents = _recenter(assigned).coalesce(1).localCheckpoint(eager=True)
+            cents = (
+                micro_mean(assigned, ("cid",), "embedding", "cv")
+                .coalesce(1)
+                .localCheckpoint(eager=True)
+            )
     return (
         assigned.groupBy(F.col("cid").alias("cluster_id"))
         .agg(

@@ -67,11 +67,10 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.lang import SQL_LANG_ID, SQL_LOC_DOCS, lang_id, localized_text
 from ..operators.text import sql_tokens, tokens
-from ..registry import ORACLES, register
+from ..registry import register
 from ..sources import load_table
-from . import text_analysis  # noqa: F401  (registers text_lang_id first)
-from .text_analysis import _DUCK_LOC_DOCS, _localized_text_col, text_lang_id
 
 M_PROFILE = 64   # profile trigrams kept per language (constant-size model)
 EXCL_NUM = 4     # exclusivity gate: rate > EXCL_NUM * sum(other langs)
@@ -193,8 +192,8 @@ def _trigram_pred(loc: DataFrame) -> DataFrame:
 @register(
     "text_lang_confusion",
     oracle=f"""
-    WITH casc AS ({ORACLES["text_lang_id"]}),
-    {_DUCK_LOC_DOCS},
+    WITH casc AS ({SQL_LANG_ID}),
+    {SQL_LOC_DOCS},
     {_TRI_ORACLE_CTES},
     preds AS (
       SELECT doc_id, labeled_lang, predicted_lang, 'marker' AS method
@@ -225,16 +224,16 @@ def text_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its localized-corpus scan + marker evaluation runs twice. Slim
     # 3-column doc-grain frame.
     casc = scoped_persist(
-        text_lang_id(spark, sf_dir).select(
+        lang_id(load_table(spark, sf_dir, "documents")).select(
             "doc_id", "labeled_lang", "predicted_lang"
         )
     )
     # ONE materialization of the localized corpus feeds the cascade's
-    # twin (already inside text_lang_id), the trigram training pass
+    # twin (already inside lang_id), the trigram training pass
     # and the scoring pass
     loc = scoped_persist(
         load_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", _localized_text_col().alias("text")
+            "doc_id", "lang", localized_text().alias("text")
         )
     )
     tri_pred = _trigram_pred(loc)

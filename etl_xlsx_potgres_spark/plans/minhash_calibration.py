@@ -45,7 +45,7 @@ thresholds are INTEGER comparisons (``n_eq >= 4``,
 products — no float enters any verdict.
 
 Plan shape: candidate pairs come from the SHARED capped+starred
-banded LSH geometry (``dedup_fuzzy.lsh_candidate_pairs`` — never
+banded LSH geometry (``operators.lsh.lsh_candidate_pairs`` — never
 all-pairs; hot buckets occupancy-capped with linear star edges); the
 signature frame is persisted once and feeds the band join and both
 sides of the agreement join; shingle sizes join every pair (doc-level
@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.lsh import SQL_PAIRS, lsh_candidate_pairs, minhash_signatures
 from ..operators.text import (
     HEX6,
     hex_int,
@@ -73,8 +74,6 @@ from ..operators.text import (
 )
 from ..registry import register
 from ..sources import load_table
-from .dedup_fuzzy import _minhash_sig_df, lsh_candidate_pairs
-from .graph_components import _PAIRS_SQL
 
 VERIFY_TARGET = 512  # expected exact-verified pairs at any corpus size
 
@@ -99,7 +98,7 @@ _DUCK_COIN = sql_hex_int(
 @register(
     "dedup_minhash_calibration",
     oracle=f"""
-    WITH {_PAIRS_SQL},
+    WITH {SQL_PAIRS},
     sh AS (
       SELECT doc_id, unnest(list_distinct({sql_shingles()})) AS s
       FROM documents
@@ -170,7 +169,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (twice) AND both sides of the component-agreement join below —
     # without the barrier the shingle-explode + 8-md5 pipeline ran 4x
     # (this was the bench's slowest query before r17)
-    sig = scoped_persist(_minhash_sig_df(d).filter(F.col("mh0").isNotNull()))
+    sig = scoped_persist(minhash_signatures(d).filter(F.col("mh0").isNotNull()))
     # shared capped+starred band geometry — the calibration audits
     # EXACTLY the candidate set the production pair generator emits
     pairs = lsh_candidate_pairs(sig).select("d1", "d2").distinct()

@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from ..operators.ann import KMEANS_K
 from ..operators.vectors import (
     dot,
     duck_valid,
@@ -78,7 +79,6 @@ from ..operators.vectors import (
 )
 from ..registry import register
 from ..sources import load_table
-from .corpus_ops import KMEANS_K
 
 TAU = 0.3
 _C = math.isqrt(KMEANS_K - 1) + 1  # ceil(sqrt(K)); fixture: 4

@@ -31,6 +31,9 @@ re-derives all three from the raw table and the same hash arithmetic;
 a lost or duplicated row anywhere in the write->read round trip
 flips the counts.
 
+The JSONL twin (``export_jsonl_shards``, below) writes the same
+shards through Spark's text sink.
+
 Reference lifecycle note: the reference's only sink is row-at-a-time
 Postgres inserts (``etl_process.py:29-191``); a shard-partitioned
 columnar export is its at-scale replacement for handing data to a
@@ -43,6 +46,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.text import hex_int, sql_hex_int, sql_tokens
 from ..registry import register
@@ -55,8 +59,13 @@ _ROOT = "/tmp/spark_graft_shards"
 
 
 def _shard_col() -> F.Column:
+    """The document's export shard.  DuckDB twin: :data:`_SQL_SHARD`."""
     h = F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
     return (hex_int(h) % N_SHARDS).cast("int")
+
+
+_SQL_SHARD = f"""CAST({sql_hex_int("md5('shard:' || CAST(doc_id AS VARCHAR))")}
+           % {N_SHARDS} AS INT)"""
 
 
 def export_shards(spark: SparkSession, sf_dir: str) -> str:
@@ -80,8 +89,7 @@ def export_shards(spark: SparkSession, sf_dir: str) -> str:
     "export_training_shards",
     oracle=f"""
     SELECT
-      CAST({sql_hex_int("md5('shard:' || CAST(doc_id AS VARCHAR))")}
-           % {N_SHARDS} AS INT) AS shard,
+      {_SQL_SHARD} AS shard,
       count(*) AS n_docs,
       CAST(sum(len({sql_tokens()})) AS BIGINT) AS total_tokens,
       CAST(sum(n_chars) AS BIGINT) AS total_chars
@@ -98,4 +106,85 @@ def export_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_count("text").cast("long")).alias("total_tokens"),
         F.sum("n_chars").alias("total_chars"),
+    )
+
+
+# JSONL training-shard export — the delivery format trainer data
+# loaders actually consume (gzip'd JSON-lines shards are the lingua
+# franca of public LLM corpora: C4, The Pile, RedPajama, FineWeb all
+# ship as sharded ``*.jsonl.gz``).  ``export_training_shards`` attests
+# the columnar (parquet) layout; this exercises Spark's TEXT sink path
+# end to end — ``write.partitionBy(shard).json`` with gzip codec, then
+# a declared-schema ``read.json`` restore — because the JSON writer and
+# reader are a genuinely different code path (schema-on-read, partition
+# column restore from directory structure, per-line codec framing) and
+# a corpus handoff that silently drops or duplicates lines is exactly
+# the failure this round trip flips on.
+#
+# Shard assignment is the same ``_shard_col``/``_SQL_SHARD`` md5
+# arithmetic as the parquet export (same hash, same modulus) so the two
+# layouts are shard-compatible: a trainer can mix parquet and JSONL
+# reads of the same corpus and see the same document partition.
+#
+# Scale notes: ``repartition(shard)`` keeps one task set per shard
+# directory (few large .gz files, not #tasks x #shards stragglers);
+# gzip is splittable-NOT, which is fine at the shard grain because the
+# loader parallelizes across files, and ``maxRecordsPerFile`` bounds
+# each file.  The attestation aggregates the READ-BACK frame (counts,
+# token sums, char sums per shard) against a DuckDB oracle derived from
+# the raw table and the same hash — lost/duplicated/mangled lines flip
+# the counts; non-UTF8-safe text would flip the char sums.
+#
+# Reference lifecycle note: the reference's only sink is row-at-a-time
+# Postgres inserts (etl_process.py:29-191); a compressed JSONL export
+# is the handoff a downstream training job actually ingests.
+_READ_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("source", T.StringType()),
+        T.StructField("n_chars", T.LongType()),
+    ]
+)
+
+
+@register(
+    "export_jsonl_shards",
+    oracle=f"""
+    SELECT
+      {_SQL_SHARD} AS shard,
+      count(*) AS n_docs,
+      CAST(sum(len({sql_tokens()})) AS BIGINT) AS total_tokens,
+      CAST(sum(len(text)) AS BIGINT) AS total_text_chars,
+      CAST(min(doc_id) AS BIGINT) AS min_doc_id,
+      CAST(max(doc_id) AS BIGINT) AS max_doc_id
+    FROM documents
+    GROUP BY shard
+    """,
+)
+def export_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.text import token_count
+
+    sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    out = os.path.join(_ROOT, f"documents_jsonl_{sf}")
+    (
+        load_table(spark, sf_dir, "documents")
+        .withColumn("shard", _shard_col())
+        .repartition("shard")
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+        .option("compression", "gzip")
+        .partitionBy("shard")
+        .json(out)
+    )
+    back = spark.read.schema(_READ_SCHEMA.add("shard", T.IntegerType())).json(
+        out
+    )
+    return back.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(token_count("text").cast("long")).alias("total_tokens"),
+        F.sum(F.length("text")).cast("long").alias("total_text_chars"),
+        F.min("doc_id").alias("min_doc_id"),
+        F.max("doc_id").alias("max_doc_id"),
     )

@@ -14,9 +14,9 @@
 - ``ann_ivf_topk``: inverted-file ANN with a hash-picked codebook —
   broadcast assign, partition-prune-then-rerank, fully oracle-checked.
 
-The vector kernels (cosine, the zero-norm guard, the sign planes) and
-the family constants live in ``operators/vectors.py`` and
-``operators/ann.py``.
+The vector kernels (cosine, the zero-norm guard, the sign planes), the
+exact and IVF cosine searches and the family constants live in
+``operators/vectors.py`` and ``operators/ann.py``.
 """
 
 from __future__ import annotations
@@ -26,11 +26,12 @@ from pyspark.sql import functions as F
 
 from ..hints import constant_size
 from ..operators.ann import (
-    N_PROBE,
     N_QUERIES,
     TOP_K,
-    coarse_cells,
-    sql_coarse_cells,
+    cosine_topk,
+    ivf_topk,
+    sql_cosine_topk,
+    sql_ivf_topk,
 )
 from ..operators.vectors import (
     cosine,
@@ -45,38 +46,9 @@ from ..registry import register
 from ..sources import load_table
 
 
-@register(
-    "ann_cosine_topk",
-    oracle=f"""
-    WITH vecs AS (
-      SELECT vec_id, embedding FROM embeddings WHERE {duck_valid()}
-    )
-    SELECT qid, vec_id, cosine, rn FROM (
-      SELECT q.vec_id AS qid, v.vec_id AS vec_id,
-             {sql_cosine("q.embedding", "v.embedding")} AS cosine,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               {sql_cosine("q.embedding", "v.embedding")} DESC, v.vec_id) AS rn
-      FROM vecs q JOIN vecs v ON q.vec_id <> v.vec_id
-      WHERE q.vec_id < {N_QUERIES}
-    ) WHERE rn <= {TOP_K}
-    """,
-)
+@register("ann_cosine_topk", oracle=sql_cosine_topk())
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    v = emb.select("vec_id", F.col("embedding").alias("vv"))
-    # exact baseline is inherently O(queries x corpus)
-    scored = q.join(v, F.col("qid") != F.col("vec_id")).select(
-        "qid", "vec_id", cosine("qv", "vv").alias("cosine")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id", "cosine", "rn")
-    )
+    return cosine_topk(valid_vecs(load_table(spark, sf_dir, "embeddings")))
 
 
 # Scale path: multi-probe sign-plane LSH. Every vector lives in one
@@ -260,70 +232,8 @@ def ann_ml_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probed cells — the same partition-prune-then-rerank shape a 100 TB
 # vector store needs (cells become partition keys; the assign pass is
 # one map-side broadcast join; the search shuffles only candidates).
-
-
-@register(
-    "ann_ivf_topk",
-    oracle=f"""
-    WITH vecs AS (
-      SELECT vec_id, embedding FROM embeddings WHERE {duck_valid()}
-    ),
-    cents AS ({sql_coarse_cells()}),
-    assign AS (
-      SELECT vec_id, embedding, cid FROM (
-        SELECT v.vec_id, v.embedding, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 {sql_cosine("v.embedding", "c.cv")} DESC, c.cid) AS arn
-        FROM vecs v CROSS JOIN cents c
-      ) WHERE arn = 1
-    ),
-    probes AS (
-      SELECT qid, cid FROM (
-        SELECT q.vec_id AS qid, c.cid,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {sql_cosine("q.embedding", "c.cv")} DESC, c.cid) AS prn
-        FROM vecs q CROSS JOIN cents c
-        WHERE q.vec_id < {N_QUERIES}
-      ) WHERE prn <= {N_PROBE}
-    )
-    SELECT qid, vec_id, cosine, rn FROM (
-      SELECT p.qid, a.vec_id,
-             {sql_cosine("q.embedding", "a.embedding")} AS cosine,
-             row_number() OVER (PARTITION BY p.qid ORDER BY
-               {sql_cosine("q.embedding", "a.embedding")} DESC, a.vec_id) AS rn
-      FROM probes p
-      JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.qid
-      JOIN vecs q ON q.vec_id = p.qid
-    ) WHERE rn <= {TOP_K}
-    """,
-)
+# The search is operators/ann.py's ivf_topk, shared with the recall
+# evaluators.
+@register("ann_ivf_topk", oracle=sql_ivf_topk())
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = valid_vecs(load_table(spark, sf_dir, "embeddings"))
-    cents = coarse_cells(emb)
-    aw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "cid")
-    assign = (
-        emb.crossJoin(constant_size(cents))
-        .withColumn("ccos", cosine("embedding", "cv"))
-        .withColumn("arn", F.row_number().over(aw))
-        .filter(F.col("arn") == 1)
-        .select("vec_id", "embedding", "cid")
-    )
-    probes = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .crossJoin(constant_size(cents))
-        .withColumn("ccos", cosine("qv", "cv"))
-        .withColumn("prn", F.row_number().over(
-            Window.partitionBy("qid").orderBy(F.desc("ccos"), "cid")))
-        .filter(F.col("prn") <= N_PROBE)
-        .select("qid", "qv", "cid")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        probes.join(assign, "cid")
-        .filter(F.col("qid") != F.col("vec_id"))
-        .select("qid", "vec_id", cosine("qv", "embedding").alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id", "cosine", "rn")
-    )
+    return ivf_topk(valid_vecs(load_table(spark, sf_dir, "embeddings")))

@@ -21,7 +21,7 @@ equality is attested across a real multi-batch run, not a degenerate
 single batch.
 
 Lifecycle: landing/checkpoint/verdict dirs live under the
-per-session ``_store_root`` (atexit-cleaned, stale-sibling-swept);
+per-session ``store_root`` (atexit-cleaned, stale-sibling-swept);
 each invocation wipes and rebuilds them — the registered query must
 be deterministic per invocation, and the returned DataFrame reads
 the verdict store lazily (the driver collects before any
@@ -36,16 +36,15 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.lsh import (
+    probe_band_store,
+    provision_band_store,
+    sql_band_store_probe,
+)
+from ..operators.stores import store_root
 from ..registry import register
 from ..sources import load_table
 from ..sources.tables import SCHEMAS
-from .dedup_fuzzy import _minhash_sig_df
-from .dedup_incremental import (
-    _ORACLE,
-    _bands,
-    _provision_store,
-    _store_root,
-)
 
 N_FILES = 3  # landing files -> micro-batches (maxFilesPerTrigger=1)
 
@@ -59,27 +58,7 @@ def _probe_writer(store: str, out_dir: str):
     history store, append per-doc verdicts."""
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        hist = spark.table(store)
-        new_bands = _bands(_minhash_sig_df(batch_df))
-        hits = (
-            new_bands.join(
-                hist.select(F.col("doc_id").alias("hist_doc_id"), "band"),
-                "band",
-            )
-            .groupBy("doc_id")
-            .agg(F.countDistinct("hist_doc_id").alias("n_hist_candidates"))
-        )
-        n = F.coalesce(F.col("n_hist_candidates"), F.lit(0))
-        verdicts = (
-            batch_df.select("doc_id")
-            .join(hits, "doc_id", "left")
-            .select(
-                "doc_id",
-                n.cast("long").alias("n_hist_candidates"),
-                (n == 0).alias("keep"),
-            )
-        )
+        verdicts = probe_band_store(batch_df.sparkSession.table(store), batch_df)
         verdicts.write.mode("append").parquet(out_dir)
         LAST_BATCH_PLANS.append(
             verdicts._jdf.queryExecution().executedPlan().toString()
@@ -88,12 +67,16 @@ def _probe_writer(store: str, out_dir: str):
     return probe
 
 
-@register("streaming_dedup_incremental", oracle=_ORACLE)
+@register(
+    "streaming_dedup_incremental",
+    oracle=sql_band_store_probe("doc_id % 10 <> 0", "doc_id % 10 = 0"),
+)
 def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    store = _provision_store(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
+    store = provision_band_store(spark, sf_dir, d.filter(F.col("doc_id") % 10 != 0))
     sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     root = os.path.join(
-        _store_root(spark), f"streaming_dedup_{sf.replace('.', '_')}"
+        store_root(spark), f"streaming_dedup_{sf.replace('.', '_')}"
     )
     landing = os.path.join(root, "landing")
     out_dir = os.path.join(root, "verdicts")
@@ -102,9 +85,7 @@ def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(landing, exist_ok=True)
     LAST_BATCH_PLANS.clear()
 
-    newd = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 10 == 0
-    )
+    newd = d.filter(F.col("doc_id") % 10 == 0)
     # N_FILES single-file slices -> N_FILES mtime-ordered micro-batches
     for k in range(N_FILES):
         (

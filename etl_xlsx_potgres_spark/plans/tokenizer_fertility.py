@@ -9,7 +9,7 @@ snapshot; a fertility spike means the tokenizer no longer fits the
 corpus mix.
 
 Costing: the SAME trained-BPE word cost as ``text_chunk_token_budget``
-(``plans/bpe_train``'s merge rounds applied per occurrence via 1-row
+(``operators/bpe.py``'s merge rounds applied per occurrence via 1-row
 winner broadcasts — no vocab join), so this query audits the
 tokenizer the chunking family actually applies, not a proxy.
 
@@ -30,18 +30,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
+from ..operators.bpe import SQL_MERGES_COLS, SQL_TRAIN_CTES, cost_expr, merges_row
 from ..operators.text import HEX6, hex_int, sql_hex_int, sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
-from .bpe_train import _TRAIN_CTES
-from .chunk_token_budget import _MG_COLS, _cost_expr, _merges_row
 
 
 @register(
     "text_tokenizer_fertility",
     oracle=f"""
-    WITH {_TRAIN_CTES},
-    mg AS (SELECT {_MG_COLS}),
+    WITH {SQL_TRAIN_CTES},
+    mg AS (SELECT {SQL_MERGES_COLS}),
     base AS (
       SELECT doc_id, lang, {sql_tokens()} AS toks FROM documents
       WHERE len({sql_tokens()}) > 0
@@ -51,7 +50,7 @@ from .chunk_token_budget import _MG_COLS, _cost_expr, _merges_row
              CAST(len(toks) AS BIGINT) AS n_words,
              CAST(COALESCE(list_sum(list_transform(toks, w -> len(w))), 0)
                   AS BIGINT) AS n_chars,
-             CAST(COALESCE(list_sum({_cost_expr('duck')}), 0)
+             CAST(COALESCE(list_sum({cost_expr('duck')}), 0)
                   AS BIGINT) AS n_bpe
       FROM base CROSS JOIN mg
     )
@@ -74,7 +73,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", tokens("text").alias("toks")
     ).filter(F.size("toks") > 0)
     costed = base.crossJoin(
-        constant_size(_merges_row(spark, sf_dir))
+        constant_size(merges_row(load_table(spark, sf_dir, "documents")))
     ).select(
         "lang",
         F.size("toks").cast("long").alias("n_words"),
@@ -83,7 +82,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             " (a, x) -> a + CAST(x AS BIGINT))"
         ).alias("n_chars"),
         F.expr(
-            f"aggregate({_cost_expr('spark')}, 0L, (a, x) -> a + x)"
+            f"aggregate({cost_expr('spark')}, 0L, (a, x) -> a + x)"
         ).alias("n_bpe"),
     )
     return costed.groupBy("lang").agg(
@@ -115,8 +114,8 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_fertility_by_source",
     oracle=f"""
-    WITH {_TRAIN_CTES},
-    mg AS (SELECT {_MG_COLS}),
+    WITH {SQL_TRAIN_CTES},
+    mg AS (SELECT {SQL_MERGES_COLS}),
     src AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS c_s,
              CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
@@ -134,7 +133,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc AS (
       SELECT b.source,
              CAST(len(toks) AS BIGINT) AS n_words,
-             CAST(COALESCE(list_sum({_cost_expr('duck')}), 0)
+             CAST(COALESCE(list_sum({cost_expr('duck')}), 0)
                   AS BIGINT) AS n_bpe,
              CASE WHEN {sql_hex_int("md5(CAST(doc_id AS VARCHAR))")}
                          * tot.en_total * src.c_s
@@ -189,14 +188,14 @@ def text_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(0)
     per_doc = (
         d.select("doc_id", "source", tokens("text").alias("toks"))
-        .crossJoin(constant_size(_merges_row(spark, sf_dir)))
+        .crossJoin(constant_size(merges_row(load_table(spark, sf_dir, "documents"))))
         .join(constant_size(src), "source")
         .crossJoin(constant_size(tot))
         .select(
             "source",
             F.size("toks").cast("long").alias("n_words"),
             F.expr(
-                f"aggregate({_cost_expr('spark')}, 0L, (a, x) -> a + x)"
+                f"aggregate({cost_expr('spark')}, 0L, (a, x) -> a + x)"
             ).alias("n_bpe"),
             kept.alias("kept"),
         )

@@ -22,31 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
+from ..operators.splits import SQL_SPLIT, with_split
 from ..operators.text import hex_int, shingles_long, sql_hex_int, sql_shingles
 from ..registry import register
 from ..sources import load_table
-
-# Split thresholds over the first md5 hex byte (256 buckets):
-# train < 'd0' (208/256 = 81.25%), val < 'e8' (+9.4%), test rest.
-_TRAIN_HI, _VAL_HI = "d0", "e8"
-
-_BUCKET = "substring(md5(CAST(doc_id AS VARCHAR)), 1, 2)"
-_SPLIT_SQL = f"""
-  CASE WHEN {_BUCKET} < '{_TRAIN_HI}' THEN 'train'
-       WHEN {_BUCKET} < '{_VAL_HI}' THEN 'val'
-       ELSE 'test' END
-"""
-
-
-def _with_split(d: DataFrame) -> DataFrame:
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    return d.withColumn(
-        "split",
-        F.when(bucket < _TRAIN_HI, "train")
-        .when(bucket < _VAL_HI, "val")
-        .otherwise("test"),
-    )
-
 
 # Deterministic train/val/test split: hash-bucket assignment that is
 # stable under re-runs, repartitioning, and corpus growth (a doc's
@@ -57,13 +36,13 @@ def _with_split(d: DataFrame) -> DataFrame:
     SELECT split, COUNT(*) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars,
            MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM (SELECT doc_id, n_chars, {_SPLIT_SQL} AS split FROM documents)
+    FROM (SELECT doc_id, n_chars, {SQL_SPLIT} AS split FROM documents)
     GROUP BY split
     ORDER BY split
     """,
 )
 def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _with_split(load_table(spark, sf_dir, "documents"))
+    d = with_split(load_table(spark, sf_dir, "documents"))
     return (
         d.groupBy("split")
         .agg(
@@ -151,7 +130,7 @@ def sample_uniform_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "contamination_train_test",
     oracle=f"""
-    WITH tagged AS (SELECT doc_id, text, {_SPLIT_SQL} AS split FROM documents),
+    WITH tagged AS (SELECT doc_id, text, {SQL_SPLIT} AS split FROM documents),
     grams AS (
       SELECT doc_id, split, unnest(list_distinct({sql_shingles("text", 5)})) AS s
       FROM tagged WHERE split IN ('train', 'test')
@@ -166,7 +145,7 @@ def sample_uniform_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def contamination_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _with_split(load_table(spark, sf_dir, "documents")).filter(
+    d = with_split(load_table(spark, sf_dir, "documents")).filter(
         F.col("split").isin("train", "test")
     )
     grams = shingles_long(d, "text", 5).distinct()

@@ -20,70 +20,20 @@ is an ordinary partial-agg shuffle on the 4-value category key.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numeric import msum, sql_msum
+from ..functions.numeric import msum
+from ..operators.workbooks import SQL_LEDGER_TOTALS, provision_ledgers
 from ..registry import register
 
-N_FILES = 6
-ROWS_PER_FILE = 200
-_ROOT = "/tmp/spark_graft_xlsxds"
-_VERSION = "v1"  # bump when the fixture formula changes
 
-
-def _provision() -> str:
-    """Write the deterministic workbook set once (content is a pure
-    function of (f, i), so an existing provision is always valid)."""
-    from ..sources.xlsx_stdlib import write_xlsx
-
-    out = os.path.join(_ROOT, _VERSION)
-    marker = os.path.join(out, "_SUCCESS")
-    token = f"{N_FILES}x{ROWS_PER_FILE}"
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read() == token:
-                return out
-    os.makedirs(out, exist_ok=True)
-    for f in range(N_FILES):
-        rows = [
-            [
-                f * ROWS_PER_FILE + i,
-                f"c{(f + i) % 4}",
-                (i * 13 + f) % 100,
-                i + 0.25 + f * 0.5,
-            ]
-            for i in range(ROWS_PER_FILE)
-        ]
-        write_xlsx(
-            os.path.join(out, f"ledger_{f}.xlsx"),
-            ["id", "cat", "qty", "price"],
-            rows,
-        )
-    with open(marker, "w") as fh:
-        fh.write(token)
-    return out
-
-
-@register(
-    "xlsx_datasource_ingest",
-    oracle=f"""
-    SELECT 'c' || CAST((f + i) % 4 AS VARCHAR) AS cat,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM((i * 13 + f) % 100) AS BIGINT) AS qty_sum,
-           {sql_msum("i + 0.25 + f * 0.5", "price_sum")}
-    FROM generate_series(0, {N_FILES - 1}) t(f),
-         generate_series(0, {ROWS_PER_FILE - 1}) s(i)
-    GROUP BY cat
-    """,
-)
+@register("xlsx_datasource_ingest", oracle=SQL_LEDGER_TOTALS)
 def xlsx_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.xlsx_datasource import register_xlsx_source
 
     register_xlsx_source(spark)
-    scan = spark.read.format("xlsx").load(_provision())
+    scan = spark.read.format("xlsx").load(provision_ledgers())
     return scan.groupBy("cat").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("qty").cast("long").alias("qty_sum"),

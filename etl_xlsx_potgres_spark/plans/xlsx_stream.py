@@ -28,10 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.numeric import msum, sql_msum
+from ..functions.numeric import msum
+from ..operators.workbooks import SQL_LEDGER_TOTALS, provision_ledgers
 from ..registry import register
 from ..sources.xlsx_datasource import register_xlsx_source
-from .xlsx_distributed import N_FILES, ROWS_PER_FILE, _provision
 
 _SCHEMA = T.StructType(
     [
@@ -43,21 +43,10 @@ _SCHEMA = T.StructType(
 )
 
 
-@register(
-    "xlsx_stream_ingest",
-    oracle=f"""
-    SELECT 'c' || CAST((f + i) % 4 AS VARCHAR) AS cat,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM((i * 13 + f) % 100) AS BIGINT) AS qty_sum,
-           {sql_msum("i + 0.25 + f * 0.5", "price_sum")}
-    FROM generate_series(0, {N_FILES - 1}) t(f),
-         generate_series(0, {ROWS_PER_FILE - 1}) s(i)
-    GROUP BY cat
-    """,
-)
+@register("xlsx_stream_ingest", oracle=SQL_LEDGER_TOTALS)
 def xlsx_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_xlsx_source(spark)
-    landing = _provision()
+    landing = provision_ledgers()
     name = "xlsx_stream_sink"
     for q in spark.streams.active:
         if q.name == name:

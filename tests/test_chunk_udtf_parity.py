@@ -12,8 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_xlsx_potgres_spark.operators.text import tokens
-from etl_xlsx_potgres_spark.plans.chunk_udtf import ChunkTokensUdtf
-from etl_xlsx_potgres_spark.plans.chunking import STRIDE, WINDOW
+from etl_xlsx_potgres_spark.plans.chunking import STRIDE, WINDOW, ChunkTokensUdtf
 
 _ADVERSARIAL = [
     "a\xa0b c",              # no-break space inside a token (Java keeps)

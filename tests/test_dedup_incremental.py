@@ -12,8 +12,9 @@ import io
 
 from pyspark.sql import functions as F
 
+from etl_xlsx_potgres_spark.operators import stores
+from etl_xlsx_potgres_spark.operators.lsh import fused_bands, minhash_signatures
 from etl_xlsx_potgres_spark.plans import dedup_incremental
-from etl_xlsx_potgres_spark.plans.dedup_fuzzy import _minhash_sig_df
 from etl_xlsx_potgres_spark.sources import load_table
 
 
@@ -30,7 +31,7 @@ def test_history_side_probe_is_exchange_free(spark, sf_dir):
     newd = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 0
     )
-    new_bands = dedup_incremental._bands(_minhash_sig_df(newd))
+    new_bands = fused_bands(minhash_signatures(newd))
     # forbid broadcast (at fixture scale the tiny store would
     # broadcast, which also has no history Exchange but doesn't prove
     # the at-scale property): merge-hint forces the sort-merge path
@@ -95,7 +96,7 @@ def test_store_append_absorbs_accepted_batch(spark, sf_dir):
     newd = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 0
     )
-    new_bands = dedup_incremental._bands(_minhash_sig_df(newd))
+    new_bands = fused_bands(minhash_signatures(newd))
     hits_before = (
         new_bands.join(spark.table(store), "band")
         .select(new_bands.doc_id)
@@ -106,7 +107,7 @@ def test_store_append_absorbs_accepted_batch(spark, sf_dir):
     # new per-bucket files; history files are untouched) — through the
     # lifecycle helper, which also drops the store's provision-cache
     # entry so the trailing re-provision below really rebuilds
-    dedup_incremental.append_to_store(store, new_bands)
+    stores.append_to_store(store, new_bands)
     files_after = {
         f.path
         for f in spark.read.format("binaryFile")
@@ -143,25 +144,25 @@ def test_store_root_registers_cleanup_and_sweeps_stale(spark, tmp_path,
     import time
 
     monkeypatch.setattr(
-        dedup_incremental.tempfile, "gettempdir", lambda: str(tmp_path)
+        stores.tempfile, "gettempdir", lambda: str(tmp_path)
     )
-    prefix = dedup_incremental._STORE_PREFIX
+    prefix = stores._STORE_PREFIX
     stale = tmp_path / f"{prefix}crashed_app"
     fresh = tmp_path / f"{prefix}live_app"
     stale.mkdir()
     fresh.mkdir()
-    old = time.time() - dedup_incremental._STALE_SECONDS - 60
+    old = time.time() - stores._STALE_SECONDS - 60
     os.utime(stale, (old, old))
 
     registered = dict(seen=False)
     monkeypatch.setattr(
-        dedup_incremental.atexit,
+        stores.atexit,
         "register",
         lambda fn, *a, **k: registered.__setitem__("seen", (fn, a, k)),
     )
     # force a fresh first-touch for this (monkeypatched) root
-    dedup_incremental._CLEANUP_REGISTERED.clear()
-    root = dedup_incremental._store_root(spark)
+    stores._CLEANUP_REGISTERED.clear()
+    root = stores.store_root(spark)
     try:
         assert root.startswith(str(tmp_path))
         assert registered["seen"], "atexit cleanup must be registered"
@@ -171,7 +172,7 @@ def test_store_root_registers_cleanup_and_sweeps_stale(spark, tmp_path,
         assert fresh.exists(), "fresh sibling (live session) must survive"
         # second touch is a no-op (no duplicate atexit entries)
         registered["seen"] = False
-        assert dedup_incremental._store_root(spark) == root
+        assert stores.store_root(spark) == root
         assert registered["seen"] is False
     finally:
-        dedup_incremental._CLEANUP_REGISTERED.clear()
+        stores._CLEANUP_REGISTERED.clear()

@@ -137,7 +137,7 @@ def test_exact_and_semantic_verdicts_fire_both_ways(spark, sf_dir):
 
 
 def test_paragraph_history_probe_is_exchange_free(spark, sf_dir):
-    from etl_xlsx_potgres_spark.plans import paragraph_incremental as pinc
+    from etl_xlsx_potgres_spark.plans import paragraph_dedup as pinc
 
     store = pinc._provision_para_store(spark, sf_dir)
     hist = spark.table(store)
@@ -154,7 +154,7 @@ def test_paragraph_history_probe_is_exchange_free(spark, sf_dir):
 def test_paragraph_store_is_distinct_keyed(spark, sf_dir):
     # the denormalized-count design: ONE row per distinct paragraph
     # hash, however hot the boilerplate — the probe join is 1:<=1
-    from etl_xlsx_potgres_spark.plans import paragraph_incremental as pinc
+    from etl_xlsx_potgres_spark.plans import paragraph_dedup as pinc
 
     store = pinc._provision_para_store(spark, sf_dir)
     t = spark.table(store)

@@ -88,6 +88,54 @@ def _same(x, y) -> bool:
     return (math.isnan(x) and math.isnan(y)) or x == y
 
 
+def test_micro_mean_renderings_bit_identical(spark):
+    """The exact micro-unit centroid update (``operators.ann.micro_mean``
+    and its DuckDB twin ``sql_micro_mean_ctes``) is one kernel under two
+    keyings — the PQ codebook's (m, k) and k-means' cid.  Both engines
+    must produce the same bits under either keying, and the two keyings
+    the same bits for the same groups."""
+    import duckdb
+
+    from etl_xlsx_potgres_spark.operators.ann import micro_mean, sql_micro_mean_ctes
+
+    dim = 8
+    rng = random.Random(11)
+    rows = []
+    for i in range(60):
+        cid = i % 7  # 7 groups, (m, k) = divmod(cid, 3) is 1:1 with cid
+        vec = [rng.uniform(-1, 1) * 10 ** rng.randint(-6, 3) for _ in range(dim)]
+        rows.append((i, cid, cid // 3, cid % 3, vec))
+    df = spark.createDataFrame(rows, ["i", "cid", "m", "k", "v"]).select(
+        "cid", "m", "k", F.col("v").cast("array<float>").alias("embedding")
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (cid INTEGER, m INTEGER, k INTEGER, embedding FLOAT[])")
+    for _, cid, m, k, vec in rows:
+        arr = ", ".join(f"CAST(CAST('{x!r}' AS DOUBLE) AS FLOAT)" for x in vec)
+        con.execute(f"INSERT INTO t VALUES ({cid}, {m}, {k}, [{arr}])")
+
+    def duck(keys):
+        sql = (
+            f"WITH a1 AS (SELECT * FROM t), "
+            f"{sql_micro_mean_ctes(1, keys, 'embedding', dim, 'cv')} "
+            f"SELECT {', '.join(keys)}, cv FROM cb1"
+        )
+        return {r[:-1]: r[-1] for r in con.sql(sql).fetchall()}
+
+    def spark_rows(keys):
+        return {
+            tuple(r[k] for k in keys): r.cv
+            for r in micro_mean(df, keys, "embedding", "cv").collect()
+        }
+
+    by_cid, by_mk = spark_rows(("cid",)), spark_rows(("m", "k"))
+    assert len(by_cid) == len(by_mk) == 7
+    assert by_cid == duck(("cid",))
+    assert by_mk == duck(("m", "k"))
+    for (cid,), cv in by_cid.items():
+        assert by_mk[divmod(cid, 3)] == cv, cid
+
+
 def test_dot_implementations_bit_identical(spark):
     """Every rendering of the vector folds in ``operators/vectors.py`` —
     the Spark HOF folds (``dot``, ``sq_norm``, ``cosine``, ``sq_dist``),

@@ -146,39 +146,6 @@ def test_code_change_invalidates_stamp(tmp_path, monkeypatch):
     assert "touched" not in green
 
 
-def test_transitive_plan_edit_changes_source_hash(tmp_path, monkeypatch):
-    """On a scratch copy of plans/, editing a module that a query's
-    defining module reaches only through another sibling must change
-    the query's source hash — checked for every such transitive edge,
-    including dedup_incremental_paragraph -> dedup_incremental_more ->
-    dedup_incremental."""
-    import os
-    import shutil
-
-    registry.load_all()
-    plans = tmp_path / "plans"
-    shutil.copytree(
-        os.path.dirname(sys.modules["etl_xlsx_potgres_spark.plans"].__file__),
-        plans,
-    )
-    by_module: dict[str, str] = {}
-    for name, fn in registry.QUERIES.items():
-        by_module.setdefault(fn.__module__, name)
-    edited = set()
-    for modname, name in sorted(by_module.items()):
-        mod = sys.modules[modname]
-        copy = str(plans / os.path.basename(mod.__file__))
-        monkeypatch.setattr(mod, "__file__", copy)
-        direct = {str(plans / f"{n}.py") for n in entry_mod._plan_imports(copy)}
-        for sibling in sorted(set(entry_mod._plan_closure(copy)) - direct):
-            before = entry_mod._source_hash(name, "core")
-            with open(sibling, "a") as f:
-                f.write("\n# edited\n")
-            assert entry_mod._source_hash(name, "core") != before, (name, sibling)
-            edited.add((os.path.basename(copy), os.path.basename(sibling)))
-    assert ("paragraph_incremental.py", "dedup_incremental.py") in edited
-
-
 def test_fixture_change_voids_entire_ledger(tmp_path, monkeypatch):
     # Regenerated fixtures invalidate every stamp at once (the r5
     # incident: 8 queries stayed "green" across a fixture regeneration).

@@ -218,9 +218,9 @@ _REVIEWED_HINTS = {
     ("plans/corpus_mix.py", "tot"): _ONE_ROW,
     ("plans/importance_sampling.py", "tot"): _ONE_ROW,
     ("plans/lang_confusion.py", "tot"): "one row per language: <= 5 rows",
-    ("plans/quality_classifier.py", "tot"): _ONE_ROW,
+    ("operators/classifier.py", "tot"): _ONE_ROW,
     ("plans/tokenizer_fertility.py", "tot"): _ONE_ROW,
-    ("plans/quality_classifier.py", "prior"): "1-row NB class prior",
+    ("operators/classifier.py", "prior"): "1-row NB class prior",
     ("plans/dedup_incremental_more.py", "stats"): "1-row history count + min coin",
     ("plans/corpus_mix.py", "src"): _SOURCE,
     ("plans/tokenizer_fertility.py", "src"): _SOURCE,
@@ -229,13 +229,11 @@ _REVIEWED_HINTS = {
     ("plans/robust_stats.py", "med"): _ENUM,
     ("plans/robust_stats.py", "mad"): _ENUM,
     ("plans/dpp_pruning.py", "dim"): "one row per calendar month (~12/yr of time span)",
-    ("plans/similarity.py", "cents"): _IVF,
     ("operators/ann.py", "cells"): _IVF,
     ("operators/ann.py", "probes"): _PROBES,
     ("operators/ann.py", "codebook"): _PQ + " (every Lloyd round, and the stored one)",
     ("operators/ann.py", "lut"): _LUT,
     ("operators/ann.py", "hits"): "per-query recall counts: <= NQ = 10 rows",
-    ("plans/ann_recall_curve.py", "cents"): _IVF,
     ("plans/kmeans_iterative.py", "cents"): "k-means centroids: K = 10 rows",
     ("plans/corpus_ops.py", "seeds"): "k-means seed set: K = 10 rows by the vec_id < K filter",
     ("plans/corpus_ops.py", "arrs"): "1-row per-dimension range arrays (2 x 64 doubles)",
@@ -257,14 +255,14 @@ _REVIEWED_HINTS = {
     ("plans/bloom_dedup.py", "bloom"): "Bloom filter: N_WORDS = 16 bigint rows",
     ("plans/analytics.py", "vocab_row"): "top-K vocabulary packed into ONE array cell",
     ("plans/tokenizer_apply.py", "vocab"): "top-K vocabulary: K rows by the limit",
-    ("plans/bpe_train.py", "top"): "one BPE round's 1-row winner",
-    ("plans/chunk_token_budget.py", "cur"): "one BPE round's 1-row winner",
+    ("operators/bpe.py", "top"): "one BPE round's 1-row winner",
+    ("operators/bpe.py", "cur"): "one BPE round's 1-row winner",
     ("plans/chunk_token_budget.py", "merges_row_df"): "1-row crossJoin of the N round winners",
-    ("plans/tokenizer_fertility.py", "_merges_row"): "1-row crossJoin of the N round winners",
+    ("plans/tokenizer_fertility.py", "merges_row"): "1-row crossJoin of the N round winners",
     ("plans/sequence_packing.py", "prior"): "<= 256 md5-prefix bucket rows",
     ("plans/sequence_packing.py", "offsets"): "<= 256 md5-prefix bucket rows",
     ("plans/importance_sampling.py", "_lpmap"): "1-row map of <= B = 256 bucket entries",
-    ("plans/quality_classifier.py", "_lomap"): "1-row map of <= B = 256 bucket entries",
+    ("operators/classifier.py", "_lomap"): "1-row map of <= B = 256 bucket entries",
     ("plans/lang_confusion.py", "tri_profile_model"): "<= 5 langs x M_PROFILE = 64 rows",
     ("plans/domain_blocklist.py", "blocklist_df"): "fixed curated blocklist (4 fixture rows)",
 }
@@ -426,6 +424,77 @@ def test_vector_fold_lint_catches_each_spelling():
         "F.zip_with(slice(toks, 1, n), slice(toks, 2, n), lambda a, b: concat(a, b))",
     ):
         assert not _vector_fold_copies(scalar), scalar
+
+
+def _plan_imports(rel: str, source: str) -> list[tuple[int, str]]:
+    """(line, module) of every import in the package module at ``rel``
+    that reaches a ``plans/`` module: ``from .x import``, ``from .
+    import x``, ``from ..plans import x`` and absolute
+    ``etl_xlsx_potgres_spark.plans.x`` imports, at module or function
+    level."""
+    import ast
+
+    pkg = rel.split("/")[:-1]
+    hits = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Import):
+            targets = [a.name.split(".", 1)[1] for a in node.names
+                       if a.name.startswith("etl_xlsx_potgres_spark.")]
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = pkg[: len(pkg) - node.level + 1]
+            elif (node.module or "").startswith("etl_xlsx_potgres_spark"):
+                base = []
+            else:
+                continue
+            mod = ".".join(base + (node.module or "").split(".")[node.level == 0:])
+            mod = mod.strip(".")
+            targets = [f"{mod}.{a.name}".strip(".") for a in node.names]
+        else:
+            continue
+        hits += [
+            (node.lineno, t) for t in targets
+            if t == "plans" or t.startswith("plans.")
+        ]
+    return hits
+
+
+def test_plans_import_no_sibling_plan():
+    """A plan module is its query: no module imports a ``plans/``
+    module except the package's ``__init__`` (which lists them all)
+    and ``registry.load_all``.  Shared kernels live in ``operators/``,
+    so a query's green stamp (``__spark_entry__._source_hash``: its
+    module + the core packages) covers every line it runs."""
+    offenders = [
+        f"{rel}:{line}: imports {target}"
+        for rel, source in _package_sources()
+        if rel not in ("plans/__init__.py", "registry.py")
+        for line, target in _plan_imports(rel, source)
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_sibling_import_lint_catches_each_spelling():
+    """The lint resolves every import spelling that reaches a plan."""
+    spellings = [
+        ("plans/a.py", "from .dedup_fuzzy import _x"),
+        ("plans/a.py", "from . import text_analysis"),
+        ("plans/a.py", "def f():\n    from .bpe_train import word_counts\n"),
+        ("plans/a.py", "import etl_xlsx_potgres_spark.plans.similarity"),
+        ("plans/a.py", "from etl_xlsx_potgres_spark.plans.similarity import x"),
+        ("plans/a.py", "from etl_xlsx_potgres_spark.plans import similarity"),
+        ("operators/a.py", "from ..plans.dedup_fuzzy import band_rows"),
+        ("operators/a.py", "from ..plans import dedup_fuzzy"),
+    ]
+    for rel, source in spellings:
+        assert _plan_imports(rel, source), source
+    for rel, source in [
+        ("plans/a.py", "from ..operators.lsh import band_rows"),
+        ("plans/a.py", "from ..registry import register\nfrom .. import caching"),
+        ("operators/a.py", "from .text import tokens\nfrom . import vectors"),
+        ("plans/a.py", "from etl_xlsx_potgres_spark.operators import stores"),
+    ]:
+        assert not _plan_imports(rel, source), source
 
 
 def _hint_calls(source: str, is_hint) -> list[tuple[int, str]]:

@@ -5,7 +5,7 @@ buckets (boilerplate pages share whole signatures), and an uncapped
 banded self-join is quadratic in bucket occupancy.  These tests build
 exactly that pathology — one signature shared by 40 documents, so
 every band bucket holds 40 docs — and assert the capped geometry
-(dedup_fuzzy.BAND_CAP) bounds candidates at C(cap, 2) per bucket,
+(operators.lsh.BAND_CAP) bounds candidates at C(cap, 2) per bucket,
 keeps the deterministic smallest-doc_id survivors, reports the
 clipping as data, and still matches the DuckDB oracle bit-for-bit on
 the same synthetic fixture (the cap is part of BOTH engines' query,
@@ -18,7 +18,7 @@ import duckdb
 from pyspark.sql import Row
 
 from etl_xlsx_potgres_spark import registry
-from etl_xlsx_potgres_spark.plans.dedup_fuzzy import BAND_CAP
+from etl_xlsx_potgres_spark.operators.lsh import BAND_CAP
 from etl_xlsx_potgres_spark.sources.tables import SCHEMAS
 
 from .oracle_utils import assert_frames_match
@@ -143,15 +143,15 @@ def test_hot_band_oracle_parity_on_synthetic_fixture(spark, tmp_path):
 def test_capped_band_rows_is_deterministic_smallest_ids(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from etl_xlsx_potgres_spark.plans.dedup_fuzzy import (
-        _minhash_sig_df,
+    from etl_xlsx_potgres_spark.operators.lsh import (
         capped_band_rows,
+        minhash_signatures,
     )
     from etl_xlsx_potgres_spark.sources import load_table
 
     sf = _hot_band_fixture(spark, tmp_path)
     d = load_table(spark, sf, "documents")
-    sig = _minhash_sig_df(d).filter(F.col("mh0").isNotNull())
+    sig = minhash_signatures(d).filter(F.col("mh0").isNotNull())
     kept = (
         capped_band_rows(sig)
         .filter(F.col("doc_id") < _HOT_N)
@@ -221,11 +221,11 @@ def test_lang_localization_never_sees_label_in_classifier(spark, sf_dir):
     keying on the `lang` column)."""
     from pyspark.sql import functions as F
 
-    from etl_xlsx_potgres_spark.plans.text_analysis import _localized_text_col
+    from etl_xlsx_potgres_spark.operators.lang import localized_text
     from etl_xlsx_potgres_spark.sources import load_table
 
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", _localized_text_col().alias("text")
+        "doc_id", "lang", localized_text().alias("text")
     )
     preds = registry.QUERIES["text_lang_id"](spark, sf_dir)
     joined = preds.join(d.select("doc_id", "text"), "doc_id")

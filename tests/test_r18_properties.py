@@ -170,16 +170,16 @@ def test_star_edges_equals_groupby_min_formulation(spark, sf_dir):
     edge from each bucket's minimum doc_id to every other member)."""
     from pyspark.sql import functions as F
 
-    from etl_xlsx_potgres_spark.plans.dedup_fuzzy import (
-        _minhash_sig_df,
+    from etl_xlsx_potgres_spark.operators.lsh import (
         band_rows,
+        minhash_signatures,
         ranked_band_rows,
         star_edges,
     )
     from etl_xlsx_potgres_spark.sources import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    sig = _minhash_sig_df(d).filter(F.col("mh0").isNotNull())
+    sig = minhash_signatures(d).filter(F.col("mh0").isNotNull())
     bands = band_rows(sig)
     got = {
         (r.d1, r.d2, r.band_id)

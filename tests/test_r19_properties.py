@@ -436,8 +436,9 @@ def test_band_store_append_equals_one_shot_build(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from etl_xlsx_potgres_spark.operators import stores
+    from etl_xlsx_potgres_spark.operators.lsh import fused_bands, minhash_signatures
     from etl_xlsx_potgres_spark.plans import dedup_incremental as di
-    from etl_xlsx_potgres_spark.plans.dedup_fuzzy import _minhash_sig_df
     from etl_xlsx_potgres_spark.sources import load_table
 
     one_shot = di._provision_store(spark, sf_dir)
@@ -452,19 +453,19 @@ def test_band_store_append_equals_one_shot_build(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 != 0
     )
-    first = di._bands(_minhash_sig_df(d.filter(F.col("doc_id") % 20 < 10)))
-    second = di._bands(_minhash_sig_df(d.filter(F.col("doc_id") % 20 >= 10)))
+    first = fused_bands(minhash_signatures(d.filter(F.col("doc_id") % 20 < 10)))
+    second = fused_bands(minhash_signatures(d.filter(F.col("doc_id") % 20 >= 10)))
     import os
 
     name = "band_store_appended_test"
-    path = os.path.join(di._store_root(spark), name)
+    path = os.path.join(stores.store_root(spark), name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
-        first.write.mode("overwrite").bucketBy(di.N_BUCKETS, "band")
+        first.write.mode("overwrite").bucketBy(stores.N_BUCKETS, "band")
         .sortBy("band").option("path", path).format("parquet")
         .saveAsTable(name)
     )
-    di.append_to_store(name, second)
+    stores.append_to_store(name, second)
 
     assert (
         spark.table(name).count() == spark.table(one_shot).count()
@@ -472,7 +473,7 @@ def test_band_store_append_equals_one_shot_build(spark, sf_dir):
     newd = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 0
     )
-    new_bands = di._bands(_minhash_sig_df(newd))
+    new_bands = fused_bands(minhash_signatures(newd))
     hits = (
         new_bands.join(
             spark.table(name).select(

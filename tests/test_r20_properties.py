@@ -12,8 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_xlsx_potgres_spark import registry
+from etl_xlsx_potgres_spark.operators import stores
 from etl_xlsx_potgres_spark.operators.ann import M, PQ_K
-from etl_xlsx_potgres_spark.plans import dedup_incremental as di
 from etl_xlsx_potgres_spark.plans import dedup_incremental_more as more
 from etl_xlsx_potgres_spark.sources import load_table
 
@@ -35,26 +35,26 @@ def test_cached_table_semantics(spark):
             .format("parquet").saveAsTable(name)
         )
 
-    di.cached_table(spark, name, "k1", build)
-    di.cached_table(spark, name, "k1", build)
+    stores.cached_table(spark, name, "k1", build)
+    stores.cached_table(spark, name, "k1", build)
     assert len(calls) == 1  # second consumer served from cache
     # a DIFFERENT fixture path under the same table name must rebuild
     # (same-basename fixture dirs collide on the name)
-    di.cached_table(spark, name, "k2", build)
+    stores.cached_table(spark, name, "k2", build)
     assert len(calls) == 2
     # force (the provision-side queries) always rebuilds
-    di.cached_table(spark, name, "k2", build, force=True)
+    stores.cached_table(spark, name, "k2", build, force=True)
     assert len(calls) == 3
     # invalidation (lifecycle tests that mutate a shared-name store)
-    di.invalidate_cached_table(spark, name)
-    di.cached_table(spark, name, "k2", build)
+    stores.invalidate_cached_table(spark, name)
+    stores.cached_table(spark, name, "k2", build)
     assert len(calls) == 4
     # a dropped table must rebuild even with a live cache entry
     spark.sql(f"DROP TABLE {name}")
-    di.cached_table(spark, name, "k2", build)
+    stores.cached_table(spark, name, "k2", build)
     assert len(calls) == 5
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    di.invalidate_cached_table(spark, name)
+    stores.invalidate_cached_table(spark, name)
 
 
 # ------------------------------------- bucket spec parsing (ADVICE r19)
@@ -67,12 +67,12 @@ def test_bucket_spec_parsed_from_one_describe_pass(spark):
         .write.mode("overwrite").bucketBy(6, "b").sortBy("b", "s")
         .option("path", f"/tmp/{name}").format("parquet").saveAsTable(name)
     )
-    n, bcols, scols, loc = di._bucket_spec_of(name)
+    n, bcols, scols, loc = stores.bucket_spec_of(name)
     assert (n, bcols, scols) == (6, ["b"], ["b", "s"])
     assert loc and loc.endswith(name)
     # append honors the PARSED spec (6 buckets, two sort columns) —
     # the r19 module-constant assumption would reject this store
-    di.append_to_store(
+    stores.append_to_store(
         name, spark.range(20, 30).selectExpr("id", "id % 3 AS b", "id % 5 AS s")
     )
     assert spark.table(name).count() == 30
@@ -82,11 +82,11 @@ def test_bucket_spec_parsed_from_one_describe_pass(spark):
 # ------------------------------------- semantic store append lifecycle
 
 def _custom_semantic_store(spark, name, ranked_first):
-    path = os.path.join(di._store_root(spark), name)
+    path = os.path.join(stores.store_root(spark), name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
         ranked_first.write.mode("overwrite")
-        .bucketBy(di.N_BUCKETS, "cid").sortBy("cid")
+        .bucketBy(stores.N_BUCKETS, "cid").sortBy("cid")
         .option("path", path).format("parquet").saveAsTable(name)
     )
     return name
@@ -229,12 +229,12 @@ def test_pq_code_store_append_bit_identical_without_compaction(
     first = base.filter(F.col("vec_id") % 20 < 10)
     second = base.filter(F.col("vec_id") % 20 >= 10)
     name = "semantic_pqcode_appended_test"
-    path = os.path.join(di._store_root(spark), name)
+    path = os.path.join(stores.store_root(spark), name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     codes_first = more._encode_cells(first, spark.table(cb_name))
     (
         codes_first.write.mode("overwrite")
-        .bucketBy(di.N_BUCKETS, "cid").sortBy("cid")
+        .bucketBy(stores.N_BUCKETS, "cid").sortBy("cid")
         .option("path", path).format("parquet").saveAsTable(name)
     )
     more.append_to_semantic_pq(spark, name, cb_name, second)
@@ -284,28 +284,28 @@ def _compaction_sort_contrast(spark, sf_dir):
         _assert_history_branch_exchange_free,
         _plan_str,
     )
-    from etl_xlsx_potgres_spark.plans.dedup_fuzzy import _minhash_sig_df
+    from etl_xlsx_potgres_spark.operators.lsh import fused_bands, minhash_signatures
 
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 != 0
     )
-    first = di._bands(_minhash_sig_df(d.filter(F.col("doc_id") % 20 < 10)))
-    second = di._bands(_minhash_sig_df(d.filter(F.col("doc_id") % 20 >= 10)))
+    first = fused_bands(minhash_signatures(d.filter(F.col("doc_id") % 20 < 10)))
+    second = fused_bands(minhash_signatures(d.filter(F.col("doc_id") % 20 >= 10)))
     name = "band_store_compaction_test"
-    path = os.path.join(di._store_root(spark), name)
+    path = os.path.join(stores.store_root(spark), name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
-        first.write.mode("overwrite").bucketBy(di.N_BUCKETS, "band")
+        first.write.mode("overwrite").bucketBy(stores.N_BUCKETS, "band")
         .sortBy("band").option("path", path).format("parquet")
         .saveAsTable(name)
     )
-    di.append_to_store(name, second)
+    stores.append_to_store(name, second)
     n_rows = spark.table(name).count()
 
     newd = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 0
     )
-    probe = di._bands(_minhash_sig_df(newd)).select(
+    probe = fused_bands(minhash_signatures(newd)).select(
         F.col("doc_id").alias("new_id"), "band"
     )
 
@@ -316,15 +316,15 @@ def _compaction_sort_contrast(spark, sf_dir):
     _assert_history_branch_exchange_free(before, name)
     assert "Sort" in _history_branch(before), before
 
-    di.compact_store(name)
+    stores.compact_store(name)
     assert spark.table(name).count() == n_rows
     # one file per bucket after the merge
-    _, _, _, loc = di._bucket_spec_of(name)
+    _, _, _, loc = stores.bucket_spec_of(name)
     files = [
         f for f in os.listdir(loc[len("file:"):])
         if f.startswith("part-")
     ]
-    assert len(files) == di.N_BUCKETS, files
+    assert len(files) == stores.N_BUCKETS, files
     after = hist_plan()
     _assert_history_branch_exchange_free(after, name)
     assert "Sort" not in _history_branch(after), after
