@@ -14,6 +14,14 @@ single-sample wall times on a shared box swing several x run-to-run
 (the r4->r6 "regressions" on unchanged dedup code), and medians make
 round-over-round deltas attributable to code, not scheduler noise.
 Raw per-pass samples land in BENCH_FULL.json.
+
+Load: ``load_flag`` is true when the busy CPU outside this process tree
+(the driver and its JVM), measured from /proc across the run and
+reported as ``external_cpu_cores``, averages more than
+``LOAD_THRESHOLD`` (0.10) of the host's cores.  It has no other input.
+``loadavg_1m`` is recorded beside it; ``ratio_vs_anchor`` compares the
+per-query times with the committed BENCH_FULL.json, which this run
+overwrites.
 """
 
 from __future__ import annotations
@@ -30,23 +38,30 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from etl_xlsx_potgres_spark import caching, registry
 from etl_xlsx_potgres_spark.session import get_spark
 
-# Queries representative of the engine's surface; None = every
-# registered query.
-HEADLINE: list[str] | None = None
+# A run is flagged as loaded when the busy CPU outside this process
+# tree averages more than this share of the host's cores.
+LOAD_THRESHOLD = 0.10
+
+
+def _busy_jiffies(cpu_line: str) -> int | None:
+    """Busy jiffies of the aggregate ``cpu`` line of /proc/stat: user
+    through steal minus idle and iowait.  Steal counts as busy; guest
+    and guest_nice are left out because the kernel already counts them
+    inside user and nice."""
+    parts = cpu_line.split()
+    if not parts or parts[0] != "cpu":
+        return None
+    vals = [int(x) for x in parts[1:9]]  # user .. steal
+    return sum(vals) - vals[3] - (vals[4] if len(vals) > 4 else 0)
 
 
 def _system_busy_jiffies() -> int | None:
     """Whole-host busy CPU jiffies from /proc/stat (None off-Linux)."""
     try:
         with open("/proc/stat") as f:
-            parts = f.readline().split()
+            return _busy_jiffies(f.readline())
     except OSError:
         return None
-    if not parts or parts[0] != "cpu":
-        return None
-    vals = [int(x) for x in parts[1:]]
-    idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle + iowait
-    return sum(vals) - idle
 
 
 def _proc_tree_jiffies() -> int | None:
@@ -54,14 +69,9 @@ def _proc_tree_jiffies() -> int | None:
     this process and every live descendant — the bench's python driver
     plus the Spark JVM it launched.  A descendant that exits mid-run
     stays accounted: its time folds into a live ancestor's cutime.
-
-    Known limits (ADVICE r19): a descendant that gets ORPHANED and
-    reparented to init folds its time into init's cutime, not ours —
-    that work is then misattributed to EXTERNAL load; and the /proc
-    walk races with short-lived processes.  Both inflate ext_cores
-    slightly on a quiet host, so :func:`load_flag` demands a 2x margin
-    over its threshold (or corroboration from the r16 loadavg
-    fallback) before the measured signal alone flags a run."""
+    Known limits: a descendant orphaned and reparented to init folds
+    its time into init's cutime, so it reads as external; and the /proc
+    walk races with short-lived processes."""
     try:
         pids = [int(p) for p in os.listdir("/proc") if p.isdigit()]
     except OSError:
@@ -96,11 +106,8 @@ def _proc_tree_jiffies() -> int | None:
 
 def external_cpu_probe() -> tuple[int, int, float] | None:
     """(system busy jiffies, own-tree jiffies, wall seconds) snapshot;
-    two snapshots bracket a run and their deltas yield the EXTERNAL
-    cpu-cores average — busy work that is not ours, measured instead
-    of inferred from loadavg (which the bench's own duty cycle
-    pollutes: r19's first two quiet-host runs flagged/unflagged in the
-    WRONG order because the faster run kept 1-min loadavg higher)."""
+    two snapshots bracket a run and :func:`external_cpu_cores` turns
+    their deltas into the average busy cores that were not ours."""
     sysj = _system_busy_jiffies()
     ours = _proc_tree_jiffies()
     if sysj is None or ours is None:
@@ -120,107 +127,34 @@ def external_cpu_cores(
     return round(max(0.0, ext / hz / elapsed), 3)
 
 
-def load_flag(
-    loadavg_1m: list[float],
-    cpus: int,
-    ratio_stats: dict | None = None,
-    anchor_loadavg: list[float] | None = None,
-    ext_cores: float | None = None,
-) -> bool:
-    """True when the run's profile shows external load.
-
-    Signals (each alone suffices):
-    - start sample > 0.15*cpus: the bench hasn't run yet, so any load
-      at start is external (r14 rule);
-    - any sample > cpus: the bench's own load tops out at the worker
-      count, anything above is contention (r14 rule);
-    - MEASURED external CPU (r19): /proc accounting splits the host's
-      busy jiffies into ours (this process tree: driver + JVM) and
-      everyone else's; sustained non-ours work above 0.05*cpus cores
-      is contention by definition, none of the loadavg guesswork.
-      When the probe is available it REPLACES the r16
-      persistent-elevation heuristic, which misread the bench's own
-      duty cycle (a FASTER run keeps 1-min loadavg higher between
-      passes — r19's two quiet-host runs flagged in the wrong order).
-      r20 (ADVICE r19): the probe misattributes orphan-reparented
-      descendants and races short-lived processes, so the measured
-      signal ALONE only flags with a 2x margin (> 0.10*cpus); in the
-      0.05-0.10*cpus band it needs the r16 fallback to corroborate;
-    - PERSISTENT mid-run elevation (r16) as the fallback where /proc
-      is unavailable: at least half the in-run samples above
-      0.18*cpus;
-    - DISPERSION vs the anchor's own quiet trace (r17): any sample
-      above 1.25x the committed anchor's loadavg peak AND at least
-      two of the worst-3 anchor ratios above 2x — blowups that track
-      load, not code. Requiring two keeps a genuine single-query
-      regression from being mislabeled as load.  r20 (VERDICT r19
-      missing #4): when the probe MEASURED the host quiet (at or
-      under the 0.05*cpus threshold), loadavg elevation can only be
-      the bench's own duty cycle — the exact r19 false-positive class
-      — so a measured-quiet run suppresses the dispersion signal and
-      any ratio blowups stand as code regressions, not load.
-    """
-    start, rest = loadavg_1m[0], loadavg_1m[1:]
-    fallback_elevated = bool(rest) and 2 * sum(
-        s > 0.18 * cpus for s in rest
-    ) >= len(rest)
-    measured_quiet = ext_cores is not None and ext_cores <= 0.05 * cpus
-    if ext_cores is not None:
-        persistent = ext_cores > 0.10 * cpus or (
-            ext_cores > 0.05 * cpus and fallback_elevated
-        )
-    else:
-        persistent = fallback_elevated
-    dispersion = False
-    if ratio_stats and anchor_loadavg and not measured_quiet:
-        elevated = any(
-            s > 1.25 * max(anchor_loadavg) for s in loadavg_1m
-        )
-        worst = [r for _, r in ratio_stats.get("worst3", [])]
-        dispersion = elevated and sum(r > 2.0 for r in worst) >= 2
-    return (
-        start > 0.15 * cpus
-        or max(loadavg_1m) > cpus
-        or persistent
-        or dispersion
-    )
+def load_flag(ext_cores: float | None, cpus: int) -> bool:
+    """True when the run shared its host: the measured external CPU
+    (busy cores outside this process tree, averaged over the run)
+    exceeds ``LOAD_THRESHOLD * cpus``.  Steal counts as busy in
+    :func:`_busy_jiffies`, so a hypervisor taking cycles from this VM
+    raises the signal as a neighbour process does.  Without /proc the
+    signal is None and the flag false."""
+    return ext_cores is not None and ext_cores > LOAD_THRESHOLD * cpus
 
 
-def load_anchor(
-    anchor_path: str, sf, times: dict[str, float]
-) -> tuple[dict | None, list | None]:
-    """(ratio_stats, anchor_loadavg) of this run's per-query times
-    against the committed anchor at ``anchor_path`` — the dispersion
-    diagnostics behind the anchor-relative load signal.  An anchor
-    captured at a DIFFERENT scale factor is rejected outright: every
-    per-query ratio (and the dispersion signal keyed on them) would be
-    meaningless — r17: a stray sf0.01 anchor produced 2-8x "ratios"
-    against an sf0.1 run and tripped the flag.  A missing or malformed
-    anchor (bad JSON shape, non-numeric query values) degrades to
-    (None, None) rather than crashing the bench run — the load flag
-    then runs on its three anchor-free signals.  Factored out of
-    main() so tests exercise THIS code path (advice r17)."""
+def load_anchor(anchor_path: str, sf, times: dict[str, float]) -> dict | None:
+    """Ratio stats of this run's per-query times against the committed
+    anchor at ``anchor_path``.  A missing or malformed anchor, or one
+    captured at a different scale factor (whose ratios would be
+    meaningless), gives None instead of failing the run."""
     try:
         with open(anchor_path) as f:
             anchor = json.load(f)
         if anchor.get("sf") is not None and sf is not None and anchor["sf"] != sf:
             raise ValueError("anchor sf mismatch")
         aq = anchor.get("queries", {})
-        anchor_loadavg = None
-        la = anchor.get("loadavg_1m")
-        if (
-            isinstance(la, list)
-            and la
-            and all(isinstance(s, (int, float)) for s in la)
-        ):
-            anchor_loadavg = la
         pairs = sorted(
             ((round(times[n] / aq[n], 3), n) for n in times
              if n in aq and isinstance(aq[n], (int, float))
              and aq[n] > 0),
         )
         if not pairs:
-            return None, anchor_loadavg
+            return None
         ratios = [r for r, _ in pairs]
         k = len(ratios)
         return {
@@ -230,9 +164,9 @@ def load_anchor(
             "median": round(statistics.median(ratios), 3),
             "iqr": [ratios[k // 4], ratios[(3 * k) // 4]],
             "worst3": [[n, r] for r, n in pairs[-3:][::-1]],
-        }, anchor_loadavg
+        }
     except (OSError, ValueError, KeyError, TypeError):
-        return None, None
+        return None
 
 
 def _reference_equivalent_sec(spark) -> float:
@@ -311,7 +245,7 @@ def main() -> None:
 
     spark = get_spark(app_name="bench")
     registry.load_all()
-    names = HEADLINE if HEADLINE is not None else sorted(registry.QUERIES)
+    names = sorted(registry.QUERIES)
     # the registered reference_pipeline_1200rows is the ledger twin of
     # the faithful fan-out timed below — skip the summary variant here
     # so the headline number stays the baseline-comparable one
@@ -326,13 +260,11 @@ def main() -> None:
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     samples: dict[str, list[float]] = {n: [] for n in names}
 
-    # Load accounting (VERDICT r12 task 4): per-query spreads up to
-    # ~7x across passes tracked host-load drift, which makes
-    # round-over-round totals incomparable unless the load under
-    # which they were measured is recorded WITH them. 1-min loadavg
-    # is sampled at suite start and after every pass; a run whose
-    # max loadavg exceeds the worker count is flagged so the judge
-    # (and the next round) can discount it.
+    # Load accounting: per-query spreads up to ~7x across passes
+    # tracked host load, so the load a run was measured under is
+    # recorded with it. 1-min loadavg is sampled at suite start and
+    # after every pass, for the record only; the flag reads the
+    # measured external CPU between the two probes.
     cpus = os.cpu_count() or 1
     loadavg_1m: list[float] = [round(os.getloadavg()[0], 2)]
     ext_start = external_cpu_probe()
@@ -380,17 +312,13 @@ def main() -> None:
     times["reference_pipeline_1200rows"] = round(statistics.median(ref_samples), 3)
     loadavg_1m.append(round(os.getloadavg()[0], 2))
 
-    # Ratio-vs-anchor (VERDICT r14 task 7): same-code totals spread
-    # ~8% run-to-run, so cross-run comparisons use the PER-QUERY ratio
-    # distribution against the last committed anchor (the BENCH_FULL
-    # this run is about to overwrite, or $SPARK_GRAFT_BENCH_ANCHOR).
+    # Ratio-vs-anchor: same-code totals spread ~8% run-to-run, so
+    # cross-run comparisons use the PER-QUERY ratio distribution
+    # against the committed BENCH_FULL this run is about to overwrite.
     # A genuine regression moves specific queries' ratios far from the
     # median; host drift moves the whole distribution together.
     repo = os.path.dirname(os.path.abspath(__file__))
-    anchor_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_ANCHOR", os.path.join(repo, "BENCH_FULL.json")
-    )
-    ratio_stats, anchor_loadavg = load_anchor(anchor_path, sf, times)
+    ratio_stats = load_anchor(os.path.join(repo, "BENCH_FULL.json"), sf, times)
     ext_cores = external_cpu_cores(ext_start, external_cpu_probe())
 
     total = round(sum(times.values()), 3)
@@ -405,22 +333,13 @@ def main() -> None:
         "bench_runs": n_runs,
         "stat": "median",
         # start + one sample per pass + one after the ref pipeline;
-        # the bench itself drives loadavg toward the worker count, so
-        # "quiet" means the START sample is low and the in-run samples
-        # stay near (not far above) the worker count
+        # recorded, not an input of the flag
         "loadavg_1m": loadavg_1m,
         "host_cpus": cpus,
-        # Average cpu-cores of MEASURED non-ours work across the run
-        # (/proc accounting; null off-Linux) — the direct signal the
-        # loadavg heuristics approximated.
+        # Average cpu-cores of measured non-ours work across the run
+        # (/proc accounting; null off-Linux) — the flag's one input.
         "external_cpu_cores": ext_cores,
-        # Flag — see load_flag() for the signal rationale (start gate,
-        # absolute ceiling, measured external CPU with the r16
-        # persistent-elevation heuristic as fallback, anchor-relative
-        # dispersion under elevated load).
-        "load_flag": load_flag(
-            loadavg_1m, cpus, ratio_stats, anchor_loadavg, ext_cores
-        ),
+        "load_flag": load_flag(ext_cores, cpus),
         "ratio_vs_anchor": ratio_stats,
     }
 

@@ -1,7 +1,8 @@
 """Product-quantization and inverted-file index kernels (Jegou et al.
-2011): the subvector split, the PQ encode argmin, per-query lookup
-tables, Lloyd-trained codebooks and their exact micro-unit centroid
-update, the ADC scan with its exact re-rank, the md5-seeded coarse
+2011): the subvector split, the nearest-centroid argmin of the PQ
+encode and the k-means assignments, per-query lookup tables,
+Lloyd-trained codebooks and their exact micro-unit centroid update,
+the ADC scan with its exact re-rank, the md5-seeded coarse
 cells of the IVF lists, and the exact and IVF cosine top-k searches.
 
 Every kernel has its Spark form (over DataFrames) and its DuckDB form
@@ -66,23 +67,33 @@ def subvectors(frame: DataFrame, keys: tuple[str, ...] = ("vec_id",)) -> DataFra
     )
 
 
+def nearest(
+    frame: DataFrame, keys: tuple[str, ...], d2, id_col: str, out: str
+) -> DataFrame:
+    """(*keys, out, d2): per ``keys`` group the ``id_col`` of the row
+    with the least ``d2``, ties to the lower id, as a map-side-partial
+    ``min(struct(d2, id))`` — the lexicographic struct min is exactly
+    ORDER BY d2, id, and one row per key crosses the shuffle instead of
+    the whole candidate crossJoin a window would move.  DuckDB twin:
+    :func:`sql_nearest`."""
+    m = F.min(F.struct(d2.alias("d"), F.col(id_col).alias("i"))).alias(out)
+    return frame.groupBy(*keys).agg(m).select(
+        *keys, F.col(f"{out}.i").alias(out), F.col(f"{out}.d").alias("d2")
+    )
+
+
 def pq_encode(
     subs: DataFrame, codebook: DataFrame, keys: tuple[str, ...] = ("vec_id", "m")
 ) -> DataFrame:
-    """(*keys, k, d2): each subvector's nearest codeword of the (m, k,
-    csub) codebook, with (d2, k) tie-break, as a map-side
-    ``min(struct(d2, k))`` — one row per key crosses the shuffle, not
-    K.  ``keys`` must include ``m``.  DuckDB twin: :func:`sql_pq_codes`."""
-    return (
-        subs.join(constant_size(codebook), "m")
-        .select(
-            *keys,
-            F.struct(sq_dist("sub", "csub", SUB_D).alias("d"), F.col("k").alias("k"))
-            .alias("dk"),
-        )
-        .groupBy(*keys)
-        .agg(F.min("dk").alias("mk"))
-        .select(*keys, F.col("mk.k").alias("k"), F.col("mk.d").alias("d2"))
+    """(*keys, k, d2): each subvector's :func:`nearest` codeword of the
+    (m, k, csub) codebook.  ``keys`` must include ``m``.  DuckDB twin:
+    :func:`sql_pq_codes`."""
+    return nearest(
+        subs.join(constant_size(codebook), "m"),
+        keys,
+        sq_dist("sub", "csub", SUB_D),
+        "k",
+        "k",
     )
 
 
@@ -408,6 +419,18 @@ subs AS (
 SQL_SEED_CODEBOOK = f"""codebook AS (
   SELECT m, vec_id AS k, sub AS csub FROM subs WHERE vec_id < {PQ_K}
 )"""
+
+
+def sql_nearest(
+    src: str, keys: tuple[str, ...], d2: str, id_col: str, out: str
+) -> str:
+    """SELECT body of :func:`nearest` over the FROM clause ``src``:
+    (*keys, out, d2), the least-``d2`` row per ``keys`` with ties to
+    the lower ``id_col``."""
+    k = ", ".join(keys)
+    return f"""SELECT {k}, {id_col} AS {out}, {d2} AS d2
+  FROM {src}
+  QUALIFY row_number() OVER (PARTITION BY {k} ORDER BY d2, {id_col}) = 1"""
 
 
 def sql_pq_codes(subs: str = "subs") -> str:

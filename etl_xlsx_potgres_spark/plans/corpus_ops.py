@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from ..operators.ann import KMEANS_K
+from ..operators.ann import KMEANS_K, nearest, sql_nearest
 from ..operators.text import sql_tokens, tokens
 from ..operators.vectors import EMB_DIM, sq_dist, sql_sq_dist
 from ..registry import register
@@ -462,11 +462,8 @@ def emb_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE vec_id < {KMEANS_K}
     ),
     assign AS (
-      SELECT e.vec_id, s.seed_id,
-             {sql_sq_dist("e.embedding", "s.sv")} AS d2,
-             row_number() OVER (PARTITION BY e.vec_id ORDER BY
-               {sql_sq_dist("e.embedding", "s.sv")}, s.seed_id) AS rn
-      FROM vecs e CROSS JOIN seeds s
+      {sql_nearest("vecs e CROSS JOIN seeds s", ("e.vec_id",),
+                   sql_sq_dist("e.embedding", "s.sv"), "s.seed_id", "seed_id")}
     )
     SELECT seed_id AS cluster_id,
            COUNT(*) AS n_members,
@@ -474,28 +471,31 @@ def emb_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS inertia_micro,
            CAST(CAST(SUM(CAST(floor(d2 * 1000000) AS BIGINT)) AS BIGINT) AS DOUBLE)
              / COUNT(*) / 1000000.0 AS mean_d2
-    FROM assign WHERE rn = 1
+    FROM assign
     GROUP BY seed_id
     """,
 )
 def emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every vector to its nearest of K deterministic seeds and
     report per-cluster size + inertia. The K-row seed set is a
-    constant-size broadcast; the only shuffle is the K-row aggregate
-    (plus the per-vector argmin window on vec_id)."""
+    constant-size broadcast; the only shuffles are the per-vector
+    argmin (one partial-aggregated row per vector) and the K-row
+    aggregate."""
     # NULL vectors out on both sides: a NULL distance in the argmin
-    # window sorts NULLS FIRST in Spark, NULLS LAST in DuckDB
+    # sorts first in Spark's struct min, last in DuckDB's ORDER BY
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
     seeds = emb.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("seed_id"), F.col("embedding").alias("sv")
     )
-    pairs = emb.crossJoin(constant_size(seeds)).select(
-        "vec_id", "seed_id", sq_dist("embedding", "sv").alias("d2")
+    best = nearest(
+        emb.crossJoin(constant_size(seeds)),
+        ("vec_id",),
+        sq_dist("embedding", "sv"),
+        "seed_id",
+        "seed_id",
     )
-    w = Window.partitionBy("vec_id").orderBy("d2", "seed_id")
-    best = pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
     return (
         best.groupBy(F.col("seed_id").alias("cluster_id"))
         .agg(

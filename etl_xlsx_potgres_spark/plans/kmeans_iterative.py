@@ -16,8 +16,10 @@ Determinism across engines AND across partitionings:
 - assignment ties break on the lower cluster id.
 
 Scale shape per iteration: one broadcast of the constant K x dim
-centroid frame, one map-only assignment pass, one (cluster, dim)
-partial-agg shuffle of K*dim rows per map task. The loop lives in the
+centroid frame, one assignment pass whose per-vector argmin shuffles
+one partial-aggregated row per vector, a join of the assignment back
+to the embeddings, and one (cluster, dim) partial-agg shuffle of
+K*dim rows per map task. The loop lives in the
 driver but every iteration's data pass is fully distributed — same
 pattern as PageRank, with the iteration bound fixed (not
 convergence-tested) so the unrolled SQL oracle is exactly
@@ -26,12 +28,17 @@ equivalent.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
-from ..operators.ann import micro_mean, sql_micro_mean_ctes
-from ..operators.vectors import EMB_DIM, micro, sq_dist, sql_sq_dist
+from ..operators.ann import (
+    micro_mean,
+    nearest,
+    sql_micro_mean_ctes,
+    sql_nearest,
+)
+from ..operators.vectors import EMB_DIM, micro, sq_dist, sql_micro, sql_sq_dist
 from ..registry import register
 from ..sources import load_table
 
@@ -52,15 +59,12 @@ def _duck_oracle() -> str:
     )"""
     ]
     for it in range(1, ITERS + 1):
-        prev = f"cb{it - 1}"
+        src = f"""(SELECT vec_id, embedding FROM embeddings
+            WHERE embedding IS NOT NULL) e CROSS JOIN cb{it - 1} s"""
         parts.append(f"""
     a{it} AS (
-      SELECT e.vec_id, s.cid, e.embedding
-      FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL) e CROSS JOIN {prev} s
-      QUALIFY row_number() OVER (
-        PARTITION BY e.vec_id
-        ORDER BY {sql_sq_dist("e.embedding", "s.cv")}, s.cid) = 1
+      {sql_nearest(src, ("e.vec_id", "e.embedding"),
+                   sql_sq_dist("e.embedding", "s.cv"), "s.cid", "cid")}
     )""")
         if it < ITERS:
             parts.append(
@@ -68,29 +72,29 @@ def _duck_oracle() -> str:
                 + sql_micro_mean_ctes(it, ("cid",), "embedding", EMB_DIM, "cv")
             )
     body = ",".join(parts)
-    last = f"a{ITERS}"
     return f"""
     WITH {body}
-    SELECT a.cid AS cluster_id,
+    SELECT cid AS cluster_id,
            COUNT(*) AS n_members,
-           CAST(SUM(CAST(floor({sql_sq_dist("a.embedding", "s.cv")} * 1000000)
-                         AS BIGINT)) AS BIGINT) AS inertia_micro
-    FROM {last} a JOIN cb{ITERS - 1} s ON a.cid = s.cid
-    GROUP BY a.cid
+           CAST(SUM({sql_micro("d2")}) AS BIGINT) AS inertia_micro
+    FROM a{ITERS}
+    GROUP BY cid
     """
 
 
 def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the K-row centroid
-    frame, fold distances, argmin via per-vector window."""
-    pairs = emb.crossJoin(constant_size(cents)).select(
-        "vec_id", "embedding", "cid", sq_dist("embedding", "cv").alias("d2")
-    )
-    w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", "embedding", "d2")
+    """(vec_id, cid, d2): each vector's
+    :func:`~..operators.ann.nearest` centroid of the broadcast K-row
+    centroid frame.  Keyed on ``vec_id`` alone: grouping on the
+    embedding array as well (to carry it to the centroid update)
+    sorts every candidate row on a normalized 64-float key, which
+    measured slower than joining the embeddings back."""
+    return nearest(
+        emb.crossJoin(constant_size(cents)),
+        ("vec_id",),
+        sq_dist("embedding", "cv"),
+        "cid",
+        "cid",
     )
 
 
@@ -114,11 +118,13 @@ def emb_kmeans_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
         if it < ITERS:
             # truncate lineage at the K-row centroid frame each
             # iteration (the PageRank idiom): without this the final
-            # plan nests every previous iteration's crossJoin+window
+            # plan nests every previous iteration's crossJoin+argmin
             # and re-executes it per reuse. coalesce(1): K rows
             # checkpoint as one block, not shuffle-width tasks.
             cents = (
-                micro_mean(assigned, ("cid",), "embedding", "cv")
+                micro_mean(
+                    assigned.join(emb, "vec_id"), ("cid",), "embedding", "cv"
+                )
                 .coalesce(1)
                 .localCheckpoint(eager=True)
             )

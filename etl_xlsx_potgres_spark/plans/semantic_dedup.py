@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from ..operators.ann import KMEANS_K
+from ..operators.ann import KMEANS_K, nearest
 from ..operators.vectors import (
     dot,
     duck_valid,
@@ -162,31 +162,18 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv")
     )
 
-    def argmin(df: DataFrame, keys: list[str], d2, id_col: str,
-               out: str) -> DataFrame:
-        """Deterministic nearest-centroid via map-side-partial
-        min(struct(d2, id)) — lexicographic struct min is exactly
-        ORDER BY d2, id (the window formulation would shuffle the
-        whole candidate crossJoin; this shuffles one row per key)."""
-        m = F.min(
-            F.struct(d2.alias("d"), F.col(id_col).alias("i"))
-        ).alias("m")
-        return df.groupBy(*keys).agg(m).select(
-            *keys, F.col("m.i").alias(out)
-        )
-
     # fine centroid -> coarse cell (K x C rows, constant-size)
-    s2c = argmin(
+    s2c = nearest(
         seeds.crossJoin(constant_size(coarse)),
-        ["seed_id", "sv"],
+        ("seed_id", "sv"),
         sq_dist("sv", "cv"),
         "c_id",
         "c_id",
     )
     # vector -> coarse cell: N x C distance evals, ONE N-row shuffle
-    v2c = argmin(
+    v2c = nearest(
         emb.crossJoin(constant_size(coarse)),
-        ["vec_id", "embedding"],
+        ("vec_id", "embedding"),
         sq_dist("embedding", "cv"),
         "c_id",
         "c_id",
@@ -194,9 +181,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector -> fine centroid within its cell: ~N x K/C evals; the
     # groupBy reuses v2c's (vec_id, embedding) partitioning — no new
     # Exchange (pinned in tests/test_shuffle_budget.py)
-    assign = argmin(
+    assign = nearest(
         v2c.join(constant_size(s2c), "c_id"),
-        ["vec_id", "embedding"],
+        ("vec_id", "embedding"),
         sq_dist("embedding", "sv"),
         "seed_id",
         "cluster_id",

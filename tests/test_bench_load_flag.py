@@ -1,220 +1,143 @@
-"""bench.py's load_flag must self-identify loaded runs: the driver's
-r15 bench (start 3.33, in-run up to 7.19 on 32 cpus) passed the old
-two-part check yet ran 1.17x the quiet anchor.  These are the two
-COMMITTED loadavg profiles (BENCH_FULL.json at d7bd85d = quiet anchor,
-at d3b2665 = loaded driver run) — the flag must separate exactly them,
-plus the synthetic edges of each rule."""
+"""bench.py's load flag reads one measured signal: the busy CPU outside
+the bench's own process tree, averaged over the run
+(``external_cpu_cores``), against ``LOAD_THRESHOLD`` of the host's
+cores.  Every committed record that carries the signal is replayed
+here, and a real sibling load must trip it."""
 
 from __future__ import annotations
 
+import json
+import math
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
 import bench
 
-QUIET_R15_ANCHOR = [0.18, 2.82, 4.33, 4.22, 5.72]  # flag must be False
-LOADED_R15_DRIVER = [3.33, 6.62, 5.15, 4.61, 7.19]  # flag must be True
+REPO = Path(bench.__file__).resolve().parent
 CPUS = 32
+
+# The driver records that print external_cpu_cores.  BENCH_r20_c8 was
+# recorded load_flag true by the old start gate (start loadavg 9.62)
+# while its measured external CPU was 0.0.
+MEASURED_RECORDS = [
+    "BENCH_r19.json",
+    "BENCH_r20.json",
+    "BENCH_r20_c8.json",
+    "BENCH_r21.json",
+    "BENCH_r21_c8.json",
+]
+
+
+def _printed_line(record: str) -> dict:
+    """The JSON line bench.py printed, from the driver's stdout tail."""
+    tail = json.loads((REPO / record).read_text())["tail"]
+    last = [ln for ln in tail.splitlines() if ln.startswith("{")][-1]
+    return json.loads(last)
+
+
+@pytest.mark.parametrize("record", MEASURED_RECORDS)
+def test_driver_record_replay(record):
+    line = _printed_line(record)
+    assert line["external_cpu_cores"] is not None
+    assert bench.load_flag(line["external_cpu_cores"], line["host_cpus"]) is False
+
+
+# the quiet sf0.1 anchor's measured profile (BENCH_FULL.json at
+# eb34c1f), copied here because every bench run rewrites that file
+QUIET_ANCHOR = {"external_cpu_cores": 0.0, "host_cpus": 32}
 
 
 def test_quiet_anchor_profile_not_flagged():
-    assert bench.load_flag(QUIET_R15_ANCHOR, CPUS) is False
+    assert bench.load_flag(
+        QUIET_ANCHOR["external_cpu_cores"], QUIET_ANCHOR["host_cpus"]
+    ) is False
 
 
-def test_loaded_driver_replay_flagged():
-    # the r15 failure mode: start under the 0.15*cpus gate, no sample
-    # above cpus, but persistently elevated between passes
-    assert bench.load_flag(LOADED_R15_DRIVER, CPUS) is True
+def test_threshold_edges():
+    edge = bench.LOAD_THRESHOLD * CPUS
+    assert bench.load_flag(edge, CPUS) is False
+    assert bench.load_flag(edge + 0.001, CPUS) is True
+    assert bench.load_flag(0.0, CPUS) is False
+    # no /proc: no signal, no flag
+    assert bench.load_flag(None, CPUS) is False
 
 
-def test_start_gate_still_fires():
-    assert bench.load_flag([0.16 * CPUS, 1.0, 1.0], CPUS) is True
+def test_busy_jiffies_skips_idle_iowait_and_guest():
+    # user nice system idle iowait irq softirq steal guest guest_nice:
+    # guest time is already inside user/nice, steal counts as busy
+    line = "cpu  100 20 30 400 50 6 7 8 90 10"
+    assert bench._busy_jiffies(line) == 100 + 20 + 30 + 6 + 7 + 8
+    assert bench._busy_jiffies("cpu  1 2 3 4") == 1 + 2 + 3
+    assert bench._busy_jiffies("cpu0 1 2 3 4 5 6 7 8 9 10") is None
 
 
-def test_absolute_ceiling_still_fires():
-    assert bench.load_flag([0.1, 1.0, CPUS + 1.0], CPUS) is True
+_PROBE = """
+import sys, time
+sys.path.insert(0, {repo!r})
+import bench
+start = bench.external_cpu_probe()
+time.sleep(3.0)
+print(bench.external_cpu_cores(start, bench.external_cpu_probe()))
+"""
 
 
-def test_single_transient_spike_not_flagged():
-    # one in-run sample above the own-load ceiling is the bench's own
-    # burst; only persistence (>= half the samples) flags
-    assert bench.load_flag([0.1, 1.0, 1.2, 1.1, 0.18 * CPUS + 1], CPUS) is False
+def test_sibling_burners_flag_the_run():
+    """Busy loops started beside the probing process (not below it,
+    where they would count as its own work) read as external load."""
+    if bench.external_cpu_probe() is None:
+        pytest.skip("no /proc accounting on this host")
+    cpus = os.cpu_count() or 1
+    burners = []
+    try:
+        for _ in range(max(1, math.ceil(0.2 * cpus))):
+            burners.append(
+                subprocess.Popen([sys.executable, "-c", "while True: pass"])
+            )
+        out = subprocess.run(
+            [sys.executable, "-c", _PROBE.format(repo=str(REPO))],
+            capture_output=True, text=True, check=True, timeout=60,
+        ).stdout
+    finally:
+        for p in burners:
+            p.kill()
+            p.wait()
+    ext_cores = float(out.strip().splitlines()[-1])
+    assert bench.load_flag(ext_cores, cpus) is True, ext_cores
 
 
-def test_malformed_anchor_values_degrade_to_none(tmp_path, monkeypatch):
-    """A committed anchor whose query values are non-numeric must not
-    crash the bench's diagnostics block (ADVICE r15: TypeError inside
-    sorted() escaped the except tuple)."""
-    import json
-
+def test_malformed_anchor_values_degrade_to_none(tmp_path):
+    """An anchor whose query values are non-numeric yields no ratio
+    stats instead of failing the bench run."""
     bad = tmp_path / "anchor.json"
     bad.write_text(json.dumps({"value": 1.0, "queries": {"q1": "oops"}}))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ANCHOR", str(bad))
-    # replicate the ratio block's core expression on the bad anchor
-    aq = json.load(open(bad))["queries"]
-    times = {"q1": 1.0}
-    pairs = sorted(
-        (round(times[n] / aq[n], 3), n)
-        for n in times
-        if n in aq and isinstance(aq[n], (int, float)) and aq[n] > 0
-    )
-    assert pairs == []
-
-
-# --- r17: dispersion signal vs the anchor's quiet trace ---------------
-
-# the COMMITTED r16 driver profile (BENCH_r16.json): every sample under
-# the absolute gates, flag stayed False — yet overhead-dominated
-# queries inflated 2.4-4.3x vs the quiet anchor
-LOADED_R16_DRIVER = [4.6, 5.47, 3.69, 3.5, 5.47]
-R16_RATIO_STATS = {
-    "worst3": [
-        ["dedup_minhash_calibration", 4.284],
-        ["reference_pipeline_1200rows", 2.362],
-        ["orc_roundtrip_ingest", 1.508],
-    ]
-}
-QUIET_ANCHOR_TRACE = [0.5, 2.3, 2.6, 2.4, 2.5, 2.2, 2.6]
-
-
-def test_r16_driver_replay_flagged_by_dispersion():
-    assert (
-        bench.load_flag(
-            LOADED_R16_DRIVER, CPUS, R16_RATIO_STATS, QUIET_ANCHOR_TRACE
-        )
-        is True
-    )
-
-
-def test_quiet_run_with_benign_ratios_not_flagged():
-    quiet_run = [0.4, 2.5, 2.7, 2.3, 2.6]
-    benign = {"worst3": [["a", 1.3], ["b", 1.2], ["c", 1.1]]}
-    assert (
-        bench.load_flag(quiet_run, CPUS, benign, QUIET_ANCHOR_TRACE) is False
-    )
-
-
-def test_single_regression_under_load_not_mislabeled():
-    # one genuine >2x regression with otherwise tight ratios must NOT
-    # be absorbed into the load flag even when loadavg is elevated
-    one_bad = {"worst3": [["a", 3.5], ["b", 1.2], ["c", 1.1]]}
-    assert (
-        bench.load_flag(
-            LOADED_R16_DRIVER, CPUS, one_bad, QUIET_ANCHOR_TRACE
-        )
-        is False
-    )
-
-
-def test_dispersion_needs_elevated_load():
-    # blowups on a host at/below the anchor's own trace are code, not
-    # load — the dispersion signal must stay silent
-    quiet_run = [0.4, 2.5, 2.7, 2.3, 2.6]
-    assert (
-        bench.load_flag(
-            quiet_run, CPUS, R16_RATIO_STATS, QUIET_ANCHOR_TRACE
-        )
-        is False
-    )
-
-
-def test_missing_anchor_degrades_to_three_signals():
-    assert bench.load_flag(LOADED_R16_DRIVER, CPUS, None, None) is False
-    assert bench.load_flag(LOADED_R15_DRIVER, CPUS, None, None) is True
+    assert bench.load_anchor(str(bad), None, {"q1": 1.0}) is None
 
 
 def test_cross_sf_anchor_is_rejected(tmp_path):
-    """An anchor captured at a different SF must yield no ratio stats
-    AND no anchor trace (so no dispersion signal at all) — cross-SF
-    ratios are meaningless and tripped the flag in r17.  Exercises
-    bench.load_anchor itself, the code path main() runs (advice r17:
-    the old inline replica couldn't catch a regression in the real
-    guard)."""
-    import json
-
+    """An anchor captured at a different SF yields no ratio stats:
+    cross-SF ratios are meaningless."""
     anchor = tmp_path / "anchor.json"
     anchor.write_text(json.dumps(
-        {"value": 1.0, "sf": 0.01, "queries": {"q1": 1.0},
-         "loadavg_1m": [0.5, 2.0]}
+        {"value": 1.0, "sf": 0.01, "queries": {"q1": 1.0}}
     ))
-    ratio_stats, anchor_loadavg = bench.load_anchor(
-        str(anchor), 0.1, {"q1": 2.0}
-    )
-    assert ratio_stats is None and anchor_loadavg is None
-    # the SAME anchor at the matching SF produces ratios + the trace
-    ratio_stats, anchor_loadavg = bench.load_anchor(
-        str(anchor), 0.01, {"q1": 2.0}
-    )
+    assert bench.load_anchor(str(anchor), 0.1, {"q1": 2.0}) is None
+    # the SAME anchor at the matching SF produces ratios
+    ratio_stats = bench.load_anchor(str(anchor), 0.01, {"q1": 2.0})
     assert ratio_stats is not None and ratio_stats["median"] == 2.0
-    assert anchor_loadavg == [0.5, 2.0]
 
 
 def test_malformed_anchor_degrades_quietly(tmp_path):
-    missing = bench.load_anchor(str(tmp_path / "nope.json"), 0.1, {"q1": 1.0})
-    assert missing == (None, None)
+    assert bench.load_anchor(str(tmp_path / "nope.json"), 0.1, {"q1": 1.0}) is None
     bad = tmp_path / "bad.json"
     bad.write_text('{"queries": "not-a-map"}')
-    assert bench.load_anchor(str(bad), 0.1, {"q1": 1.0}) == (None, None)
-
-
-def test_measured_external_cpu_replaces_persistent_heuristic():
-    """r19: a fast quiet-host run keeps between-pass 1-min loadavg
-    above the r16 ceiling (the bench's own duty cycle) — with the
-    /proc probe reporting ~zero non-ours work it must NOT flag, and
-    conversely measured external work must flag even when every
-    loadavg sample looks calm."""
-    own_duty_cycle = [0.79, 2.86, 7.93, 6.24, 4.85]  # r19 false positive
-    assert bench.load_flag(own_duty_cycle, CPUS, ext_cores=0.02) is False
-    calm_trace = [0.1, 1.0, 1.2, 1.1, 0.9]
-    # r20 (ADVICE r19): a measurement just over the threshold can be
-    # the probe's own attribution error (orphan reparenting, /proc
-    # races) — alone it needs a 2x margin; in the margin band it
-    # flags only with the r16 fallback corroborating
-    assert bench.load_flag(
-        calm_trace, CPUS, ext_cores=0.06 * CPUS
-    ) is False
-    assert bench.load_flag(
-        calm_trace, CPUS, ext_cores=0.11 * CPUS
-    ) is True
-    assert bench.load_flag(
-        own_duty_cycle, CPUS, ext_cores=0.06 * CPUS
-    ) is True  # fallback-corroborated: elevated trace + measured band
-    # without the probe, the r16 heuristic still governs
-    assert bench.load_flag(own_duty_cycle, CPUS, ext_cores=None) is True
-
-
-def test_measured_quiet_suppresses_dispersion():
-    """r20 (VERDICT r19 missing #4): the dispersion rule consumed only
-    wall ratios + loadavg — a measured-quiet host whose own duty cycle
-    elevated loadavg could still flag on ratio blowups.  With the
-    probe reporting the host quiet, elevation is OURS by measurement,
-    so dispersion must stay silent (the blowups are then code
-    regressions, reported as ratios, not absorbed into the flag);
-    without the probe the r17 rule still governs."""
-    assert (
-        bench.load_flag(
-            LOADED_R16_DRIVER, CPUS, R16_RATIO_STATS, QUIET_ANCHOR_TRACE,
-            ext_cores=0.02,
-        )
-        is False
-    )
-    # measured EXTERNAL load keeps the dispersion signal armed
-    assert (
-        bench.load_flag(
-            LOADED_R16_DRIVER, CPUS, R16_RATIO_STATS, QUIET_ANCHOR_TRACE,
-            ext_cores=0.11 * CPUS,
-        )
-        is True
-    )
-    # no probe -> unchanged r17 behavior
-    assert (
-        bench.load_flag(
-            LOADED_R16_DRIVER, CPUS, R16_RATIO_STATS, QUIET_ANCHOR_TRACE
-        )
-        is True
-    )
+    assert bench.load_anchor(str(bad), 0.1, {"q1": 1.0}) is None
 
 
 def test_external_cpu_cores_arithmetic():
-    hz = 100
-    import os
     real = os.sysconf("SC_CLK_TCK")
     # 10s window, system busy 4000 jiffies, ours 3000 -> 1000 external
     # jiffies = 1 core at hz=100 (scale expectation by the real hz)

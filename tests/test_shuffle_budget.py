@@ -31,7 +31,7 @@ BUDGETS = {
     "dedup_corpus_segments": 3,       # (seg,doc) agg + seg freq + doc rollup
     "text_unigram_logprob": 5,        # tf agg + vocab agg + term join + doc rollup
     "emb_scalar_quantize": 2,         # dim stats + 1-row collect
-    "emb_kmeans_step": 2,             # argmin window + K-row aggregate
+    "emb_kmeans_step": 2,             # argmin aggregate + K-row aggregate
     "text_bpe_pair_counts": 9,        # pair count + top-k + global_row_number plumbing (tiny frames)
     "text_bpe_merge_rounds": 8,       # ONE corpus word-count shuffle + per-round
                                       # vocab-sized pair agg / 1-row top-1 / union

@@ -38,6 +38,7 @@ import datetime as dt
 import decimal
 import json
 import math
+import os
 import sys
 import time
 
@@ -138,12 +139,16 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-    # emulate the driver: bare session, UTC, no Arrow conf
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from etl_xlsx_potgres_spark.session import default_driver_memory
+
+    # emulate the driver: bare session, UTC, no Arrow conf; the heap
+    # is the package's host-derived default
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("strict-check")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
         .config("spark.driver.extraJavaOptions", "-Dderby.system.home=/tmp/derby-home")
@@ -151,7 +156,6 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry_mod
 
     queries = entry_mod.queries()
