@@ -1,9 +1,10 @@
 """Product-quantization and inverted-file index kernels (Jegou et al.
-2011): the subvector split, the nearest-centroid argmin of the PQ
-encode and the k-means assignments, per-query lookup tables,
+2011): the subvector split, the PQ encode, per-query lookup tables,
 Lloyd-trained codebooks and their exact micro-unit centroid update,
 the ADC scan with its exact re-rank, the md5-seeded coarse
 cells of the IVF lists, and the exact and IVF cosine top-k searches.
+Every ranked selection among them — shortlists, top-k, probe sets and
+the nearest-centroid argmin — composes :mod:`.rank`.
 
 Every kernel has its Spark form (over DataFrames) and its DuckDB form
 (``sql_*``, CTE bodies that read fixed CTE names: ``vecs``, ``subs``,
@@ -20,11 +21,12 @@ neighbours — so both engines agree bit for bit at any partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
+from .rank import nearest, sql_nearest, sql_top_n, top_n
 from .vectors import (
     cosine,
     duck_valid,
@@ -64,21 +66,6 @@ def subvectors(frame: DataFrame, keys: tuple[str, ...] = ("vec_id",)) -> DataFra
     )
     return frame.select(*keys, F.explode(sub_structs).alias("s")).select(
         *keys, F.col("s.m").alias("m"), F.col("s.sub").alias("sub")
-    )
-
-
-def nearest(
-    frame: DataFrame, keys: tuple[str, ...], d2, id_col: str, out: str
-) -> DataFrame:
-    """(*keys, out, d2): per ``keys`` group the ``id_col`` of the row
-    with the least ``d2``, ties to the lower id, as a map-side-partial
-    ``min(struct(d2, id))`` — the lexicographic struct min is exactly
-    ORDER BY d2, id, and one row per key crosses the shuffle instead of
-    the whole candidate crossJoin a window would move.  DuckDB twin:
-    :func:`sql_nearest`."""
-    m = F.min(F.struct(d2.alias("d"), F.col(id_col).alias("i"))).alias(out)
-    return frame.groupBy(*keys).agg(m).select(
-        *keys, F.col(f"{out}.i").alias(out), F.col(f"{out}.d").alias("d2")
     )
 
 
@@ -238,26 +225,16 @@ def adc_rerank(
     codes = pq_encode(subs, codebook).select("vec_id", "m", "k")
     lut = pq_lut(subs.filter(F.col("vec_id") < N_QUERIES), codebook)
     adc = adc_scan(codes, lut, candidates)
-    sl_w = Window.partitionBy("qid").orderBy("adc_micro", "vec_id")
-    shortlist = (
-        adc.withColumn("rn", F.row_number().over(sl_w))
-        .filter(F.col("rn") <= SHORTLIST)
-        .drop("rn")
-    )
+    shortlist = top_n(adc, ("qid",), ("adc_micro", "vec_id"), SHORTLIST)
     # two consumers (re-rank join + verifier top-k) would otherwise
     # recompute the Q x N 64-dim fold twice
     exact = scoped_persist(exact_d2_micro(emb))
-    rr_w = Window.partitionBy("qid").orderBy("d2_micro", "vec_id")
-    rerank = (
-        shortlist.join(exact, ["qid", "vec_id"])
-        .withColumn("rn", F.row_number().over(rr_w))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
+    by_d2 = ("d2_micro", "vec_id")
+    rerank = top_n(
+        shortlist.join(exact, ["qid", "vec_id"]), ("qid",), by_d2, TOP_K
     )
-    exact_top = (
-        exact.withColumn("rn", F.row_number().over(rr_w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", F.col("vec_id").alias("evec"))
+    exact_top = top_n(exact, ("qid",), by_d2, TOP_K).select(
+        "qid", F.col("vec_id").alias("evec")
     )
     hits = (
         rerank.join(
@@ -294,42 +271,32 @@ def coarse_candidates(
     """(qid, vec_id, prn): every corpus vector in one of the query's
     ``n_probe`` nearest cells, with the cell's probe rank ``prn``.
     Cells are ranked by full-vector L2 in micro units with (d2, cid)
-    tie-break; the corpus side is a map-side ``min(struct(d2, cid))``.
+    tie-break; the corpus side is its :func:`.rank.nearest` cell.
     DuckDB twin: :func:`sql_coarse_candidates`."""
     d2 = micro(sq_dist("embedding", "cv"))
-    assign = (
+    assign = nearest(
         emb.select("vec_id", "embedding")
         .crossJoin(constant_size(cells))
-        .select("vec_id", "cid", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("mc"))
-        .select("vec_id", F.col("mc.cid").alias("cid"))
-    )
-    pw = Window.partitionBy("qid").orderBy("d2", "cid")
-    probes = (
+        .select("vec_id", "cid", d2.alias("d2")),
+        ("vec_id",),
+        F.col("d2"),
+        "cid",
+        "cid",
+    ).select("vec_id", "cid")
+    probes = top_n(
         emb.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("qid"), "embedding")
         .crossJoin(constant_size(cells))
-        .select("qid", "cid", d2.alias("d2"))
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("qid", "cid", "prn")
-    )
+        .select("qid", "cid", d2.alias("d2")),
+        ("qid",),
+        ("d2", "cid"),
+        n_probe,
+        rank="prn",
+    ).select("qid", "cid", "prn")
     return (
         assign.join(constant_size(probes), "cid")
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id", "prn")
-    )
-
-
-def _cosine_topk(scored: DataFrame) -> DataFrame:
-    """(qid, vec_id, cosine, rn): each query's TOP_K of the scored
-    (qid, vec_id, cosine) pairs by (cosine DESC, vec_id)."""
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id", "cosine", "rn")
     )
 
 
@@ -342,10 +309,11 @@ def cosine_topk(emb: DataFrame) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     v = emb.select("vec_id", F.col("embedding").alias("vv"))
-    return _cosine_topk(
-        q.join(v, F.col("qid") != F.col("vec_id")).select(
-            "qid", "vec_id", cosine("qv", "vv").alias("cosine")
-        )
+    scored = q.join(v, F.col("qid") != F.col("vec_id")).select(
+        "qid", "vec_id", cosine("qv", "vv").alias("cosine")
+    )
+    return top_n(
+        scored, ("qid",), (F.desc("cosine"), "vec_id"), TOP_K, rank="rn"
     )
 
 
@@ -357,24 +325,25 @@ def ivf_cosine_candidates(emb: DataFrame, n_probe: int) -> DataFrame:
     DESC, cid) tie-break, and the exact query cosine of every member of
     a probed cell.  DuckDB twin: :func:`sql_ivf_cosine_ctes`."""
     cells = coarse_cells(emb)
-    aw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), "cid")
-    assign = (
-        emb.crossJoin(constant_size(cells))
-        .withColumn("ccos", cosine("embedding", "cv"))
-        .withColumn("arn", F.row_number().over(aw))
-        .filter(F.col("arn") == 1)
-        .select("vec_id", "embedding", "cid")
-    )
-    pw = Window.partitionBy("qid").orderBy(F.desc("ccos"), "cid")
-    probes = (
+    by_cos = (F.desc("ccos"), "cid")
+    assign = top_n(
+        emb.crossJoin(constant_size(cells)).withColumn(
+            "ccos", cosine("embedding", "cv")
+        ),
+        ("vec_id",),
+        by_cos,
+        1,
+    ).select("vec_id", "embedding", "cid")
+    probes = top_n(
         emb.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
         .crossJoin(constant_size(cells))
-        .withColumn("ccos", cosine("qv", "cv"))
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("qid", "qv", "cid", "prn")
-    )
+        .withColumn("ccos", cosine("qv", "cv")),
+        ("qid",),
+        by_cos,
+        n_probe,
+        rank="prn",
+    ).select("qid", "qv", "cid", "prn")
     return (
         probes.join(assign, "cid")
         .filter(F.col("qid") != F.col("vec_id"))
@@ -386,7 +355,13 @@ def ivf_topk(emb: DataFrame) -> DataFrame:
     """(qid, vec_id, cosine, rn): the cosine IVF top-k at N_PROBE
     probes over the md5-seeded :func:`coarse_cells`.  DuckDB twin:
     :func:`sql_ivf_topk`."""
-    return _cosine_topk(ivf_cosine_candidates(emb, N_PROBE))
+    return top_n(
+        ivf_cosine_candidates(emb, N_PROBE).drop("prn"),
+        ("qid",),
+        (F.desc("cosine"), "vec_id"),
+        TOP_K,
+        rank="rn",
+    )
 
 
 # --- DuckDB renderings ----------------------------------------------
@@ -421,27 +396,16 @@ SQL_SEED_CODEBOOK = f"""codebook AS (
 )"""
 
 
-def sql_nearest(
-    src: str, keys: tuple[str, ...], d2: str, id_col: str, out: str
-) -> str:
-    """SELECT body of :func:`nearest` over the FROM clause ``src``:
-    (*keys, out, d2), the least-``d2`` row per ``keys`` with ties to
-    the lower ``id_col``."""
-    k = ", ".join(keys)
-    return f"""SELECT {k}, {id_col} AS {out}, {d2} AS d2
-  FROM {src}
-  QUALIFY row_number() OVER (PARTITION BY {k} ORDER BY d2, {id_col}) = 1"""
-
-
 def sql_pq_codes(subs: str = "subs") -> str:
     """SELECT body of (vec_id, m, k, d2): the encode argmin of
     :func:`pq_encode` against the ``codebook`` CTE."""
-    return f"""SELECT vec_id, m, k, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn
-    FROM (SELECT s.vec_id, s.m, c.k,
-                 {sql_sq_dist("s.sub", "c.csub", SUB_D)} AS d2
-          FROM {subs} s JOIN codebook c ON c.m = s.m))
-  WHERE rn = 1"""
+    return sql_nearest(
+        f"{subs} s JOIN codebook c ON c.m = s.m",
+        ("s.vec_id", "s.m"),
+        sql_sq_dist("s.sub", "c.csub", SUB_D),
+        "c.k",
+        "k",
+    )
 
 
 def sql_pq_lut(qsubs: str) -> str:
@@ -467,11 +431,9 @@ def sql_trained_codebook_ctes() -> str:
     for t in range(1, TRAIN_ITERS + 1):
         prev = f"cb{t - 1}"
         parts.append(f"""a{t} AS (
-  SELECT s.vec_id, s.m, c.k, s.sub
-  FROM subs s JOIN {prev} c ON c.m = s.m
-  QUALIFY row_number() OVER (
-    PARTITION BY s.vec_id, s.m
-    ORDER BY {sql_sq_dist("s.sub", "c.csub", SUB_D)}, c.k) = 1
+  {sql_top_n("s.vec_id, s.m, c.k, s.sub", f"subs s JOIN {prev} c ON c.m = s.m",
+             ("s.vec_id", "s.m"),
+             f"{sql_sq_dist('s.sub', 'c.csub', SUB_D)}, c.k", 1)}
 )""")
         parts.append(sql_micro_mean_ctes(t, ("m", "k"), "sub", SUB_D, "csub"))
     parts.append(f"codebook AS (SELECT m, k, csub FROM cb{TRAIN_ITERS})")
@@ -541,11 +503,7 @@ def sql_exact_ctes() -> str:
   WHERE q.vec_id < {N_QUERIES}
 ),
 exact_top AS (
-  SELECT qid, vec_id FROM (
-    SELECT qid, vec_id,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY d2_micro, vec_id) AS rn
-    FROM exact) WHERE rn <= {TOP_K}
+  {sql_top_n("qid, vec_id", "exact", ("qid",), "d2_micro, vec_id", TOP_K)}
 )"""
 
 
@@ -553,21 +511,14 @@ def sql_rerank_ctes() -> str:
     """The two-stage tail of :func:`adc_rerank` over an ``adc`` CTE:
     ``shortlist``, ``exact``/``exact_top``, ``rerank`` and ``hits``."""
     return f"""shortlist AS (
-  SELECT qid, vec_id, adc_micro FROM (
-    SELECT qid, vec_id, adc_micro,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY adc_micro, vec_id) AS rn
-    FROM adc) WHERE rn <= {SHORTLIST}
+  {sql_top_n("qid, vec_id, adc_micro", "adc", ("qid",), "adc_micro, vec_id",
+             SHORTLIST)}
 ),
 {sql_exact_ctes()},
 rerank AS (
-  SELECT qid, vec_id, adc_micro, d2_micro FROM (
-    SELECT s.qid, s.vec_id, s.adc_micro, e.d2_micro,
-           row_number() OVER (PARTITION BY s.qid
-                              ORDER BY e.d2_micro, s.vec_id) AS rn
-    FROM shortlist s
-    JOIN exact e ON e.qid = s.qid AND e.vec_id = s.vec_id)
-  WHERE rn <= {TOP_K}
+  {sql_top_n("s.qid, s.vec_id, s.adc_micro, e.d2_micro",
+             "shortlist s JOIN exact e ON e.qid = s.qid AND e.vec_id = s.vec_id",
+             ("s.qid",), "e.d2_micro, s.vec_id", TOP_K)}
 ),
 hits AS (
   SELECT r.qid,
@@ -606,19 +557,15 @@ def sql_coarse_candidates(n_probe: int) -> str:
   {sql_coarse_cells()}
 ),
 assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-           row_number() OVER (PARTITION BY v.vec_id ORDER BY
-             {sql_micro(sql_sq_dist("v.embedding", "c.cv"))}, c.cid) AS arn
-    FROM vecs v CROSS JOIN cells c) WHERE arn = 1
+  {sql_nearest("vecs v CROSS JOIN cells c", ("v.vec_id",),
+               sql_micro(sql_sq_dist("v.embedding", "c.cv")), "c.cid", "cid")}
 ),
 probes AS (
-  SELECT qid, cid, prn FROM (
-    SELECT q.vec_id AS qid, c.cid,
-           row_number() OVER (PARTITION BY q.vec_id ORDER BY
-             {sql_micro(sql_sq_dist("q.embedding", "c.cv"))}, c.cid) AS prn
-    FROM vecs q CROSS JOIN cells c WHERE q.vec_id < {N_QUERIES})
-  WHERE prn <= {n_probe}
+  {sql_top_n("q.vec_id AS qid, c.cid",
+             f"vecs q CROSS JOIN cells c WHERE q.vec_id < {N_QUERIES}",
+             ("q.vec_id",),
+             f"{sql_micro(sql_sq_dist('q.embedding', 'c.cv'))}, c.cid",
+             n_probe, rank="prn")}
 ),
 cand AS (
   SELECT p.qid, a.vec_id, p.prn FROM probes p JOIN assign a ON a.cid = p.cid
@@ -628,15 +575,12 @@ cand AS (
 
 def sql_cosine_topk() -> str:
     """Oracle of :func:`cosine_topk`."""
+    cos = sql_cosine("q.embedding", "v.embedding")
     return f"""WITH {sql_vecs()}
-    SELECT qid, vec_id, cosine, rn FROM (
-      SELECT q.vec_id AS qid, v.vec_id AS vec_id,
-             {sql_cosine("q.embedding", "v.embedding")} AS cosine,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               {sql_cosine("q.embedding", "v.embedding")} DESC, v.vec_id) AS rn
-      FROM vecs q JOIN vecs v ON q.vec_id <> v.vec_id
-      WHERE q.vec_id < {N_QUERIES}
-    ) WHERE rn <= {TOP_K}"""
+    {sql_top_n(f"q.vec_id AS qid, v.vec_id AS vec_id, {cos} AS cosine",
+               "vecs q JOIN vecs v ON q.vec_id <> v.vec_id"
+               f" WHERE q.vec_id < {N_QUERIES}",
+               ("q.vec_id",), f"{cos} DESC, v.vec_id", TOP_K, rank="rn")}"""
 
 
 def sql_ivf_cosine_ctes(n_probe: int) -> str:
@@ -645,21 +589,15 @@ def sql_ivf_cosine_ctes(n_probe: int) -> str:
     ``iprobes`` and ``iscored`` (qid, vec_id, prn, cosine)."""
     return f"""icents AS ({sql_coarse_cells()}),
     iassign AS (
-      SELECT vec_id, embedding, cid FROM (
-        SELECT v.vec_id, v.embedding, c.cid,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 {sql_cosine("v.embedding", "c.cv")} DESC, c.cid) AS arn
-        FROM vecs v CROSS JOIN icents c
-      ) WHERE arn = 1
+      {sql_top_n("v.vec_id, v.embedding, c.cid", "vecs v CROSS JOIN icents c",
+                 ("v.vec_id",), f"{sql_cosine('v.embedding', 'c.cv')} DESC, c.cid",
+                 1)}
     ),
     iprobes AS (
-      SELECT qid, cid, prn FROM (
-        SELECT q.vec_id AS qid, c.cid,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {sql_cosine("q.embedding", "c.cv")} DESC, c.cid) AS prn
-        FROM vecs q CROSS JOIN icents c
-        WHERE q.vec_id < {N_QUERIES}
-      ) WHERE prn <= {n_probe}
+      {sql_top_n("q.vec_id AS qid, c.cid",
+                 f"vecs q CROSS JOIN icents c WHERE q.vec_id < {N_QUERIES}",
+                 ("q.vec_id",), f"{sql_cosine('q.embedding', 'c.cv')} DESC, c.cid",
+                 n_probe, rank="prn")}
     ),
     iscored AS (
       SELECT p.qid, a.vec_id, p.prn,
@@ -674,9 +612,5 @@ def sql_ivf_topk() -> str:
     """Oracle of :func:`ivf_topk`."""
     return f"""WITH {sql_vecs()},
     {sql_ivf_cosine_ctes(N_PROBE)}
-    SELECT qid, vec_id, cosine, rn FROM (
-      SELECT qid, vec_id, cosine,
-             row_number() OVER (PARTITION BY qid
-                                ORDER BY cosine DESC, vec_id) AS rn
-      FROM iscored
-    ) WHERE rn <= {TOP_K}"""
+    {sql_top_n("qid, vec_id, cosine", "iscored", ("qid",), "cosine DESC, vec_id",
+               TOP_K, rank="rn")}"""

@@ -9,8 +9,9 @@ when survivor identity doesn't matter.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from .rank import top_n
 
 
 def dedup_arbitrary(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -24,12 +25,8 @@ def dedup_arbitrary(df: DataFrame, keys: list[str]) -> DataFrame:
 def dedup_deterministic(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
     """Keep the first row per key under an explicit tie-break ordering —
     the reproducible upgrade of the reference's arbitrary-survivor
-    dedup. ``order_by`` must be a total order within key groups for
-    full determinism (include a unique column last).
+    dedup, the top-1 :func:`.rank.top_n`. ``order_by`` must be a total
+    order within key groups for full determinism (include a unique
+    column last).
     """
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_n(df, keys, order_by, 1)

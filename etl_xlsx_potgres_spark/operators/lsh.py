@@ -13,10 +13,11 @@ band stores cannot desynchronize.  Hashes are md5-based and portable
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from .rank import sql_top_n, top_n
 from .stores import provision_store
 from .text import shingles_long, sql_minhash_exprs, sql_tokens
 
@@ -105,9 +106,8 @@ def ranked_band_rows(bands: DataFrame, cap: int = BAND_CAP) -> DataFrame:
     self-join needs, so the cap costs no extra Exchange on that side;
     within a hot bucket the window pass is linear in occupancy (the
     B² blowup it prevents was in the join, not here)."""
-    w = Window.partitionBy("band_id", "band_key").orderBy("doc_id")
-    return bands.withColumn("band_rank", F.row_number().over(w)).filter(
-        F.col("band_rank") <= cap
+    return top_n(
+        bands, ("band_id", "band_key"), ("doc_id",), cap, rank="band_rank"
     )
 
 
@@ -231,12 +231,8 @@ SQL_BANDS = f"""
       )}
     ),
     capped_bands AS (
-      SELECT doc_id, band_id, band_key FROM (
-        SELECT doc_id, band_id, band_key,
-               row_number() OVER (PARTITION BY band_id, band_key
-                                  ORDER BY doc_id) AS band_rank
-        FROM bands
-      ) WHERE band_rank <= {BAND_CAP}
+      {sql_top_n("doc_id, band_id, band_key", "bands", ("band_id", "band_key"),
+                 "doc_id", BAND_CAP)}
     )"""
 
 # ``band_mins`` and ``cand`` (d1, d2, band_id) over :data:`SQL_BANDS`

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import msum, sql_msum
 from ..hints import constant_size
+from ..operators.rank import top_n
 from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
@@ -178,12 +179,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = tf.join(df, "term").select(
         "doc_id", "term", (F.col("tf") * idf).alias("tfidf")
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), "term")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("doc_id", "term", "tfidf", "rn")
-    )
+    return top_n(scored, ("doc_id",), (F.desc("tfidf"), "term"), 3, rank="rn")
 
 
 # Vocabulary building: corpus-wide term table with frequency rank —

@@ -69,6 +69,7 @@ from ..operators.ann import (
     subvectors,
     train_codebook,
 )
+from ..operators.rank import top_n
 from ..operators.vectors import valid_vecs
 from ..registry import register
 from ..sources import load_table
@@ -269,13 +270,12 @@ def _ivf_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
     scored = scoped_persist(
         ivf_cosine_candidates(emb, _MAX_PROBE)
     )
-    lw = Window.partitionBy("p", "qid").orderBy(F.desc("cosine"), "vec_id")
-    topk = (
-        scored.join(constant_size(levels), scored["prn"] <= levels["p"])
-        .withColumn("rn", F.row_number().over(lw))
-        .filter(F.col("rn") <= TOP_K)
-        .select("p", "qid", "vec_id")
-    )
+    topk = top_n(
+        scored.join(constant_size(levels), scored["prn"] <= levels["p"]),
+        ("p", "qid"),
+        (F.desc("cosine"), "vec_id"),
+        TOP_K,
+    ).select("p", "qid", "vec_id")
     exact_k = cosine_topk(emb).select("qid", "vec_id")
     hits = (
         topk.join(exact_k, ["qid", "vec_id"])
@@ -301,27 +301,18 @@ def _ivfpq_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
     codes = pq_encode(subs, codebook).select("vec_id", "m", "k")
     lut = pq_lut(subs.filter(F.col("vec_id") < N_QUERIES), codebook)
     adc = scoped_persist(adc_scan(codes, lut, cand))
-    sl_w = Window.partitionBy("p", "qid").orderBy("adc_micro", "vec_id")
-    short = (
-        adc.join(constant_size(levels), adc["prn"] <= levels["p"])
-        .withColumn("rn", F.row_number().over(sl_w))
-        .filter(F.col("rn") <= SHORTLIST)
-        .select("p", "qid", "vec_id")
-    )
+    short = top_n(
+        adc.join(constant_size(levels), adc["prn"] <= levels["p"]),
+        ("p", "qid"),
+        ("adc_micro", "vec_id"),
+        SHORTLIST,
+    ).select("p", "qid", "vec_id")
     exact = scoped_persist(exact_d2_micro(emb))
-    rr_w = Window.partitionBy("p", "qid").orderBy("d2_micro", "vec_id")
-    rerank = (
-        short.join(exact, ["qid", "vec_id"])
-        .withColumn("rn", F.row_number().over(rr_w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("p", "qid", "vec_id")
-    )
-    et_w = Window.partitionBy("qid").orderBy("d2_micro", "vec_id")
-    exact_top = (
-        exact.withColumn("rn", F.row_number().over(et_w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id")
-    )
+    by_d2 = ("d2_micro", "vec_id")
+    rerank = top_n(
+        short.join(exact, ["qid", "vec_id"]), ("p", "qid"), by_d2, TOP_K
+    ).select("p", "qid", "vec_id")
+    exact_top = top_n(exact, ("qid",), by_d2, TOP_K).select("qid", "vec_id")
     hits = (
         rerank.join(exact_top, ["qid", "vec_id"])
         .groupBy("p")
@@ -350,13 +341,9 @@ def _ivfpq_curve(emb: DataFrame, levels: DataFrame) -> DataFrame:
     short_s = adc_rank.join(
         constant_size(slevels), adc_rank["rn_adc"] <= slevels["s"]
     ).select("s", "qid", "vec_id")
-    rr_s = Window.partitionBy("s", "qid").orderBy("d2_micro", "vec_id")
-    rerank_s = (
-        short_s.join(exact, ["qid", "vec_id"])
-        .withColumn("rn", F.row_number().over(rr_s))
-        .filter(F.col("rn") <= TOP_K)
-        .select("s", "qid", "vec_id")
-    )
+    rerank_s = top_n(
+        short_s.join(exact, ["qid", "vec_id"]), ("s", "qid"), by_d2, TOP_K
+    ).select("s", "qid", "vec_id")
     hits_s = (
         rerank_s.join(exact_top, ["qid", "vec_id"])
         .groupBy("s")

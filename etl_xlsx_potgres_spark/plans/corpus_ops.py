@@ -34,12 +34,13 @@ the shared ``operators/vectors.py`` kernels.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from ..operators.ann import KMEANS_K, nearest, sql_nearest
+from ..operators.ann import KMEANS_K
+from ..operators.rank import nearest, sql_nearest, top_n
 from ..operators.text import sql_tokens, tokens
 from ..operators.vectors import EMB_DIM, sq_dist, sql_sq_dist
 from ..registry import register
@@ -624,17 +625,9 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
     salted = tf.withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(_SALTS)))
-    w_local = Window.partitionBy("term", "salt").orderBy(F.desc("tf"), "doc_id")
-    survivors = (
-        salted.withColumn("lrn", F.row_number().over(w_local))
-        .filter(F.col("lrn") <= POSTINGS_K)
-        .drop("salt", "lrn")
-    )
-    w_global = Window.partitionBy("term").orderBy(F.desc("tf"), "doc_id")
-    top = (
-        survivors.withColumn("rn", F.row_number().over(w_global))
-        .filter(F.col("rn") <= POSTINGS_K)
-    )
+    by_tf = (F.desc("tf"), "doc_id")
+    survivors = top_n(salted, ("term", "salt"), by_tf, POSTINGS_K).drop("salt")
+    top = top_n(survivors, ("term",), by_tf, POSTINGS_K, rank="rn")
     return (
         top.join(dfreq, "term")
         .groupBy("term")

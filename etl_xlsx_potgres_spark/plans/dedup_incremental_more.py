@@ -19,8 +19,8 @@ cell store (see the incremental IVF-PQ section):
 - Semantic (SemDeDup-style): history rows ``(vec_id, cid, embedding,
   vrank, cell_n)`` bucketed on the cell id — cells are seeded by a
   MAP-ONLY md5-coin (no window, no sort; see the section comment), a
-  new vector probes its top-{SEM_N_PROBE} cells (``min(struct)``
-  argmax-cosine, map-side partials, rank-2 by exclusion) and
+  new vector probes its top-{SEM_N_PROBE} cells (a per-vector
+  ``top_n`` by cosine DESC, cell id) and
   compares exact cosines ONLY against each probed cell's coin-ranked
   first {SEM_VERIFY_CAP} members (``vrank``, denormalized at write
   time; cosine >= {COS_T}, the fixture-calibrated
@@ -90,6 +90,7 @@ from ..operators.ann import (
     subvectors,
     train_codebook,
 )
+from ..operators.rank import top_n
 from ..operators.stores import (
     append_to_store,
     cached_table,
@@ -736,39 +737,6 @@ def _sem_coarse(cents: DataFrame) -> DataFrame:
     )
 
 
-def _rank_struct(cos, cand_id: str):
-    """The family's (cos DESC, id ASC) rank key as an ascending-min
-    struct.  The leading NaN flag makes the struct ordering agree with
-    ``ORDER BY cos DESC`` on BOTH engines even for NaN cosines (both
-    rank NaN first under DESC, but -NaN would rank LAST in a bare
-    struct min — the r19 ordering hazard the similarity guard closes
-    at the scan; this key closes it in the primitive itself)."""
-    return F.struct(
-        (~F.isnan(cos)).cast("int").alias("nn"),
-        (-cos).alias("nc"),
-        F.col(cand_id).alias("i"),
-    )
-
-
-def _argmin_cos(
-    df: DataFrame, vec_col: str, cand_vec: str, cand_id: str, out: str
-) -> DataFrame:
-    """Per (vec_id) nearest candidate by cosine with (cos DESC, id)
-    tie-break as a min(struct) — map-side partials, no window shuffle
-    (negated cosine flips DESC to the struct min)."""
-    cos = cosine(vec_col, cand_vec)
-    return (
-        df.select(
-            "vec_id",
-            vec_col,
-            _rank_struct(cos, cand_id).alias("sc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("sc").alias("mc"), F.first(vec_col).alias(vec_col))
-        .select("vec_id", vec_col, F.col("mc.i").alias(out))
-    )
-
-
 def _sem_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, embedding, cid): TWO-LEVEL nearest-centroid by cosine
     (r17, closing the r16 probe residual): vectors first pick the
@@ -784,22 +752,19 @@ def _sem_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     coarse = _sem_coarse(cents)
     c2g = _sem_c2g(cents, coarse)
     # vector -> coarse group: N x C evals, one N-row shuffle
-    v2g = _argmin_cos(
-        vecs.crossJoin(coarse),
-        "embedding",
-        "gv",
-        "gid",
-        "gid",
-    )
-    # vector -> fine cell within its group: ~N x K/C evals; the
-    # groupBy reuses v2g's vec_id partitioning
-    return _argmin_cos(
-        v2g.join(c2g, "gid"),
-        "embedding",
-        "cv",
-        "cid",
-        "cid",
-    )
+    v2g = top_n(
+        vecs.crossJoin(coarse).withColumn("cos", cosine("embedding", "gv")),
+        ("vec_id",),
+        (F.desc("cos"), "gid"),
+        1,
+    ).select("vec_id", "embedding", "gid")
+    # vector -> fine cell within its group: ~N x K/C evals
+    return top_n(
+        v2g.join(c2g, "gid").withColumn("cos", cosine("embedding", "cv")),
+        ("vec_id",),
+        (F.desc("cos"), "cid"),
+        1,
+    ).select("vec_id", "embedding", "cid")
 
 
 def _sem_c2g(cents: DataFrame, coarse: DataFrame) -> DataFrame:
@@ -816,42 +781,14 @@ def _sem_c2g(cents: DataFrame, coarse: DataFrame) -> DataFrame:
     # gid) row
     k = cents.count()
     c2g = scoped_persist(
-        _argmin_cos(
-            cents.select(F.col("cid").alias("vec_id"), F.col("cv"))
-            .crossJoin(coarse),
-            "cv",
-            "gv",
-            "gid",
-            "gid",
-        ).select(F.col("vec_id").alias("cid"), "cv", "gid")
+        top_n(
+            cents.crossJoin(coarse).withColumn("cos", cosine("cv", "gv")),
+            ("cid",),
+            (F.desc("cos"), "gid"),
+            1,
+        ).select("cid", "cv", "gid")
     )
     return broadcast_if_fits(c2g, k * 600)
-
-
-def _topn_cos(
-    df: DataFrame, vec_col: str, cand_vec: str, cand_id: str, out: str,
-    n: int,
-) -> DataFrame:
-    """Per vec_id the n nearest candidates by (cos DESC, id) — the
-    bounded-top-n sibling of :func:`_argmin_cos`: collect the SLIM
-    (-cos, id) structs per vector (16 bytes each, the vector itself
-    moves once via first()), sort, slice — ONE shuffle, no per-vector
-    window, no exclusion re-join.  array_sort on the negated-cosine
-    struct (NaN-first leading key, see :func:`_rank_struct`) ranks
-    exactly like ``row_number() OVER (ORDER BY cos DESC, id) <= n``,
-    which is what the oracle replays — including on NaN cosines."""
-    cos = cosine(vec_col, cand_vec)
-    sc = _rank_struct(cos, cand_id)
-    return (
-        df.select("vec_id", vec_col, sc.alias("sc"))
-        .groupBy("vec_id")
-        .agg(
-            F.slice(F.array_sort(F.collect_list("sc")), 1, n).alias("top"),
-            F.first(vec_col).alias(vec_col),
-        )
-        .select("vec_id", vec_col, F.explode("top").alias("sc"))
-        .select("vec_id", vec_col, F.col("sc.i").alias(out))
-    )
 
 
 def _sem_probe(vecs: DataFrame, cents: DataFrame) -> DataFrame:
@@ -862,25 +799,27 @@ def _sem_probe(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     sf0.001 fixture's 10 true pairs all have cosine < 0.46, and ALL
     split across cells under top-1 probing).  The new batch probes its
     top-{SEM_N_PROBE} coarse groups, then the top-{SEM_N_PROBE} fine
-    cells within their union — each level ONE bounded top-n aggregate
-    (collect_list is capped at C resp. probe*K/C slim structs per
-    vector, never the corpus).  History stays single-assigned (each
-    history vector lives in exactly ONE store bucket), so probed cells
-    are disjoint and per-vector candidate counts never double-count."""
+    cells within their union — each level one per-vector ``top_n``
+    over C resp. probe*K/C candidates, never the corpus.  History stays
+    single-assigned (each history vector lives in exactly ONE store
+    bucket), so probed cells are disjoint and per-vector candidate
+    counts never double-count."""
     coarse = _sem_coarse(cents)
     c2g = _sem_c2g(cents, coarse)
     # top-2 coarse groups: N x C evals, one N-row shuffle
-    probeg = _topn_cos(
-        vecs.crossJoin(coarse),
-        "embedding",
-        "gv",
-        "gid",
-        "gid",
+    probeg = top_n(
+        vecs.crossJoin(coarse).withColumn("cos", cosine("embedding", "gv")),
+        ("vec_id",),
+        (F.desc("cos"), "gid"),
         SEM_N_PROBE,
-    )
+    ).select("vec_id", "embedding", "gid")
     # candidate cells = the probed groups' cells: ~N*probe x K/C evals
-    cand = probeg.join(c2g, "gid")
-    return _topn_cos(cand, "embedding", "cv", "cid", "cid", SEM_N_PROBE)
+    return top_n(
+        probeg.join(c2g, "gid").withColumn("cos", cosine("embedding", "cv")),
+        ("vec_id",),
+        (F.desc("cos"), "cid"),
+        SEM_N_PROBE,
+    ).select("vec_id", "embedding", "cid")
 
 
 def _semantic_rank(assign: DataFrame) -> DataFrame:
@@ -1138,19 +1077,16 @@ def ann_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nassign = _sem_probe(newv, _sem_cents(hist_src))
     cos = cosine("embedding", "hemb")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cosine"), "neighbor_id"
-    )
-    return (
-        nassign.join(hist, "cid")
-        .select("vec_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("vec_id", F.col("rn").cast("long").alias("rn"),
-                "neighbor_id", "cosine")
-    )
+    return top_n(
+        nassign.join(hist, "cid").select(
+            "vec_id", "neighbor_id", cos.alias("cosine")
+        ),
+        ("vec_id",),
+        (F.desc("cosine"), "neighbor_id"),
+        TOP_K,
+        rank="rn",
+    ).select("vec_id", F.col("rn").cast("long").alias("rn"),
+             "neighbor_id", "cosine")
 
 
 # --- Incremental IVF-PQ ANN serving (r19, VERDICT r18 task 3) ----------
@@ -1336,8 +1272,6 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     production posture the r19 verdict asked to measure separately:
     at 100 TB the index build is a scheduled provisioning job and
     every serving query is two Exchange-free bucket probes."""
-    from pyspark.sql import Window
-
     from ..caching import scoped_persist
 
     raw_store = _provision_semantic_store(spark, sf_dir)
@@ -1367,12 +1301,7 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "cid", "nbr")
         .agg(F.sum("lut_micro").cast("long").alias("adc_micro"))
     )
-    sw = Window.partitionBy("qid").orderBy("adc_micro", "nbr")
-    shortlist = (
-        adc.withColumn("srn", F.row_number().over(sw))
-        .filter(F.col("srn") <= IVFPQ_SHORTLIST)
-        .drop("srn")
-    )
+    shortlist = top_n(adc, ("qid",), ("adc_micro", "nbr"), IVFPQ_SHORTLIST)
     # exact re-rank: fetch raw vectors by a SECOND bucket probe of the
     # raw store (join on cid, filter to the shortlisted id — history
     # side Exchange-free), query vectors re-joined from the slim batch
@@ -1383,17 +1312,20 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qv = newv.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
     cos = cosine("qv", "hemb")
-    rw = Window.partitionBy("qid").orderBy(F.desc("cosine"), "nbr")
     # persisted: rerank feeds BOTH the hit-count rollup and the final
     # projection — without the barrier the whole ADC+shortlist subtree
     # (two bucket probes, the LUT join, two windows) computes twice
     rerank = scoped_persist(
-        shortlist.join(raw, "cid")
-        .filter(F.col("nbr_chk") == F.col("nbr"))
-        .join(qv, "qid")
-        .select("qid", "nbr", "adc_micro", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(rw))
-        .filter(F.col("rn") <= TOP_K)
+        top_n(
+            shortlist.join(raw, "cid")
+            .filter(F.col("nbr_chk") == F.col("nbr"))
+            .join(qv, "qid")
+            .select("qid", "nbr", "adc_micro", cos.alias("cosine")),
+            ("qid",),
+            (F.desc("cosine"), "nbr"),
+            TOP_K,
+            rank="rn",
+        )
     )
     # full-precision twin within the SAME probed cells — the verifier
     # (at production scale only the ADC path runs; the twin is the
@@ -1404,16 +1336,14 @@ def ann_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cid",
     )
     fcos = cosine("embedding", "hemb")
-    fw = Window.partitionBy("qid").orderBy(F.desc("fc"), "nbr")
-    fullp = (
-        nassign.join(hist_raw, "cid")
-        .select(
+    fullp = top_n(
+        nassign.join(hist_raw, "cid").select(
             F.col("vec_id").alias("qid"), "nbr", fcos.alias("fc")
-        )
-        .withColumn("frn", F.row_number().over(fw))
-        .filter(F.col("frn") <= TOP_K)
-        .select("qid", F.col("nbr").alias("fnbr"))
-    )
+        ),
+        ("qid",),
+        (F.desc("fc"), "nbr"),
+        TOP_K,
+    ).select("qid", F.col("nbr").alias("fnbr"))
     hits = (
         rerank.join(
             fullp,

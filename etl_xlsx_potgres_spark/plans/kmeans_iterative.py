@@ -32,12 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
-from ..operators.ann import (
-    micro_mean,
-    nearest,
-    sql_micro_mean_ctes,
-    sql_nearest,
-)
+from ..operators.ann import micro_mean, sql_micro_mean_ctes
+from ..operators.rank import nearest, sql_nearest
 from ..operators.vectors import EMB_DIM, micro, sq_dist, sql_micro, sql_sq_dist
 from ..registry import register
 from ..sources import load_table

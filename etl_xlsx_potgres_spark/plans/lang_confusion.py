@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from ..caching import scoped_persist
 from ..hints import constant_size
 from ..operators.lang import SQL_LANG_ID, SQL_LOC_DOCS, lang_id, localized_text
+from ..operators.rank import top_n
 from ..operators.text import sql_tokens, tokens
 from ..registry import register
 from ..sources import load_table
@@ -161,13 +162,12 @@ def _trigram_pred(loc: DataFrame) -> DataFrame:
         "others_sum",
         F.sum("rate").over(w_t).cast("long") - F.col("rate"),
     )
-    w_lang = Window.partitionBy("lang").orderBy(F.desc("rate"), "t")
-    tri_profile_model = (
-        spread.filter(F.col("rate") > EXCL_NUM * F.col("others_sum"))
-        .withColumn("rk", F.row_number().over(w_lang))
-        .filter(F.col("rk") <= M_PROFILE)
-        .select(F.col("lang").alias("mlang"), "t", F.col("rate").alias("w"))
-    )
+    tri_profile_model = top_n(
+        spread.filter(F.col("rate") > EXCL_NUM * F.col("others_sum")),
+        ("lang",),
+        (F.desc("rate"), "t"),
+        M_PROFILE,
+    ).select(F.col("lang").alias("mlang"), "t", F.col("rate").alias("w"))
     scores = (
         tri.select("doc_id", "t")
         .join(constant_size(tri_profile_model), "t")

@@ -19,10 +19,10 @@ smaller blocks). Within a block, candidates are scored by
 ``(levenshtein, |acctbal diff|, key)`` — name distance primary,
 balance agreement as tie-breaker (Levenshtein is native codegen in
 both engines; the float subtraction is a single IEEE op, compared,
-never summed) — and the best match per dirty record is a
-``min(struct(...))`` argmin: map-side partial-aggregable, no window
-over the corpus (the pattern that replaced crossJoin+row_number in
-``semantic_dedup``). A transposition is 2 substitutions, so the true
+never summed) — and the best match per dirty record is the
+``operators.rank.nearest`` argmin, a ``min(struct(...))``: map-side
+partial-aggregable, no window over the corpus (the pattern that
+replaced crossJoin+row_number in ``semantic_dedup``). A transposition is 2 substitutions, so the true
 record is always in-block at dist <= 2 with balance diff 0; wrong
 winners are real linkage hazards (a transposed id can EQUAL another
 customer's id — dist 0 beats the truth's dist 2), which the accuracy
@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.rank import nearest
 from ..registry import register
 from ..sources import load_table
 
@@ -143,14 +144,15 @@ def linkage_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("dist") >= 0)
     )
-    best = cand.groupBy("dirty_id").agg(
-        F.min(F.struct("dist", "bal_diff", "c_custkey")).alias("b")
+    best = nearest(
+        cand, ("dirty_id",), F.struct("dist", "bal_diff"), "c_custkey",
+        "matched_key",
     )
     return (
         best.select(
             "dirty_id",
-            F.col("b.dist").cast("int").alias("match_dist"),
-            F.col("b.c_custkey").alias("matched_key"),
+            F.col("d2.dist").cast("int").alias("match_dist"),
+            "matched_key",
         )
         .groupBy(
             "match_dist",

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import mavg, msum, sql_mavg, sql_msum
 from ..hints import constant_size
+from ..operators.rank import top_n
 from ..registry import register
 from ..sources import load_table
 
@@ -385,14 +386,11 @@ def topk_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderkey", "o_totalprice"
+    )
+    return top_n(
+        o, ("o_custkey",), (F.desc("o_totalprice"), "o_orderkey"), 3, rank="rn"
     )
 
 

@@ -67,7 +67,8 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from ..hints import constant_size
-from ..operators.ann import KMEANS_K, nearest
+from ..operators.ann import KMEANS_K
+from ..operators.rank import nearest, sql_nearest
 from ..operators.vectors import (
     dot,
     duck_valid,
@@ -99,28 +100,18 @@ _C = math.isqrt(KMEANS_K - 1) + 1  # ceil(sqrt(K)); fixture: 4
       WHERE vec_id < {_C}
     ),
     s2c AS (
-      SELECT seed_id, sv, c_id FROM (
-        SELECT s.seed_id, s.sv, c.c_id,
-               row_number() OVER (PARTITION BY s.seed_id
-                 ORDER BY {sql_sq_dist("s.sv", "c.cv")}, c.c_id) AS rn
-        FROM seeds s CROSS JOIN coarse c
-      ) WHERE rn = 1
+      {sql_nearest("seeds s CROSS JOIN coarse c", ("s.seed_id", "s.sv"),
+                   sql_sq_dist("s.sv", "c.cv"), "c.c_id", "c_id")}
     ),
     v2c AS (
-      SELECT vec_id, embedding, c_id FROM (
-        SELECT e.vec_id, e.embedding, c.c_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {sql_sq_dist("e.embedding", "c.cv")}, c.c_id) AS rn
-        FROM vecs e CROSS JOIN coarse c
-      ) WHERE rn = 1
+      {sql_nearest("vecs e CROSS JOIN coarse c", ("e.vec_id", "e.embedding"),
+                   sql_sq_dist("e.embedding", "c.cv"), "c.c_id", "c_id")}
     ),
     best AS (
-      SELECT vec_id, embedding, seed_id AS cluster_id FROM (
-        SELECT v.vec_id, v.embedding, s.seed_id,
-               row_number() OVER (PARTITION BY v.vec_id
-                 ORDER BY {sql_sq_dist("v.embedding", "s.sv")}, s.seed_id) AS rn
-        FROM v2c v JOIN s2c s ON s.c_id = v.c_id
-      ) WHERE rn = 1
+      {sql_nearest("v2c v JOIN s2c s ON s.c_id = v.c_id",
+                   ("v.vec_id", "v.embedding"),
+                   sql_sq_dist("v.embedding", "s.sv"), "s.seed_id",
+                   "cluster_id")}
     ),
     pairs AS (
       SELECT a.cluster_id, b.vec_id AS v2

@@ -21,7 +21,7 @@ exact and IVF cosine searches and the family constants live in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..hints import constant_size
@@ -33,6 +33,7 @@ from ..operators.ann import (
     sql_cosine_topk,
     sql_ivf_topk,
 )
+from ..operators.rank import top_n
 from ..operators.vectors import (
     cosine,
     duck_valid,
@@ -124,11 +125,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("qid") != F.col("vec_id"))
         .select("qid", "vec_id", cosine("qv", "vv").alias("cosine"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id", "cosine", "rn")
+    return top_n(
+        scored, ("qid",), (F.desc("cosine"), "vec_id"), TOP_K, rank="rn"
     )
 
 
@@ -189,19 +187,18 @@ def ann_ml_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v = raw.select("vec_id", F.col("embedding").alias("vv"))
     dist = F.sqrt(sq_dist("qv", "vv"))
-    w = Window.partitionBy("qid").orderBy("dist", "vec_id")
     # hint ONLY at the non-equi join that needs it: hinting the q
     # frame itself propagates to the final verdict joins where q is
     # the LEFT side of a left outer join — Spark can't build-left
     # there and logs an ignored-hint warning on every run
-    exact = (
+    exact = top_n(
         constant_size(q).join(v, F.col("qid") != F.col("vec_id"))
         .withColumn("dist", dist)
-        .filter(F.col("dist") <= BRP_RADIUS)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "vec_id")
-    )
+        .filter(F.col("dist") <= BRP_RADIUS),
+        ("qid",),
+        ("dist", "vec_id"),
+        TOP_K,
+    ).select("qid", "vec_id")
     n_exact = exact.groupBy("qid").agg(F.count(F.lit(1)).alias("n_exact"))
     n_found = (
         exact.join(cand, ["qid", "vec_id"], "left_semi")

@@ -135,6 +135,15 @@ NAMES = [
     # top-1 per round) feed row-local prefix sums; a width-dependent
     # winner would cascade into every chunk boundary
     "text_chunk_token_budget",
+    # operators/rank.py top_n: per-key row_number windows whose total
+    # order ends in the id, so the survivors and their ranks must not
+    # move with the shuffle width
+    "topk_orders_per_customer",
+    "text_tfidf_top_terms",
+    "ann_cosine_topk",
+    "ann_ivf_topk",
+    "ann_lsh_topk",
+    "ref_dedup_deterministic",
 ]
 
 

@@ -426,6 +426,133 @@ def test_vector_fold_lint_catches_each_spelling():
         assert not _vector_fold_copies(scalar), scalar
 
 
+# A ``row_number()`` window whose rank a filter then cuts to a bound is
+# a per-key top-n; it is spelled once, as ``top_n`` in
+# operators/rank.py.  A rank that is kept and not cut (a position, a
+# coin rank, a rank joined against a level axis) or that is matched
+# against a per-group column (a median pick) is not a top-n.
+_RANK_HOME = "operators/rank.py"
+
+
+def _top_n_copies(source: str) -> list[tuple[int, str]]:
+    """(line, rank name) of every ``row_number().over(...)`` rank that
+    a ``filter``/``where`` compares to a bound (``<= n``, ``< n``,
+    ``== 1``), in the same method chain or on the frame the ranked
+    chain was assigned to."""
+    import ast
+    import re
+
+    def is_row_number(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "over"
+            and isinstance(node.func.value, ast.Call)
+            and getattr(node.func.value.func, "attr",
+                        getattr(node.func.value.func, "id", None))
+            == "row_number"
+        )
+
+    def ranks(expr) -> set[str]:
+        """Rank names a method chain defines (withColumn / alias)."""
+        out = set()
+        for node in ast.walk(expr):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            args = node.args
+            if (node.func.attr == "withColumn" and len(args) == 2
+                    and isinstance(args[0], ast.Constant)
+                    and any(is_row_number(n) for n in ast.walk(args[1]))):
+                out.add(args[0].value)
+            if (node.func.attr == "alias" and args
+                    and isinstance(args[0], ast.Constant)
+                    and is_row_number(node.func.value)):
+                out.add(args[0].value)
+        return out
+
+    def cuts(pred, names: set[str]) -> str | None:
+        """The rank name ``pred`` bounds, if it is a top-n cut."""
+        if isinstance(pred, ast.Constant) and isinstance(pred.value, str):
+            m = re.fullmatch(r"\s*(\w+)\s*(?:<=|<|==?)\s*\w+\s*", pred.value)
+            return m.group(1) if m and m.group(1) in names else None
+        if not (isinstance(pred, ast.Compare) and len(pred.ops) == 1
+                and isinstance(pred.ops[0], (ast.LtE, ast.Lt, ast.Eq))):
+            return None
+        if any(isinstance(n, ast.Call) for n in ast.walk(pred.comparators[0])):
+            return None  # bound by a column expression: not a top-n
+        for n in ast.walk(pred.left):
+            if isinstance(n, ast.Constant) and n.value in names:
+                return n.value
+        return None
+
+    tree = ast.parse(source)
+    assigned: dict[str, set[str]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign):
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    assigned.setdefault(t.id, set()).update(ranks(node.value))
+    hits = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("filter", "where") and node.args):
+            continue
+        names = ranks(node.func.value)
+        for n in ast.walk(node.func.value):
+            if isinstance(n, ast.Name):
+                names |= assigned.get(n.id, set())
+        name = cuts(node.args[0], names)
+        if name:
+            hits.append((node.lineno, name))
+    return hits
+
+
+def test_top_n_lives_only_in_operators_rank():
+    """Every rank-then-filter window is ``operators/rank.py``'s
+    ``top_n`` (or its top-1 ``nearest``), beside its DuckDB twin and
+    under the parity test ``tests/test_rank.py``."""
+    offenders = [
+        f"{rel}:{line}: row_number rank {name!r} cut by a filter"
+        for rel, source in _package_sources()
+        if rel != _RANK_HOME
+        for line, name in _top_n_copies(source)
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_top_n_lint_catches_each_spelling():
+    """The lint matches the hand windows it exists to stop, and not
+    the kept ranks or the median pick."""
+    copies = [
+        'df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)',
+        'df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") < n)',
+        '(df.withColumn("arn", F.row_number().over(w))\n'
+        '    .filter(F.col("arn") == 1).drop("arn"))',
+        '(\n    df.withColumn("x", F.lit(1))\n'
+        '    .withColumn("rn", F.row_number().over(w))\n'
+        '    .filter(F.col("rn") <= TOP_K)\n)',
+        'r = df.withColumn("rk", F.row_number().over(w))\n'
+        'top = r.filter(F.col("rk") <= M_PROFILE)',
+        'df.select("a", F.row_number().over(w).alias("rn")).filter("rn <= 3")',
+        'df.withColumn("rn", row_number().over(w)).filter("rn = 1")',
+    ]
+    for copy in copies:
+        assert _top_n_copies(copy), copy
+    for kept in (
+        'df.withColumn("vrank", F.row_number().over(cell.orderBy("coin")))',
+        'df.select("u", F.row_number().over(w).alias("pos"))'
+        '.filter(F.col("x") > 0)',
+        'r = df.withColumn("rn", F.row_number().over(w))\n'
+        'med = r.filter(F.col("rn") == F.ceil(F.col("n") / 2.0))',
+        'r = df.withColumn("rn_adc", F.row_number().over(w))\n'
+        'r.join(levels, r["rn_adc"] <= levels["s"])',
+        'top_n(df, ("qid",), (F.desc("cosine"), "vec_id"), 5, rank="rn")',
+    ):
+        assert not _top_n_copies(kept), kept
+
+
 def _plan_imports(rel: str, source: str) -> list[tuple[int, str]]:
     """(line, module) of every import in the package module at ``rel``
     that reaches a ``plans/`` module: ``from .x import``, ``from .

@@ -125,45 +125,6 @@ def test_calibration_sampling_fires_and_matches_oracle(spark, tmp_path):
 
 # ------------------------------------------------ primitive unit tests
 
-def test_topn_cos_matches_window_ranking(spark):
-    """_topn_cos's array_sort-slice must rank exactly like
-    row_number() OVER (ORDER BY cos DESC, id) <= n — including exact
-    cosine ties, which the struct's id field must break ascending."""
-    from pyspark.sql import Row, Window
-    from pyspark.sql import functions as F
-
-    from etl_xlsx_potgres_spark.plans.dedup_incremental_more import (
-        _topn_cos,
-    )
-    from etl_xlsx_potgres_spark.operators.vectors import cosine
-
-    # candidate 20 duplicates candidate 10's vector -> exact cosine tie
-    cands = [(10, [1.0, 0.0]), (20, [1.0, 0.0]), (30, [0.0, 1.0]),
-             (40, [0.6, 0.8])]
-    rows = [
-        Row(vec_id=v, embedding=[1.0, 0.1], cid=c, cv=cv)
-        for v in (1, 2) for c, cv in cands
-    ]
-    df = spark.createDataFrame(rows)
-    got = {
-        (r.vec_id, r.cid)
-        for r in _topn_cos(df, "embedding", "cv", "cid", "cid", 2).collect()
-    }
-    cos = cosine("embedding", "cv")
-    w = Window.partitionBy("vec_id").orderBy(F.desc("c"), "cid")
-    want = {
-        (r.vec_id, r.cid)
-        for r in df.select("vec_id", "cid", cos.alias("c"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .collect()
-    }
-    assert got == want
-    # the exact tie between cids 10 and 20 fills BOTH top-2 slots in
-    # id order, pushing the strictly-worse candidate 40 out
-    assert {(1, 10), (1, 20)} <= got and (1, 40) not in got
-
-
 def test_star_edges_equals_groupby_min_formulation(spark, sf_dir):
     """star_edges reuses the cap window's rank-1 rows as bucket
     leaders; that must be EXACTLY the groupBy-min formulation (one

@@ -166,49 +166,6 @@ def test_valid_vecs_predicate_matches_duck(spark):
     assert got == want == [0]
 
 
-def test_topn_and_argmin_rank_nan_like_the_window(spark):
-    """With a NaN-cosine candidate in play (NaN component — under ANSI
-    a zero norm would abort at the division instead), _topn_cos and
-    _argmin_cos must rank exactly like ``ORDER BY cos DESC, id`` —
-    NaN FIRST — the r19 _rank_struct alignment (ADVICE r18 low)."""
-    from pyspark.sql import Row, Window
-    from pyspark.sql import functions as F
-
-    from etl_xlsx_potgres_spark.plans.dedup_incremental_more import (
-        _argmin_cos,
-        _topn_cos,
-    )
-    from etl_xlsx_potgres_spark.operators.vectors import cosine
-
-    cands = [(10, [1.0, 0.0]), (20, [float("nan"), 1.0]), (30, [0.0, 1.0]),
-             (40, [0.6, 0.8])]
-    rows = [
-        Row(vec_id=v, embedding=[1.0, 0.1], cid=c, cv=cv)
-        for v in (1, 2) for c, cv in cands
-    ]
-    df = spark.createDataFrame(rows)
-    cos = cosine("embedding", "cv")
-    w = Window.partitionBy("vec_id").orderBy(F.desc("c"), "cid")
-    ranked = df.select("vec_id", "cid", cos.alias("c")).withColumn(
-        "rn", F.row_number().over(w)
-    )
-    for n in (1, 2):
-        got = {
-            (r.vec_id, r.cid)
-            for r in _topn_cos(df, "embedding", "cv", "cid", "cid", n).collect()
-        }
-        want = {
-            (r.vec_id, r.cid)
-            for r in ranked.filter(F.col("rn") <= n).collect()
-        }
-        assert got == want, f"n={n}: {got} != {want}"
-    # the NaN candidate outranks everything, exactly like DESC windows
-    assert {(1, 20), (2, 20)} == {
-        (r.vec_id, r.cid)
-        for r in _argmin_cos(df, "embedding", "cv", "cid", "cid").collect()
-    }
-
-
 # ------------------------------------------- overflow-gate equivalence
 
 def test_sem_seed_overflow_gate_is_exact():
