@@ -58,8 +58,6 @@ def streaming_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFram
     checkpoint = tempfile.mkdtemp(prefix="spark_graft_contagg_ckpt_")
 
     events = read_events_stream(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = (
             events.writeStream.foreachBatch(
@@ -71,7 +69,6 @@ def streaming_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFram
         )
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(checkpoint, ignore_errors=True)
 
     stored = spark.read.parquet(store)

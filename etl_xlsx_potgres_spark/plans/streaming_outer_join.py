@@ -158,23 +158,14 @@ def _run_to_table(spark: SparkSession, joined: DataFrame, name: str) -> None:
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    # AQE cannot coalesce stateful-streaming shuffles, and the join
-    # instantiates its 4 state stores per shuffle partition per
-    # micro-batch — pin a sane width for the run (the
-    # run_streaming_query posture) and restore afterwards
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = (
+        joined.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 @register(

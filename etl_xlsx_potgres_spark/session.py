@@ -17,6 +17,16 @@ for sessions and encodes the scale posture:
   (``spark.sql.legacy.parquet.nanosAsLong``) so the events intake can
   truncate them to micros (``sources/tables.py``); set here once, not
   by the readers, so no query changes session conf.
+
+Streams run at this same core-count width. A stateful stream fixes
+its state partitioning at its first checkpoint and AQE cannot coalesce
+it, so each micro-batch runs one task and commits one state store per
+shuffle partition; no stream runner sets a width of its own. Against
+a fixed width of 8 on the ``etl_load`` benchmark's ``local[2]``
+session, the session's width took the operations' geometric mean from
+1.50 to 1.28 s (medians of 10 interleaved pairs, 4 vCPU),
+``streaming_stateful_profile`` from 2.50 to 1.84 s and
+``streaming_tumbling_agg`` from 0.91 to 0.64 s.
 """
 
 from __future__ import annotations

@@ -6,8 +6,9 @@ partition-prune, and re-runs of one slice (a backfill of yesterday, a
 corrected source) replace ONLY the partitions present in the new
 frame — static overwrite mode would silently drop every other
 partition in the table, which is the classic Spark backfill footgun
-(``spark.sql.sources.partitionOverwriteMode=dynamic`` is the fix and
-is deliberately scoped to the single write here, then restored).
+(dynamic partition overwrite is the fix, passed as the writer's
+``partitionOverwriteMode`` option so it binds this one write and never
+touches session conf).
 
 The reference loads everything into unpartitioned Postgres tables
 (``/root/reference/etl_process.py:29-191``); this is the
@@ -34,11 +35,9 @@ def write_partitioned(
     first (full-table rebuild semantics, occasionally what you want,
     never what you want by accident).
     """
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic" if dynamic else "static")
-    try:
-        df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    (
+        df.write.partitionBy(*partition_cols)
+        .mode(mode)
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        .parquet(path)
+    )

@@ -65,24 +65,16 @@ def run_streaming_query(
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    # AQE cannot coalesce partitions in stateful streaming, so a
-    # 200-partition session default means 200 tasks per microbatch;
-    # pin a sane width for the run and restore afterwards.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    query = (
+        agg.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
     try:
-        query = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+        query.processAllAvailable()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        query.stop()
     return spark.table(name)
 
 

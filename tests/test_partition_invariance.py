@@ -18,8 +18,7 @@ from .oracle_utils import assert_frames_match
 
 registry.load_all()
 
-# batch queries added in r8 (streaming ones replay through memory
-# sinks with their own width pinning — covered by their oracles)
+# batch queries added in r8
 NAMES = [
     "ts_resample_ffill",
     "emb_label_centroids",
@@ -144,6 +143,19 @@ NAMES = [
     "ann_ivf_topk",
     "ann_lsh_topk",
     "ref_dedup_deterministic",
+    # streams: each run starts from a fresh checkpoint, so its state
+    # stores (window and session aggregates, applyInPandasWithState,
+    # dropDuplicates, the stream-stream join buffers) take the
+    # session's shuffle width
+    "streaming_static_enrichment",
+    "streaming_tumbling_agg",
+    "streaming_session_windows",
+    "streaming_stateful_profile",
+    "streaming_continuous_aggregate",
+    "streaming_dedup_events",
+    "streaming_interval_join",
+    "streaming_outer_interval_join",
+    "streaming_full_outer_interval_join",
 ]
 
 

@@ -624,6 +624,80 @@ def test_sibling_import_lint_catches_each_spelling():
         assert not _plan_imports(rel, source), source
 
 
+# The one reviewed temporary session-conf write outside session.py:
+# compaction pins the bucketed scan (autoBucketedScan has no writer
+# option), restoring the value in ``finally``.
+_REVIEWED_CONF_WRITES = {("operators/stores.py", "compact_store")}
+
+
+def _conf_writes(source: str) -> list[tuple[int, str]]:
+    """(line, innermost enclosing function) of every ``<x>.conf.set(``
+    / ``<x>.conf.unset(`` call, whatever object holds the conf."""
+    import ast
+
+    hits = []
+
+    def visit(node, func: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "unset")
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"):
+            hits.append((node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(source), "<module>")
+    return hits
+
+
+def test_session_conf_written_only_by_session():
+    """Session conf is ``session.py``'s: a query or sink that needs a
+    setting for one write passes it as a writer option, and a stream
+    runs at the session's width.  A set-then-restore block elsewhere
+    leaks on an interrupted run and is a second width or mode rule
+    beside the session's."""
+    writes = [
+        (rel, line, func)
+        for rel, source in _package_sources()
+        if rel != "session.py"
+        for line, func in _conf_writes(source)
+    ]
+    offenders = [
+        f"{rel}:{line}: {func} writes session conf"
+        for rel, line, func in writes
+        if (rel, func) not in _REVIEWED_CONF_WRITES
+    ]
+    assert not offenders, "\n".join(offenders)
+    stale = _REVIEWED_CONF_WRITES - {(rel, func) for rel, _, func in writes}
+    assert not stale, f"reviewed sites that no longer write conf: {stale}"
+
+
+def test_conf_write_lint_catches_each_spelling():
+    """The lint matches every holder of the conf and both writes, and
+    not reads, builder config or writer options."""
+    for copy in (
+        'spark.conf.set("spark.sql.shuffle.partitions", "8")',
+        'df.sparkSession.conf.set(key, prev)',
+        'def f(self):\n    self.spark.conf.unset(key)',
+        'spark.conf.set(\n    "spark.sql.sources.partitionOverwriteMode",\n'
+        '    "dynamic",\n)',
+    ):
+        assert _conf_writes(copy), copy
+    for kept in (
+        'spark.conf.get("spark.sql.shuffle.partitions")',
+        'SparkSession.builder.config("k", "v")',
+        'df.write.option("partitionOverwriteMode", "dynamic")',
+        'settings.set("k", "v")',
+    ):
+        assert not _conf_writes(kept), kept
+    assert _conf_writes("def write():\n    spark.conf.set(k, v)\n") == [
+        (2, "write")
+    ]
+
+
 def _hint_calls(source: str, is_hint) -> list[tuple[int, str]]:
     """(line, leading-identifier-chain of the first argument) of every
     call whose callee satisfies ``is_hint`` — an AST walk, so hints

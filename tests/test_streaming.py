@@ -181,6 +181,62 @@ def test_streaming_dedup_across_batches(spark, stream_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+@pytest.mark.parametrize("width", [3, 5])
+def test_state_width_follows_session(spark, stream_dir, width):
+    """``run_streaming_query`` neither sets nor restores session conf:
+    its state stores take the session's shuffle width, the engine's one
+    width rule."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from etl_xlsx_potgres_spark.streaming.events_stream import run_streaming_query
+
+    class Widths(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.widths: list[int] = []
+            self.terminated = False
+
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            if event.progress.name == name:
+                self.widths += [
+                    op.numShufflePartitions
+                    for op in event.progress.stateOperators
+                ]
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            self.terminated = True
+
+    name = f"width_sink_{width}"
+    os.makedirs(stream_dir, exist_ok=True)
+    _write_batch(spark, stream_dir, [(1, _ts(1), 1, 1.0), (2, _ts(2), 2, 2.0)])
+    agg = (
+        spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(stream_dir)
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    listener = Widths()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    spark.streams.addListener(listener)
+    try:
+        before = dict(spark.conf.getAll)
+        assert run_streaming_query(agg, name).count() == 2
+        after = dict(spark.conf.getAll)
+        deadline = time.monotonic() + 30
+        while not listener.terminated and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert after == before
+    assert listener.widths and set(listener.widths) == {width}, listener.widths
+
+
 def test_stream_stream_interval_join(spark, tmp_path):
     """Stream-stream join with time-range condition: a purchase must
     match clicks buffered from EARLIER microbatches (cross-batch
